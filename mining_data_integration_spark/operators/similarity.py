@@ -306,21 +306,16 @@ def ivf_topk(emb: DataFrame, queries: DataFrame, k: int = 5,
 
 def int_assign_centroid(df: DataFrame, cents: list[list[int]],
                         vec_col: str) -> DataFrame:
-    """Argmin over k INTEGER centroids by exact int64 squared L2 (k
-    inline codegen expressions, like assign_centroid); ties break to
-    the lowest centroid index — array_min over (d2, i) structs compares
-    lexicographically, so the tie rule is explicit and engine-portable
-    (int8 range: diffs ≤ 254, dim 64 → d2 ≤ 4.2M, far inside int64)."""
-    d2s = []
-    for i, c in enumerate(cents):
-        carr = F.array(*[F.lit(int(v)).cast("bigint") for v in c])
-        diff = F.zip_with(F.col(vec_col), carr,
-                          lambda a, b: (a - b) * (a - b))
-        d2s.append(F.struct(
-            F.aggregate(diff, F.lit(0).cast("bigint"),
-                        lambda acc, x: acc + x).alias("d"),
-            F.lit(i).alias("i")))
-    return df.withColumn("_cid", F.array_min(F.array(*d2s))["i"])
+    """Argmin over k INTEGER centroids by exact int64 squared L2; ties
+    break to the lowest centroid index — array_min over (d2, i)
+    structs compares lexicographically, so the tie rule is explicit
+    and engine-portable (int8 range: diffs ≤ 254, dim 64 → d2 ≤ 4.2M,
+    far inside int64). The centroid set is ONE literal column
+    (_int_cells_lit) scored by the df engine's kernel, so building
+    the expression costs a constant number of py4j round trips
+    whatever k x dim is."""
+    return df.withColumn("_cid", F.array_min(_scored_cells_df(
+        F.col(vec_col), _int_cells_lit(cents)))["i"])
 
 
 def int_ivf_centroids(emb_q: DataFrame, n_centroids: int = 4,
@@ -405,29 +400,17 @@ def _int_ivf_pairs(emb: DataFrame, queries: DataFrame,
                                       id_col, "_qv")
     qs = queries.select(
         F.col(q_id_col), int8_quantize(F.col(q_vec_col)).alias("_qq"))
-    if engine == "df":
-        one = F.broadcast(_cents_column(cents))
-        data = (emb_q.crossJoin(one)
-                .withColumn("_cid", F.array_min(_scored_cells_df(
-                    F.col("_qv"), F.col("_cents")))["i"])
-                .drop("_cents"))
-        q_probed = (
-            qs.crossJoin(one)
-            .withColumn("_p", F.explode(F.slice(F.array_sort(
-                _scored_cells_df(F.col("_qq"), F.col("_cents"))),
-                1, n_probe)))
-            .drop("_cents")
-            .select(F.col(q_id_col), F.col("_qq"),
-                    F.col("_p.i").alias("_cid"))
-        )
-    else:
-        data = int_assign_centroid(emb_q, cents, "_qv")
-        probes = _nearest_cells(F.col("_qq"), cents, n_probe)
-        q_probed = (
-            qs.withColumn("_p", F.explode(probes))
-            .select(F.col(q_id_col), F.col("_qq"),
-                    F.col("_p.i").alias("_cid"))
-        )
+    (emb_c, qs_c), cc = _attach_cells(engine, cents, emb_q, qs)
+    data = (emb_c.withColumn("_cid", F.array_min(
+                _scored_cells_df(F.col("_qv"), cc))["i"])
+            .drop("_cents"))
+    q_probed = (
+        qs_c.withColumn("_p", F.explode(F.slice(F.array_sort(
+            _scored_cells_df(F.col("_qq"), cc)), 1, n_probe)))
+        .drop("_cents")
+        .select(F.col(q_id_col), F.col("_qq"),
+                F.col("_p.i").alias("_cid"))
+    )
     data = data.withColumn(
         "_vnorm", F.sqrt(idot(F.col("_qv"), F.col("_qv"))
                          .cast("double")))
@@ -494,20 +477,57 @@ def int_ivf_range_search(emb: DataFrame, queries: DataFrame,
 
 
 # ---------------------------------------------------------------
-# DataFrame-native integer quantizer (round 13): the literal-path
-# quantizer (int_assign_centroid / int_ivf_centroids) embeds every
-# centroid as codegen expression trees, which is why the NSW build
-# caps its cell count (NSW_MAX_CENTROIDS) — an O(c x dim) literal
-# plan stops being a plan at a few hundred cells. This engine keeps
-# the centroid set as DATA: a one-row broadcast DataFrame holding
-# array<struct<i,cent>>, attached to the corpus with a 1-row
-# cross-join, with assignment/probing as ONE higher-order-function
-# expression. Plan size is O(1) in the cell count, training is fully
-# distributed (centroids never leave the cluster), and every step is
-# the same exact int64 arithmetic — the two engines are BIT-IDENTICAL
-# (pinned in tests TestNswGraphAnn), so the SQL oracle replay is
-# engine-agnostic.
+# Integer centroid sets: two engines, one scoring kernel
+# (_scored_cells_df). Rule: a centroid set is ONE column, never a
+# Column per element — every F.lit/cast call is a py4j round trip,
+# and per-element arrays cost ~15k of them to plan one IVF-PQ encode
+# at 4 cells + 4x4 codewords, dim 64 (~60k at 16 cells + 4x16).
+# * literal (quantizer="literal", IVF-PQ build/append, int-PQ): the
+#   Python-side list is one constant-folded literal parsed from SQL
+#   text in one JVM call (_int_cells_lit); plan text grows with c.
+# * df (round 13, "df"/"auto"): the set stays DATA — a one-row
+#   broadcast DataFrame of the same array<struct<i,cent>>, attached
+#   by a 1-row cross-join; plan size O(1) in c, training distributed.
+# Same exact int64 arithmetic and tie rule — BIT-IDENTICAL (pinned in
+# tests TestNswGraphAnn), so the SQL oracle replay is engine-agnostic.
 # ---------------------------------------------------------------
+
+
+def _int_cells_sql(cents: list[list[int]]) -> str:
+    """SQL text of an integer centroid set as array<struct<i int,
+    cent array<bigint>>>, i = list position."""
+    return "array(" + ", ".join(
+        f"named_struct('i', {i}, 'cent', array("
+        + ", ".join(f"{int(v)}L" for v in c) + "))"
+        for i, c in enumerate(cents)) + ")"
+
+
+def _int_cells_lit(cents: list[list[int]]) -> Column:
+    """A Python-side integer centroid set as ONE literal Column of
+    _cents_column's element shape, parsed JVM-side from SQL text: one
+    py4j call whatever the set's size (Catalyst folds it to a single
+    Literal)."""
+    return F.expr(_int_cells_sql(cents))
+
+
+def _int_books_lit(codebooks: list[list[list[int]]]) -> Column:
+    """All m PQ codebooks as ONE literal Column: element s + 1 is
+    codebook s in _int_cells_lit's shape."""
+    return F.expr("array(" + ", ".join(
+        _int_cells_sql(cb) for cb in codebooks) + ")")
+
+
+def _attach_cells(engine: str, cents, *dfs: DataFrame
+                  ) -> tuple[list[DataFrame], Column]:
+    """Make a trained centroid set scoreable from each of `dfs`:
+    (frames, centroid column) for _scored_cells_df. The df engine
+    cross-joins ONE shared broadcast _cents_column row onto every
+    frame (callers drop "_cents" after scoring); the literal engine
+    leaves the frames alone and returns _int_cells_lit."""
+    if engine == "df":
+        one = F.broadcast(_cents_column(cents))
+        return [d.crossJoin(one) for d in dfs], F.col("_cents")
+    return list(dfs), _int_cells_lit(cents)
 
 
 def _cents_column(cents_df: DataFrame) -> DataFrame:
@@ -523,11 +543,11 @@ def _cents_column(cents_df: DataFrame) -> DataFrame:
 
 def _scored_cells_df(vec: Column, cents_col: Column) -> Column:
     """array<struct<d,i>> of exact int64 squared L2 distances from
-    `vec` to every centroid in the broadcast set — the shared kernel
-    of the DataFrame engine: F.array_min = assignment (lexicographic
-    struct min == lowest-d2 with lowest-cid ties, the SAME rule as
-    int_assign_centroid's literal structs), sorted slice = the
-    n_probe nearest cells (== _nearest_cells)."""
+    `vec` to every centroid in `cents_col` (the broadcast
+    _cents_column or an _int_cells_lit literal) — the one scoring
+    kernel of both engines: F.array_min = assignment (lexicographic
+    struct min == lowest-d2 with lowest-cid ties), sorted slice = the
+    n_probe nearest cells."""
     return F.transform(cents_col, lambda c: F.struct(
         F.aggregate(F.zip_with(vec, c["cent"],
                                lambda a, b: (a - b) * (a - b)),
@@ -614,9 +634,13 @@ def derive_nsw_centroids(n: int,
     tools/check_index_scale.py).
 
     The cap exists because the LITERAL quantizer engine keeps
-    centroids driver-side as codegen literals (int_assign_centroid is
-    O(c x dim) expression nodes) — fine to a few hundred cells, wrong
-    shape beyond. Round 13 LIFTS the cap with the DataFrame engine
+    centroids in Python and puts all c x dim values into the plan
+    as one literal (int_assign_centroid / _int_cells_lit) — fine to a
+    few hundred cells, wrong shape beyond: the plan text and the
+    per-iteration k-means collects grow with c. (Its measured cost used
+    to be one py4j round trip per centroid element while building
+    that literal; one JVM call per set now.) Round 13 LIFTS the cap
+    with the DataFrame engine
     (quantizer="df": int_ivf_centroids_df / int_assign_centroid_df —
     centroids as a one-row broadcast array column, plan size O(1) in
     c), so past cap x target_occupancy vectors (~131k at defaults)
@@ -630,33 +654,16 @@ def derive_nsw_centroids(n: int,
     return c if cap is None else min(cap, c)
 
 
-def _nearest_cells(vec: Column, cents: list[list[int]],
-                   n_probe: int) -> Column:
-    """The n_probe nearest integer centroids of `vec` (exact int64
-    squared L2, lowest-cid ties) as an array of {d, i} structs —
-    the probe expression shared by the query-side IVF joins and the
-    graph build's candidate generation."""
-    d2s = []
-    for i, c in enumerate(cents):
-        carr = F.array(*[F.lit(int(v)).cast("bigint") for v in c])
-        diff = F.zip_with(vec, carr, lambda a, b: (a - b) * (a - b))
-        d2s.append(F.struct(
-            F.aggregate(diff, F.lit(0).cast("bigint"),
-                        lambda acc, x: acc + x).alias("d"),
-            F.lit(i).alias("i")))
-    return F.slice(F.array_sort(F.array(*d2s)), 1, n_probe)
-
-
 def _resolve_nsw_quantizer(quantizer: str, c: int) -> str:
     """'auto' resolves to the DataFrame engine at EVERY cell count
-    (round-13 optimization): the literal engine embeds c x dim
-    integer literals in the plan, and Janino compilation of those
-    generated classes costs seconds PER STAGE — measured 2x
-    end-to-end on the sf0.1 int-IVF path even at c=4 (train 6.4 s
-    literal vs 2.6 s df; full range search 11.3 s vs 5.6 s), where
-    the df engine's one-row broadcast centroid column keeps the plan
-    O(1) in c. The engines are bit-identical (TestNswGraphAnn pin),
-    so 'auto' is an execution choice only. Explicit 'literal' remains
+    (round-13 optimization): measured 2x end-to-end on the sf0.1
+    int-IVF path even at c=4 (train 6.4 s literal vs 2.6 s df; full
+    range search 11.3 s vs 5.6 s), taken while the literal engine
+    still built its centroid arrays one py4j round trip per element
+    (one JVM call per set now, _int_cells_lit). The df engine keeps
+    the plan O(1) in c and trains without a collect per Lloyd
+    step. The engines are bit-identical (TestNswGraphAnn pin), so
+    'auto' is an execution choice only. Explicit 'literal' remains
     for pins and benchmarks."""
     if quantizer == "auto":
         return "df"
@@ -733,38 +740,28 @@ def nsw_candidate_pairs(emb: DataFrame, n_centroids: int | None = None,
     ~linear in n); explicit values remain for the oracle-deterministic
     registry entries, whose SQL replay fixes the cell count.
 
-    `quantizer` picks the engine: "literal" inlines the centroids as
-    codegen expressions (fastest to a few hundred cells), "df" keeps
+    `quantizer` picks the engine: "literal" inlines the centroid set
+    as one plan literal (fine to a few hundred cells), "df" keeps
     them as a one-row broadcast array column (plan size O(1) in the
     cell count — the 100 TB build, where the derived c runs to
-    thousands), "auto" switches at NSW_MAX_CENTROIDS. The two engines
-    produce BIT-IDENTICAL pairs (same exact-int arithmetic, same tie
-    rules — pinned), so the oracle replay never cares which ran."""
+    thousands), "auto" resolves to "df" (_resolve_nsw_quantizer).
+    The two engines produce BIT-IDENTICAL pairs (same exact-int
+    arithmetic, same tie rules — pinned), so the oracle replay never
+    cares which ran."""
     emb_q, cents, _c, engine = _nsw_quantize_and_train(
         emb, n_centroids, n_probe, iters, id_col, vec_col,
         target_occupancy, quantizer)
-    if engine == "df":
-        base = emb_q.crossJoin(F.broadcast(_cents_column(cents)))
-        scored = _scored_cells_df(F.col("_qv"), F.col("_cents"))
-        data = (base.withColumn("_cid", F.array_min(scored)["i"])
-                .drop("_cents"))
-        src = (
-            base.withColumn(
-                "_p", F.explode(F.slice(F.array_sort(scored), 1,
-                                        n_probe)))
-            .select(F.col(id_col).alias("_src"),
-                    F.col("_qv").alias("_sv"),
-                    F.col("_p.i").alias("_cid"))
-        )
-    else:
-        data = int_assign_centroid(emb_q, cents, "_qv")
-        probes = _nearest_cells(F.col("_qv"), cents, n_probe)
-        src = (
-            emb_q.withColumn("_p", F.explode(probes))
-            .select(F.col(id_col).alias("_src"),
-                    F.col("_qv").alias("_sv"),
-                    F.col("_p.i").alias("_cid"))
-        )
+    (base,), cc = _attach_cells(engine, cents, emb_q)
+    scored = _scored_cells_df(F.col("_qv"), cc)
+    data = (base.withColumn("_cid", F.array_min(scored)["i"])
+            .drop("_cents"))
+    src = (
+        base.withColumn(
+            "_p", F.explode(F.slice(F.array_sort(scored), 1, n_probe)))
+        .select(F.col(id_col).alias("_src"),
+                F.col("_qv").alias("_sv"),
+                F.col("_p.i").alias("_cid"))
+    )
     data = data.withColumn(
         "_vnorm",
         F.sqrt(idot(F.col("_qv"), F.col("_qv")).cast("double")))
@@ -840,19 +837,13 @@ def nsw_build_stats(emb: DataFrame, n_centroids: int | None = None,
     emb_q, cents, c, engine = _nsw_quantize_and_train(
         emb, n_centroids, n_probe, iters, id_col, vec_col,
         target_occupancy, quantizer)
-    if engine == "df":
-        base = emb_q.crossJoin(F.broadcast(_cents_column(cents)))
-        scored = _scored_cells_df(F.col("_qv"), F.col("_cents"))
-        data = (base.withColumn("_cid", F.array_min(scored)["i"]))
-        probed = data.withColumn(
-            "_pid", F.explode(F.slice(F.array_sort(scored), 1,
-                                      n_probe)["i"])).drop("_cents")
-        data = data.drop("_cents")
-    else:
-        data = int_assign_centroid(emb_q, cents, "_qv")
-        probed = data.withColumn(
-            "_pid", F.explode(_nearest_cells(F.col("_qv"), cents,
-                                             n_probe)["i"]))
+    (base,), cc = _attach_cells(engine, cents, emb_q)
+    scored = _scored_cells_df(F.col("_qv"), cc)
+    data = base.withColumn("_cid", F.array_min(scored)["i"])
+    probed = data.withColumn(
+        "_pid", F.explode(F.slice(F.array_sort(scored), 1,
+                                  n_probe)["i"])).drop("_cents")
+    data = data.drop("_cents")
     occ = {r["_cid"]: r["n"] for r in
            data.groupBy("_cid").agg(F.count("*").alias("n")).collect()}
     probes_per_cell = {r["_pid"]: r["n"] for r in
@@ -1376,7 +1367,7 @@ def _driver_read_parquet(path: str) -> list[dict]:
     return pq.read_table(path).to_pylist()
 
 
-def _int8_quantize_py(vec) -> list[int]:
+def _int8_quantize_py(vec, qid=None) -> list[int]:
     """Driver-side replica of `int8_quantize` for BOUNDED query sets
     (the pruned-probe head, round-14): identical IEEE-double sequence
     — elements through double, maxabs = max(abs(x)), scale = 127.0 /
@@ -1385,9 +1376,19 @@ def _int8_quantize_py(vec) -> list[int]:
     expression (pinned over the whole test corpus in TestIntIvf).
     Python floats ARE IEEE doubles and * / + here map to the same
     hardware ops Spark's codegen emits, so there is no rounding drift
-    to reason about beyond evaluation ORDER, which this mirrors."""
+    to reason about beyond evaluation ORDER, which this mirrors.
+
+    Precondition: `vec` and its elements are non-null and finite.
+    Outside it Spark gives nulls (null input) or all zeros (NaN/inf
+    scale), which Python's max()/floor() do not replicate, so such a
+    vector raises ValueError naming query `qid`."""
     import math
 
+    if vec is None or not all(x is not None and math.isfinite(x)
+                              for x in vec):
+        raise ValueError(
+            f"query {qid!r}: null or non-finite vector element; the "
+            "probe head quantizes finite vectors only")
     xs = [float(x) for x in vec]
     maxabs = max((abs(x) for x in xs), default=0.0)
     if not maxabs > 0:
@@ -1862,36 +1863,23 @@ def int_pq_topk(emb: DataFrame, queries: DataFrame, k: int = 5,
         F.col(id_col), int8_quantize(F.col(vec_col)).alias("_qv")))
     codebooks = int_pq_codebooks(emb_q, m, sub, kc, iters,
                                  id_col, "_qv")
-    data = emb_q
-    for s, cb in enumerate(codebooks):
-        data = (
-            int_assign_centroid(
-                data.withColumn("_sv", F.slice("_qv", s * sub + 1, sub)),
-                cb, "_sv")
-            .withColumnRenamed("_cid", f"_c{s}").drop("_sv")
-        )
+    data = _assign_codes(emb_q, codebooks, sub, "_qv")
     qs = queries.select(
         F.col(q_id_col), int8_quantize(F.col(q_vec_col)).alias("_qq"))
     pairs = data.drop("_qv").crossJoin(F.broadcast(qs))
+    # LUT lookup: select the coded codeword FIRST, then one integer
+    # dot — the element the all-codewords dot array would hold at
+    # that code (the _ivfpq_probe ADC shape)
+    books = _int_books_lit(codebooks)
 
-    def lut_lookup(s: int, cb: list[list[int]]):
-        qsub = F.slice("_qq", s * sub + 1, sub)
-        dots = [
-            F.aggregate(
-                F.zip_with(
-                    qsub,
-                    F.array(*[F.lit(int(v)).cast("bigint")
-                              for v in cb[j]]),
-                    lambda a, b: a * b),
-                F.lit(0).cast("bigint"), lambda acc, x: acc + x)
-            for j in range(kc)
-        ]
-        return F.element_at(F.array(*dots),
-                            F.col(f"_c{s}").cast("int") + 1)
+    def lut_lookup(s: int):
+        codeword = F.element_at(F.element_at(books, s + 1),
+                                F.col(f"_c{s}").cast("int") + 1)["cent"]
+        return idot(F.slice("_qq", s * sub + 1, sub), codeword)
 
-    adc = lut_lookup(0, codebooks[0])
+    adc = lut_lookup(0)
     for s in range(1, m):
-        adc = adc + lut_lookup(s, codebooks[s])
+        adc = adc + lut_lookup(s)
     scored = pairs.withColumn("adc_dot", adc.cast("bigint"))
     w = Window.partitionBy(q_id_col).orderBy(
         F.desc("adc_dot"), F.col(id_col))
@@ -1930,35 +1918,39 @@ def _ivfpq_train(emb: DataFrame, n_cells: int, m: int, kc: int,
                              "_qv").collect(),
         key=lambda r: r["cid"])
     cells = [[int(x) for x in r["cent"]] for r in cells_rows]
-    cent_table = F.array(*[
-        F.array(*[F.lit(int(v)).cast("bigint") for v in c])
-        for c in cells])
-    data = materialize(
-        int_assign_centroid(emb_q, cells, "_qv")
-        .withColumnRenamed("_cid", "_cell")
-        .withColumn("_res", F.zip_with(
-            F.col("_qv"), F.element_at(cent_table, F.col("_cell") + 1),
-            lambda a, b: a - b)))
+    data = materialize(_cell_residuals(emb_q, cells))
     codebooks = int_pq_codebooks(data, m, sub, kc, iters,
                                  id_col, "_res")
     data = _assign_codes(data, codebooks, sub)
     return data.drop("_qv", "_res"), cells, codebooks
 
 
+def _cell_residuals(emb_q: DataFrame, cells: list[list[int]]
+                    ) -> DataFrame:
+    """Coarse step of IVF-PQ encoding (shared by training and the
+    day-2 append path): `_cell` = nearest cell of `_qv` (exact int64
+    L2, lowest-cell ties) and `_res` = `_qv` minus that centroid, both
+    read off ONE literal of the cell set."""
+    cl = _int_cells_lit(cells)
+    return (emb_q.withColumn("_cell", F.array_min(
+                _scored_cells_df(F.col("_qv"), cl))["i"])
+            .withColumn("_res", F.zip_with(
+                F.col("_qv"), F.element_at(cl, F.col("_cell") + 1)["cent"],
+                lambda a, b: a - b)))
+
+
 def _assign_codes(data: DataFrame, codebooks: list[list[list[int]]],
                   sub: int, vec_col: str = "_res") -> DataFrame:
-    """Exact-int PQ code assignment per subspace (shared by training
-    and the day-2 append path): argmin codeword by int64 L2 on each
-    residual slice."""
-    for s, cb in enumerate(codebooks):
-        data = (
-            int_assign_centroid(
-                data.withColumn("_sv",
-                                F.slice(vec_col, s * sub + 1, sub)),
-                cb, "_sv")
-            .withColumnRenamed("_cid", f"_c{s}").drop("_sv")
-        )
-    return data
+    """Exact-int PQ code assignment per subspace (shared by training,
+    the day-2 append path and int_pq_topk): `_c{s}` = argmin codeword
+    by int64 L2 on slice s of `vec_col`, all m codebooks read off ONE
+    literal (_int_books_lit)."""
+    books = _int_books_lit(codebooks)
+    return data.withColumns({
+        f"_c{s}": F.array_min(_scored_cells_df(
+            F.slice(vec_col, s * sub + 1, sub),
+            F.element_at(books, s + 1)))["i"]
+        for s in range(len(codebooks))})
 
 
 def _ivfpq_encode(emb: DataFrame, cells: list[list[int]],
@@ -1967,19 +1959,12 @@ def _ivfpq_encode(emb: DataFrame, cells: list[list[int]],
     """Encode vectors against EXISTING cells/codebooks — the no-
     retraining half of _ivfpq_train, used when appending to a
     persisted index (FAISS add() semantics: the quantizers are
-    frozen artifacts; new vectors only get assigned)."""
+    frozen artifacts; new vectors only get assigned). Plan
+    construction costs a constant number of py4j round trips in
+    n_cells and kc (pinned in tests)."""
     emb_q = emb.select(
         F.col(id_col), int8_quantize(F.col(vec_col)).alias("_qv"))
-    cent_table = F.array(*[
-        F.array(*[F.lit(int(v)).cast("bigint") for v in c])
-        for c in cells])
-    data = (
-        int_assign_centroid(emb_q, cells, "_qv")
-        .withColumnRenamed("_cid", "_cell")
-        .withColumn("_res", F.zip_with(
-            F.col("_qv"), F.element_at(cent_table, F.col("_cell") + 1),
-            lambda a, b: a - b)))
-    data = _assign_codes(data, codebooks, sub)
+    data = _assign_codes(_cell_residuals(emb_q, cells), codebooks, sub)
     return data.drop("_qv", "_res")
 
 
@@ -2179,14 +2164,15 @@ def _ivfpq_probe(codes: DataFrame, cells: list[list[int]],
 
     Round-13 optimization: the cells and codebooks ride ONE-ROW
     broadcast DataFrames (the df quantizer-engine shape) instead of
-    O(n_cells x dim + m x kc x sub) literal expression trees — the
-    literal plans cost seconds of analysis/codegen per build, and the
-    streaming probe (st12/st14) paid that PER MICRO-BATCH. Arithmetic
-    is unchanged and exact: the cell ranking sorts the same
-    struct(d, i, qc) triples, and the ADC term selects the coded
+    arrays built one F.lit per element — O(n_cells x dim + m x kc x
+    sub) py4j round trips of plan construction per build, which the
+    streaming probe (st12/st14) paid PER MICRO-BATCH (the build and
+    append paths now use one literal per set, _int_cells_lit).
+    Arithmetic is unchanged and exact: the cell ranking sorts the
+    same struct(d, i, qc) triples, and the ADC term selects the coded
     codeword FIRST and takes one integer dot with it — the same
-    element the literal LUT's element_at picked out of its
-    all-codewords dot array, so the scores are bit-identical."""
+    element an all-codewords LUT's element_at would pick, so the
+    scores are bit-identical."""
     spark = codes.sparkSession
     if prune_partitions:
         # Round-14 (VERDICT #2): the pruned path always materialized
@@ -2211,7 +2197,7 @@ def _ivfpq_probe(codes: DataFrame, cells: list[list[int]],
         icells = [[int(v) for v in c] for c in cells]
         rows = []
         for r in q_src:
-            qq = _int8_quantize_py(r[1])
+            qq = _int8_quantize_py(r[1], r[0])
             scored = sorted(
                 (sum((a - b) * (a - b) for a, b in zip(qq, c)), i,
                  sum(a * b for a, b in zip(qq, c)))

@@ -86,16 +86,6 @@ def clean_corpus(docs: DataFrame, text_col: str = "text",
     return kept.join(drops, id_col, "left_anti").orderBy(id_col)
 
 
-def survival_report(docs: DataFrame, cleaned: DataFrame,
-                    id_col: str = "doc_id") -> DataFrame:
-    """One-row funnel summary: corpus size in/out."""
-    n_in = docs.count()
-    n_out = cleaned.count()
-    return docs.sparkSession.createDataFrame(
-        [(n_in, n_out, round(n_out / n_in, 4) if n_in else 0.0)],
-        "docs_in long, docs_out long, survival_rate double")
-
-
 def stratified_sample(df: DataFrame, strata_col: str,
                       rates: dict[str, float], key_col: str = "doc_id",
                       default_rate: float = 1.0,

@@ -47,18 +47,6 @@ def has_broadcast_join(df: DataFrame) -> bool:
     return count_operator(df, "BroadcastHashJoin") > 0
 
 
-def shuffle_count(df: DataFrame) -> int:
-    """Shuffle exchanges in the static plan, excluding broadcast and
-    single-partition exchanges (AQE may coalesce at run time). In
-    formatted explain mode each operator appears once as a detail
-    header ``(n) Exchange``; its partitioning is NOT on that line but
-    in the detail body as ``Arguments: SinglePartition, ...`` — so
-    count headers and subtract the SinglePartition bodies."""
-    plan = formatted_plan(df)
-    headers = len(re.findall(r"^\(\d+\) Exchange\s*$", plan, re.M))
-    return headers - single_partition_exchanges(df, _plan=plan)
-
-
 def unpartitioned_window_orders(df: DataFrame) -> list[str]:
     """Order-key expressions of every Window node in the OPTIMIZED
     logical plan whose partition spec is EMPTY — i.e. windows that
@@ -102,7 +90,7 @@ def unpartitioned_window_orders(df: DataFrame) -> list[str]:
     return out
 
 
-def single_partition_exchanges(df: DataFrame, _plan: str | None = None) -> int:
+def single_partition_exchanges(df: DataFrame) -> int:
     """Count Exchange operators that shuffle everything to ONE partition.
 
     The formatted plan renders the operator line as just ``Exchange (n)``
@@ -111,5 +99,4 @@ def single_partition_exchanges(df: DataFrame, _plan: str | None = None) -> int:
     round-3 ADVICE finding). The partitioning lives in the detail
     section: ``Arguments: SinglePartition, ENSURE_REQUIREMENTS, ...`` —
     one such line per single-partition Exchange."""
-    plan = _plan if _plan is not None else formatted_plan(df)
-    return plan.count("Arguments: SinglePartition")
+    return formatted_plan(df).count("Arguments: SinglePartition")

@@ -8,19 +8,14 @@ change:
 
     python tools/gen_reverify.py
 
-Derived against boundary db501f37b5c5 (round 12: verdict/advice/correctness/bench).
+Derived against boundary 394ee508e5ce (round 14: verdict/advice/correctness/bench).
 """
 
 _REVERIFY_FIRST = (
-    "dl1_delta_time_travel",
-    "dl2_delta_table_changes",
-    "dl3_delta_snapshot_diff",
-    "st18_stream_delta_ingest",
-    "dl4_delta_pruned_read",
-    "dl5_delta_optimize_invariance",
-    "dl6_delta_zorder_read",
-    "g6_kcore",
-    "dp22_importance_weights",
+    "sim11_int_ivf_topk",
+    "sim27_int_range_search",
+    "sim28_nsw_beam_search",
+    "sim29_nsw_persisted_probe",
     "sim30_nsw_delete",
     "sim31_nsw_recall_eval",
     "sim32_nsw_distributed_build",
@@ -28,30 +23,7 @@ _REVERIFY_FIRST = (
     "st17_stream_graph_append",
     "sim34_nsw_sequential_append",
     "sim35_int_ivf_bigc_topk",
-    "st16_stream_graph_delete",
-    "dd6_dup_clusters",
-    "dd13_lsh_calibration",
-    "dd14_survivorship",
-    "dd15_persisted_lsh_probe",
-    "dd19_lsh_bucket_audit",
-    "dd16_lsh_index_append_probe",
-    "dd17_star_dedup_clusters",
-    "dd18_index_tombstone_probe",
-    "st13_stream_index_delete",
-    "e1_miner_info",
-    "e1_mining_info",
-    "a4_win_totals",
-    "g1_pagerank",
-    "g3_label_components",
-    "g4_star_components",
-    "st11_stream_components",
-    "dp1_clean_corpus",
-    "dp2_clean_corpus_clustered",
-    "dp17_pipeline_funnel",
-    "sim11_int_ivf_topk",
-    "sim27_int_range_search",
-    "sim28_nsw_beam_search",
-    "sim29_nsw_persisted_probe",
+    "sim16_int_pq_topk",
     "sim17_int_ivfpq_topk",
     "sim19_ivfpq_persisted_topk",
     "sim20_ivfpq_append_probe",
@@ -64,8 +36,8 @@ _REVERIFY_FIRST = (
     "sim26_ivfpq_delete",
     "st12_stream_ann_probe",
     "st14_stream_ann_delete",
+    "st16_stream_graph_delete",
     "st15_stream_ann_append",
-    "st9_stream_ingest_dedup",
     "w19_rolling_active_users",
     "w20_zscore_outliers",
     "j18_salted_skew_join",
@@ -76,4 +48,32 @@ _REVERIFY_FIRST = (
     "dp5_sequence_pack",
     "dp8_global_shuffle",
     "dp14_length_buckets",
+    "dp13_token_budget_mix",
+    "dp15_dataset_card",
+    "dp16_shard_writer_plan",
+    "dp18_exact_k_sample",
+    "x16_try_cast_quarantine",
+    "o6_tail_slice",
+    "o7_offset_pagination",
+    "o8_range_slice",
+    "o9_keyset_pagination",
+    "u4_scd2_history",
+    "sim13_recall_eval",
+    "sim14_mmr_rerank",
+    "sim15_knn_graph",
+    "tx12_heavy_hitter_langs",
+    "tx13_countmin_tokens",
+    "tx14_bpe_merges",
+    "tx15_surprisal_score",
+    "tx16_mojibake_repair",
+    "tx17_vocab_stats",
+    "tx18_collocations",
+    "w7_ranking",
+    "st1_stream_tumbling_counts",
+    "st2_stream_sliding_totals",
+    "st3_stream_dedup",
+    "w21_activity_streaks",
+    "st4_stream_stateful_stats",
+    "w22_rolling_trend",
+    "st5_stream_band_join",
 )

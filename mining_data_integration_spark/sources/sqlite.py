@@ -82,10 +82,3 @@ def read_sqlite(spark: SparkSession, db_path: str, table: str,
 
     return range_df.mapInPandas(pull, schema=schema)
 
-
-def snapshot_to_bronze(spark: SparkSession, db_path: str, table: str,
-                       bronze_dir: str, partitions: int = 8) -> None:
-    """One extraction pass: SQLite table -> parquet bronze (the landing
-    step ST1 runs before each refresh if reading live node files)."""
-    read_sqlite(spark, db_path, table, partitions) \
-        .write.mode("overwrite").parquet(f"{bronze_dir}/{table}")

@@ -1588,6 +1588,76 @@ class TestIvfpqPersistedLifecycle:
         out = S.ivfpq_probe_topk(idx, q, k=3, n_probe=1).collect()
         assert len(out) == 6 and all(r.ip_q8 is not None for r in out)
 
+    def test_encode_plan_round_trips_flat_in_cell_count(
+            self, spark, monkeypatch):
+        """Building the append-path encode plan (no action) costs a
+        constant number of py4j round trips in n_cells and kc: each
+        centroid set and codebook is ONE literal column, never one
+        Column per element (per-element literals cost ~15k round trips
+        at 4 cells x 4 codewords and ~60k at 16 x 16). py4j's
+        memory-management deletes ("m" commands) are left out: they
+        are flushed in bursts for objects freed by earlier work."""
+        from py4j.clientserver import ClientServerConnection
+
+        from mining_data_integration_spark.operators import (
+            similarity as S)
+
+        _, emb = self._emb(spark, dim=64)
+        calls = [0]
+        send = ClientServerConnection.send_command
+
+        def counting(conn, command):
+            if not command.startswith("m\n"):
+                calls[0] += 1
+            return send(conn, command)
+
+        monkeypatch.setattr(ClientServerConnection, "send_command",
+                            counting)
+
+        def round_trips(n_cells, kc, m=4, dim=64):
+            sub = dim // m
+            cells = [[(c * 7 + j) % 255 - 127 for j in range(dim)]
+                     for c in range(n_cells)]
+            books = [[[(s + w * 3 + j) % 200 - 100 for j in range(sub)]
+                      for w in range(kc)] for s in range(m)]
+            before = calls[0]
+            S._ivfpq_encode(emb, cells, books, sub, "vec_id",
+                            "embedding")
+            return calls[0] - before
+
+        round_trips(4, 4)  # warm py4j's per-method lookups
+        small, big = round_trips(4, 4), round_trips(16, 16)
+        assert big - small <= 20, (small, big)
+
+    def test_pruned_probe_rejects_non_finite_queries(self, spark,
+                                                     tmp_path):
+        """The pruned probe quantizes queries in Python; a NaN, inf
+        or null element (or a null vector) has no int8 quantization
+        the Spark expression agrees with, so the probe refuses it by
+        query id instead of ranking a different vector."""
+        import pytest as _pytest
+
+        from mining_data_integration_spark.operators import (
+            similarity as S)
+
+        _, emb = self._emb(spark)
+        path = str(tmp_path / "idx")
+        S.save_ivfpq_index(emb, path, n_cells=2, m=2, kc=2, iters=2,
+                           dim=8)
+        idx = S.load_ivfpq_index(spark, path)
+        good = [float(j) - 3.5 for j in range(8)]
+        bad = [good[:3] + [x] + good[4:]
+               for x in (float("nan"), float("inf"), float("-inf"), None)]
+        for qid, vec in zip((11, 12, 13, 14, 15), bad + [None]):
+            q = spark.createDataFrame([(1, good), (qid, vec)],
+                                      "q_id long, q_emb array<double>")
+            with _pytest.raises(ValueError, match=f"query {qid}:"):
+                S.ivfpq_probe_topk(idx, q, k=3, n_probe=1)
+        ok = spark.createDataFrame([(1, good)],
+                                   "q_id long, q_emb array<double>")
+        assert len(S.ivfpq_probe_topk(idx, ok, k=3,
+                                      n_probe=1).collect()) == 3
+
     def test_save_is_idempotent_and_versioned(self, spark, tmp_path):
         from mining_data_integration_spark.operators import (
             similarity as S)
@@ -2764,6 +2834,16 @@ class TestNswGraphAnn:
                                      iters=2).count()
         assert stats["pair_count"] == real
         assert stats["n"] == emb.count()
+
+    def test_build_stats_engine_parity(self, spark):
+        """nsw_build_stats scores cells through the shared kernel for
+        both quantizer engines, so the cost model cannot depend on
+        which engine ran."""
+        emb = self._emb(spark)
+        stats = {e: S.nsw_build_stats(emb, n_centroids=4, n_probe=2,
+                                      iters=2, quantizer=e)
+                 for e in ("literal", "df")}
+        assert stats["literal"] == stats["df"]
 
     def _lattice_emb(self, spark, n, dim=16):
         """Deterministic synthetic corpus sized to order — vec_id

@@ -270,13 +270,18 @@ def main() -> None:
         # design (build-once/probe-many lifecycle), so the steady-state
         # numbers above report build_index: 0.0 once a prior run built
         # them. Record ONE cold-build sample per round — delete the
-        # artifact roots, run each lifecycle query once, keep its stage
-        # snapshot — so the build path's cost stays measured.
-        # Additions-only: runs AFTER the extended medians (their series
-        # stays comparable) and rebuilds the artifacts it deleted.
+        # two untagged artifacts these queries build, run each
+        # lifecycle query once, keep its stage snapshot — so the build
+        # path's cost stays measured. Additions-only: runs AFTER the
+        # extended medians (their series stays comparable) and
+        # rebuilds exactly what it deleted; the tagged artifacts other
+        # queries own stay in place.
         import shutil as _shutil
 
-        for d in ("/tmp/sg_nsw_index", "/tmp/sg_ivfpq_index"):
+        from mining_data_integration_spark.queries.similarity import (
+            _ivfpq_index_path, _nsw_index_path)
+
+        for d in (_nsw_index_path(sf_dir), _ivfpq_index_path(sf_dir)):
             _shutil.rmtree(d, ignore_errors=True)
         cold: dict[str, dict] = {}
         for name in ("sim29_nsw_persisted_probe", "st12_stream_ann_probe"):

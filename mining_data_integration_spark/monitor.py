@@ -2,18 +2,23 @@
 over the three gold tables (miner_info / mining_info / block_info),
 re-expressing mining_monitor_rpc.js:1-161.
 
-Window strategy at scale: every trailing-N window here is bounded by a
-constant (20 / 50 / 1000 rows — mining_monitor_rpc.js:3, 26, 48), so the
-unpartitioned row_number over block height is a top-K problem
-(TakeOrderedAndProject), not a full-table sort; the per-address
-cumulative/forward-fill windows partition on address — the natural
-shuffle key, uniform by construction.
+Plan shape: every section is one Spark job (the empty RR section
+none). Every trailing-N window here is bounded by a constant (20 / 50 /
+1000 rows — mining_monitor_rpc.js:3, 26, 48), so it is a top-K
+(TakeOrderedAndProject), not a full-table sort. The top-K leaves its
+n rows in one partition, so burn_fee_area runs its whole chain there in
+one pass: the tip is an unpartitioned max window over the tail, the
+per-(address, height) fee sum and the per-address window (running sum
+plus the next point's height) need no exchange, and the forward-fill is
+an explode of each point over the heights up to the next: no join and
+no broadcast.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DecimalType
 
 
 def trailing(df: DataFrame, n: int, height_col: str) -> DataFrame:
@@ -52,75 +57,62 @@ def miner_table(mining_info: DataFrame, n: int = 50) -> DataFrame:
     )
 
 
-def explode_commits(block_info: DataFrame) -> DataFrame:
-    """F15 (mining_monitor_rpc.js:28-37): flatten commit_value_list ->
-    one row per (height, address, fee)."""
-    return block_info.select(
-        "stacks_block_height",
-        F.explode("commit_value_list").alias("c"),
-    ).select(
-        "stacks_block_height",
-        F.col("c.leader_key_address").alias("address"),
-        F.col("c.burn_fee").alias("burn_fee"),
-    )
-
-
 def burn_fee_area(block_info: DataFrame, n: int = 1000) -> DataFrame:
-    """The showcase window chain (mining_monitor_rpc.js:46-113):
-    W1 tail-n -> F15 explode -> W2 per-address cumulative sum ->
-    W3 duplicate-height keep-last -> W4/W5 forward-fill to the tip.
+    """The showcase window chain (mining_monitor_rpc.js:46-113) as one
+    pass over the trailing-n tail: W1 tail-n (plus the tip) -> F15
+    explode -> per-(address, height) fee sum -> W2 per-address running
+    sum with the next point's height -> W4/W5 forward-fill by exploding
+    each point over the heights up to the next one (the last point runs
+    to the global tip).
 
-    Output: dense long-format series (height, address, cum_burn_fee)
-    with one point per height from each address's first commit to the
-    global tip."""
-    tail = trailing(block_info, n, "stacks_block_height")
+    Output: dense long-format series (height, address, cum_burn_fee
+    decimal(30,0)) with one point per height from each address's first
+    commit to the global tip, ordered by (address, height). Duplicate
+    commits at one (address, height) collapse to one point by a
+    per-height sum, so the value does not depend on the order of rows
+    within a height (the reference's keep-last step takes the last row
+    of its running sum, which for non-negative fees is the same
+    number). A NULL fee adds nothing; a series is NULL until its first
+    non-NULL fee.
+
+    The tail leaves TakeOrderedAndProject as one partition, so the
+    unpartitioned tip window, the per-height aggregate, the per-address
+    window and the final sort all run inside it: one job, one
+    block_info scan, no join and no broadcast."""
+    h = "stacks_block_height"
+    tail = trailing(block_info, n, h).select(
+        h, "commit_value_list",
+        F.max(h).over(Window.partitionBy()).alias("_tip"),
+    )
     # commits with no registered leader key have a NULL address: they
-    # can't key a per-miner series (and NULL never joins back to the
-    # spine) — the chart covers identified miners only
-    pts = explode_commits(tail).filter(F.col("address").isNotNull())
-
-    # W2: running sum per address, height-ascending
-    w_cum = (
-        Window.partitionBy("address")
-        .orderBy("stacks_block_height")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    # can't key a per-miner series — the chart covers identified
+    # miners only
+    pts = (
+        tail.select(h, "_tip", F.explode("commit_value_list").alias("c"))
+        .select(h, "_tip", F.col("c.leader_key_address").alias("address"),
+                F.col("c.burn_fee").alias("burn_fee"))
+        .filter(F.col("address").isNotNull())
+        .groupBy("address", h, "_tip")
+        .agg(F.sum("burn_fee").alias("fee"))
     )
-    series = pts.withColumn("cum_burn_fee", F.sum("burn_fee").over(w_cum))
-
-    # W3: collapse duplicate heights keeping the last (largest) point
-    w_dup = Window.partitionBy("address", "stacks_block_height").orderBy(
-        F.desc("cum_burn_fee"))
-    series = (
-        series.withColumn("_rn", F.row_number().over(w_dup))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "burn_fee")
-    )
-
-    # W4/W5: dense spine per address (first point .. global tip), then
-    # forward-fill. sequence+explode stays JVM-side; the spine adds at
-    # most (#addresses x n) rows — bounded by the trailing window.
-    tip = tail.agg(F.max("stacks_block_height").alias("tip"))
-    bounds = (
-        series.groupBy("address")
-        .agg(F.min("stacks_block_height").alias("h0"))
-        .crossJoin(F.broadcast(tip))
-    )
-    spine = bounds.select(
-        "address",
-        F.explode(F.sequence("h0", "tip")).alias("stacks_block_height"),
-    )
-    w_fill = (
-        Window.partitionBy("address")
-        .orderBy("stacks_block_height")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    w = Window.partitionBy("address").orderBy(h)
+    series = pts.select(
+        "address", h, "_tip",
+        F.sum("fee").over(w.rowsBetween(Window.unboundedPreceding,
+                                        Window.currentRow))
+        .alias("cum_burn_fee"),
+        F.lead(h).over(w).alias("_next"),
     )
     return (
-        spine.join(series, ["address", "stacks_block_height"], "left")
-        .withColumn(
-            "cum_burn_fee",
-            F.last("cum_burn_fee", ignorenulls=True).over(w_fill),
+        series.select(
+            "address",
+            F.explode(F.sequence(
+                h, F.coalesce(F.col("_next") - 1, F.col("_tip")))).alias(h),
+            # each sum widens decimal(20,0) fees by 10 digits; the
+            # series keeps the type of one sum over the fees
+            F.col("cum_burn_fee").cast(DecimalType(30, 0)),
         )
-        .orderBy("address", "stacks_block_height")
+        .orderBy("address", h)
     )
 
 
@@ -130,15 +122,17 @@ def monitor_integrate(golds: dict[str, DataFrame],
     """E2 composite (packMiningMonitorData, mining_monitor_rpc.js:
     151-161): the five dashboard sections as one dict of DataFrames.
     The RR section is empty in the reference (dead endpoint,
-    mining_monitor_rpc.js:142-149) — kept empty for parity."""
+    mining_monitor_rpc.js:142-149) — kept empty for parity, as a
+    limit(0) the optimizer turns into an empty local relation, so
+    collecting it runs no Spark job."""
     mi = golds["miner_info"]
     return {
         "current_status": current_status(golds["block_info"], tail_status),
         "miner_table": miner_table(golds["mining_info"]),
         "burn_fee_area": burn_fee_area(golds["block_info"], tail_area),
         "winner_pie": winner_pie(mi),
-        "rr": mi.sparkSession.createDataFrame(
-            [], "address string, RR double"),
+        "rr": mi.select(F.lit(None).cast("string").alias("address"),
+                        F.lit(None).cast("double").alias("RR")).limit(0),
     }
 
 

@@ -2,11 +2,14 @@
 the Express endpoint behaviors re-expressed as DataFrame transforms.
 
 The reference serves from Redis-cached JSON arrays and slices in JS
-(server.js:127-278); here each slice is a window/limit over a gold
-table. Reference quirks are preserved deliberately and documented:
+(server.js:127-278); here each slice is one top-K over a gold table
+(`orderBy(...).offset(a).limit(b)`, planned as one
+TakeOrderedAndProject: no Window node, no full sort). Reference quirks
+are preserved deliberately and documented:
 
 * tail_slice keeps `latest + 1` rows — the reference's
-  `resp.slice(-latest - 1)` off-by-one (server.js:152, 184);
+  `resp.slice(-latest - 1)` off-by-one (server.js:152, 184), in
+  reverse order (newest first);
 * mining_info is tip-first by construction (rpc.js:300), so its
   head-slice returns the *newest* rows (O5);
 * RR is served rounded to 3 decimals (server.js:293 `toFixed(3)`) —
@@ -15,7 +18,7 @@ table. Reference quirks are preserved deliberately and documented:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .core import GAS, STX_REWARD, STX_REWARD_BONUS
@@ -26,38 +29,43 @@ def head_slice(df: DataFrame, latest: int, order) -> DataFrame:
     return df.orderBy(*order).limit(latest)
 
 
+def _rows(df: DataFrame, lo: int, hi: int, order) -> DataFrame:
+    """Rows lo..hi (1-based, inclusive) of `df` in `order`, in that
+    order: one top-K (TakeOrderedAndProject with an offset). Clamped to
+    `row_number() BETWEEN lo AND hi` semantics: the part of a window
+    below 1 is dropped and an empty or inverted window is empty."""
+    lo = max(lo, 1)
+    return df.orderBy(*order).offset(lo - 1).limit(max(hi - lo + 1, 0))
+
+
 def tail_slice(df: DataFrame, latest: int, order) -> DataFrame:
     """O6 (server.js:151-152, 183-184): the reference's
-    `slice(-latest-1)` — the last `latest+1` rows, original order."""
-    w = Window.orderBy(*[c.desc() if hasattr(c, "desc") else F.col(c).desc()
-                         for c in order])
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= latest + 1)
-        .drop("_rn")
-    )
+    `slice(-latest-1)` — the last `latest+1` rows of `order`, returned
+    in reverse `order` (the top-K runs on the reversed order; newest
+    first for an ascending height). `order` holds column names or plain
+    Columns; a Column that already carries a direction has no reverse
+    to take and is rejected."""
+    for c in order:
+        # F.desc(x), x.asc_nulls_last(), ...: a SortOrder node
+        if not isinstance(c, str) and \
+                c._jc.node().getClass().getSimpleName() == "SortOrder":
+            raise ValueError(
+                f"tail_slice: `order` entry {c!r} is a sort order; pass the "
+                "plain column and tail_slice reverses it")
+    rev = [F.col(c).desc() if isinstance(c, str) else c.desc()
+           for c in order]
+    return _rows(df, 1, latest + 1, rev)
 
 
 def paginate(df: DataFrame, page: int, size: int, order) -> DataFrame:
     """O7 (server.js:153-155): offset pagination
     `slice(size*(page-1), size*page)`."""
-    w = Window.orderBy(*order)
-    lo, hi = size * (page - 1) + 1, size * page
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn").between(lo, hi))
-        .drop("_rn")
-    )
+    return _rows(df, size * (page - 1) + 1, size * page, order)
 
 
 def range_slice(df: DataFrame, start: int, end: int, order) -> DataFrame:
     """O8 (server.js:175-187): 1-based inclusive `slice(start-1, end)`."""
-    w = Window.orderBy(*order)
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn").between(start, end))
-        .drop("_rn")
-    )
+    return _rows(df, start, end, order)
 
 
 def with_rr(miner_info: DataFrame, btc_price: float, stx_price: float,

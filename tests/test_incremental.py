@@ -128,6 +128,62 @@ class TestIncremental:
         got = canon_rows(spark.read.parquet(f"{gold}/miner_info"))
         assert got == canon_rows(core.miner_info(ext))
 
+    def test_refresh_once_warm_equals_cold_smoke(self, spark, tables,
+                                                 tmp_path, monkeypatch):
+        """The default run's warm-refresh equivalence check (the deeper
+        variants are `slow`): a warm refresh_once across a one-block
+        extension writes the same gold as a cold refresh_once of the
+        extended world. Two-height buckets and reorg_depth=1 put the
+        window floor at stacks height 6, so heights 0-5 come from the
+        persisted chain state."""
+        from mining_data_integration_spark.streaming import refresh_once
+
+        monkeypatch.setattr(incremental, "HEIGHTS_PER_BUCKET", 2)
+        warm, cold = str(tmp_path / "warm"), str(tmp_path / "cold")
+        assert refresh_once(tables, warm, reuse_gold=True) == "cold"
+        ext = extended_tables(spark, tables)
+        assert refresh_once(ext, warm, reuse_gold=True,
+                            reorg_depth=1) == "warm"
+        assert refresh_once(ext, cold) == "cold"
+        for name in ("mining_info", "block_info", "miner_info"):
+            got = canon_rows(spark.read.parquet(f"{warm}/{name}"))
+            want = canon_rows(spark.read.parquet(f"{cold}/{name}"))
+            assert got == want, f"{name} diverged on warm refresh"
+
+    def test_warm_prepare_outlives_chain_state_dirs(self, spark, tables,
+                                                    tmp_path, monkeypatch):
+        """Checkpoint-before-overwrite: the warm prepare's lazy snap
+        checkpoint is only safe because the eager winners checkpoint
+        materializes it (and the enriched cache) before any gold or
+        state write. Once prepare_full_with_gold returns, the state
+        dirs it read can go without changing snap, winners or
+        enriched. The floor sits at stacks height 6 (two-height
+        buckets, reorg_depth=1), so the prepare reads sub-floor rows
+        from both state dirs."""
+        import os
+        import shutil
+
+        from mining_data_integration_spark.streaming import refresh_once
+
+        monkeypatch.setattr(incremental, "HEIGHTS_PER_BUCKET", 2)
+        gold = str(tmp_path / "gold")
+        assert refresh_once(tables, gold, reuse_gold=True) == "cold"
+        ext = extended_tables(spark, tables)
+        got = incremental.prepare_full_with_gold(spark, ext, gold,
+                                                 reorg_depth=1)
+        assert got is not None and got["aligned_floor"] == 6
+        for d in ("canonical_chain", "canonical_stacks"):
+            shutil.rmtree(os.path.join(gold, d))
+        want = core.prepare(ext)
+        try:
+            for key in ("snap", "winners", "enriched"):
+                cols = sorted(want[key].columns)
+                assert canon_rows(got[key].select(cols)) == \
+                    canon_rows(want[key].select(cols)), key
+        finally:
+            got["enriched"].unpersist()
+            want["enriched"].unpersist()
+
     @pytest.mark.slow
     def test_warm_refresh_skips_subfloor_gold_partitions(
             self, spark, tables, tmp_path, monkeypatch):

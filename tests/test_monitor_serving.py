@@ -4,7 +4,11 @@ streaming layer (gold refresh + event-time ops in batch mode)."""
 
 from __future__ import annotations
 
+import itertools
+
 import pytest
+from pyspark.sql import Window
+from pyspark.sql import functions as F
 
 from mining_data_integration_spark import (
     core, fixtures, monitor, serving, streaming,
@@ -12,6 +16,72 @@ from mining_data_integration_spark import (
 from mining_data_integration_spark.fixtures import MINER_A, MINER_B, MINER_C
 
 A, B, C = MINER_A, MINER_B, MINER_C
+
+
+# --- reference formulations -------------------------------------------
+# burn_fee_area as the plain window chain (dedup window, spine cross
+# join, left join, forward-fill) and the slices as row_number filters.
+# The one-pass / top-K forms in the package must match them row for row
+# and in order.
+
+def ref_burn_fee_area(block_info, n=1000):
+    """W1 tail -> explode -> W2 running sum -> W3 duplicate-height
+    keep-last -> W4/W5 spine cross join, left join and forward-fill."""
+    h = "stacks_block_height"
+    tail = block_info.orderBy(F.desc(h)).limit(n)
+    pts = tail.select(h, F.explode("commit_value_list").alias("c")).select(
+        h, F.col("c.leader_key_address").alias("address"),
+        F.col("c.burn_fee").alias("burn_fee"),
+    ).filter(F.col("address").isNotNull())
+    w_cum = (Window.partitionBy("address").orderBy(h)
+             .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    series = pts.withColumn("cum_burn_fee", F.sum("burn_fee").over(w_cum))
+    w_dup = Window.partitionBy("address", h).orderBy(F.desc("cum_burn_fee"))
+    series = (series.withColumn("_rn", F.row_number().over(w_dup))
+              .filter(F.col("_rn") == 1).drop("_rn", "burn_fee"))
+    tip = tail.agg(F.max(h).alias("tip"))
+    spine = (series.groupBy("address").agg(F.min(h).alias("h0"))
+             .crossJoin(F.broadcast(tip))
+             .select("address", F.explode(F.sequence("h0", "tip")).alias(h)))
+    return (spine.join(series, ["address", h], "left")
+            .withColumn("cum_burn_fee",
+                        F.last("cum_burn_fee", ignorenulls=True).over(w_cum))
+            .orderBy("address", h))
+
+
+def _ref_row_filter(df, lo, hi, order):
+    w = Window.orderBy(*order)
+    return (df.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn").between(lo, hi)).drop("_rn"))
+
+
+def ref_tail_slice(df, latest, order):
+    return _ref_row_filter(
+        df, 1, latest + 1,
+        [c.desc() if hasattr(c, "desc") else F.col(c).desc() for c in order])
+
+
+def ref_paginate(df, page, size, order):
+    return _ref_row_filter(df, size * (page - 1) + 1, size * page, order)
+
+
+def ref_range_slice(df, start, end, order):
+    return _ref_row_filter(df, start, end, order)
+
+
+def jobs_of(spark, fn, group):
+    """Run fn under a fresh job group; return (result, #jobs)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
 
 
 @pytest.fixture(scope="module")
@@ -60,6 +130,135 @@ class TestMonitor:
         rows = monitor.winner_pie(golds["miner_info"]).collect()
         got = {r.address: r.number for r in rows if r.address}
         assert got[A] == 3 and got[B] == 2 and got[C] == 1
+
+
+BLOCK_INFO_SCHEMA = (
+    "stacks_block_height long, sum_burn_fees decimal(30,0), "
+    "sum_miner_amount long, commit_value_list array<struct<"
+    "burn_fee: decimal(20,0), leader_key_address: string, txid: string>>")
+
+
+@pytest.fixture(scope="module")
+def hand_block_info(spark):
+    """Seven heights with a gap at 4: duplicate (address, height)
+    commits (X@3, Y@7), a NULL leader_key_address (@5), NULL burn_fees
+    (Z's first point, Y@7), an empty commit list (@6) and a height (1)
+    that a trailing n=6 window drops."""
+    from decimal import Decimal as D
+
+    def c(fee, addr, tx):
+        return (None if fee is None else D(fee), addr, tx)
+
+    rows = [
+        (1, [c(100, "X", "t1")]),
+        (2, [c(200, "X", "t2"), c(50, "Y", "t3")]),
+        (3, [c(300, "X", "t4"), c(300, "X", "t5"), c(None, "Z", "t6")]),
+        (5, [c(10, None, "t7"), c(70, "Z", "t8")]),
+        (6, []),
+        (7, [c(5, "Y", "t9"), c(None, "Y", "t10")]),
+        (8, [c(1, "W", "t11")]),
+    ]
+    return spark.createDataFrame(
+        [(h, None, len(cs), cs) for h, cs in rows], BLOCK_INFO_SCHEMA)
+
+
+class TestBurnFeeAreaOnePass:
+    def test_equals_window_chain_reference(self, hand_block_info):
+        for n in (6, 1000, 1):
+            got = monitor.burn_fee_area(hand_block_info, n)
+            want = ref_burn_fee_area(hand_block_info, n)
+            assert got.schema == want.schema
+            assert got.collect() == want.collect(), f"n={n}"
+
+    def test_hand_values(self, hand_block_info):
+        rows = monitor.burn_fee_area(hand_block_info, 6).collect()
+        by_addr: dict[str, list] = {}
+        for r in rows:
+            by_addr.setdefault(r.address, []).append(
+                (r.stacks_block_height,
+                 None if r.cum_burn_fee is None else int(r.cum_burn_fee)))
+        assert by_addr == {
+            # height 1 is outside the tail; 3 sums its two commits;
+            # the gap at 4 and the empty 6 are forward-filled
+            "X": [(2, 200), (3, 800)] + [(h, 800) for h in range(4, 9)],
+            "Y": [(h, 50) for h in range(2, 7)] + [(7, 55), (8, 55)],
+            # NULL until the first non-NULL fee
+            "Z": [(3, None), (4, None)] + [(h, 70) for h in range(5, 9)],
+            "W": [(8, 1)],
+        }
+        assert str(monitor.burn_fee_area(hand_block_info).schema[
+            "cum_burn_fee"].dataType) == "DecimalType(30,0)"
+
+    def test_plan_is_one_scan_one_job(self, spark, hand_block_info,
+                                      tmp_path):
+        path = str(tmp_path / "block_info")
+        hand_block_info.write.parquet(path)
+        bi = spark.read.parquet(path)
+        df = monitor.burn_fee_area(bi, 6)
+        plan = executed_plan(df)
+        assert plan.count("FileScan") == 1, plan
+        assert "Join" not in plan and "BroadcastExchange" not in plan, plan
+        rows, jobs = jobs_of(spark, df.collect, "bfa_one_pass")
+        assert jobs == 1
+        assert rows == ref_burn_fee_area(bi, 6).collect()
+
+    def test_rr_section_collects_without_a_job(self, spark, golds):
+        rr = monitor.monitor_integrate(golds)["rr"]
+        assert rr.schema.simpleString() == "struct<address:string,RR:double>"
+        rows, jobs = jobs_of(spark, rr.collect, "rr_section")
+        assert rows == [] and jobs == 0
+
+
+class TestServingSlices:
+    """tail_slice / paginate / range_slice are one top-K each and
+    return exactly the rows, in the order, of the row_number filter."""
+
+    @pytest.fixture(scope="class")
+    def df(self, spark):
+        return spark.range(1, 11, numPartitions=3).select(
+            F.col("id").alias("h"), (F.col("id") % 3).alias("g"))
+
+    @staticmethod
+    def hs(df):
+        return [(r.g, r.h) for r in df.collect()]
+
+    def test_tail_slice_grid(self, df):
+        for latest in (-2, -1, 0, 1, 4, 9, 10, 14):
+            for order in (["h"], [F.col("g"), F.col("h")]):
+                assert self.hs(serving.tail_slice(df, latest, order)) == \
+                    self.hs(ref_tail_slice(df, latest, order)), (latest, order)
+
+    def test_paginate_grid(self, df):
+        orders = (["h"], [F.desc("h")], ["g", F.desc("h")])
+        for i, (page, size) in enumerate(itertools.product(
+                (-1, 0, 1, 2, 4), (-2, 0, 3, 10))):
+            order = orders[i % len(orders)]
+            assert self.hs(serving.paginate(df, page, size, order)) == \
+                self.hs(ref_paginate(df, page, size, order)), (page, size)
+
+    def test_range_slice_grid(self, df):
+        for start, end in itertools.product((-3, 0, 1, 4, 10, 11),
+                                            (-1, 0, 3, 10, 20)):
+            for order in (["h"], [F.desc("g"), "h"]):
+                assert self.hs(serving.range_slice(df, start, end, order)) \
+                    == self.hs(ref_range_slice(df, start, end, order)), \
+                    (start, end)
+
+    def test_slices_are_one_top_k(self, df):
+        for sl in (serving.tail_slice(df, 3, ["h"]),
+                   serving.paginate(df, 2, 3, [F.desc("h")]),
+                   serving.range_slice(df, 4, 8, ["h"])):
+            plan = executed_plan(sl)
+            assert "TakeOrderedAndProject" in plan and "Window" not in plan, \
+                plan
+
+    def test_tail_slice_rejects_sort_order_columns(self, df):
+        # calling .desc() on F.desc(h) used to fail inside Spark with an
+        # INTERNAL_ERROR at execution; the order has no reverse to take
+        with pytest.raises(ValueError, match="`order` entry"):
+            serving.tail_slice(df, 3, [F.desc("h")])
+        with pytest.raises(ValueError, match="`order` entry"):
+            serving.tail_slice(df, 3, ["g", F.col("h").asc_nulls_last()])
 
 
 class TestServing:

@@ -24,7 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .similarity import _staged
+from ..sources.kv import read_tombstones
+from .similarity import _driver_read_parquet, _staged
 
 ZERO_WIDTH = r"\s+"
 
@@ -296,35 +297,6 @@ def _prune_bucket_generations(path: str, keep: set[str]) -> None:
             shutil.rmtree(os.path.join(path, name), ignore_errors=True)
 
 
-def _read_tombstones(spark, path: str):
-    """All tombstoned corpus ids of a persisted minhash index, or None:
-    the LIVE set (`tombstones/`, appended by delete_from_minhash_index
-    and not yet folded into a buckets generation) UNION the FOLDED sets
-    (`tombstones-folded-g<N>/`, already purged from generation N but
-    kept one compaction cycle for probes still reading the PREVIOUS
-    buckets generation — anti-joining an already-purged id is a no-op,
-    so reading folded sets is always safe and closes the race where a
-    probe resolves the old generation just before a compaction flips
-    the pointer and retires the live set). ignoreMissingFiles: a
-    tombstone file can only vanish mid-scan by RETIRE
-    (kv.fold_tombstones_reader_safe), one full cycle after its fold —
-    by then its ids are physically purged from every generation a
-    racing reader can still resolve."""
-    import os
-
-    dirs = []
-    for name in sorted(os.listdir(path)):
-        if name == "tombstones" or name.startswith("tombstones-folded-g"):
-            d = os.path.join(path, name)
-            if os.path.isdir(d) and any(
-                    f.endswith(".parquet") for f in os.listdir(d)):
-                dirs.append(d)
-    if not dirs:
-        return None
-    return (spark.read.option("ignoreMissingFiles", "true")
-            .parquet(*dirs).select("id").distinct())
-
-
 @_staged("delete")
 def delete_from_minhash_index(ids: DataFrame, path: str,
                               id_col: str = "doc_id") -> None:
@@ -353,11 +325,10 @@ def delete_from_minhash_index(ids: DataFrame, path: str,
 
     from ..sources.kv import maintenance_lease
 
-    spark = ids.sparkSession
-    meta = spark.read.parquet(f"{path}/meta").collect()[0]
-    if meta.version != MINHASH_INDEX_VERSION:
+    meta = _driver_read_parquet(f"{path}/meta")[0]  # no Spark job
+    if meta["version"] != MINHASH_INDEX_VERSION:
         raise ValueError(
-            f"minhash index version {meta.version} at {path}; "
+            f"minhash index version {meta['version']} at {path}; "
             f"this build writes version {MINHASH_INDEX_VERSION}")
     rows = ids.select(F.col(id_col).cast("long").alias("id")).distinct()
     with maintenance_lease(path):
@@ -402,13 +373,13 @@ def append_to_minhash_index(new_docs: DataFrame, path: str,
     from ..sources.kv import maintenance_lease
 
     spark = new_docs.sparkSession
-    meta = spark.read.parquet(f"{path}/meta").collect()[0]
-    if meta.version != MINHASH_INDEX_VERSION:
+    meta = _driver_read_parquet(f"{path}/meta")[0]  # no Spark job
+    if meta["version"] != MINHASH_INDEX_VERSION:
         raise ValueError(
-            f"minhash index version {meta.version} at {path}; "
+            f"minhash index version {meta['version']} at {path}; "
             f"this build writes version {MINHASH_INDEX_VERSION}")
-    rows = band_bucket_rows(new_docs, text_col, id_col, meta.n,
-                            meta.num_hashes, meta.bands)
+    rows = band_bucket_rows(new_docs, text_col, id_col, meta["n"],
+                            meta["num_hashes"], meta["bands"])
     with maintenance_lease(path):
         if skip_existing:
             # resolve the buckets dir INSIDE the lease so the
@@ -461,7 +432,7 @@ def compact_minhash_index(spark, path: str) -> None:
         new_name = f"buckets-g{gen + 1}"
         rows = spark.read.parquet(cur) \
             .select("id", "bh", "band").distinct()
-        ts = _read_tombstones(spark, path)
+        ts = read_tombstones(spark, path)
         if ts is not None:
             rows = rows.join(F.broadcast(ts), "id", "left_anti")
         (rows.repartition("band")
@@ -500,16 +471,16 @@ def probe_minhash_index(new_docs: DataFrame, path: str,
     deleted document can never come back as a candidate, whichever
     buckets generation this probe resolves."""
     spark = new_docs.sparkSession
-    meta = spark.read.parquet(f"{path}/meta").collect()[0]
-    if meta.version != MINHASH_INDEX_VERSION:
+    meta = _driver_read_parquet(f"{path}/meta")[0]  # no Spark job
+    if meta["version"] != MINHASH_INDEX_VERSION:
         raise ValueError(
-            f"minhash index version {meta.version} at {path}; "
+            f"minhash index version {meta['version']} at {path}; "
             f"this build reads version {MINHASH_INDEX_VERSION}")
     new_rows = band_bucket_rows(
-        new_docs, text_col, id_col, meta.n, meta.num_hashes,
-        meta.bands).select(F.col("id").alias("new_id"), "band", "bh")
+        new_docs, text_col, id_col, meta["n"], meta["num_hashes"],
+        meta["bands"]).select(F.col("id").alias("new_id"), "band", "bh")
     idx = spark.read.parquet(_buckets_dir(path))
-    ts = _read_tombstones(spark, path)
+    ts = read_tombstones(spark, path)
     if ts is not None:
         idx = idx.join(F.broadcast(ts), "id", "left_anti")
     idx = idx.select(F.col("id").alias("corpus_id"), "band", "bh")
@@ -540,7 +511,7 @@ def audit_minhash_buckets(spark, path: str,
     from pyspark.sql import Window
 
     rows = spark.read.parquet(_buckets_dir(path)).select("id", "band", "bh")
-    ts = _read_tombstones(spark, path)
+    ts = read_tombstones(spark, path)
     if ts is not None:
         rows = rows.join(F.broadcast(ts), "id", "left_anti")
     per_bucket = (

@@ -23,6 +23,8 @@ import hashlib
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources.kv import read_tombstones
+
 
 def _staged(stage: str):
     """Attribute a lifecycle operation's wall to a named bench stage
@@ -942,6 +944,28 @@ def _nsw_base_gen(path: str) -> tuple[str, int]:
     return d, (1 if name == "adj" else int(name.rsplit("-g", 1)[1]))
 
 
+def _parquet_scan(spark, path: str) -> DataFrame:
+    """spark.read.parquet(path) with the schema taken from one file's
+    footer on the driver: Spark's own inference runs a Spark job per
+    read. Spark writes its schema into every footer; without one (or
+    without files) Spark infers as usual."""
+    import json
+    import os
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    names = sorted(n for n in os.listdir(path) if n.endswith(".parquet"))
+    meta = {}
+    if names:
+        meta = pq.read_schema(os.path.join(path, names[0])).metadata or {}
+    key = b"org.apache.spark.sql.parquet.row.metadata"
+    if key not in meta:
+        return spark.read.parquet(path)
+    schema = StructType.fromJson(json.loads(meta[key]))
+    return spark.read.schema(schema).parquet(path)
+
+
 def _nsw_fragments(path: str, gen: int) -> list[str]:
     """Append-override fragments that apply to base generation `gen`,
     in append order. Fragments are GENERATION-TAGGED
@@ -970,12 +994,12 @@ def _merged_nsw_adj(spark, path: str) -> DataFrame:
     import functools
 
     base_dir, gen = _nsw_base_gen(path)
-    adj = spark.read.parquet(base_dir) \
+    adj = _parquet_scan(spark, base_dir) \
         .select("src", "dst", "cos_sim_q8", "nrk")
     frags = _nsw_fragments(path, gen)
     if not frags:
         return adj
-    parts = [spark.read.parquet(p).withColumn("_g", F.lit(i))
+    parts = [_parquet_scan(spark, p).withColumn("_g", F.lit(i))
              for i, p in enumerate(frags)]
     fall = functools.reduce(lambda a, b: a.unionByName(b), parts)
     wg = Window.partitionBy("src")
@@ -1022,7 +1046,7 @@ def _live_nsw_adj(spark, path: str) -> DataFrame:
     anti-joined over BOTH endpoints — the adjacency every reader
     (probe, append's insert-search, compaction) must see."""
     adj = _merged_nsw_adj(spark, path)
-    ts = _read_vec_tombstones(spark, path)
+    ts = read_tombstones(spark, path)
     if ts is not None:
         adj = (adj.join(F.broadcast(ts.withColumnRenamed("id", "src")),
                         "src", "left_anti")
@@ -1046,8 +1070,12 @@ def append_to_nsw_index(emb_new: DataFrame, corpus: DataFrame,
       1. INSERT-SEARCH — every new vector beam-searches the LIVE
          graph (merged fragments, tombstones excluded) for its
          k_nbrs most-similar reachable nodes; those become its
-         out-edges. O(batch) searches, each with bounded visited
-         state — never a corpus rescan.
+         out-edges. This is nsw_beam_search, so a batch of up to
+         DRIVER_PROBE_MAX_Q vectors searches with driver-held state
+         (bounded per vector) and one Spark collect per round, and
+         a larger batch takes the all-Spark rounds — never a corpus
+         rescan. The found edges come back as a local relation, so
+         the relink below broadcasts them without a job.
       2. RELINK — each found neighbor v gets the new node as a
          back-edge CANDIDATE (cosine is symmetric), and v's whole
          neighbor list is re-ranked to the top-k_nbrs by
@@ -1157,7 +1185,6 @@ def delete_from_nsw_index(ids: DataFrame, path: str,
 
     from ..sources.kv import maintenance_lease
 
-    spark = ids.sparkSession
     meta = _driver_read_parquet(f"{path}/meta")[0]  # no Spark job
     if meta["version"] != NSW_INDEX_VERSION:
         raise ValueError(
@@ -1221,6 +1248,54 @@ def compact_nsw_index(spark, path: str) -> None:
                               ignore_errors=True)
 
 
+DRIVER_PROBE_MAX_Q = 256
+"""Largest query set a driver-side probe head holds: nsw_beam_search's
+per-query search state and the pruned IVF-PQ head's quantize-and-rank.
+Above it both heads fall back to their Spark paths, which hold nothing
+per query on the driver. Set from timings of the NSW search against
+its Spark rounds (tools/time_probe_cap.py: 4-core box, k_nbrs 6,
+beam 4, 3 rounds, load + search + collect, best of two runs). With
+64-dim vectors the driver search was faster at every size tried
+(1,100 vectors: 0.63 vs 1.84 s at 100 queries, 0.98 vs 2.06 s at
+1,024; 5,000 vectors: 0.99 vs 1.97 s at 1,024). With 768-dim vectors
+it was faster at 100 and 256 queries (3.57 vs 4.07 s, 5.09 vs
+5.81 s), about even at 512 (10.35 vs 10.22 s) and slower at 1,024
+(23.6 vs 19.9 s), where the bounded collect of the Spark-quantized
+queries took most of the driver search's time."""
+
+
+def _collect_bounded(df: DataFrame) -> list | None:
+    """Rows of `df`, or None when it has more than DRIVER_PROBE_MAX_Q
+    rows: a `limit(N+1)` collect, so the driver never holds more than
+    N+1 rows whatever the input size."""
+    rows = df.limit(DRIVER_PROBE_MAX_Q + 1).collect()
+    return None if len(rows) > DRIVER_PROBE_MAX_Q else rows
+
+
+def _arrow_frame(spark, cols: dict, schema) -> DataFrame:
+    """A driver-built frame as an Arrow-backed LOCAL relation:
+    `createDataFrame` of a pyarrow.Table with an explicit schema plans
+    as a LocalTableScan, so collecting or broadcasting it runs no Spark
+    job. A list-built frame is an RDD scan instead (collecting one runs
+    a Python-worker job), and a pandas-built one turns NULL doubles
+    into NaN."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return spark.createDataFrame(
+        pa.table(cols, schema=to_arrow_schema(schema)), schema=schema)
+
+
+def _isin(col: str, values) -> Column:
+    """`col IN (values)` for a driver-held id set. Integer ids travel
+    as ONE SQL-text literal list (one JVM parse); Column.isin would
+    make one py4j round trip per value."""
+    vs = sorted(values)
+    if all(type(v) is int for v in vs):
+        return F.expr(f"`{col}` IN ({', '.join(map(str, vs))})")
+    return F.col(col).isin(vs)
+
+
 def nsw_beam_search(adj: DataFrame, emb: DataFrame, queries: DataFrame,
                     k: int = 5, beam: int = 4, rounds: int = 3,
                     n_entries: int = 2, id_col: str = "vec_id",
@@ -1228,21 +1303,183 @@ def nsw_beam_search(adj: DataFrame, emb: DataFrame, queries: DataFrame,
                     q_id_col: str = "q_id",
                     q_vec_col: str = "q_emb") -> DataFrame:
     """Graph-ANN BEAM SEARCH over an nsw_adjacency edge list (sim28) —
-    the query half of the NSW/DiskANN shape, as deterministic BSP
-    rounds (the g5 frontier discipline applied to ANN): every query
-    starts from the n_entries lowest-id vectors, and each round
-    expands the current beam's out-neighbors, scores them with the
-    exact integer dot products (sim11 property — hash-checkable), and
-    re-ranks the visited set to the top-`beam`. Fixed `rounds` keeps
-    the traversal deterministic, so a SQL oracle replays the rounds
-    as chained CTEs (no recursion, the g3/g5 recipe).
+    the query half of the NSW/DiskANN shape, as deterministic rounds
+    (the g5 frontier discipline applied to ANN): every query starts
+    from the n_entries lowest-id vectors, and each round expands the
+    current beam's out-neighbors, scores them with the exact integer
+    dot products (sim11 property — hash-checkable), and re-ranks the
+    visited set to the top-`beam` by (score desc NULLS LAST, id).
+    Fixed `rounds` keeps the traversal deterministic, so a SQL oracle
+    replays the rounds as chained CTEs (no recursion, the g3/g5
+    recipe).
 
-    Scale shape: per-query state is bounded — visited grows to at most
-    n_entries + rounds x beam x k_nbrs rows per query — and each round
+    Scale shape: the search state lives on the DRIVER, bounded per
+    query — visited grows to at most n_entries + rounds x beam x k_nbrs
+    entries — for at most DRIVER_PROBE_MAX_Q queries. The queries are
+    collected once, already quantized by Spark's int8_quantize; the
+    n_entries lowest-id vectors are one ordered lookup; then each round
+    runs ONE collect that fetches the new candidates' vectors and
+    out-edges through literal IN filters over the corpus and the
+    adjacency (both lazily localCheckpointed once per call, so the
+    O(corpus) quantize and the adjacency plan run once, not per round).
+    The exact integer dot (numpy int64, one matrix-vector product per
+    query and round), sqrt and divide, the dedup by max and the
+    ranking run on the driver and are IEEE-identical to the Spark
+    expressions; the answer is an Arrow-backed local relation. About
+    half the Spark jobs of the all-Spark rounds, which remain the path
+    for a larger, null-id or duplicate-id query set
+    (_nsw_beam_search_bsp); that path pays one Spark job more than the
+    rounds alone, the bounded collect that chose it. Nothing rescans
+    the corpus per round.
+
+    A scored pair with a zero-norm vector has no cosine: under ANSI
+    mode (the session default) it raises ValueError naming both ids,
+    where the Spark rounds raise DIVIDE_BY_ZERO; with ANSI off the
+    score is NULL, as in Spark."""
+    import math
+
+    import numpy as np
+    from pyspark.sql import types as T
+
+    qrows = _collect_bounded(queries.select(
+        F.col(q_id_col), int8_quantize(F.col(q_vec_col)).alias("_qq")))
+    if qrows is None or None in {r[0] for r in qrows} \
+            or len({r[0] for r in qrows}) < len(qrows):
+        return _nsw_beam_search_bsp(adj, emb, queries, k, beam, rounds,
+                                    n_entries, id_col, vec_col, q_id_col,
+                                    q_vec_col)
+    spark = emb.sparkSession
+    # the Spark rounds' output schema: ids are the union of the entry
+    # rows' (corpus) and the candidates' (adjacency dst) id columns
+    ids = emb.select(id_col)
+    if rounds > 0:
+        ids = ids.unionByName(adj.select(F.col("dst").alias(id_col)))
+    schema = T.StructType([
+        T.StructField(q_id_col, queries.schema[q_id_col].dataType,
+                      queries.schema[q_id_col].nullable),
+        T.StructField(id_col, ids.schema[id_col].dataType,
+                      ids.schema[id_col].nullable),
+        T.StructField("cos_sim_q8", T.DoubleType(), True),
+        T.StructField("rk", T.LongType(), False)])
+    out = {c: [] for c in schema.names}
+    if not qrows:
+        return _arrow_frame(spark, out, schema)
+    ansi = spark.conf.get("spark.sql.ansi.enabled") == "true"
+    emb_q = emb.select(
+        F.col(id_col), int8_quantize(F.col(vec_col)).alias("_qv")) \
+        .localCheckpoint(eager=False)
+    adj = adj.select("src", "dst").localCheckpoint(eager=False)
+
+    def with_norm(v):
+        # a NULL element makes every dot with v NULL (Spark's
+        # zip_with/aggregate), so v scores as a NULL vector; the norm
+        # is sqrt(double(idot(v, v))): an exact int64 sum, one
+        # long->double conversion, one sqrt — as in Spark
+        if v is None or None in v:
+            return None, None
+        a = np.array(v, dtype=np.int64)
+        return a, math.sqrt(float(int(a @ a)))
+
+    def scores(qid, qq, qn, pairs: list) -> list:
+        # cosines of one query against [(id, vector, norm)]: one exact
+        # int64 matrix-vector product (|values| <= 127), then Spark's
+        # double(dot) / (norm * norm) per pair
+        out = [None] * len(pairs)
+        ok = [j for j, (_, v, _) in enumerate(pairs) if qq is not None
+              and v is not None and len(v) == len(qq)]
+        if not ok:             # zip_with pads unequal lengths with NULL
+            return out
+        dots = (np.stack([pairs[j][1] for j in ok]) @ qq).tolist()
+        for j, d in zip(ok, dots):
+            vid, _, vn = pairs[j]
+            if qn * vn == 0:
+                if not ansi:
+                    continue
+                raise ValueError(
+                    f"nsw_beam_search: zero-norm vector in the scored "
+                    f"pair {q_id_col}={qid!r}, {id_col}={vid!r}; cosine "
+                    "is undefined (the int8 vector is all zeros)")
+            out[j] = float(d) / (qn * vn)
+        return out
+
+    def better(a, b):          # max() that ignores NULL, as Spark's max
+        return b if a is None else a if b is None else max(a, b)
+
+    def rank_key(row):         # (score desc NULLS LAST, id asc NULLS FIRST)
+        i, sc = row
+        return (sc is None, 0.0 if sc is None else -sc,
+                i is not None, 0 if i is None else i)
+
+    vecs: dict = {}            # id -> [(vector, norm)], one per corpus row
+    edges: dict = {}           # id -> {dst}
+
+    def fetch(vec_ids: set, edge_ids: set) -> None:
+        parts = []
+        if vec_ids:
+            parts.append(emb_q.filter(_isin(id_col, vec_ids)).select(
+                F.lit(0).alias("_t"), F.col(id_col).alias("_id"), "_qv"))
+        if edge_ids:
+            parts.append(adj.filter(_isin("src", edge_ids)).select(
+                F.lit(1).alias("_t"), F.col("src").alias("_id"), "dst"))
+        frame = functools.reduce(
+            lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
+        for i in vec_ids:
+            vecs[i] = []
+        for i in edge_ids:
+            edges[i] = set()
+        for r in frame.collect():
+            if r["_t"] == 0:
+                vecs[r["_id"]].append(with_norm(r["_qv"]))
+            else:
+                edges[r["_id"]].add(r["dst"])
+
+    qs = [(r[0], *with_norm(r[1])) for r in qrows]
+    entries = [(r[0], *with_norm(r[1])) for r in
+               emb_q.orderBy(id_col).limit(n_entries).collect()]
+    # round 0 keeps one row per entry ROW (the Spark rounds dedup by
+    # (query, id) only when a round merges its candidates)
+    visited = {qid: list(zip((e[0] for e in entries),
+                             scores(qid, qq, qn, entries)))
+               for qid, qq, qn in qs}
+    for rnd in range(rounds):
+        beams = {qid: {i for i, _ in sorted(rows, key=rank_key)
+                       [:max(beam, 0)]}
+                 for qid, rows in visited.items()}
+        need = set().union(*beams.values()) - edges.keys() - {None}
+        if need:               # the entries' out-edges, first round only
+            fetch(set(), need)
+        cands = {qid: set().union(*(edges.get(b, ()) for b in bm))
+                 - {None} for qid, bm in beams.items()}
+        need = set().union(*cands.values()) - vecs.keys()
+        if need:               # the last round needs no out-edges
+            fetch(need, need if rnd + 1 < rounds else set())
+        for qid, qq, qn in qs:
+            best: dict = {}
+            for i, sc in visited[qid]:
+                best[i] = better(best[i], sc) if i in best else sc
+            pairs = [(c, v, vn) for c in cands[qid] for v, vn in vecs[c]]
+            for (c, _, _), sc in zip(pairs, scores(qid, qq, qn, pairs)):
+                best[c] = better(best[c], sc) if c in best else sc
+            visited[qid] = list(best.items())
+    for qid, rows in visited.items():
+        for rk, (i, sc) in enumerate(
+                sorted(rows, key=rank_key)[:max(k, 0)], 1):
+            for c, x in zip(schema.names, (qid, i, sc, rk)):
+                out[c].append(x)
+    return _arrow_frame(spark, out, schema)
+
+
+def _nsw_beam_search_bsp(adj: DataFrame, emb: DataFrame,
+                         queries: DataFrame, k: int, beam: int,
+                         rounds: int, n_entries: int, id_col: str,
+                         vec_col: str, q_id_col: str,
+                         q_vec_col: str) -> DataFrame:
+    """nsw_beam_search as all-Spark BSP rounds: the path for a query
+    set above DRIVER_PROBE_MAX_Q or with NULL or duplicate query ids,
+    and the reference the driver search is tested against. Each round
     is one join of the (|Q| x beam)-row beam against the adjacency
-    list partitioned on src, plus a per-query rank window (partitioned
-    by q_id, never global). The corpus is touched only through the
-    adjacency edges and the scored candidates; nothing rescans it."""
+    list, plus a per-query rank window (partitioned by q_id, never
+    global); about seven Spark jobs per round under AQE."""
     # quantized corpus + queries are re-joined EVERY round — pin them
     # once (round-13 optimization: lazy checkpoint, same discipline as
     # the adjacency below) so rounds 2..R reuse blocks instead of
@@ -1367,6 +1604,12 @@ def _driver_read_parquet(path: str) -> list[dict]:
     return pq.read_table(path).to_pylist()
 
 
+def _non_finite_query(qid) -> ValueError:
+    return ValueError(
+        f"query {qid!r}: null or non-finite vector element; the probe "
+        "head quantizes finite vectors only")
+
+
 def _int8_quantize_py(vec, qid=None) -> list[int]:
     """Driver-side replica of `int8_quantize` for BOUNDED query sets
     (the pruned-probe head, round-14): identical IEEE-double sequence
@@ -1386,9 +1629,7 @@ def _int8_quantize_py(vec, qid=None) -> list[int]:
 
     if vec is None or not all(x is not None and math.isfinite(x)
                               for x in vec):
-        raise ValueError(
-            f"query {qid!r}: null or non-finite vector element; the "
-            "probe head quantizes finite vectors only")
+        raise _non_finite_query(qid)
     xs = [float(x) for x in vec]
     maxabs = max((abs(x) for x in xs), default=0.0)
     if not maxabs > 0:
@@ -1981,34 +2222,6 @@ def _codes_dir(path: str) -> str:
     return resolve_pointer(path, "CODES", "codes")
 
 
-def _read_vec_tombstones(spark, path: str):
-    """All tombstoned vector ids of a persisted index, or None:
-    live `tombstones/` UNION `tombstones-folded-g<N>/` (already purged
-    from generation N's codes but kept one compaction cycle for probes
-    still reading the previous generation — anti-joining an
-    already-purged id is a no-op; the reader-safe fold hard-links, so
-    live paths keep their bytes one cycle too). ignoreMissingFiles:
-    a tombstone file can only vanish mid-scan by RETIRE
-    (kv.fold_tombstones_reader_safe), which happens one full cycle
-    after its fold — by then its ids are physically purged from every
-    generation a racing reader can still resolve, so skipping the
-    missing file never unmasks a deleted row. Same race argument as
-    the dedup index's _read_tombstones."""
-    import os
-
-    dirs = []
-    for name in sorted(os.listdir(path)):
-        if name == "tombstones" or name.startswith("tombstones-folded-g"):
-            d = os.path.join(path, name)
-            if os.path.isdir(d) and any(
-                    f.endswith(".parquet") for f in os.listdir(d)):
-                dirs.append(d)
-    if not dirs:
-        return None
-    return (spark.read.option("ignoreMissingFiles", "true")
-            .parquet(*dirs).select("id").distinct())
-
-
 @_staged("delete")
 def delete_from_ivfpq_index(ids: DataFrame, path: str,
                             id_col: str = "vec_id") -> None:
@@ -2029,7 +2242,6 @@ def delete_from_ivfpq_index(ids: DataFrame, path: str,
 
     from ..sources.kv import maintenance_lease
 
-    spark = ids.sparkSession
     meta = _driver_read_parquet(f"{path}/meta")[0]  # no Spark job
     if meta["version"] != IVFPQ_INDEX_VERSION:
         raise ValueError(
@@ -2062,7 +2274,7 @@ def compact_ivfpq_index(spark, path: str) -> None:
         new_name = f"codes-g{gen + 1}"
         meta = _driver_read_parquet(f"{path}/meta")[0]  # no Spark job
         rows = spark.read.parquet(cur)
-        ts = _read_vec_tombstones(spark, path)
+        ts = read_tombstones(spark, path)
         if ts is not None:
             rows = rows.join(
                 F.broadcast(ts.withColumnRenamed("id", meta["id_col"])),
@@ -2160,7 +2372,13 @@ def _ivfpq_probe(codes: DataFrame, cells: list[list[int]],
     materialized driver-side FIRST — a |Q| x n_probe BOUNDED collect —
     so the probed cell ids become literal `IN` filters on the scan and
     Spark prunes unprobed cell partitions at planning time: the 100 TB
-    read cost is n_probe/n_cells of the index, not all of it.
+    read cost is n_probe/n_cells of the index, not all of it. The
+    bound is checked: above DRIVER_PROBE_MAX_Q queries the Spark head
+    runs instead, and one Spark job over its lazily checkpointed
+    probes makes the same input check and collects the probed cell
+    ids for the same pruning (same answer). The driver-built
+    q_probed and codebook frames are Arrow-backed local relations, so
+    broadcasting them runs no Spark job.
 
     Round-13 optimization: the cells and codebooks ride ONE-ROW
     broadcast DataFrames (the df quantizer-engine shape) instead of
@@ -2173,8 +2391,13 @@ def _ivfpq_probe(codes: DataFrame, cells: list[list[int]],
     codeword FIRST and takes one integer dot with it — the same
     element an all-codewords LUT's element_at would pick, so the
     scores are bit-identical."""
+    from pyspark.sql import types as T
+
     spark = codes.sparkSession
-    if prune_partitions:
+    i64 = T.ArrayType(T.LongType(), True)
+    q_src = _collect_bounded(queries.select(
+        F.col(q_id_col), F.col(q_vec_col))) if prune_partitions else None
+    if q_src is not None:
         # Round-14 (VERDICT #2): the pruned path always materialized
         # q_probed driver-side anyway (the bounded |Q| x n_probe
         # collect that makes static partition pruning possible), but
@@ -2190,12 +2413,11 @@ def _ivfpq_probe(codes: DataFrame, cells: list[list[int]],
         # in TestIntIvf), the distances/dots are exact ints, and the
         # (d, i, qc) tuple sort is array_sort's struct order — the
         # created q_probed rows are the same rows the Spark plan
-        # collected, so everything downstream is unchanged.
-        from pyspark.sql import types as T
-        q_src = queries.select(F.col(q_id_col), F.col(q_vec_col)) \
-            .collect()
+        # collected, so everything downstream is unchanged. Above
+        # DRIVER_PROBE_MAX_Q queries the Spark head below runs
+        # instead (same check, same pruning, same answer).
         icells = [[int(v) for v in c] for c in cells]
-        rows = []
+        q_cols = {q_id_col: [], "_qq": [], "_cell": [], "_qc": []}
         for r in q_src:
             qq = _int8_quantize_py(r[1], r[0])
             scored = sorted(
@@ -2203,22 +2425,30 @@ def _ivfpq_probe(codes: DataFrame, cells: list[list[int]],
                  sum(a * b for a, b in zip(qq, c)))
                 for i, c in enumerate(icells))
             for _d, i, qc in scored[:n_probe]:
-                rows.append((r[0], qq, i, qc))
+                for c, x in zip(q_cols, (r[0], qq, i, qc)):
+                    q_cols[c].append(x)
         id_field = queries.schema[q_id_col]
-        q_probed = spark.createDataFrame(rows, T.StructType([
+        q_probed = _arrow_frame(spark, q_cols, T.StructType([
             T.StructField(q_id_col, id_field.dataType,
                           id_field.nullable),
-            T.StructField("_qq", T.ArrayType(T.LongType(), True), True),
+            T.StructField("_qq", i64, True),
             T.StructField("_cell", T.IntegerType(), True),
             T.StructField("_qc", T.LongType(), True)]))
-        probed_cells = sorted({r[2] for r in rows})
+        probed_cells = sorted(set(q_cols["_cell"]))
         codes = codes.filter(F.col("_cell").isin(probed_cells))
     else:
-        qs = queries.select(
-            F.col(q_id_col), int8_quantize(F.col(q_vec_col)).alias("_qq"))
-        cents_1row = F.broadcast(spark.createDataFrame(
-            [([list(map(int, c)) for c in cells],)],
-            "_cents array<array<bigint>>"))
+        qcols = [F.col(q_id_col),
+                 int8_quantize(F.col(q_vec_col)).alias("_qq")]
+        if prune_partitions:   # the vectors _int8_quantize_py refuses
+            qcols.append((F.col(q_vec_col).isNull() | F.exists(
+                F.col(q_vec_col), lambda x: x.isNull() | F.isnan(x)
+                | (F.abs(x.cast("double")) == float("inf"))))
+                .alias("_bad"))
+        qs = queries.select(*qcols)
+        cents_1row = F.broadcast(_arrow_frame(
+            spark, {"_cents": [[list(map(int, c)) for c in cells]]},
+            T.StructType([T.StructField(
+                "_cents", T.ArrayType(i64, True), True)])))
         scored_cells = F.transform(
             F.col("_cents"),
             lambda c, i: F.struct(
@@ -2229,16 +2459,33 @@ def _ivfpq_probe(codes: DataFrame, cells: list[list[int]],
                 i.alias("i"),
                 idot(F.col("_qq"), c).alias("qc")))
         probes = F.slice(F.array_sort(scored_cells), 1, n_probe)
+        qs = qs.crossJoin(cents_1row).withColumn("_ps", probes)
+        if prune_partitions:
+            # above DRIVER_PROBE_MAX_Q queries: the driver head's input
+            # check and partition pruning from ONE job over the lazily
+            # checkpointed per-query probes, which the probe reuses;
+            # it collects at most n_cells cell ids
+            qs = qs.localCheckpoint(eager=False)
+            chk = qs.agg(
+                F.array_sort(F.array_distinct(F.flatten(
+                    F.collect_list("_ps.i")))).alias("cells"),
+                F.first(F.when(F.col("_bad"), F.struct(q_id_col)),
+                        ignorenulls=True).alias("bad")).collect()[0]
+            if chk["bad"] is not None:
+                raise _non_finite_query(chk["bad"][0])
+            codes = codes.filter(F.col("_cell").isin(chk["cells"]))
         q_probed = (
-            qs.crossJoin(cents_1row)
-            .withColumn("_p", F.explode(probes))
+            qs.withColumn("_p", F.explode("_ps"))
             .select(F.col(q_id_col), F.col("_qq"),
                     F.col("_p.i").alias("_cell"),
                     F.col("_p.qc").alias("_qc"))
         )
-    books_1row = F.broadcast(spark.createDataFrame(
-        [([[list(map(int, cw)) for cw in cb] for cb in codebooks],)],
-        "_books array<array<array<bigint>>>"))
+    books_1row = F.broadcast(_arrow_frame(
+        spark,
+        {"_books": [[[list(map(int, cw)) for cw in cb]
+                     for cb in codebooks]]},
+        T.StructType([T.StructField(
+            "_books", T.ArrayType(T.ArrayType(i64, True), True), True)])))
     pairs = codes.join(F.broadcast(q_probed), "_cell") \
         .crossJoin(books_1row)
 
@@ -2388,7 +2635,7 @@ def load_ivfpq_index(spark, path: str) -> dict:
     for r in _driver_read_parquet(f"{path}/codebooks"):
         books[r["s"]][r["cid"]] = [int(x) for x in r["cent"]]
     codes = spark.read.parquet(_codes_dir(path))
-    ts = _read_vec_tombstones(spark, path)
+    ts = read_tombstones(spark, path)
     if ts is not None:
         codes = codes.join(
             F.broadcast(ts.withColumnRenamed("id", meta_row["id_col"])),
@@ -2464,7 +2711,6 @@ def rebalance_ivfpq_index(emb: DataFrame, path: str, out_path: str,
     retrain is one more pass over it. Geometry (n_cells/m/kc/dim)
     comes from the existing index's meta so the rebalanced artifact
     is drop-in probe-compatible."""
-    spark = emb.sparkSession
     meta = _driver_read_parquet(f"{path}/meta")[0]  # no Spark job
     if meta["version"] != IVFPQ_INDEX_VERSION:
         raise ValueError(

@@ -12,6 +12,11 @@ Derived against boundary 394ee508e5ce (round 14: verdict/advice/correctness/benc
 """
 
 _REVERIFY_FIRST = (
+    "dd15_persisted_lsh_probe",
+    "dd19_lsh_bucket_audit",
+    "dd16_lsh_index_append_probe",
+    "dd18_index_tombstone_probe",
+    "st13_stream_index_delete",
     "sim11_int_ivf_topk",
     "sim27_int_range_search",
     "sim28_nsw_beam_search",
@@ -38,6 +43,7 @@ _REVERIFY_FIRST = (
     "st14_stream_ann_delete",
     "st16_stream_graph_delete",
     "st15_stream_ann_append",
+    "st9_stream_ingest_dedup",
     "w19_rolling_active_users",
     "w20_zscore_outliers",
     "j18_salted_skew_join",
@@ -70,10 +76,4 @@ _REVERIFY_FIRST = (
     "tx18_collocations",
     "w7_ranking",
     "st1_stream_tumbling_counts",
-    "st2_stream_sliding_totals",
-    "st3_stream_dedup",
-    "w21_activity_streaks",
-    "st4_stream_stateful_stats",
-    "w22_rolling_trend",
-    "st5_stream_band_join",
 )

@@ -228,3 +228,34 @@ def fold_tombstones_reader_safe(path: str, new_gen: int) -> str:
                 except OSError:
                     shutil.copy2(src, dst)
     return folded_keep
+
+
+def read_tombstones(spark: SparkSession, path: str) -> DataFrame | None:
+    """All tombstoned ids of a persisted index (minhash, IVF-PQ or NSW),
+    or None: the LIVE set (`tombstones/`, appended by the index's delete
+    and not yet folded into a generation) UNION the FOLDED sets
+    (`tombstones-folded-g<N>/`, already purged from generation N but
+    kept one compaction cycle for readers still on the PREVIOUS
+    generation — anti-joining an already-purged id is a no-op, so
+    reading folded sets is always safe and closes the race where a
+    reader resolves the old generation just before a compaction flips
+    the pointer).
+
+    ignoreMissingFiles: a tombstone file can only vanish mid-scan by
+    RETIRE (fold_tombstones_reader_safe), one full cycle after its
+    fold — by then its ids are physically purged from every generation
+    a racing reader can still resolve. The schema is given, not
+    inferred: every delete path writes one `id` column cast to long, so
+    the read plans without a schema-inference job."""
+    dirs = []
+    for name in sorted(os.listdir(path)):
+        if name == "tombstones" or name.startswith("tombstones-folded-g"):
+            d = os.path.join(path, name)
+            if os.path.isdir(d) and any(
+                    f.endswith(".parquet") for f in os.listdir(d)):
+                dirs.append(d)
+    if not dirs:
+        return None
+    return (spark.read.schema("id long")
+            .option("ignoreMissingFiles", "true")
+            .parquet(*dirs).select("id").distinct())

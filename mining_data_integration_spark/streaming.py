@@ -675,10 +675,12 @@ def stream_probe_ann(stream_vecs: DataFrame, index_path: str,
     never per batch, the corpus is touched only through the
     cell-partitioned codes scan statically pruned to the probed cells
     (the |Q| x n_probe bounded collect inside ivfpq_probe_topk, |Q| =
-    batch size), and nothing is ever re-encoded. Each batch's report
-    lands under `batch_id=<id>` with mode=overwrite — idempotent per
-    batch id, the st9 sink discipline. Returns the DataStreamWriter —
-    caller picks the trigger and checkpoint."""
+    batch size; a batch above similarity.DRIVER_PROBE_MAX_Q probes
+    through the Spark head, pruned the same way from one Spark job),
+    and nothing is ever re-encoded. Each batch's report lands under
+    `batch_id=<id>` with mode=overwrite — idempotent per batch id, the
+    st9 sink discipline. Returns the DataStreamWriter — caller picks
+    the trigger and checkpoint."""
     import os
 
     from .operators.similarity import ivfpq_probe_topk, load_ivfpq_index

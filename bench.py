@@ -83,15 +83,15 @@ def e1_refresh_bench(spark, n_blocks: int, cpb: int = 10) -> dict:
     blocks. Round 8: both are MEDIAN OF 3 warm runs (one discarded
     warm-up first — rounds 6-7 proved single runs swing +-40% on this
     box). Round 10: cold, warm and tick all run refresh machinery
-    INCLUDING writes, so the three numbers compare like-for-like;
-    stage breakdowns come from the refreshers' stage_timings (cold:
-    walk/gold_writes; warm adds window_walk/history_materialize; tick:
-    walk/gold_writes/merge). tools/bench_e1.py is the standalone/
-    larger-scale variant."""
+    INCLUDING writes, so the three numbers compare like-for-like.
+    Each timed call runs inside a root span, and its stage breakdown
+    is spans.stages() of the run record the refresh itself produces
+    (cold: walk/gold_writes and the gw_* writers; warm adds
+    window_walk/history_materialize; tick: walk/gold_writes/merge).
+    tools/bench_e1.py is the standalone/larger-scale variant."""
     import shutil
-    import time as _time
 
-    from mining_data_integration_spark import core
+    from mining_data_integration_spark import spans
     from mining_data_integration_spark.incremental import incremental_refresh
     from mining_data_integration_spark.io import write_bronze_commits
     from mining_data_integration_spark.synthworld import (
@@ -116,14 +116,19 @@ def e1_refresh_bench(spark, n_blocks: int, cpb: int = 10) -> dict:
 
     gold_c = "/tmp/bench_e1_gold_cold"
 
+    def timed(fn) -> tuple[float, dict, object]:
+        """(wall, stage map, result) of one call under a root span."""
+        with spans.span("e1") as s:
+            out = fn()
+        return (round(s.record["spans"]["wall_s"], 2),
+                spans.stages(s.record), out)
+
     def one_cold() -> tuple[float, dict]:
         shutil.rmtree(gold_c, ignore_errors=True)  # no state -> cold
-        st: dict = {}
-        t0 = _time.perf_counter()
-        mode = refresh_once(tables, gold_c, reuse_gold=True,
-                            stage_timings=st)
+        wall, st, mode = timed(
+            lambda: refresh_once(tables, gold_c, reuse_gold=True))
         assert mode == "cold", mode
-        return round(_time.perf_counter() - t0, 2), st
+        return wall, st
 
     # steady state of a long-lived refresh process (the reference
     # recomputes on a 120 s timer in one warm process, server.js:444):
@@ -141,11 +146,8 @@ def e1_refresh_bench(spark, n_blocks: int, cpb: int = 10) -> dict:
     incremental_refresh(spark, tables, gold, reorg_depth=10 ** 12)
 
     def one_tick() -> tuple[float, dict, dict]:
-        st: dict = {}
-        t0 = _time.perf_counter()
-        r = incremental_refresh(spark, tables, gold, reorg_depth=1000,
-                                stage_timings=st)
-        return round(_time.perf_counter() - t0, 2), st, r
+        return timed(lambda: incremental_refresh(
+            spark, tables, gold, reorg_depth=1000))
 
     one_tick()  # warm-up (first windowed tick pays its own JIT)
     tick_runs = sorted((one_tick() for _ in range(3)),
@@ -157,19 +159,15 @@ def e1_refresh_bench(spark, n_blocks: int, cpb: int = 10) -> dict:
     # walk reuses the persisted canonical chain (walk = O(reorg
     # window) instead of from-genesis). Cold bootstrap, then
     # median-of-3 warm runs with stage breakdowns.
-    from mining_data_integration_spark.streaming import refresh_once
-
     gold_w = "/tmp/bench_e1_gold_warm"
     shutil.rmtree(gold_w, ignore_errors=True)
     refresh_once(tables, gold_w, reuse_gold=True)
 
     def one_warm() -> tuple[float, dict]:
-        st: dict = {}
-        t0 = _time.perf_counter()
-        mode = refresh_once(tables, gold_w, reuse_gold=True,
-                            reorg_depth=1000, stage_timings=st)
+        wall, st, mode = timed(lambda: refresh_once(
+            tables, gold_w, reuse_gold=True, reorg_depth=1000))
         assert mode == "warm", mode
-        return round(_time.perf_counter() - t0, 2), st
+        return wall, st
 
     one_warm()
     warm_runs = sorted((one_warm() for _ in range(3)),
@@ -233,7 +231,7 @@ def main() -> None:
     # round-5 extension ops (skippable: SPARK_GRAFT_EXTENDED=0);
     # median-of-3 since round 8 — see the EXTENDED comment
     if os.environ.get("SPARK_GRAFT_EXTENDED", "1") != "0":
-        from mining_data_integration_spark import stages
+        from mining_data_integration_spark import spans
 
         ext: dict[str, float] = {}
         splits: dict[str, dict] = {}
@@ -241,25 +239,22 @@ def main() -> None:
             fn = queries[name]
             fn(spark, sf_dir).count()  # warm
             times = []
-            last_stages: dict[str, float] = {}
             for _ in range(3):
-                stages.set_current(name)
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).count()
-                times.append(time.perf_counter() - t0)
-                last_stages = stages.snapshot(name)
-                stages.set_current(None)
+                with spans.span(name) as s:
+                    fn(spark, sf_dir).count()
+                times.append(s.record["spans"]["wall_s"])
             med = round(sorted(times)[1], 3)
             ext[name] = med
+            last_stages = spans.stages(s.record)
             if last_stages:
                 # round-12 VERDICT #5: lifecycle queries pay their
                 # artifact's train/build/maintain inside the query —
                 # split those EAGER stages out so r-over-r compares
                 # probe-to-probe. probe_residual = the lazy query side
-                # (total minus attributed eager stages, last run).
-                eager = round(sum(last_stages.values()), 3)
-                last_stages["probe_residual"] = round(
-                    max(times[-1] - eager, 0.0), 3)
+                # (the last run's time outside every top-level stage,
+                # so a nested train is not subtracted twice).
+                last_stages["probe_residual"] = \
+                    s.record["spans"]["self_s"]
                 splits[name] = last_stages
         out["extended_queries"] = ext
         if splits:
@@ -285,13 +280,10 @@ def main() -> None:
             _shutil.rmtree(d, ignore_errors=True)
         cold: dict[str, dict] = {}
         for name in ("sim29_nsw_persisted_probe", "st12_stream_ann_probe"):
-            stages.set_current(name)
-            t0 = time.perf_counter()
-            queries[name](spark, sf_dir).count()
-            wall = round(time.perf_counter() - t0, 3)
-            snap = stages.snapshot(name)
-            stages.set_current(None)
-            snap["cold_total"] = wall
+            with spans.span(name) as s:
+                queries[name](spark, sf_dir).count()
+            snap = spans.stages(s.record)
+            snap["cold_total"] = s.record["spans"]["wall_s"]
             cold[name] = snap
         out["build_cold"] = cold
 

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import spans
 from .schemas import ZERO64
 
 
@@ -236,6 +237,8 @@ def chain_members_segmented(edges: DataFrame, tip_id: str,
     # subtree (round-13; was a full second pass over the edge table)
     if expected != ZERO64 and not pairs.filter(
             F.col("member") == expected).isEmpty():
+        spans.note("segmented_walk_fallback",
+                   f"stitch stopped at node {expected}; pointer doubling")
         tips = edges.sparkSession.createDataFrame(
             [(tip_id,)], f"{id_col} string")
         return chain_members(edges, tips, id_col, parent_col)

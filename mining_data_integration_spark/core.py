@@ -40,6 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import spans
 from .chain import canonical_snapshots, canonical_stacks_chain
 
 # reference constants: bonus era ends at stacks height 8387
@@ -257,11 +258,11 @@ def prepare(tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
     # walk). Later consumers (chain-state writes, partials, prune)
     # read the populated blocks.
     with ThreadPoolExecutor(max_workers=2) as pool:
-        f_snap = pool.submit(
+        f_snap = pool.submit(spans.inherit(
             lambda: _ckpt(snapshots_with_actual_burn(tables["snapshots"]),
-                          eager=False))
-        f_stacks = pool.submit(
-            lambda: _ckpt(canonical_stacks_chain(tables["block_headers"])))
+                          eager=False)))
+        f_stacks = pool.submit(spans.inherit(
+            lambda: _ckpt(canonical_stacks_chain(tables["block_headers"]))))
         snap = f_snap.result()
         stacks_chain = f_stacks.result()
     enriched = commits_enriched(

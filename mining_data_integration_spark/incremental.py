@@ -33,7 +33,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import core
+from . import core, spans
 
 HEIGHTS_PER_BUCKET = 1000
 
@@ -280,6 +280,8 @@ def _window_chain_state(spark: SparkSession, tables: dict[str, DataFrame],
                 [(r.id,) for r in mem], f"{id_field[side]} string"))
         members, smembers = member_dfs["burn"], member_dfs["stacks"]
     else:
+        spans.note("window_walk_cap", f"more than {cap} window rows; "
+                   "distributed segmented walk")
         members = chain_members_segmented(
             window, tips["burn"].id,
             id_col="burn_header_hash",
@@ -401,9 +403,7 @@ def _windowed_prepare(spark: SparkSession, tables: dict[str, DataFrame],
 def prepare_full_with_gold(spark: SparkSession,
                            tables: dict[str, DataFrame],
                            gold_dir: str,
-                           reorg_depth: int = 100,
-                           stage_timings: dict | None = None
-                           ) -> dict | None:
+                           reorg_depth: int = 100) -> dict | None:
     """WARM full-refresh prepare (round-9 VERDICT #7): core.prepare's
     exact output contract, but the canonical-chain membership is
     persisted state below the window floor UNION a freshly walked
@@ -419,20 +419,23 @@ def prepare_full_with_gold(spark: SparkSession,
     buckets align with the window floor's axis, so windowed overwrite
     can never leave holes in the stored history this reads. Returns
     None when the anchor fails (no state yet, or a deeper reorg) —
-    callers fall back to the from-scratch core.prepare."""
-    from time import perf_counter as _pc
+    callers fall back to the from-scratch core.prepare.
 
-    _t0 = _pc()
-    st = _window_chain_state(spark, tables, gold_dir, reorg_depth)
+    Stages: `window_walk` is the part the warm path actually shrinks,
+    O(reorg_depth) probes + walks, comparable to the tick's walk
+    stage; `history_materialize` (full snap join + lag + eager
+    checkpoint) is O(history) and identical in the cold path."""
+    if not _state_layout_ok(gold_dir):
+        return None         # no state to anchor: no window walk to time
+    with spans.span("window_walk"):
+        st = _window_chain_state(spark, tables, gold_dir, reorg_depth)
     if st is None:
         return None
-    if stage_timings is not None:
-        # the part the warm path actually shrinks: O(reorg_depth)
-        # probes + walks, comparable to the tick's walk stage. The
-        # remainder of the prepare (full snap join + lag + eager
-        # checkpoint) is O(history) and identical in the cold path.
-        stage_timings["window_walk"] = round(_pc() - _t0, 3)
-    _t0 = _pc()
+    return _materialize_history(tables, st)
+
+
+@spans.span("history_materialize")
+def _materialize_history(tables: dict[str, DataFrame], st: dict) -> dict:
     floor = st["aligned_floor"]
     # full canonical membership: stored history strictly below the
     # floor (disjoint from the window by construction) + window walk
@@ -476,8 +479,6 @@ def prepare_full_with_gold(spark: SparkSession,
         .join(F.broadcast(chain_cols), "burn_header_hash")
         .localCheckpoint(eager=True)
     )
-    if stage_timings is not None:
-        stage_timings["history_materialize"] = round(_pc() - _t0, 3)
     return {"snap": snap, "enriched": enriched, "winners": winners,
             "wchain": st["wchain"], "wstacks": st["wstacks"],
             "aligned_floor": floor, "tip_stacks": st["tip_stacks"]}
@@ -508,40 +509,38 @@ def chain_state_frames(prepared: dict) -> tuple[DataFrame, DataFrame]:
     return chain_df, stacks_df
 
 
+@spans.root("tick")
 def incremental_refresh(spark: SparkSession, tables: dict[str, DataFrame],
-                        gold_dir: str, reorg_depth: int = 100,
-                        stage_timings: dict | None = None) -> dict:
+                        gold_dir: str, reorg_depth: int = 100) -> dict:
     """One incremental tick: windowed when persisted state + boundary
     anchors allow it, full recompute otherwise. Returns
     {'tip', 'lo_height', 'buckets_from', 'mode'}.
 
-    Pass a dict as `stage_timings` to receive the tick's phase
-    breakdown (seconds): 'walk' (window prepare — the reorg-depth
-    chain walks and anchor probes), 'gold_writes' (the five
+    The run record (spans.py) carries the mode and the tick's stages:
+    'walk' (window prepare — the reorg-depth chain walks and anchor
+    probes — or the full-recompute fallback's core.prepare, whose
+    eager localCheckpoints run the walks), 'gold_writes' (the five
     concurrent gold writes, which also execute the join DAG — Spark
     is lazy, so join and write cost are one phase here), 'merge'
-    (partials fold + miner_info rewrite). Zero overhead beyond two
-    perf_counter calls per phase."""
-    from time import perf_counter as _pc
-
-    _t0 = _pc()
-    prepared = _windowed_prepare(spark, tables, gold_dir, reorg_depth)
-    mode = "windowed"
-    if prepared is None:
-        mode = "full"
-        # bucketed-bronze commits carry an hbucket partition column the
-        # core DAG must not see (miner_partials derives its own)
-        tables = dict(tables)
-        tables["block_commits"] = tables["block_commits"].drop("hbucket")
-        prepared = core.prepare(tables)
-        # prepare() already walked + checkpointed the stacks chain
-        # (round-13) — reuse it instead of walking headers again
-        prepared["wchain"] = prepared["snap"]
-        prepared["wstacks"] = prepared["stacks_chain"]
-    if stage_timings is not None:
-        # covers the windowed prepare AND the full-recompute fallback's
-        # core.prepare (whose eager localCheckpoints run the walks)
-        stage_timings["walk"] = round(_pc() - _t0, 3)
+    (partials fold + miner_info rewrite)."""
+    with spans.span("walk"):
+        prepared = _windowed_prepare(spark, tables, gold_dir, reorg_depth)
+        mode = "windowed"
+        if prepared is None:
+            mode = "full"
+            spans.note("full_tick", "no boundary-verified window state "
+                       f"at reorg_depth={reorg_depth}; full recompute")
+            # bucketed-bronze commits carry an hbucket partition column
+            # the core DAG must not see (miner_partials derives its own)
+            tables = dict(tables)
+            tables["block_commits"] = \
+                tables["block_commits"].drop("hbucket")
+            prepared = core.prepare(tables)
+            # prepare() already walked + checkpointed the stacks chain
+            # (round-13) — reuse it instead of walking headers again
+            prepared["wchain"] = prepared["snap"]
+            prepared["wstacks"] = prepared["stacks_chain"]
+    spans.mode(mode)
 
     try:
         # the windowed tick already knows its tip from the probe batch;
@@ -575,51 +574,49 @@ def incremental_refresh(spark: SparkSession, tables: dict[str, DataFrame],
             (chain_df, f"{gold_dir}/canonical_chain"),
             (stacks_df, f"{gold_dir}/canonical_stacks"),
         ]
-        _t0 = _pc()
-        if mode == "full":
-            # a full rewrite covers every bucket of the CURRENT axis;
-            # stale buckets from a different layout must be deleted
-            # first, and the marker written only after the writes land
-            reset_state_for_layout(gold_dir)
-        with ThreadPoolExecutor(max_workers=len(writes)) as pool:
-            futures = [pool.submit(_write_dynamic, df, path)
-                       for df, path in writes]
-            for f in futures:
-                f.result()   # surface the first failure
-        if mode == "full":
-            mark_state_layout(gold_dir)
-        # reorg-shrink guard: a tip LOWER than the previous refresh's
-        # leaves its old high buckets unrewritten by dynamic overwrite
-        # — drop every bucket above the new tip, in the outputs AND
-        # the chain state (a stale state bucket would re-enter the
-        # members union once a later floor passes it). Two bounds, two
-        # axes: tables keyed by SNAPSHOT stacks height (block_info,
-        # partials' stats side, canonical_chain) prune above the burn
-        # tip's stacks height; tables keyed by the STACKS HEADER chain
-        # (mining_info winners, canonical_stacks) prune above the
-        # header tip, which can sit below the snapshot-side height.
-        stip = prepared["wstacks"].agg(
-            F.max("block_height")).collect()[0][0]
-        tip_bucket = (tip or 0) // HEIGHTS_PER_BUCKET
-        stip_bucket = (stip or 0) // HEIGHTS_PER_BUCKET
-        for p, b in (("mining_info", stip_bucket),
-                     ("canonical_stacks", stip_bucket),
-                     ("block_info", tip_bucket),
-                     ("miner_partials", tip_bucket),
-                     ("canonical_chain", tip_bucket)):
-            _prune_buckets_above(f"{gold_dir}/{p}", b)
-        if stage_timings is not None:
-            stage_timings["gold_writes"] = round(_pc() - _t0, 3)
+        with spans.span("gold_writes"):
+            if mode == "full":
+                # a full rewrite covers every bucket of the CURRENT
+                # axis; stale buckets from a different layout must be
+                # deleted first, and the marker written only after the
+                # writes land
+                reset_state_for_layout(gold_dir)
+            with ThreadPoolExecutor(max_workers=len(writes)) as pool:
+                futures = [pool.submit(spans.inherit(_write_dynamic),
+                                       df, path) for df, path in writes]
+                for f in futures:
+                    f.result()   # surface the first failure
+            if mode == "full":
+                mark_state_layout(gold_dir)
+            # reorg-shrink guard: a tip LOWER than the previous
+            # refresh's leaves its old high buckets unrewritten by
+            # dynamic overwrite — drop every bucket above the new tip,
+            # in the outputs AND the chain state (a stale state bucket
+            # would re-enter the members union once a later floor
+            # passes it). Two bounds, two axes: tables keyed by
+            # SNAPSHOT stacks height (block_info, partials' stats
+            # side, canonical_chain) prune above the burn tip's stacks
+            # height; tables keyed by the STACKS HEADER chain
+            # (mining_info winners, canonical_stacks) prune above the
+            # header tip, which can sit below the snapshot-side height.
+            stip = prepared["wstacks"].agg(
+                F.max("block_height")).collect()[0][0]
+            tip_bucket = (tip or 0) // HEIGHTS_PER_BUCKET
+            stip_bucket = (stip or 0) // HEIGHTS_PER_BUCKET
+            for p, b in (("mining_info", stip_bucket),
+                         ("canonical_stacks", stip_bucket),
+                         ("block_info", tip_bucket),
+                         ("miner_partials", tip_bucket),
+                         ("canonical_chain", tip_bucket)):
+                _prune_buckets_above(f"{gold_dir}/{p}", b)
 
-        _t0 = _pc()
-        merged = merge_miner_partials(
-            spark.read.parquet(f"{gold_dir}/miner_partials"))
-        # O(miners) rows: one output file, not one per shuffle task —
-        # the gold is re-read whole every serving call
-        merged.coalesce(1).write.mode("overwrite") \
-            .parquet(f"{gold_dir}/miner_info")
-        if stage_timings is not None:
-            stage_timings["merge"] = round(_pc() - _t0, 3)
+        with spans.span("merge"):
+            merged = merge_miner_partials(
+                spark.read.parquet(f"{gold_dir}/miner_partials"))
+            # O(miners) rows: one output file, not one per shuffle
+            # task — the gold is re-read whole every serving call
+            merged.coalesce(1).write.mode("overwrite") \
+                .parquet(f"{gold_dir}/miner_info")
         return {"tip": tip, "lo_height": lo, "buckets_from": lo_bucket,
                 "mode": mode}
     finally:

@@ -24,8 +24,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import spans
 from ..sources.kv import read_tombstones
-from .similarity import _driver_read_parquet, _staged
+from .similarity import _driver_read_parquet
 
 ZERO_WIDTH = r"\s+"
 
@@ -234,7 +235,7 @@ def minhash_lsh_candidates(df: DataFrame, text_col: str = "text",
 MINHASH_INDEX_VERSION = 1
 
 
-@_staged("build_index")
+@spans.span("build_index")
 def save_minhash_index(docs: DataFrame, path: str, text_col: str = "text",
                        id_col: str = "doc_id", n: int = 3,
                        num_hashes: int = 16, bands: int = 4) -> None:
@@ -297,7 +298,7 @@ def _prune_bucket_generations(path: str, keep: set[str]) -> None:
             shutil.rmtree(os.path.join(path, name), ignore_errors=True)
 
 
-@_staged("delete")
+@spans.span("delete")
 def delete_from_minhash_index(ids: DataFrame, path: str,
                               id_col: str = "doc_id") -> None:
     """Delete documents from the persisted near-dup index WITHOUT a
@@ -335,7 +336,7 @@ def delete_from_minhash_index(ids: DataFrame, path: str,
         rows.write.mode("append").parquet(os.path.join(path, "tombstones"))
 
 
-@_staged("append")
+@spans.span("append")
 def append_to_minhash_index(new_docs: DataFrame, path: str,
                             text_col: str = "text",
                             id_col: str = "doc_id",
@@ -391,7 +392,7 @@ def append_to_minhash_index(new_docs: DataFrame, path: str,
             .parquet(_buckets_dir(path))
 
 
-@_staged("compact")
+@spans.span("compact")
 def compact_minhash_index(spark, path: str) -> None:
     """Merge appended fragments into one fresh GENERATION and flip the
     pointer (round-9 VERDICT #1 / round-10: the sources/kv.py

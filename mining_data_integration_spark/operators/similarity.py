@@ -23,22 +23,8 @@ import hashlib
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import spans
 from ..sources.kv import read_tombstones
-
-
-def _staged(stage: str):
-    """Attribute a lifecycle operation's wall to a named bench stage
-    (stages.py — a no-op unless a bench set_current() is active), so
-    BENCH extended entries split build/maintain from probe (round-12
-    VERDICT #5)."""
-    def deco(fn):
-        @functools.wraps(fn)
-        def wrap(*a, **k):
-            from ..stages import timed
-            with timed(stage):
-                return fn(*a, **k)
-        return wrap
-    return deco
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -377,8 +363,6 @@ def _int_ivf_pairs(emb: DataFrame, queries: DataFrame,
     the literal engine, so the same SQL replay checks both. The cell
     counts a 100 TB IVF wants (~sqrt n, tens of thousands) only fit
     the df engine."""
-    from ..stages import timed as _timed_stage
-
     engine = _resolve_nsw_quantizer(quantizer, n_centroids)
     # materialize one scan+quantize, reused by the train iterations
     # AND the probe data side (round-13 optimization): beyond saving
@@ -393,7 +377,7 @@ def _int_ivf_pairs(emb: DataFrame, queries: DataFrame,
     # training is driver-eager (k-means collects / checkpoints) —
     # attribute it so the bench can split train from the lazy probe
     # side (VERDICT #5)
-    with _timed_stage("train"):
+    with spans.span("train"):
         if engine == "df":
             cents = int_ivf_centroids_df(emb_q, n_centroids, iters,
                                          id_col, "_qv")
@@ -687,8 +671,6 @@ def _nsw_quantize_and_train(emb: DataFrame, n_centroids: int | None,
     (emb_q, cents, c, engine) where cents is a Python list under the
     literal engine and a (cid, cent) DataFrame under the df engine —
     both trainings are bit-identical (TestNswGraphAnn pin)."""
-    from ..stages import timed as _timed_stage
-
     # materialize the quantized corpus ONCE (round-13 optimization,
     # guide §5 caching rule): the build re-reads it 3-5x (optional
     # count, seeds, one assignment per Lloyd iteration, then the
@@ -709,7 +691,7 @@ def _nsw_quantize_and_train(emb: DataFrame, n_centroids: int | None,
         c = derive_nsw_centroids(emb_q.count(), target_occupancy,
                                  cap=None)
     engine = _resolve_nsw_quantizer(quantizer, c)
-    with _timed_stage("train"):
+    with spans.span("train"):
         if engine == "df":
             cents = int_ivf_centroids_df(emb_q, c, iters, id_col,
                                          "_qv")
@@ -864,7 +846,7 @@ def nsw_build_stats(emb: DataFrame, n_centroids: int | None = None,
 NSW_INDEX_VERSION = 1
 
 
-@_staged("build_index")
+@spans.span("build_index")
 def save_nsw_index(emb: DataFrame, path: str, k_nbrs: int = 6,
                    n_centroids: int | None = None, n_probe: int = 2,
                    iters: int = 2, id_col: str = "vec_id",
@@ -1056,7 +1038,7 @@ def _live_nsw_adj(spark, path: str) -> DataFrame:
     return adj
 
 
-@_staged("append")
+@spans.span("append")
 def append_to_nsw_index(emb_new: DataFrame, corpus: DataFrame,
                         path: str, beam: int = 8, rounds: int = 3,
                         n_entries: int = 2,
@@ -1163,7 +1145,7 @@ def append_to_nsw_index(emb_new: DataFrame, corpus: DataFrame,
         os.rename(tmp, os.path.join(path, f"adj-frag-g{gen}-{nxt}"))
 
 
-@_staged("delete")
+@spans.span("delete")
 def delete_from_nsw_index(ids: DataFrame, path: str,
                           id_col: str = "vec_id") -> None:
     """TAKEDOWN on the persisted k-NN graph — the cheap half of the
@@ -1196,7 +1178,7 @@ def delete_from_nsw_index(ids: DataFrame, path: str,
             os.path.join(path, "tombstones"))
 
 
-@_staged("compact")
+@spans.span("compact")
 def compact_nsw_index(spark, path: str) -> None:
     """Physically purge tombstoned nodes from the stored edge list
     into a fresh immutable `adj-g<N>/` generation and flip the ADJ
@@ -1264,12 +1246,17 @@ it was faster at 100 and 256 queries (3.57 vs 4.07 s, 5.09 vs
 queries took most of the driver search's time."""
 
 
-def _collect_bounded(df: DataFrame) -> list | None:
+def _collect_bounded(df: DataFrame, head: str) -> list | None:
     """Rows of `df`, or None when it has more than DRIVER_PROBE_MAX_Q
     rows: a `limit(N+1)` collect, so the driver never holds more than
-    N+1 rows whatever the input size."""
+    N+1 rows whatever the input size. The None case is noted in the
+    run record as `head`'s fall-back to its Spark path."""
     rows = df.limit(DRIVER_PROBE_MAX_Q + 1).collect()
-    return None if len(rows) > DRIVER_PROBE_MAX_Q else rows
+    if len(rows) <= DRIVER_PROBE_MAX_Q:
+        return rows
+    spans.note("probe_cap", f"{head}: more than {DRIVER_PROBE_MAX_Q} "
+               "queries; Spark path")
+    return None
 
 
 def _arrow_frame(spark, cols: dict, schema) -> DataFrame:
@@ -1342,9 +1329,14 @@ def nsw_beam_search(adj: DataFrame, emb: DataFrame, queries: DataFrame,
     from pyspark.sql import types as T
 
     qrows = _collect_bounded(queries.select(
-        F.col(q_id_col), int8_quantize(F.col(q_vec_col)).alias("_qq")))
-    if qrows is None or None in {r[0] for r in qrows} \
-            or len({r[0] for r in qrows}) < len(qrows):
+        F.col(q_id_col), int8_quantize(F.col(q_vec_col)).alias("_qq")),
+        "nsw_beam_search")
+    if qrows is not None and (None in {r[0] for r in qrows}
+                              or len({r[0] for r in qrows}) < len(qrows)):
+        spans.note("probe_query_ids", "nsw_beam_search: NULL or "
+                   "duplicate query ids; Spark rounds")
+        qrows = None
+    if qrows is None:
         return _nsw_beam_search_bsp(adj, emb, queries, k, beam, rounds,
                                     n_entries, id_col, vec_col, q_id_col,
                                     q_vec_col)
@@ -2222,7 +2214,7 @@ def _codes_dir(path: str) -> str:
     return resolve_pointer(path, "CODES", "codes")
 
 
-@_staged("delete")
+@spans.span("delete")
 def delete_from_ivfpq_index(ids: DataFrame, path: str,
                             id_col: str = "vec_id") -> None:
     """Delete vectors from the persisted ANN index WITHOUT a rebuild —
@@ -2252,7 +2244,7 @@ def delete_from_ivfpq_index(ids: DataFrame, path: str,
         rows.write.mode("append").parquet(os.path.join(path, "tombstones"))
 
 
-@_staged("compact")
+@spans.span("compact")
 def compact_ivfpq_index(spark, path: str) -> None:
     """Merge appended code fragments into one fresh GENERATION —
     physically purging tombstoned vectors — and flip the CODES pointer
@@ -2300,7 +2292,7 @@ def compact_ivfpq_index(spark, path: str) -> None:
                               ignore_errors=True)
 
 
-@_staged("append")
+@spans.span("append")
 def append_to_ivfpq_index(emb_new: DataFrame, path: str,
                           id_col: str = "vec_id",
                           vec_col: str = "embedding",
@@ -2396,7 +2388,8 @@ def _ivfpq_probe(codes: DataFrame, cells: list[list[int]],
     spark = codes.sparkSession
     i64 = T.ArrayType(T.LongType(), True)
     q_src = _collect_bounded(queries.select(
-        F.col(q_id_col), F.col(q_vec_col))) if prune_partitions else None
+        F.col(q_id_col), F.col(q_vec_col)), "ivfpq_probe") \
+        if prune_partitions else None
     if q_src is not None:
         # Round-14 (VERDICT #2): the pruned path always materialized
         # q_probed driver-side anyway (the bounded |Q| x n_probe
@@ -2542,7 +2535,7 @@ def int_ivfpq_topk(emb: DataFrame, queries: DataFrame, k: int = 5,
 IVFPQ_INDEX_VERSION = 1
 
 
-@_staged("build_index")
+@spans.span("build_index")
 def save_ivfpq_index(emb: DataFrame, path: str, n_cells: int = 4,
                      m: int = 4, kc: int = 4, iters: int = 2,
                      dim: int = 64, id_col: str = "vec_id",

@@ -17,6 +17,20 @@ _REVERIFY_FIRST = (
     "dd16_lsh_index_append_probe",
     "dd18_index_tombstone_probe",
     "st13_stream_index_delete",
+    "dl1_delta_time_travel",
+    "dl2_delta_table_changes",
+    "dl3_delta_snapshot_diff",
+    "st18_stream_delta_ingest",
+    "dl4_delta_pruned_read",
+    "dl5_delta_optimize_invariance",
+    "dl6_delta_zorder_read",
+    "e1_miner_info",
+    "e1_mining_info",
+    "a4_win_totals",
+    "st11_stream_components",
+    "j20_bucketed_colocated_join",
+    "u6_format_roundtrip",
+    "u7_schema_evolution",
     "sim11_int_ivf_topk",
     "sim27_int_range_search",
     "sim28_nsw_beam_search",
@@ -43,6 +57,8 @@ _REVERIFY_FIRST = (
     "st14_stream_ann_delete",
     "st16_stream_graph_delete",
     "st15_stream_ann_append",
+    "w16_funnel",
+    "w26_linear_interpolation",
     "st9_stream_ingest_dedup",
     "w19_rolling_active_users",
     "w20_zscore_outliers",
@@ -60,20 +76,4 @@ _REVERIFY_FIRST = (
     "dp18_exact_k_sample",
     "x16_try_cast_quarantine",
     "o6_tail_slice",
-    "o7_offset_pagination",
-    "o8_range_slice",
-    "o9_keyset_pagination",
-    "u4_scd2_history",
-    "sim13_recall_eval",
-    "sim14_mmr_rerank",
-    "sim15_knn_graph",
-    "tx12_heavy_hitter_langs",
-    "tx13_countmin_tokens",
-    "tx14_bpe_merges",
-    "tx15_surprisal_score",
-    "tx16_mojibake_repair",
-    "tx17_vocab_stats",
-    "tx18_collocations",
-    "w7_ranking",
-    "st1_stream_tumbling_counts",
 )

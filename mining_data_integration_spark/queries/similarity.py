@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import spans
 from ..operators import similarity as S
 from ._util import spread, t
 
@@ -2427,11 +2428,9 @@ def st12_stream_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not os.path.exists(os.path.join(path, "meta")):
         S.save_ivfpq_index(emb, path, n_cells=4, m=4, kc=4, iters=2,
                            dim=_DIM)
-    from ..stages import timed as _timed_stage
-
     run = tempfile.mkdtemp(prefix="sg_st12_")
     try:
-        with _timed_stage("setup"):
+        with spans.span("setup"):
             src = os.path.join(run, "incoming")
             # two ingest files -> two genuine micro-batches
             (emb.filter((F.col("vec_id") >= 3) & (F.col("vec_id") < 6))
@@ -2442,7 +2441,7 @@ def st12_stream_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream = (spark.readStream.schema(schema)
                   .option("maxFilesPerTrigger", 1).parquet(src))
         out_dir = os.path.join(run, "report")
-        with _timed_stage("stream_probe"):
+        with spans.span("stream_probe"):
             q = (stream_probe_ann(stream, path, out_dir, k=5, n_probe=3)
                  .option("checkpointLocation", os.path.join(run, "ckpt"))
                  .trigger(availableNow=True).start())

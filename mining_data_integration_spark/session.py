@@ -15,6 +15,14 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
+def _default_driver_memory() -> str:
+    """Half the physical memory, capped at 48g: a heap above the
+    machine's memory never has to collect, and the kernel kills the
+    JVM first."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(48, phys // 2 ** 31))}g"
+
+
 def get_spark(app_name: str = "mining-data-integration-spark",
               shuffle_partitions: str | int | None = None) -> SparkSession:
     """Build (or fetch) the session.
@@ -36,7 +44,9 @@ def get_spark(app_name: str = "mining-data-integration-spark",
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEMORY")
+                or _default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         # driver writes events.ts as TIMESTAMP(NANOS); read as long up

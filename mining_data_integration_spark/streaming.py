@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import core
+from . import core, spans
 from .io import write_gold
 
 
@@ -45,14 +45,16 @@ def e1_gold_tables(tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
     }
 
 
+@spans.root("refresh")
 def refresh_once(tables: dict[str, DataFrame], gold_dir: str,
-                 reuse_gold: bool = False, reorg_depth: int = 100,
-                 stage_timings: dict | None = None) -> str:
+                 reuse_gold: bool = False, reorg_depth: int = 100) -> str:
     """ST1 batch body: recompute + atomic overwrite (the Redis SET
     equivalent, server.js:295-299). The shared prepared intermediates
     are released after the writes — without the unpersist, a
     long-running trigger would accumulate one cached commits table
-    per tick. Returns the mode used ('cold' or 'warm').
+    per tick. Returns the mode used ('cold' or 'warm'); the run record
+    (spans.py) carries it with the `walk`, `gold_writes` and per-table
+    `gw_*` stages.
 
     reuse_gold=True turns on the round-9 walk-constant fix: when the
     persisted canonical-chain state exists and boundary-verifies
@@ -64,70 +66,58 @@ def refresh_once(tables: dict[str, DataFrame], gold_dir: str,
     and each refresh maintains the state so the NEXT one is warm:
     warm ticks overwrite only the window's state buckets, cold ticks
     rewrite the full state."""
-    from time import perf_counter as _pc
-
-    spark = tables["snapshots"].sparkSession
-    _t0 = _pc()
     prepared = None
     mode = "cold"
-    if reuse_gold:
-        from .incremental import prepare_full_with_gold
-        prepared = prepare_full_with_gold(spark, tables, gold_dir,
-                                          reorg_depth=reorg_depth,
-                                          stage_timings=stage_timings)
-        if prepared is not None:
-            mode = "warm"
-    if prepared is None:
-        tables = dict(tables)
-        if "hbucket" in tables["block_commits"].columns:
-            tables["block_commits"] = \
-                tables["block_commits"].drop("hbucket")
-        prepared = core.prepare(tables)
+    with spans.span("walk"):
         if reuse_gold:
-            # prepare() already walked + checkpointed the stacks chain
-            # (round-13) — reuse it instead of walking headers again
-            prepared["wchain"] = prepared["snap"]
-            prepared["wstacks"] = prepared["stacks_chain"]
-    if stage_timings is not None:
-        stage_timings["walk"] = round(_pc() - _t0, 3)
-    _t0 = _pc()
+            from .incremental import prepare_full_with_gold
+            prepared = prepare_full_with_gold(
+                tables["snapshots"].sparkSession, tables, gold_dir,
+                reorg_depth=reorg_depth)
+            if prepared is not None:
+                mode = "warm"
+            else:
+                spans.note("cold_refresh",
+                           "no boundary-verified chain state; full walk")
+        if prepared is None:
+            tables = dict(tables)
+            if "hbucket" in tables["block_commits"].columns:
+                tables["block_commits"] = \
+                    tables["block_commits"].drop("hbucket")
+            prepared = core.prepare(tables)
+            if reuse_gold:
+                # prepare() already walked + checkpointed the stacks
+                # chain (round-13) — reuse it instead of walking
+                # headers again
+                prepared["wchain"] = prepared["snap"]
+                prepared["wstacks"] = prepared["stacks_chain"]
+    spans.mode(mode)
     try:
-        if reuse_gold:
-            _write_gold_with_state(tables, gold_dir, prepared, mode,
-                                   stage_timings=stage_timings)
-        else:
-            # the three gold outputs are independent projections of
-            # the ALREADY-MATERIALIZED prepared intermediates (snap/
-            # winners are eager localCheckpoints; the winners build
-            # populates the enriched cache), so overlapping the write
-            # jobs back-fills the tail of each job's stages with the
-            # next one's tasks (guide §2.6) — no shared upstream is
-            # recomputed, at any scale
-            from concurrent.futures import ThreadPoolExecutor
-
-            def _one_gold(item) -> tuple[str, float]:
-                name, builder = item
-                _tw = _pc()
-                write_gold(builder(tables, prepared=prepared),
-                           f"{gold_dir}/{name}")
-                return name, round(_pc() - _tw, 3)
-
-            with ThreadPoolExecutor(max_workers=3) as pool:
-                for name, sec in pool.map(_one_gold, (
-                        ("miner_info", core.miner_info),
-                        ("mining_info", core.mining_info),
-                        ("block_info", core.block_info))):
-                    if stage_timings is not None:
-                        stage_timings[f"gw_{name}"] = sec
-        if stage_timings is not None:
-            stage_timings["gold_writes"] = round(_pc() - _t0, 3)
+        with spans.span("gold_writes"):
+            if reuse_gold:
+                _write_gold_with_state(tables, gold_dir, prepared, mode)
+            else:
+                # the three gold outputs are independent projections of
+                # the ALREADY-MATERIALIZED prepared intermediates (snap/
+                # winners are eager localCheckpoints; the winners build
+                # populates the enriched cache), so overlapping the
+                # write jobs back-fills the tail of each job's stages
+                # with the next one's tasks (guide §2.6) — no shared
+                # upstream is recomputed, at any scale
+                _run_gold_writers([
+                    (name, lambda name=name, build=build: write_gold(
+                        build(tables, prepared=prepared),
+                        f"{gold_dir}/{name}"))
+                    for name, build in (("miner_info", core.miner_info),
+                                        ("mining_info", core.mining_info),
+                                        ("block_info", core.block_info))])
     finally:
         prepared["enriched"].unpersist()
     return mode
 
 
-def refresh_once_store(tables: dict[str, DataFrame], store,
-                       stage_timings: dict | None = None) -> None:
+@spans.root("refresh")
+def refresh_once_store(tables: dict[str, DataFrame], store) -> None:
     """The ST1 batch body writing through a GoldStore BACKEND
     (sources.deltalog.gold_store: 'pointer' or 'deltalog') instead of
     raw parquet dirs — round-13 VERDICT #7. Each tick SETs the three
@@ -141,30 +131,36 @@ def refresh_once_store(tables: dict[str, DataFrame], store,
     LEASE remains the right tool for the persisted-index artifacts
     (multi-directory parquet fragments with pointer files — not
     log-structured tables); the gold tick is where the log replaces
-    it."""
-    from time import perf_counter as _pc
-
-    _t0 = _pc()
-    prepared = core.prepare(tables)
-    if stage_timings is not None:
-        # same stage axes as refresh_once: prepare = walk,
-        # gold_writes = writes only (gw_* splits cover it)
-        stage_timings["walk"] = round(_pc() - _t0, 3)
-    _t0 = _pc()
+    it. Same stages as refresh_once: prepare = walk, gold_writes =
+    the writes, split per table into gw_*."""
+    spans.mode("cold")
+    with spans.span("walk"):
+        prepared = core.prepare(tables)
     try:
-        for name, builder in (
-            ("miner_info", core.miner_info),
-            ("mining_info", core.mining_info),
-            ("block_info", core.block_info),
-        ):
-            _tw = _pc()
-            store.set(name, builder(tables, prepared=prepared))
-            if stage_timings is not None:
-                stage_timings[f"gw_{name}"] = round(_pc() - _tw, 3)
-        if stage_timings is not None:
-            stage_timings["gold_writes"] = round(_pc() - _t0, 3)
+        with spans.span("gold_writes"):
+            for name, builder in (
+                ("miner_info", core.miner_info),
+                ("mining_info", core.mining_info),
+                ("block_info", core.block_info),
+            ):
+                with spans.span(f"gw_{name}"):
+                    store.set(name, builder(tables, prepared=prepared))
     finally:
         prepared["enriched"].unpersist()
+
+
+def _run_gold_writers(writers: list) -> None:
+    """(name, fn) writers from a 3-thread pool, in order, each as its
+    `gw_<name>` span (per-table attribution, round-13 VERDICT #6)."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    def run(item) -> None:
+        name, fn = item
+        with spans.span(f"gw_{name}"):
+            fn()
+
+    with ThreadPoolExecutor(max_workers=3) as pool:
+        list(pool.map(spans.inherit(run), writers))
 
 
 def _is_bucket_partitioned(path: str) -> bool:
@@ -177,8 +173,7 @@ def _is_bucket_partitioned(path: str) -> bool:
 
 
 def _write_gold_with_state(tables: dict[str, DataFrame], gold_dir: str,
-                           prepared: dict, mode: str,
-                           stage_timings: dict | None = None) -> None:
+                           prepared: dict, mode: str) -> None:
     """Gold + chain-state writes for the reuse_gold refresh family.
 
     mining_info / block_info are per-height outputs partitioned by
@@ -209,16 +204,6 @@ def _write_gold_with_state(tables: dict[str, DataFrame], gold_dir: str,
     pt = miner_partials(prepared)
     # a warm write can only be partition-scoped onto an hbucket layout:
     # a dir last written flat (reuse_gold=False) gets a full rewrite
-    from time import perf_counter as _pc
-
-    def _timed_write(name: str, fn) -> None:
-        # per-table attribution (round-13 VERDICT #6): the driver-vs-
-        # builder gold_writes delta was undiagnosable from one number
-        _tw = _pc()
-        fn()
-        if stage_timings is not None:
-            stage_timings[f"gw_{name}"] = round(_pc() - _tw, 3)
-
     warm_scoped = mode == "warm" and all(
         _is_bucket_partitioned(f"{gold_dir}/{n}")
         for n in ("mining_info", "block_info", "miner_partials"))
@@ -290,18 +275,7 @@ def _write_gold_with_state(tables: dict[str, DataFrame], gold_dir: str,
     writers.insert(0, ("chain_state", lambda: _write_dynamic(
         chain_df, f"{gold_dir}/canonical_chain")))
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _run_writer(item) -> tuple[str, float]:
-        name, fn = item
-        _tw = _pc()
-        fn()
-        return name, round(_pc() - _tw, 3)
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        for name, sec in pool.map(_run_writer, writers):
-            if stage_timings is not None:
-                stage_timings[f"gw_{name}"] = sec
+    _run_gold_writers(writers)
     if mode == "cold":
         # all writers succeeded — safe to declare the layout complete
         mark_state_layout(gold_dir)
@@ -315,7 +289,7 @@ def _write_gold_with_state(tables: dict[str, DataFrame], gold_dir: str,
     # canonical_stacks. Bounded 1-row aggs.
     from .incremental import _prune_buckets_above
 
-    def _prune() -> None:
+    with spans.span("gw_prune"):
         tip = prepared.get("tip_stacks")
         if tip is None:
             tip = prepared["snap"].agg(
@@ -332,8 +306,6 @@ def _write_gold_with_state(tables: dict[str, DataFrame], gold_dir: str,
                         ("block_info", tip_bucket)]
         for p, b in targets:
             _prune_buckets_above(f"{gold_dir}/{p}", b)
-
-    _timed_write("prune", _prune)
 
 
 def stream_refresh(spark: SparkSession, bronze_dir: str, gold_dir: str,

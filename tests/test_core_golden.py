@@ -85,14 +85,11 @@ class TestChainWalk:
             edges, "n059", "id", "parent").collect()}
         assert rcte == doubling == {f"n{i:03d}" for i in range(60)}
 
-    def test_segmented_fallback_on_hidden_entry(self, spark):
-        """Adversarial non-contiguous chain: the bucket entry has an
+    @staticmethod
+    def _hidden_entry_edges(spark):
+        """Adversarial non-contiguous chain: the bucket entry n10 has an
         in-bucket fork child AND sits below the bucket's top height, so
-        the candidate rule misses it — the walk must detect the broken
-        stitch and fall back to pointer doubling."""
-        from mining_data_integration_spark.chain import (
-            chain_members_segmented,
-        )
+        the segmented walk's candidate rule misses it."""
         Z = "0" * 64
         rows = [(f"n{i:02d}", f"n{i-1:02d}" if i else Z, i)
                 for i in range(11)]              # chain heights 0..10
@@ -100,13 +97,40 @@ class TestChainWalk:
         rows += [("fork_f", "nowhere", 15)]      # bucket-top decoy
         rows += [(f"m{i:02d}", f"m{i-1:02d}" if i > 50 else "n10", i)
                  for i in range(50, 61)]         # gap: 50's parent = n10
-        edges = spark.createDataFrame(
+        return spark.createDataFrame(
             rows, "id string, parent string, h long")
+
+    def test_segmented_fallback_on_hidden_entry(self, spark):
+        """The walk must detect the broken stitch and fall back to
+        pointer doubling."""
+        from mining_data_integration_spark.chain import (
+            chain_members_segmented,
+        )
         got = {r.id for r in chain_members_segmented(
-            edges, "m60", "id", "parent", "h", bucket_span=16).collect()}
+            self._hidden_entry_edges(spark), "m60", "id", "parent", "h",
+            bucket_span=16).collect()}
         want = {f"m{i:02d}" for i in range(50, 61)} | \
                {f"n{i:02d}" for i in range(11)}
         assert got == want
+
+    def test_segmented_fallback_is_in_the_run_record(self, spark):
+        """The pointer-doubling fall-back is not silent: it appears in
+        the run record of the span it ran under, and a walk that needs
+        no fall-back notes nothing."""
+        from mining_data_integration_spark import spans
+        from mining_data_integration_spark.chain import (
+            chain_members_segmented,
+        )
+        edges = self._hidden_entry_edges(spark)
+        with spans.span("walk") as s:
+            chain_members_segmented(edges, "m60", "id", "parent", "h",
+                                    bucket_span=16)
+            # without the fork child n10 is a bucket entry again
+            chain_members_segmented(edges.filter("id != 'fork_g'"), "m60",
+                                    "id", "parent", "h", bucket_span=16)
+        (fb,) = s.record["fallbacks"]
+        assert fb["kind"] == "segmented_walk_fallback"
+        assert fb["span"] == "walk" and "n10" in fb["detail"]
 
     def test_auto_selects_segmented_with_height(self, spark, monkeypatch):
         """chain_members_auto branch 1: a height column routes to the

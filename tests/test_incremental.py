@@ -4,10 +4,14 @@ at bootstrap and after new blocks land (with a reorg-depth window)."""
 
 from __future__ import annotations
 
+import json
+import logging
+
 import pytest
 from pyspark.sql import Row
 
-from mining_data_integration_spark import core, fixtures, incremental
+from mining_data_integration_spark import (core, fixtures, incremental,
+                                           spans)
 from mining_data_integration_spark import schemas as S
 from mining_data_integration_spark.fixtures import BH, CH, MINER_B, TX, _h
 
@@ -53,8 +57,15 @@ def extended_tables(spark, tables):
 class TestIncremental:
     def test_bootstrap_equals_full(self, spark, tables, tmp_path):
         gold = str(tmp_path / "gold")
-        incremental.incremental_refresh(
-            spark, tables, gold, reorg_depth=10**9)
+        with spans.span("caller") as rec:
+            incremental.incremental_refresh(
+                spark, tables, gold, reorg_depth=10**9)
+        # no state yet: the tick runs full and says so in its record
+        assert rec.record["mode"] == "full"
+        assert [f["kind"] for f in rec.record["fallbacks"]] == \
+            ["full_tick"]
+        assert set(spans.stages(rec.record)) == {
+            "walk", "gold_writes", "merge"}
         for name, builder in (("mining_info", core.mining_info),
                               ("block_info", core.block_info),
                               ("miner_info", core.miner_info)):
@@ -96,10 +107,11 @@ class TestIncremental:
         gold = str(tmp_path / "goldw")
         assert refresh_once(tables, gold, reuse_gold=True) == "cold"
         ext = extended_tables(spark, tables)
-        st: dict = {}
-        mode = refresh_once(ext, gold, reuse_gold=True, reorg_depth=3,
-                            stage_timings=st)
-        assert mode == "warm"
+        with spans.span("caller") as rec:
+            mode = refresh_once(ext, gold, reuse_gold=True,
+                                reorg_depth=3)
+        assert mode == "warm" == rec.record["mode"]
+        st = spans.stages(rec.record)
         # core stages plus the round-13 per-table gold-write splits
         # (gw_*, VERDICT #6) — the writes now OVERLAP from a thread
         # pool (round-13 optimization, guide §2.6), so each split is
@@ -129,15 +141,18 @@ class TestIncremental:
         assert got == canon_rows(core.miner_info(ext))
 
     def test_refresh_once_warm_equals_cold_smoke(self, spark, tables,
-                                                 tmp_path, monkeypatch):
+                                                 tmp_path, monkeypatch,
+                                                 caplog):
         """The default run's warm-refresh equivalence check (the deeper
         variants are `slow`): a warm refresh_once across a one-block
         extension writes the same gold as a cold refresh_once of the
         extended world. Two-height buckets and reorg_depth=1 put the
         window floor at stacks height 6, so heights 0-5 come from the
-        persisted chain state."""
+        persisted chain state. With no caller span open, each refresh
+        logs its run record as one JSON line."""
         from mining_data_integration_spark.streaming import refresh_once
 
+        caplog.set_level(logging.INFO, logger=spans.__name__)
         monkeypatch.setattr(incremental, "HEIGHTS_PER_BUCKET", 2)
         warm, cold = str(tmp_path / "warm"), str(tmp_path / "cold")
         assert refresh_once(tables, warm, reuse_gold=True) == "cold"
@@ -145,6 +160,18 @@ class TestIncremental:
         assert refresh_once(ext, warm, reuse_gold=True,
                             reorg_depth=1) == "warm"
         assert refresh_once(ext, cold) == "cold"
+        recs = [json.loads(r.getMessage()) for r in caplog.records
+                if r.name == spans.__name__]
+        assert [r["mode"] for r in recs] == ["cold", "warm", "cold"]
+        assert [f["kind"] for f in recs[0]["fallbacks"]] == \
+            ["cold_refresh"]
+        assert recs[1]["fallbacks"] == recs[2]["fallbacks"] == []
+        assert set(spans.stages(recs[1])) == {
+            "walk", "window_walk", "history_materialize", "gold_writes",
+            "gw_chain_state", "gw_stacks_state", "gw_miner_partials",
+            "gw_mining_info", "gw_block_info", "gw_miner_info",
+            "gw_prune"}
+        assert recs[1]["spans"]["jobs"]
         for name in ("mining_info", "block_info", "miner_info"):
             got = canon_rows(spark.read.parquet(f"{warm}/{name}"))
             want = canon_rows(spark.read.parquet(f"{cold}/{name}"))

@@ -87,6 +87,7 @@ class TestIvf:
 
 from pyspark.sql import functions as F
 
+from mining_data_integration_spark import spans
 from mining_data_integration_spark.operators import dedup as D
 from mining_data_integration_spark.operators import similarity as S
 from mining_data_integration_spark.operators import text as TX
@@ -3285,11 +3286,17 @@ class TestDriverProbeHeads:
         assert one_cell in ("0", "1")
 
         monkeypatch.setattr(S, "DRIVER_PROBE_MAX_Q", 2)
-        nsw_spark = S.nsw_beam_search(adj, live, q)
+        with spans.span("probe") as rec:
+            nsw_spark = S.nsw_beam_search(adj, live, q)
+            ivf_spark = S.ivfpq_probe_topk(
+                S.load_ivfpq_index(spark, ivf_path), ivf_q, k=3,
+                n_probe=1)
+        # both fall-backs are in the run record
+        assert [(f["kind"], f["detail"].split(":")[0])
+                for f in rec.record["fallbacks"]] == [
+            ("probe_cap", "nsw_beam_search"), ("probe_cap", "ivfpq_probe")]
         assert "LocalTableScan" not in executed_plan(nsw_spark)
         assert sorted(tuple(r) for r in nsw_spark.collect()) == nsw_want
-        ivf_spark = S.ivfpq_probe_topk(
-            S.load_ivfpq_index(spark, ivf_path), ivf_q, k=3, n_probe=1)
         assert "Generate" in executed_plan(ivf_spark)   # Spark head
         assert sorted(tuple(r) for r in ivf_spark.collect()) == ivf_want
         # the Spark head prunes the codes scan to the same cells

@@ -20,7 +20,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from mining_data_integration_spark import streaming
+from mining_data_integration_spark import spans, streaming
 from mining_data_integration_spark.incremental import incremental_refresh
 from mining_data_integration_spark.io import write_bronze_commits
 from mining_data_integration_spark.session import get_spark
@@ -42,23 +42,27 @@ def main() -> None:
     # values on this box swing +-40% and masquerade as regressions
     all_runs: dict[str, list[float]] = {}
 
-    def med3(fn, pre=None, tag: str | None = None) -> float:
+    def med3(fn, pre=None, tag: str | None = None,
+             stages: dict | None = None) -> float:
         """`pre` runs before each iteration OUTSIDE the timed span —
         cold runs use it for the state rmtree so the cold wall times
         the same work as the warm wall (bench.py's discipline).
         `tag` records the full run list in the output JSON (round-11:
         report median + spread, not a single stage snapshot — a
         median whose runs span 2x is a different claim than one whose
-        runs agree)."""
+        runs agree). Each run is a root span; `stages` gets the last
+        run's stage map."""
         runs = []
         for _ in range(3):
             if pre is not None:
                 pre()
-            t0 = time.perf_counter()
-            fn()
-            runs.append(round(time.perf_counter() - t0, 2))
+            with spans.span(tag or "run") as s:
+                fn()
+            runs.append(round(s.record["spans"]["wall_s"], 2))
         if tag is not None:
             all_runs[tag] = runs
+        if stages is not None:
+            stages.update(spans.stages(s.record))
         return sorted(runs)[1]
 
     # COLD full refresh including all gold + state writes (round-10
@@ -71,11 +75,9 @@ def main() -> None:
 
     def cold_pre() -> None:
         shutil.rmtree(gold_c, ignore_errors=True)   # no state -> cold
-        cold_st.clear()
 
     def one_cold() -> None:
-        mode = streaming.refresh_once(tables, gold_c, reuse_gold=True,
-                                      stage_timings=cold_st)
+        mode = streaming.refresh_once(tables, gold_c, reuse_gold=True)
         assert mode == "cold", mode
 
     # one discarded warm-up first (bench.py's discipline — round 11:
@@ -85,7 +87,7 @@ def main() -> None:
     # warm-up, not cold-state work)
     cold_pre()
     one_cold()
-    wall = med3(one_cold, pre=cold_pre, tag="cold")
+    wall = med3(one_cold, pre=cold_pre, tag="cold", stages=cold_st)
     counts = {
         name: spark.read.parquet(f"{gold_c}/{name}").count()
         for name in ("miner_info", "mining_info", "block_info")}
@@ -99,13 +101,11 @@ def main() -> None:
     warm_st: dict = {}
 
     def one_warm() -> None:
-        warm_st.clear()
         mode = streaming.refresh_once(tables, gold_w, reuse_gold=True,
-                                      reorg_depth=1000,
-                                      stage_timings=warm_st)
+                                      reorg_depth=1000)
         assert mode == "warm", mode
 
-    warm_wall = med3(one_warm, tag="warm")
+    warm_wall = med3(one_warm, tag="warm", stages=warm_st)
 
     # steady-state incremental tick: bootstrap the partitioned gold,
     # then time bounded-reorg refreshes (the production cadence)
@@ -123,13 +123,9 @@ def main() -> None:
     gold2 = "/tmp/bench_e1_gold_bb"
     incremental_refresh(spark, t2, gold2, reorg_depth=10 ** 12)
     tick_st: dict = {}
-
-    def one_tick_bb() -> None:
-        tick_st.clear()
-        incremental_refresh(spark, t2, gold2, reorg_depth=1000,
-                            stage_timings=tick_st)
-
-    inc_bb_wall = med3(one_tick_bb, tag="tick_bucketed")
+    inc_bb_wall = med3(lambda: incremental_refresh(
+        spark, t2, gold2, reorg_depth=1000), tag="tick_bucketed",
+        stages=tick_st)
 
     # --- walk-engine shoot-out (round-12 VERDICT #4): the three chain
     # walks on the same synthetic chain, at FULL depth and on the
@@ -209,16 +205,8 @@ def main() -> None:
         "walk_engines": walk_engines,
         "stages": {k: v for k, v in unified.items() if v},
         "warm_full_refresh_sec": warm_wall,
-        "warm_stage_walk_sec": warm_st.get("walk"),
-        "warm_stage_window_walk_sec": warm_st.get("window_walk"),
-        "warm_stage_history_materialize_sec":
-            warm_st.get("history_materialize"),
-        "warm_stage_gold_writes_sec": warm_st.get("gold_writes"),
-        "cold_stage_walk_sec": cold_st.get("walk"),
-        "cold_stage_gold_writes_sec": cold_st.get("gold_writes"),
         "incremental_tick_sec": inc_wall,
         "incremental_tick_bucketed_bronze_sec": inc_bb_wall,
-        "tick_stage_walk_sec": tick_st.get("walk"),
         "runs": 3, "run_spreads": all_runs,
         "n_blocks": n_blocks, "commits_per_block": cpb,
         "budget_sec": 120, "gold_rows": counts,

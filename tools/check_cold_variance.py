@@ -19,11 +19,10 @@ import json
 import os
 import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from mining_data_integration_spark import streaming
+from mining_data_integration_spark import spans, streaming
 from mining_data_integration_spark.session import get_spark
 from mining_data_integration_spark.synthworld import (
     land_as_parquet,
@@ -53,14 +52,13 @@ def main() -> int:
     # number was a different mix of first-in-process and steady runs).
     for i in range(n_runs + 1):
         shutil.rmtree(gold, ignore_errors=True)     # no state -> cold
-        st: dict = {}
-        t0 = time.perf_counter()
-        mode = streaming.refresh_once(tables, gold, reuse_gold=True,
-                                      stage_timings=st)
-        wall = round(time.perf_counter() - t0, 2)
+        with spans.span("cold") as s:
+            mode = streaming.refresh_once(tables, gold, reuse_gold=True)
+        wall = round(s.record["spans"]["wall_s"], 2)
+        st = spans.stages(s.record)
         assert mode == "cold", mode
         walls.append(wall)
-        stages.append(dict(st))
+        stages.append(st)
         label = "warm-up" if i == 0 else f"run {i}/{n_runs}"
         print(f"{label}: wall {wall:7.2f} s  stages {st}", flush=True)
 

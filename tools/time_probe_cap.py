@@ -18,13 +18,13 @@ import os
 import shutil
 import sys
 import tempfile
-import time
 
 import numpy as np
 import pyarrow as pa
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from mining_data_integration_spark import spans  # noqa: E402
 from mining_data_integration_spark.operators import similarity as S  # noqa: E402
 from mining_data_integration_spark.session import get_spark  # noqa: E402
 
@@ -34,7 +34,6 @@ def main() -> None:
     sizes = [int(x) for x in sys.argv[3].split(",")]
     reps = int(sys.argv[4]) if len(sys.argv) > 4 else 2
     spark = get_spark("time_probe_cap", shuffle_partitions=4)
-    sc = spark.sparkContext
     rng = np.random.default_rng(5)
     centres = rng.normal(0.0, 40.0, size=(16, dim))
 
@@ -57,20 +56,17 @@ def main() -> None:
                      n_probe=1, iters=1)
     S.DRIVER_PROBE_MAX_Q = max(sizes)
 
-    def run(name, q, group):
-        sc.setJobGroup(group, group)
-        t0 = time.perf_counter()
-        rows = engines[name](S.load_nsw_index(spark, path)["adj"], emb, q,
-                             k=5).collect()
-        dt = time.perf_counter() - t0
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-        return sorted(tuple(r) for r in rows), dt, jobs
+    def run(name, q):
+        with spans.span(name) as s:
+            rows = engines[name](S.load_nsw_index(spark, path)["adj"],
+                                 emb, q, k=5).collect()
+        rec = s.record["spans"]
+        return sorted(tuple(r) for r in rows), rec["wall_s"], len(rec["jobs"])
 
     try:
         warm = frame("q_id", "q_emb", 24)
         for name in engines:
-            run(name, warm, f"warm-{name}")
+            run(name, warm)
         for m in sizes:
             q = frame("q_id", "q_emb", m).localCheckpoint()
             times = {name: [] for name in engines}
@@ -78,8 +74,7 @@ def main() -> None:
             for r in range(reps):
                 order = list(engines) if r % 2 == 0 else list(engines)[::-1]
                 for name in order:
-                    answers[name], dt, jobs[name] = run(
-                        name, q, f"{name}-{m}-{r}")
+                    answers[name], dt, jobs[name] = run(name, q)
                     times[name].append(dt)
             cols = " ".join(
                 f"{name}={min(ts):.2f}s/{jobs[name]}j"

@@ -26,7 +26,8 @@ from pyspark.sql import functions as F
 
 from .. import spans
 from ..sources.kv import read_tombstones
-from .similarity import _driver_read_parquet
+from .similarity import (_driver_read_parquet, _driver_write_parquet,
+                         _parquet_scan)
 
 ZERO_WIDTH = r"\s+"
 
@@ -255,14 +256,12 @@ def save_minhash_index(docs: DataFrame, path: str, text_col: str = "text",
     if os.path.exists(os.path.join(path, "meta")):
         return
     rows = band_bucket_rows(docs, text_col, id_col, n, num_hashes, bands)
-    spark = docs.sparkSession
     tmp = f"{path.rstrip('/')}.build-{uuid.uuid4().hex[:12]}"
     rows.write.mode("overwrite").partitionBy("band") \
         .parquet(f"{tmp}/buckets")
-    spark.createDataFrame(
-        [(MINHASH_INDEX_VERSION, n, num_hashes, bands)],
-        "version int, n int, num_hashes int, bands int",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{tmp}/meta")
+    _driver_write_parquet(
+        f"{tmp}/meta", [(MINHASH_INDEX_VERSION, n, num_hashes, bands)],
+        "version int, n int, num_hashes int, bands int")
     os.makedirs(os.path.dirname(path.rstrip("/")) or ".", exist_ok=True)
     try:
         os.rename(tmp, path)
@@ -385,7 +384,7 @@ def append_to_minhash_index(new_docs: DataFrame, path: str,
         if skip_existing:
             # resolve the buckets dir INSIDE the lease so the
             # anti-join and the append target the same generation
-            existing = (spark.read.parquet(_buckets_dir(path))
+            existing = (_parquet_scan(spark, _buckets_dir(path), "band")
                         .select("id").distinct())
             rows = rows.join(existing, "id", "left_anti")
         rows.write.mode("append").partitionBy("band") \
@@ -431,7 +430,7 @@ def compact_minhash_index(spark, path: str) -> None:
         gen = 1 if cur_name == "buckets" \
             else int(cur_name.rsplit("-g", 1)[1])
         new_name = f"buckets-g{gen + 1}"
-        rows = spark.read.parquet(cur) \
+        rows = _parquet_scan(spark, cur, "band") \
             .select("id", "bh", "band").distinct()
         ts = read_tombstones(spark, path)
         if ts is not None:
@@ -480,7 +479,7 @@ def probe_minhash_index(new_docs: DataFrame, path: str,
     new_rows = band_bucket_rows(
         new_docs, text_col, id_col, meta["n"], meta["num_hashes"],
         meta["bands"]).select(F.col("id").alias("new_id"), "band", "bh")
-    idx = spark.read.parquet(_buckets_dir(path))
+    idx = _parquet_scan(spark, _buckets_dir(path), "band")
     ts = read_tombstones(spark, path)
     if ts is not None:
         idx = idx.join(F.broadcast(ts), "id", "left_anti")
@@ -511,7 +510,8 @@ def audit_minhash_buckets(spark, path: str,
     key at any scale, never a single-partition window)."""
     from pyspark.sql import Window
 
-    rows = spark.read.parquet(_buckets_dir(path)).select("id", "band", "bh")
+    rows = _parquet_scan(spark, _buckets_dir(path), "band") \
+        .select("id", "band", "bh")
     ts = read_tombstones(spark, path)
     if ts is not None:
         rows = rows.join(F.broadcast(ts), "id", "left_anti")

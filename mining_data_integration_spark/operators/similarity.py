@@ -674,11 +674,11 @@ def _nsw_quantize_and_train(emb: DataFrame, n_centroids: int | None,
     # materialize the quantized corpus ONCE (round-13 optimization,
     # guide §5 caching rule): the build re-reads it 3-5x (optional
     # count, seeds, one assignment per Lloyd iteration, then the
-    # data AND src sides of the pair join) — without this every pass
-    # re-scans the source and re-evaluates the quantize transform,
-    # and — the bigger cost — the pair join's pushed-down key filter
-    # inlines the interpreted quantize tree once per centroid with no
-    # common-subexpression elimination (measured ~10x per-row blowup:
+    # pair scoring) — without this every pass re-scans the source
+    # and re-evaluates the quantize transform, and — the bigger
+    # cost, measured when the pairs were a join — a pushed-down key
+    # filter inlined the interpreted quantize tree once per centroid
+    # with no common-subexpression elimination (~10x per-row blowup:
     # 0.24 s standalone vs 2.5-3 s inside the join at sf0.1). Cached
     # int8-range values are a quarter of the fp32 source — the
     # footprint DiskANN-style builds materialize anyway.
@@ -707,17 +707,23 @@ def nsw_candidate_pairs(emb: DataFrame, n_centroids: int | None = None,
                         target_occupancy: int = NSW_TARGET_OCCUPANCY,
                         quantizer: str = "auto") -> DataFrame:
     """Scored candidate pairs (src, dst, cos_sim_q8) of the k-NN graph
-    build — nsw_adjacency minus the per-src rank, exposed so the scale
-    harness can count the pair work directly. Candidate generation is
+    build — every pair nsw_adjacency ranks, exposed so the scale
+    harness can count the pair work directly (nsw_build_stats is the
+    analytic count of the same set). Candidate generation is
     CELL-BOUNDED, never all-pairs (the dd/sim invariant): vectors are
     assigned to integer-k-means cells once (the sim11 coarse
     quantizer — engine-exact, so the whole build is hash-checkable),
-    and each vector generates candidates only inside its n_probe
-    nearest cells via a SALTED shuffle equi-join on the cell id
-    (operators/skew.salted_join — _cid alone has n_centroids distinct
-    values, so salting is what keeps pair-scoring parallelism
-    independent of the cell count; no corpus broadcast — unlike the
-    query-side probe joins, both sides here are the corpus).
+    and each vector pairs only with the vectors of its n_probe
+    nearest cells. The pairs are scored by ONE numpy kernel
+    (_nsw_pair_kernel) per (cell, salt) group of a
+    `groupBy(...).applyInArrow`: exact int64 dots, then the same
+    double sqrt and divide as Spark's expression, so the scores are
+    bit-identical to the SQL oracle's. The src side is SALTED 32 ways
+    and the cell's data side replicated once per salt, so a group
+    holds about 1/32 of a cell's src rows and the scoring parallelism
+    is independent of the cell count; the kernel scores src rows in
+    blocks, so a group's working set is O(block x cell), not
+    O(cell^2). No corpus broadcast: both sides are the corpus.
 
     n_centroids=None derives the cell count from corpus size
     (derive_nsw_centroids — occupancy-targeted, so pair work stays
@@ -731,46 +737,18 @@ def nsw_candidate_pairs(emb: DataFrame, n_centroids: int | None = None,
     thousands), "auto" resolves to "df" (_resolve_nsw_quantizer).
     The two engines produce BIT-IDENTICAL pairs (same exact-int
     arithmetic, same tie rules — pinned), so the oracle replay never
-    cares which ran."""
-    emb_q, cents, _c, engine = _nsw_quantize_and_train(
-        emb, n_centroids, n_probe, iters, id_col, vec_col,
-        target_occupancy, quantizer)
-    (base,), cc = _attach_cells(engine, cents, emb_q)
-    scored = _scored_cells_df(F.col("_qv"), cc)
-    data = (base.withColumn("_cid", F.array_min(scored)["i"])
-            .drop("_cents"))
-    src = (
-        base.withColumn(
-            "_p", F.explode(F.slice(F.array_sort(scored), 1, n_probe)))
-        .select(F.col(id_col).alias("_src"),
-                F.col("_qv").alias("_sv"),
-                F.col("_p.i").alias("_cid"))
-    )
-    data = data.withColumn(
-        "_vnorm",
-        F.sqrt(idot(F.col("_qv"), F.col("_qv")).cast("double")))
-    src = src.withColumn(
-        "_snorm",
-        F.sqrt(idot(F.col("_sv"), F.col("_sv")).cast("double")))
-    # SALT the cell join (the a15/j18 machinery): _cid alone has only
-    # n_centroids distinct values, so an unsalted equi-join bounds the
-    # pair-scoring parallelism by the CELL count — at sf1 that put
-    # 200M integer-dot rows in <=4 partitions (the round-12 straggler
-    # that surfaced in the first sf1 run). Salting from the src id
-    # splits every cell's work across buckets; the data side pays the
-    # standard |corpus| x buckets replication, dwarfed by the pair
-    # fan-out it parallelizes.
-    from .skew import salted_join
+    cares which ran.
 
-    return (
-        salted_join(src, data, "_cid", buckets=32, salt_from="_src")
-        .filter(F.col("_src") != F.col(id_col))
-        .select(F.col("_src").alias("src"),
-                F.col(id_col).alias("dst"),
-                (idot(F.col("_sv"), F.col("_qv")).cast("double")
-                 / (F.col("_snorm") * F.col("_vnorm")))
-                .alias("cos_sim_q8"))
-    )
+    A NULL id gets no pairs. A NULL quantized vector (or one with a
+    NULL element) still gets a cell — its NULL distances sort first,
+    so cell 0 — and scores NULL against every vector it meets, as the
+    SQL expression does. A pair whose vector is all zeros has no
+    cosine: under ANSI mode (the session default) the kernel raises
+    ValueError naming both ids (Spark reports it as a
+    PythonException; the SQL expression raised DIVIDE_BY_ZERO); with
+    ANSI off it scores NULL."""
+    return _nsw_pairs_df(emb, n_centroids, n_probe, iters, id_col,
+                         vec_col, target_occupancy, quantizer, None)
 
 
 def nsw_adjacency(emb: DataFrame, k_nbrs: int = 6,
@@ -781,20 +759,23 @@ def nsw_adjacency(emb: DataFrame, k_nbrs: int = 6,
                   quantizer: str = "auto") -> DataFrame:
     """k-NN GRAPH build for graph-based ANN (sim28) — the offline half
     of an NSW/DiskANN-style index: every vector's k_nbrs most-similar
-    neighbors as an edge list (src, dst, cos_sim_q8, nrk). Candidate
-    generation is nsw_candidate_pairs (cell-bounded, salted, never
-    all-pairs; n_centroids=None derives the cell count from corpus
-    size so pair work stays ~linear — derive_nsw_centroids). Per-src
-    top-k_nbrs is a window partitioned by src — bounded per key at any
-    scale. At 100 TB this is one shuffle on _cid with fan-out bounded
-    by cell occupancy x n_probe, then one shuffle for the per-src rank;
+    neighbors as an edge list (src, dst, cos_sim_q8, nrk). Candidates
+    and scores as nsw_candidate_pairs (cell-bounded, never all-pairs;
+    n_centroids=None derives the cell count from corpus size so pair
+    work stays ~linear — derive_nsw_centroids), except that the
+    kernel already keeps each src's top k_nbrs of every (cell, salt)
+    group by (cos_sim_q8 desc NULLS LAST, dst), so at most n_probe x
+    k_nbrs rows per src leave the Python stage. The per-src rank is
+    then a window partitioned by src over those rows — bounded per
+    key at any scale, and equal to the rank over all the src's pairs
+    (its top k_nbrs are among its cells' top k_nbrs). At 100 TB this
+    is one shuffle on (cell, salt) with fan-out bounded by cell
+    occupancy x n_probe, then one shuffle for the per-src rank;
     production DiskANN builds refine exactly such a bucketed candidate
     graph rather than exact k-NN. `quantizer` as nsw_candidate_pairs
-    (auto-switches to the broadcast-column engine past
-    NSW_MAX_CENTROIDS cells — identical output either way)."""
-    pairs = nsw_candidate_pairs(emb, n_centroids, n_probe, iters,
-                                id_col, vec_col, target_occupancy,
-                                quantizer)
+    (identical output from either engine)."""
+    pairs = _nsw_pairs_df(emb, n_centroids, n_probe, iters, id_col,
+                          vec_col, target_occupancy, quantizer, k_nbrs)
     w = Window.partitionBy("src").orderBy(
         F.desc("cos_sim_q8"), F.col("dst"))
     return (
@@ -804,20 +785,186 @@ def nsw_adjacency(emb: DataFrame, k_nbrs: int = 6,
     )
 
 
+_NSW_BLOCK_ROWS = 256
+"""Src rows _nsw_pair_kernel scores at once: a block's working set is
+O(block x cell occupancy), whatever the occupancy."""
+
+
+def _nsw_pairs_df(emb: DataFrame, n_centroids: int | None, n_probe: int,
+                  iters: int, id_col: str, vec_col: str,
+                  target_occupancy: int, quantizer: str,
+                  k_nbrs: int | None) -> DataFrame:
+    """(src, dst, cos_sim_q8) of the graph build: every candidate pair
+    (k_nbrs None) or each src's top k_nbrs per (cell, salt) group."""
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    emb_q, cents, _c, engine = _nsw_quantize_and_train(
+        emb, n_centroids, n_probe, iters, id_col, vec_col,
+        target_occupancy, quantizer)
+    (base,), cc = _attach_cells(engine, cents, emb_q)
+    scored = _scored_cells_df(F.col("_qv"), cc)
+    # a NULL id pairs with nothing (src != dst is NULL)
+    cells = base.filter(F.col(id_col).isNotNull()).select(
+        F.col(id_col).alias("_id"), "_qv",
+        F.array_min(scored)["i"].alias("_home"),
+        F.slice(F.array_sort(scored), 1, n_probe)["i"].alias("_probe"))
+    # ONE explode gives every vector its roles: src in each probed cell
+    # and data in its home cell. SALT the src side: _cid alone has only
+    # n_centroids distinct values, so grouping by the cell alone bounds
+    # the pair-scoring parallelism by the CELL count (the round-12
+    # straggler: at sf1, 200M integer dots in <=4 tasks). Salting from
+    # the src id splits every cell's src rows across the buckets; the
+    # data side pays the standard |corpus| x buckets replication,
+    # dwarfed by the pair fan-out it parallelizes. The cells are
+    # scored in the projection below the explode, once per vector.
+    buckets = 32
+    salt = F.pmod(F.xxhash64(F.col("_id")), F.lit(buckets))
+    roles = F.concat(
+        F.transform("_probe", lambda c: F.struct(
+            F.lit(True).alias("_is_src"), c.alias("_cid"),
+            salt.alias("_salt"))),
+        F.transform(F.sequence(F.lit(0).cast("long"),
+                               F.lit(buckets - 1).cast("long")),
+                    lambda b: F.struct(
+                        F.lit(False).alias("_is_src"),
+                        F.col("_home").alias("_cid"), b.alias("_salt"))))
+    rows = cells.select("_id", "_qv", F.explode(roles).alias("_r")) \
+        .select("_r.*", "_id", "_qv")
+    id_type = emb_q.schema[id_col].dataType
+    schema = T.StructType([T.StructField("src", id_type),
+                           T.StructField("dst", id_type),
+                           T.StructField("cos_sim_q8", T.DoubleType())])
+    ansi = emb.sparkSession.conf.get("spark.sql.ansi.enabled") == "true"
+    return (rows.groupBy("_cid", "_salt").applyInArrow(
+                _nsw_pair_kernel(k_nbrs, ansi, to_arrow_schema(schema)),
+                schema))
+
+
+def _nsw_pair_kernel(k: int | None, ansi: bool, schema):
+    """The applyInArrow function of the graph build. It scores one
+    (cell, salt) group (columns _is_src, _id, _qv): every src row
+    against every data row, src == dst excluded, exactly as Spark's
+    `double(idot(s, d)) / (sqrt(double(idot(s, s))) *
+    sqrt(double(idot(d, d))))` — int64 dots, then IEEE double
+    conversion, sqrt, multiply and divide in that order. A pair with
+    an invalid vector (NULL, a NULL element, another length) scores
+    NULL, as Spark's zip_with/aggregate does; a zero divisor raises
+    ValueError under ANSI and scores NULL otherwise, as Spark's
+    divide. With k, each src row keeps its top k by (cos_sim_q8 desc
+    NULLS LAST, dst); without, every pair. Src rows go in blocks of
+    _NSW_BLOCK_ROWS. The functions are nested so that Spark ships
+    them by value: a Python worker need not import this package."""
+    block = _NSW_BLOCK_ROWS
+
+    def int_rows(col) -> dict:
+        # {length: (row indices, int64 matrix)} over the valid rows
+        import numpy as np
+        import pyarrow.compute as pc
+
+        arr = col.combine_chunks()
+        lens = pc.list_value_length(arr).fill_null(0).to_numpy(
+            zero_copy_only=False).astype(np.int64)
+        flat = pc.list_flatten(arr)
+        valid = arr.is_valid().to_numpy(zero_copy_only=False).copy()
+        if flat.null_count:
+            par = pc.list_parent_indices(arr).to_numpy(zero_copy_only=False)
+            valid[par[flat.is_null().to_numpy(zero_copy_only=False)]] = \
+                False
+        vals = flat.fill_null(0).to_numpy(zero_copy_only=False) \
+            .astype(np.int64)
+        starts = np.zeros(len(arr), dtype=np.int64)
+        np.cumsum(lens[:-1], out=starts[1:])
+        mats = {}
+        for n in np.unique(lens[valid]).tolist():
+            rows = np.flatnonzero(valid & (lens == n))
+            mats[n] = (rows, vals[starts[rows, None] + np.arange(n)])
+        return mats
+
+    def kernel(table):
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        is_src = table.column("_is_src")
+        src = table.filter(is_src)
+        data = table.filter(pc.invert(is_src))
+        if not src.num_rows or not data.num_rows:
+            return schema.empty_table()
+        # data rows in dst order: the stable sort below then breaks
+        # score ties by dst
+        data = data.take(pc.sort_indices(data, [("_id", "ascending")]))
+        s_ids = src.column("_id").combine_chunks()
+        d_ids = data.column("_id").combine_chunks()
+        s_idn = s_ids.to_numpy(zero_copy_only=False)
+        d_idn = d_ids.to_numpy(zero_copy_only=False)
+        s_mats = int_rows(src.column("_qv"))
+        d_mats = int_rows(data.column("_qv"))
+        d_norms = {n: np.sqrt((dm * dm).sum(axis=1).astype(np.float64))
+                   for n, (_, dm) in d_mats.items()}
+        out_s, out_d, out_c = [], [], []
+        for lo in range(0, src.num_rows, block):
+            hi = min(lo + block, src.num_rows)
+            # rank key: -score in [-1, 1] (a cosine), 2 = NULL (ranks
+            # last), 3 = no pair (src == dst)
+            key = np.full((hi - lo, data.num_rows), 2.0)
+            for n, (rows, sm) in s_mats.items():
+                sel = (rows >= lo) & (rows < hi)
+                if n not in d_mats or not sel.any():
+                    continue
+                rows, sm = rows[sel], sm[sel]
+                cols, dm = d_mats[n]
+                dots = (sm @ dm.T).astype(np.float64)
+                den = (np.sqrt((sm * sm).sum(axis=1).astype(np.float64))
+                       [:, None] * d_norms[n][None, :])
+                zero = den == 0
+                if zero.any():
+                    zero &= s_idn[rows][:, None] != d_idn[cols][None, :]
+                    if ansi and zero.any():
+                        i, j = (int(x[0]) for x in np.nonzero(zero))
+                        raise ValueError(
+                            "nsw graph build: zero-norm vector in the "
+                            f"scored pair src={s_idn[rows[i]]!r}, "
+                            f"dst={d_idn[cols[j]]!r}; cosine is "
+                            "undefined (the int8 vector is all zeros)")
+                    den = np.where(zero, 1.0, den)
+                key[np.ix_(rows - lo, cols)] = np.where(
+                    zero, 2.0, -(dots / den))
+            key[s_idn[lo:hi][:, None] == d_idn[None, :]] = 3.0
+            if k is None:
+                r, c = np.nonzero(key < 3.0)
+            else:
+                top = np.argsort(key, axis=1, kind="stable")[:, :max(k, 0)]
+                r = np.repeat(np.arange(hi - lo), top.shape[1])
+                c = top.ravel()
+                keep = key[r, c] < 3.0
+                r, c = r[keep], c[keep]
+            v = key[r, c]
+            out_s.append(r + lo)
+            out_d.append(c)
+            out_c.append(pa.array(-v, mask=v == 2.0, type=pa.float64()))
+        return pa.table([s_ids.take(pa.array(np.concatenate(out_s))),
+                         d_ids.take(pa.array(np.concatenate(out_d))),
+                         pa.chunked_array(out_c, type=pa.float64())],
+                        schema=schema)
+
+    return kernel
+
+
 def nsw_build_stats(emb: DataFrame, n_centroids: int | None = None,
                     n_probe: int = 2, iters: int = 2,
                     id_col: str = "vec_id", vec_col: str = "embedding",
                     target_occupancy: int = NSW_TARGET_OCCUPANCY,
                     quantizer: str = "auto") -> dict:
     """ANALYTIC cost model of the graph build, computed WITHOUT
-    materializing the pair join: candidate pairs = sum over cells of
+    scoring the pairs: candidate pairs = sum over cells of
     (probe assignments into the cell) x (cell occupancy), minus the
     self-pairs (a vector probing its own cell meets itself once).
     All collects are O(n_centroids) rows. This is the pre-flight
     "how big is this build" answer an operator wants before spending
     cluster hours, and the instrument the linearity pin uses
-    (equality with the real join's count() is itself pinned at small
-    n in tests)."""
+    (equality with nsw_candidate_pairs' count() is itself pinned at
+    small n in tests)."""
     emb_q, cents, c, engine = _nsw_quantize_and_train(
         emb, n_centroids, n_probe, iters, id_col, vec_col,
         target_occupancy, quantizer)
@@ -861,6 +1008,15 @@ def save_nsw_index(emb: DataFrame, path: str, k_nbrs: int = 6,
     half-built graph; racing builders are harmless because the build
     is fully deterministic). No-op if `path` is complete.
 
+    Build cost: the pairs are scored by nsw_adjacency's numpy kernel,
+    one call per (cell, salt) group — the src side salted 32 ways
+    from its id and the cell's data side replicated per salt, so a
+    group holds about 1/32 of a cell's src rows against the whole
+    cell, and the scoring runs in as many tasks as the shuffle gives
+    it, whatever the cell count. The adjacency write is the one O(n)
+    Spark job after training; the meta is written with pyarrow
+    (_driver_write_parquet, no Spark job).
+
     Day-2 contract, documented rather than faked: APPEND to a k-NN
     graph is NOT the frozen-quantizer O(batch) encode the IVF-PQ
     index gets — inserting a vector requires a search to find its
@@ -887,15 +1043,14 @@ def save_nsw_index(emb: DataFrame, path: str, k_nbrs: int = 6,
     # graph for these (k_nbrs, n_centroids, n_probe, iters)
     adj = nsw_adjacency(emb, k_nbrs, n_centroids, n_probe, iters,
                         id_col, vec_col, quantizer=quantizer)
-    spark = emb.sparkSession
     tmp = f"{path.rstrip('/')}.build-{uuid.uuid4().hex[:12]}"
     adj.write.mode("overwrite").parquet(f"{tmp}/adj")
-    spark.createDataFrame(
+    _driver_write_parquet(
+        f"{tmp}/meta",
         [(NSW_INDEX_VERSION, k_nbrs, n_centroids, n_probe, iters,
           id_col)],
         "version int, k_nbrs int, n_centroids int, n_probe int, "
-        "iters int, id_col string",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{tmp}/meta")
+        "iters int, id_col string")
     os.makedirs(os.path.dirname(path.rstrip("/")) or ".",
                 exist_ok=True)
     try:
@@ -926,25 +1081,37 @@ def _nsw_base_gen(path: str) -> tuple[str, int]:
     return d, (1 if name == "adj" else int(name.rsplit("-g", 1)[1]))
 
 
-def _parquet_scan(spark, path: str) -> DataFrame:
+def _parquet_scan(spark, path: str,
+                  partition: str | None = None) -> DataFrame:
     """spark.read.parquet(path) with the schema taken from one file's
     footer on the driver: Spark's own inference runs a Spark job per
-    read. Spark writes its schema into every footer; without one (or
+    read. `partition` names the column of a `partition=<int>/`
+    directory layout (the IVF-PQ codes' `_cell`, the MinHash buckets'
+    `band`); it is appended as int, the type Spark infers for it.
+    Spark writes its schema into every footer; without one (or
     without files) Spark infers as usual."""
     import json
     import os
 
     import pyarrow.parquet as pq
-    from pyspark.sql.types import StructType
+    from pyspark.sql.types import IntegerType, StructType
 
-    names = sorted(n for n in os.listdir(path) if n.endswith(".parquet"))
+    dirs = [path]
+    if partition is not None:
+        dirs = sorted(os.path.join(path, d) for d in os.listdir(path)
+                      if d.startswith(f"{partition}="))
+    first = next((os.path.join(d, n) for d in dirs
+                  for n in sorted(os.listdir(d)) if n.endswith(".parquet")),
+                 None)
     meta = {}
-    if names:
-        meta = pq.read_schema(os.path.join(path, names[0])).metadata or {}
+    if first is not None:
+        meta = pq.read_schema(first).metadata or {}
     key = b"org.apache.spark.sql.parquet.row.metadata"
     if key not in meta:
         return spark.read.parquet(path)
     schema = StructType.fromJson(json.loads(meta[key]))
+    if partition is not None:
+        schema = schema.add(partition, IntegerType())
     return spark.read.schema(schema).parquet(path)
 
 
@@ -1243,7 +1410,12 @@ beam 4, 3 rounds, load + search + collect, best of two runs). With
 it was faster at 100 and 256 queries (3.57 vs 4.07 s, 5.09 vs
 5.81 s), about even at 512 (10.35 vs 10.22 s) and slower at 1,024
 (23.6 vs 19.9 s), where the bounded collect of the Spark-quantized
-queries took most of the driver search's time."""
+queries took most of the driver search's time. Since int8_quantize
+computes its scale once per vector, the 768-dim run (one run each,
+SPARK_GRAFT_CPUS=2 beside a 2-core job) reads 2.45 vs 6.47 s at 256
+queries and 1.84 vs 7.52 s at 512 (7 vs 18 jobs, equal answers): the
+driver search now wins at 512 too. The cap stays at 256, since no
+workload runs above it."""
 
 
 def _collect_bounded(df: DataFrame, head: str) -> list | None:
@@ -1568,14 +1740,23 @@ def int8_quantize(vec: Column) -> Column:
     floor(x*s + 0.5) (round-half-toward-+inf) rather than round():
     half-even vs half-up conventions differ between engines, floor
     does not. Elements pass through double before any arithmetic so
-    a float32 source quantizes identically everywhere."""
+    a float32 source quantizes identically everywhere.
+
+    The scale is computed ONCE per vector and handed to the
+    per-element lambda as a second array (`array_repeat(scale,
+    size(v))`): a scale Column used inside the lambda is re-evaluated
+    per element, which made quantizing O(dim^2) per vector (a noop
+    write of 1,101 cached 64-dim vectors on two task threads took
+    0.39-0.41 s that way, 0.16-0.25 s with the scale passed in). The
+    double ops are the same, so the values are unchanged."""
     v = F.transform(vec, lambda x: x.cast("double"))
     maxabs = F.array_max(F.transform(v, F.abs))
     scale = F.lit(127.0) / maxabs
     return F.when(
         maxabs > 0,
-        F.transform(v, lambda x: F.floor(x * scale + F.lit(0.5))
-                    .cast("bigint")),
+        F.zip_with(v, F.array_repeat(scale, F.size(v)),
+                   lambda x, s: F.floor(x * s + F.lit(0.5))
+                   .cast("bigint")),
     ).otherwise(F.transform(v, lambda x: F.lit(0).cast("bigint")))
 
 
@@ -1594,6 +1775,37 @@ def _driver_read_parquet(path: str) -> list[dict]:
     import pyarrow.parquet as pq
 
     return pq.read_table(path).to_pylist()
+
+
+def _driver_write_parquet(path: str, rows: list[tuple],
+                          schema: str) -> None:
+    """Bounded artifact write WITHOUT a Spark job: the twin of
+    _driver_read_parquet for a persisted index's k-row sides (IVF-PQ
+    meta/cells/codebooks, NSW and MinHash meta). A one-row
+    `createDataFrame(...).coalesce(1).write` cost 0.5-0.6 s per side
+    in a traced index build; pyarrow writes the same table in about a
+    millisecond. `schema` is a DDL list of `name type` with type int,
+    bigint, string or array<bigint> (parquet int32, int64, string,
+    list<int64>), so Spark, pyarrow and DuckDB read the columns with
+    the types a Spark write gave them. The one file is named like a
+    Spark part file, `part-00000-<uuid>-c000.snappy.parquet`, in the
+    new directory `path`; the caller stages and publishes it."""
+    import os
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    types = {"int": pa.int32(), "bigint": pa.int64(),
+             "string": pa.string(), "array<bigint>": pa.list_(pa.int64())}
+    fields = [f.strip().split(" ", 1) for f in schema.split(",")]
+    table = pa.Table.from_pylist(
+        [dict(zip((n for n, _ in fields), r)) for r in rows],
+        schema=pa.schema([(n, types[t.strip()]) for n, t in fields]))
+    os.makedirs(path)
+    pq.write_table(table, os.path.join(
+        path, f"part-00000-{uuid.uuid4()}-c000.snappy.parquet"),
+        compression="snappy")
 
 
 def _non_finite_query(qid) -> ValueError:
@@ -2265,7 +2477,7 @@ def compact_ivfpq_index(spark, path: str) -> None:
             else int(cur_name.rsplit("-g", 1)[1])
         new_name = f"codes-g{gen + 1}"
         meta = _driver_read_parquet(f"{path}/meta")[0]  # no Spark job
-        rows = spark.read.parquet(cur)
+        rows = _parquet_scan(spark, cur, "_cell")
         ts = read_tombstones(spark, path)
         if ts is not None:
             rows = rows.join(
@@ -2341,7 +2553,7 @@ def append_to_ivfpq_index(emb_new: DataFrame, path: str,
         if skip_existing:
             # resolve the codes dir INSIDE the lease so the anti-join
             # and the append target the same generation
-            existing = (spark.read.parquet(_codes_dir(path))
+            existing = (_parquet_scan(spark, _codes_dir(path), "_cell")
                         .select(meta["id_col"]))
             codes_new = codes_new.join(existing, meta["id_col"],
                                        "left_anti")
@@ -2567,24 +2779,23 @@ def save_ivfpq_index(emb: DataFrame, path: str, n_cells: int = 4,
         return
     codes, cells, codebooks = _ivfpq_train(
         emb, n_cells, m, kc, iters, dim, id_col, vec_col)
-    spark = emb.sparkSession
     tmp = f"{path.rstrip('/')}.build-{uuid.uuid4().hex[:12]}"
     codes.write.mode("overwrite").partitionBy("_cell") \
         .parquet(f"{tmp}/codes")
-    spark.createDataFrame(
+    _driver_write_parquet(
+        f"{tmp}/cells",
         [(i, [int(v) for v in c]) for i, c in enumerate(cells)],
-        "cell int, cent array<bigint>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{tmp}/cells")
-    spark.createDataFrame(
+        "cell int, cent array<bigint>")
+    _driver_write_parquet(
+        f"{tmp}/codebooks",
         [(s, j, [int(v) for v in codebooks[s][j]])
          for s in range(m) for j in range(kc)],
-        "s int, cid int, cent array<bigint>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{tmp}/codebooks")
-    spark.createDataFrame(
+        "s int, cid int, cent array<bigint>")
+    _driver_write_parquet(
+        f"{tmp}/meta",
         [(IVFPQ_INDEX_VERSION, n_cells, m, kc, dim, dim // m, id_col)],
         "version int, n_cells int, m int, kc int, dim int, sub int, "
-        "id_col string",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{tmp}/meta")
+        "id_col string")
     os.makedirs(os.path.dirname(path.rstrip("/")) or ".", exist_ok=True)
     try:
         os.rename(tmp, path)
@@ -2614,7 +2825,8 @@ def load_ivfpq_index(spark, path: str) -> dict:
     loaded before a delete keeps serving the pre-delete view (the
     same read-your-load semantics the generation pointer gives)."""
     # bounded sides read driver-side, no Spark jobs (round-14 — see
-    # _driver_read_parquet); the codes scan stays a lazy parquet scan
+    # _driver_read_parquet); the codes scan stays a lazy parquet scan,
+    # its schema from one file's footer (_parquet_scan: no inference job)
     meta_row = _driver_read_parquet(f"{path}/meta")[0]
     if meta_row["version"] != IVFPQ_INDEX_VERSION:
         raise ValueError(
@@ -2627,7 +2839,7 @@ def load_ivfpq_index(spark, path: str) -> dict:
         [None] * meta_row["kc"] for _ in range(meta_row["m"])]
     for r in _driver_read_parquet(f"{path}/codebooks"):
         books[r["s"]][r["cid"]] = [int(x) for x in r["cent"]]
-    codes = spark.read.parquet(_codes_dir(path))
+    codes = _parquet_scan(spark, _codes_dir(path), "_cell")
     ts = read_tombstones(spark, path)
     if ts is not None:
         codes = codes.join(

@@ -12,6 +12,7 @@ Derived against boundary 394ee508e5ce (round 14: verdict/advice/correctness/benc
 """
 
 _REVERIFY_FIRST = (
+    "dd9_semantic_dedup",
     "dd15_persisted_lsh_probe",
     "dd19_lsh_bucket_audit",
     "dd16_lsh_index_append_probe",
@@ -31,6 +32,8 @@ _REVERIFY_FIRST = (
     "j20_bucketed_colocated_join",
     "u6_format_roundtrip",
     "u7_schema_evolution",
+    "sim8_random_projection",
+    "sim7_quantized_topk",
     "sim11_int_ivf_topk",
     "sim27_int_range_search",
     "sim28_nsw_beam_search",
@@ -42,6 +45,8 @@ _REVERIFY_FIRST = (
     "st17_stream_graph_append",
     "sim34_nsw_sequential_append",
     "sim35_int_ivf_bigc_topk",
+    "sim14_mmr_rerank",
+    "sim15_knn_graph",
     "sim16_int_pq_topk",
     "sim17_int_ivfpq_topk",
     "sim19_ivfpq_persisted_topk",
@@ -71,9 +76,4 @@ _REVERIFY_FIRST = (
     "dp8_global_shuffle",
     "dp14_length_buckets",
     "dp13_token_budget_mix",
-    "dp15_dataset_card",
-    "dp16_shard_writer_plan",
-    "dp18_exact_k_sample",
-    "x16_try_cast_quarantine",
-    "o6_tail_slice",
 )

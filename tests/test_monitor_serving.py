@@ -69,17 +69,6 @@ def ref_range_slice(df, start, end, order):
     return _ref_row_filter(df, start, end, order)
 
 
-def jobs_of(spark, fn, group):
-    """Run fn under a fresh job group; return (result, #jobs)."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def executed_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
@@ -190,7 +179,7 @@ class TestBurnFeeAreaOnePass:
             "cum_burn_fee"].dataType) == "DecimalType(30,0)"
 
     def test_plan_is_one_scan_one_job(self, spark, hand_block_info,
-                                      tmp_path):
+                                      tmp_path, jobs_of):
         path = str(tmp_path / "block_info")
         hand_block_info.write.parquet(path)
         bi = spark.read.parquet(path)
@@ -198,14 +187,15 @@ class TestBurnFeeAreaOnePass:
         plan = executed_plan(df)
         assert plan.count("FileScan") == 1, plan
         assert "Join" not in plan and "BroadcastExchange" not in plan, plan
-        rows, jobs = jobs_of(spark, df.collect, "bfa_one_pass")
+        rows, jobs = jobs_of(df.collect)
         assert jobs == 1
         assert rows == ref_burn_fee_area(bi, 6).collect()
 
-    def test_rr_section_collects_without_a_job(self, spark, golds):
+    def test_rr_section_collects_without_a_job(self, spark, golds,
+                                               jobs_of):
         rr = monitor.monitor_integrate(golds)["rr"]
         assert rr.schema.simpleString() == "struct<address:string,RR:double>"
-        rows, jobs = jobs_of(spark, rr.collect, "rr_section")
+        rows, jobs = jobs_of(rr.collect)
         assert rows == [] and jobs == 0
 
 

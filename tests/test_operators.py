@@ -1500,10 +1500,12 @@ class TestPyQuantizeParity:
 
         emb = spark.read.parquet(
             "/root/testdata/sf0.001/embeddings.parquet")
-        got = emb.select(
+        zero = spark.createDataFrame(
+            [(-1, [0.0] * 64)], "vec_id long, embedding array<float>")
+        got = emb.select("vec_id", "embedding").unionByName(zero).select(
             "vec_id", "embedding",
             int8_quantize(F.col("embedding")).alias("q")).collect()
-        assert len(got) > 0
+        assert [r.q for r in got if r.vec_id == -1] == [[0] * 64]
         for r in got:
             assert _int8_quantize_py(r.embedding) == list(r.q), r.vec_id
 
@@ -1530,6 +1532,106 @@ class TestPyQuantizeParity:
                         int8_quantize(F.col("v")).alias("q")).collect()
         for r in got:
             assert _int8_quantize_py(r.v) == list(r.q), r.i
+
+
+class TestInt8QuantizeScaleOnce:
+    """int8_quantize computes each vector's scale once: no array_max is
+    evaluated inside a per-element lambda (the values are pinned equal
+    to the driver replica's in TestPyQuantizeParity)."""
+
+    def test_no_array_max_inside_a_lambda(self, spark):
+        plan = spark.createDataFrame(
+            [(1, [1.0, -2.0])], "i long, v array<double>").select(
+            S.int8_quantize(F.col("v"))) \
+            ._jdf.queryExecution().optimizedPlan().toString()
+        bodies, at = [], plan.find("lambdafunction(")
+        while at >= 0:
+            depth, i = 0, at + len("lambdafunction")
+            for i in range(i, len(plan)):
+                depth += {"(": 1, ")": -1}.get(plan[i], 0)
+                if depth == 0:
+                    break
+            bodies.append(plan[at:i + 1])
+            at = plan.find("lambdafunction(", at + 1)
+        assert any("FLOOR" in b for b in bodies), plan
+        assert not any("array_max" in b for b in bodies), plan
+
+
+class TestDriverWrittenIndexSides:
+    """The bounded index sides are written with pyarrow (no Spark job)
+    in the column types a Spark write gave them, and the partitioned
+    index reads take their schema from a footer (no inference job)."""
+
+    def test_driver_write_runs_no_job_and_reads_as_spark_wrote(
+            self, spark, tmp_path, jobs_of):
+        import os
+
+        ddl = "version int, n int, id_col string, cent array<bigint>"
+        rows = [(1, 7, "vec_id", [3, -2, 127]), (2, 8, "x", [])]
+        path = str(tmp_path / "driver")
+        _, n = jobs_of(lambda: S._driver_write_parquet(path, rows, ddl))
+        assert n == 0
+        names = os.listdir(path)
+        assert len(names) == 1 and names[0].startswith("part-00000-") \
+            and names[0].endswith(".snappy.parquet")
+        spark.createDataFrame(rows, ddl).coalesce(1).write.parquet(
+            str(tmp_path / "spark"))
+        ours = spark.read.parquet(path)
+        theirs = spark.read.parquet(str(tmp_path / "spark"))
+        assert ours.schema == theirs.schema
+        assert sorted(map(tuple, ours.collect())) == \
+            sorted(map(tuple, theirs.collect()))
+        assert S._driver_read_parquet(path) == \
+            S._driver_read_parquet(str(tmp_path / "spark"))
+
+    def test_index_sides_keep_their_schema(self, spark, tmp_path):
+        import os
+
+        emb = vec_df(spark, [(i, [float((i * 5 + j) % 9) - 4.0
+                                  for j in range(8)]) for i in range(30)])
+        S.save_ivfpq_index(emb, str(tmp_path / "ivf"), n_cells=2, m=2,
+                           kc=2, iters=1, dim=8)
+        S.save_nsw_index(emb, str(tmp_path / "nsw"), k_nbrs=4,
+                         n_centroids=2, iters=1)
+        D.save_minhash_index(docs_df(spark, [(i, f"doc {i} words {i % 3}")
+                                             for i in range(6)]),
+                             str(tmp_path / "mh"))
+        want = {
+            "ivf/meta": "version:int,n_cells:int,m:int,kc:int,dim:int,"
+                        "sub:int,id_col:string",
+            "ivf/cells": "cell:int,cent:array<bigint>",
+            "ivf/codebooks": "s:int,cid:int,cent:array<bigint>",
+            "nsw/meta": "version:int,k_nbrs:int,n_centroids:int,"
+                        "n_probe:int,iters:int,id_col:string",
+            "mh/meta": "version:int,n:int,num_hashes:int,bands:int"}
+        for side, schema in want.items():
+            d = str(tmp_path / side)
+            assert all(n.startswith("part-") for n in os.listdir(d))
+            assert spark.read.parquet(d).schema.simpleString() == \
+                f"struct<{schema}>", side
+
+    def test_partitioned_reads_take_the_footer_schema(
+            self, spark, tmp_path, jobs_of):
+        emb = vec_df(spark, [(i, [float((i * 7 + j * 3) % 11) - 5.0
+                                  for j in range(8)]) for i in range(40)])
+        path = str(tmp_path / "ivf")
+        S.save_ivfpq_index(emb, path, n_cells=2, m=2, kc=2, iters=2,
+                           dim=8)
+        idx, n = jobs_of(lambda: S.load_ivfpq_index(spark, path))
+        assert n == 0
+        inferred = spark.read.parquet(S._codes_dir(path))
+        assert idx["codes"].schema == inferred.schema
+        q = emb.filter("vec_id < 5").select(
+            F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb"))
+        got = sorted(map(tuple, S.ivfpq_probe_topk(idx, q, k=3).collect()))
+        want = sorted(map(tuple, S.ivfpq_probe_topk(
+            dict(idx, codes=inferred), q, k=3).collect()))
+        assert got == want and got
+        mh = str(tmp_path / "mh")
+        D.save_minhash_index(docs_df(spark, [(i, f"doc {i} words {i % 3}")
+                                             for i in range(6)]), mh)
+        assert S._parquet_scan(spark, D._buckets_dir(mh), "band").schema \
+            == spark.read.parquet(D._buckets_dir(mh)).schema
 
 
 class TestIvfpqPersistedLifecycle:
@@ -2711,23 +2813,24 @@ class TestNswGraphAnn:
     def test_adjacency_candidates_are_cell_bounded_not_all_pairs(
             self, spark):
         """The dd5/dd7 discipline applied to the graph build: the
-        candidate join must be an equi-join on the cell id, never a
-        cartesian — pinned on the physical plan. The df quantizer
-        engine ('auto''s round-13 resolution at every cell count)
-        attaches its centroid set as a 1-row IdentityBroadcastMode
-        cross — those BNLJ nodes are O(1)-row scalar attaches, not
-        candidate joins, so the pin asserts the SHAPE: no cartesian,
-        the salted cell-id equi-join present, and every BNLJ a Cross
-        build (the 1-row attach), never an inner pair join."""
+        candidate pairs must be formed inside a cell, never by a
+        cartesian — pinned on the physical plan. The pairs are scored
+        by the Arrow kernel grouped by (cell id, salt). The df
+        quantizer engine ('auto''s round-13 resolution at every cell
+        count) attaches its centroid set as a 1-row
+        IdentityBroadcastMode cross — those BNLJ nodes are O(1)-row
+        scalar attaches, not candidate joins, so the pin asserts the
+        SHAPE: no cartesian, the kernel grouped by the cell id and
+        the salt, and every BNLJ a Cross build (the 1-row attach),
+        never an inner pair join."""
         import re
 
         emb = self._emb(spark)
         adj = S.nsw_adjacency(emb, k_nbrs=6)
         plan = adj._jdf.queryExecution().executedPlan().toString()
         assert "CartesianProduct" not in plan
-        assert ("BroadcastHashJoin [_cid" in plan
-                or "SortMergeJoin [_cid" in plan
-                or "ShuffledHashJoin [_cid" in plan)
+        assert re.search(r"FlatMapGroupsInArrow \[_cid#\d+, _salt#\d+L\]",
+                         plan), plan
         for m in re.finditer(r"BroadcastNestedLoopJoin[^\n]*", plan):
             assert "Cross" in m.group(0), m.group(0)
 
@@ -3113,16 +3216,161 @@ class TestNswGraphAnn:
         assert S.derive_nsw_centroids(n, 256, cap=None) == n // 256
 
 
-def jobs_of(spark, fn, group):
-    """Run fn under a fresh job group; return (result, #Spark jobs)
-    (the tests/test_monitor_serving.py helper)."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+def ref_nsw_candidate_pairs(emb, n_centroids=None, n_probe=2, iters=2,
+                            id_col="vec_id", vec_col="embedding",
+                            quantizer="auto"):
+    """The graph build's pair scoring before the numpy kernel: a
+    32-way salted equi-join on the cell id, scored by Spark's idot
+    lambdas. The reference the kernel must equal row for row."""
+    from mining_data_integration_spark.operators.skew import salted_join
+
+    emb_q, cents, _c, engine = S._nsw_quantize_and_train(
+        emb, n_centroids, n_probe, iters, id_col, vec_col,
+        S.NSW_TARGET_OCCUPANCY, quantizer)
+    (base,), cc = S._attach_cells(engine, cents, emb_q)
+    scored = S._scored_cells_df(F.col("_qv"), cc)
+    data = (base.withColumn("_cid", F.array_min(scored)["i"])
+            .drop("_cents"))
+    src = (base.withColumn(
+        "_p", F.explode(F.slice(F.array_sort(scored), 1, n_probe)))
+        .select(F.col(id_col).alias("_src"), F.col("_qv").alias("_sv"),
+                F.col("_p.i").alias("_cid")))
+    data = data.withColumn("_vnorm", F.sqrt(
+        S.idot(F.col("_qv"), F.col("_qv")).cast("double")))
+    src = src.withColumn("_snorm", F.sqrt(
+        S.idot(F.col("_sv"), F.col("_sv")).cast("double")))
+    return (salted_join(src, data, "_cid", buckets=32, salt_from="_src")
+            .filter(F.col("_src") != F.col(id_col))
+            .select(F.col("_src").alias("src"),
+                    F.col(id_col).alias("dst"),
+                    (S.idot(F.col("_sv"), F.col("_qv")).cast("double")
+                     / (F.col("_snorm") * F.col("_vnorm")))
+                    .alias("cos_sim_q8")))
+
+
+def ref_nsw_adjacency(emb, k_nbrs, **kw):
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("src").orderBy(F.desc("cos_sim_q8"),
+                                          F.col("dst"))
+    return (ref_nsw_candidate_pairs(emb, **kw)
+            .withColumn("nrk", F.row_number().over(w).cast("long"))
+            .filter(F.col("nrk") <= k_nbrs)
+            .select("src", "dst", "cos_sim_q8", "nrk"))
+
+
+def vec_df(spark, rows):
+    return spark.createDataFrame(rows,
+                                 "vec_id long, embedding array<double>")
+
+
+class TestNswPairKernel:
+    """The graph build scores its cell-bounded pairs with one numpy
+    kernel per (cell, salt) group: its all-pairs output and its
+    adjacency equal the salted-join reference row for row, NULLs and
+    errors included."""
+
+    def _emb(self, spark):
+        return TestNswGraphAnn()._emb(spark).filter("vec_id < 240")
+
+    def _same(self, emb, k_nbrs=6, **kw):
+        """(pairs, adjacency) of the kernel, each equal to the
+        reference's."""
+        pairs = sorted(map(tuple, S.nsw_candidate_pairs(emb, **kw)
+                           .collect()))
+        want = sorted(map(tuple, ref_nsw_candidate_pairs(emb, **kw)
+                          .collect()))
+        assert pairs == want and pairs
+        adj = sorted(map(tuple, S.nsw_adjacency(emb, k_nbrs, **kw)
+                         .collect()))
+        want = sorted(map(tuple, ref_nsw_adjacency(emb, k_nbrs, **kw)
+                          .collect()))
+        assert adj == want
+        return pairs, adj
+
+    @pytest.mark.parametrize("n_probe,quantizer", [
+        (1, "df"), (2, "df"), (1, "literal"), (2, "literal")])
+    def test_equals_reference(self, spark, n_probe, quantizer):
+        self._same(self._emb(spark), n_centroids=4, n_probe=n_probe,
+                   iters=1, quantizer=quantizer)
+
+    def test_k_nbrs_above_the_cell_size(self, spark):
+        pairs, adj = self._same(self._emb(spark), k_nbrs=240,
+                                n_centroids=8, n_probe=2, iters=1)
+        assert [r[:3] for r in adj] == pairs    # every pair ranked
+
+    @pytest.mark.parametrize("n_probe", [1, 2])
+    def test_one_vector_cell(self, spark, n_probe):
+        # seeds are the lowest ids: vector 0 points away from the rest,
+        # so its cell holds only itself
+        rows = [(0, [100.0, 100.0, 100.0, 100.0, 0.0, 0.0, 0.0, 0.0])] + [
+            (i, [-float((i * 7 + j * 3) % 11) - 5.0 for j in range(8)])
+            for i in range(1, 40)]
+        _, adj = self._same(vec_df(spark, rows), n_centroids=4,
+                            n_probe=n_probe, iters=1)
+        assert (0 in {r[0] for r in adj}) == (n_probe > 1)
+
+    def test_duplicate_vectors_break_ties_by_dst(self, spark):
+        rows = [(i + 100 * c, [float((i * 5 + j) % 9) - 4.0
+                               for j in range(8)])
+                for i in range(12) for c in range(3)]
+        _, adj = self._same(vec_df(spark, rows), n_centroids=4,
+                            n_probe=2, iters=1, k_nbrs=3)
+        # each vector's two copies score 1.0 and come first, by dst
+        first = {r[0]: r[1] for r in adj if r[3] == 1}
+        assert first[5] == 105 and first[205] == 5
+
+    def test_shuffle_width_seven(self, spark):
+        old = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", "7")
+        try:
+            self._same(self._emb(spark), n_centroids=4, n_probe=2,
+                       iters=1)
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", old)
+
+    def _zeroed(self, spark):
+        rows = [(i, [float((i * 3 + j) % 7) - 3.0 for j in range(8)])
+                for i in range(30)]
+        rows[7] = (7, [0.0] * 8)
+        return vec_df(spark, rows)
+
+    def test_zero_norm_pair_raises_under_ansi(self, spark):
+        emb = self._zeroed(spark)
+        with pytest.raises(Exception, match=r"ValueError: nsw graph "
+                           r"build: zero-norm vector in the scored pair "
+                           r"src=\d+, dst=\d+"):
+            S.nsw_adjacency(emb, 6, n_centroids=2, iters=1).collect()
+        with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+            ref_nsw_adjacency(emb, 6, n_centroids=2, iters=1).collect()
+
+    def test_zero_norm_scores_null_and_ranks_last_with_ansi_off(
+            self, spark):
+        spark.conf.set("spark.sql.ansi.enabled", "false")
+        try:
+            _, adj = self._same(self._zeroed(spark), k_nbrs=40,
+                                n_centroids=2, iters=1)
+        finally:
+            spark.conf.set("spark.sql.ansi.enabled", "true")
+        nulls = [r for r in adj if r[2] is None]
+        assert nulls and all(7 in r[:2] for r in nulls)
+        n_edges = {}
+        for r in adj:
+            n_edges[r[0]] = n_edges.get(r[0], 0) + 1
+        # a NULL score ranks after every scored neighbor
+        assert all(r[3] == n_edges[r[0]] for r in nulls if r[0] != 7)
+
+    def test_null_vector_edges_score_null(self, spark):
+        """A NULL vector quantizes to NULL; the cell scoring still puts
+        it in cell 0 (its NULL distances sort first), so it pairs
+        inside that cell with every score NULL, as in the reference."""
+        rows = [(i, [float((i * 3 + j) % 7) - 3.0 for j in range(8)])
+                for i in range(30)]
+        rows[9] = (9, None)
+        _, adj = self._same(vec_df(spark, rows), k_nbrs=40,
+                            n_centroids=2, iters=1)
+        assert all(r[2] is None for r in adj if 9 in r[:2])
+        assert all(r[2] is not None for r in adj if 9 not in r[:2])
 
 
 def executed_plan(df) -> str:
@@ -3236,17 +3484,16 @@ class TestDriverProbeHeads:
         return emb.filter(F.col("vec_id") % 7 != 3)
 
     def test_persisted_probe_equals_bsp_within_job_budget(
-            self, spark, tmp_path):
+            self, spark, tmp_path, jobs_of):
         """Fragments + tombstones: the driver search equals the Spark
         rounds, and load + search + collect stays within 14 Spark jobs
         (the Spark rounds take about 30 here)."""
         path = str(tmp_path / "nsw")
         live = self._persisted_graph(spark, path)
         q = self._q(live)
-        rows, n_jobs = jobs_of(spark, lambda: sorted(
+        rows, n_jobs = jobs_of(lambda: sorted(
             tuple(r) for r in S.nsw_beam_search(
-                S.load_nsw_index(spark, path)["adj"], live, q).collect()),
-            "nsw-driver-probe")
+                S.load_nsw_index(spark, path)["adj"], live, q).collect()))
         want = sorted(tuple(r) for r in self._bsp(
             S.load_nsw_index(spark, path)["adj"], live, q).collect())
         assert rows == want and rows
@@ -3317,7 +3564,7 @@ class TestDriverProbeHeads:
                                    q, k=3, n_probe=1)
 
     def test_probe_head_frames_are_local_table_scans(self, spark,
-                                                     tmp_path):
+                                                     tmp_path, jobs_of):
         """The driver-built frames plan as Arrow-backed local
         relations, never as RDD scans (collecting a list-built frame
         runs a Python-worker job)."""
@@ -3336,10 +3583,11 @@ class TestDriverProbeHeads:
         adj = S.nsw_adjacency(emb, k_nbrs=4, n_centroids=2)
         found = S.nsw_beam_search(adj, emb, q, k=3)
         assert executed_plan(found).strip().startswith("LocalTableScan")
-        assert jobs_of(spark, found.collect, "nsw-found")[1] == 0
+        assert jobs_of(found.collect)[1] == 0
 
     def test_minhash_meta_and_tombstone_reads_run_no_jobs(self, spark,
-                                                          tmp_path):
+                                                          tmp_path,
+                                                          jobs_of):
         """The 1-row meta is read with pyarrow and the tombstones with
         a given schema: a delete runs only its tombstone write, and
         the tombstone read plans without a schema-inference job."""
@@ -3352,15 +3600,13 @@ class TestDriverProbeHeads:
         D.save_minhash_index(docs, path, n=3, num_hashes=16, bands=4)
         dead = docs.filter("doc_id = 1").select("doc_id")
         _, n_delete = jobs_of(
-            spark, lambda: D.delete_from_minhash_index(dead, path),
-            "minhash-delete")
+            lambda: D.delete_from_minhash_index(dead, path))
         _, n_write = jobs_of(
-            spark, lambda: dead.select(
+            lambda: dead.select(
                 F.col("doc_id").cast("long").alias("id")).distinct()
-            .write.parquet(str(tmp_path / "ts")), "tombstone-write")
+            .write.parquet(str(tmp_path / "ts")))
         assert n_delete == n_write
-        ts, n_read = jobs_of(spark, lambda: read_tombstones(spark, path),
-                             "tombstone-read")
+        ts, n_read = jobs_of(lambda: read_tombstones(spark, path))
         assert n_read == 0
         assert [r.id for r in ts.collect()] == [1]
 

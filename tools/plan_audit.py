@@ -7,9 +7,11 @@ scans the formatted physical plan for scale red flags:
   accidental cross join that explodes at scale.
 * `BatchEvalPython` — row-at-a-time Python in the plan (the slow path;
   Arrow variants are allowed only where listed).
-* `ArrowEvalPython` / `MapInPandas` / `FlatMapGroupsInPandas` — Python
-  boundaries; allowed only in the queries whose operator IS a Python
-  stage (multimodal decode, crypto codecs, Arrow pre-reduce).
+* `ArrowEvalPython` / `MapInPandas` / `FlatMapGroupsInPandas` and the
+  Arrow forms `MapInArrow` / `FlatMapGroupsInArrow` /
+  `FlatMapCoGroupsInArrow` — Python boundaries; allowed only in the
+  queries whose operator IS a Python stage (multimodal decode, crypto
+  codecs, Arrow pre-reduce).
 * `Exchange SinglePartition` — a global single-partition shuffle;
   allowed only where the flowing rows are provably bounded (final
   top-k of k rows, per-shard summary tables, single-row aggregates).
@@ -314,6 +316,9 @@ def main() -> int:
         "ArrowEvalPython": "ArrowEvalPython",
         "MapInPandas": "MapInPandas",
         "FlatMapGroupsInPandas": "FlatMapGroupsInPandas",
+        "MapInArrow": "MapInArrow",
+        "FlatMapGroupsInArrow": "FlatMapGroupsInArrow",
+        "FlatMapCoGroupsInArrow": "FlatMapCoGroupsInArrow",
         "Exchange SinglePartition": "Arguments: SinglePartition",
     }
     name_filters = sys.argv[2:]

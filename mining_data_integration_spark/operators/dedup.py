@@ -384,7 +384,7 @@ def append_to_minhash_index(new_docs: DataFrame, path: str,
         if skip_existing:
             # resolve the buckets dir INSIDE the lease so the
             # anti-join and the append target the same generation
-            existing = (_parquet_scan(spark, _buckets_dir(path), "band")
+            existing = (_parquet_scan(spark, _buckets_dir(path))
                         .select("id").distinct())
             rows = rows.join(existing, "id", "left_anti")
         rows.write.mode("append").partitionBy("band") \
@@ -430,7 +430,7 @@ def compact_minhash_index(spark, path: str) -> None:
         gen = 1 if cur_name == "buckets" \
             else int(cur_name.rsplit("-g", 1)[1])
         new_name = f"buckets-g{gen + 1}"
-        rows = _parquet_scan(spark, cur, "band") \
+        rows = _parquet_scan(spark, cur) \
             .select("id", "bh", "band").distinct()
         ts = read_tombstones(spark, path)
         if ts is not None:
@@ -479,7 +479,7 @@ def probe_minhash_index(new_docs: DataFrame, path: str,
     new_rows = band_bucket_rows(
         new_docs, text_col, id_col, meta["n"], meta["num_hashes"],
         meta["bands"]).select(F.col("id").alias("new_id"), "band", "bh")
-    idx = _parquet_scan(spark, _buckets_dir(path), "band")
+    idx = _parquet_scan(spark, _buckets_dir(path))
     ts = read_tombstones(spark, path)
     if ts is not None:
         idx = idx.join(F.broadcast(ts), "id", "left_anti")
@@ -510,7 +510,7 @@ def audit_minhash_buckets(spark, path: str,
     key at any scale, never a single-partition window)."""
     from pyspark.sql import Window
 
-    rows = _parquet_scan(spark, _buckets_dir(path), "band") \
+    rows = _parquet_scan(spark, _buckets_dir(path)) \
         .select("id", "band", "bh")
     ts = read_tombstones(spark, path)
     if ts is not None:

@@ -1081,25 +1081,23 @@ def _nsw_base_gen(path: str) -> tuple[str, int]:
     return d, (1 if name == "adj" else int(name.rsplit("-g", 1)[1]))
 
 
-def _parquet_scan(spark, path: str,
-                  partition: str | None = None) -> DataFrame:
+def _parquet_scan(spark, path: str) -> DataFrame:
     """spark.read.parquet(path) with the schema taken from one file's
     footer on the driver: Spark's own inference runs a Spark job per
-    read. `partition` names the column of a `partition=<int>/`
-    directory layout (the IVF-PQ codes' `_cell`, the MinHash buckets'
-    `band`); it is appended as int, the type Spark infers for it.
-    Spark writes its schema into every footer; without one (or
-    without files) Spark infers as usual."""
+    read. A `<name>=<int>/` directory layout (the IVF-PQ codes'
+    `_cell`, the MinHash buckets' `band`) gets its partition column
+    from the directory names, appended as int, the type Spark infers
+    for it. Spark writes its schema into every footer; without one
+    (or without files) Spark infers as usual."""
     import json
     import os
 
     import pyarrow.parquet as pq
     from pyspark.sql.types import IntegerType, StructType
 
-    dirs = [path]
-    if partition is not None:
-        dirs = sorted(os.path.join(path, d) for d in os.listdir(path)
-                      if d.startswith(f"{partition}="))
+    parts = sorted(n for n in os.listdir(path) if "=" in n
+                   and os.path.isdir(os.path.join(path, n)))
+    dirs = [os.path.join(path, n) for n in parts] or [path]
     first = next((os.path.join(d, n) for d in dirs
                   for n in sorted(os.listdir(d)) if n.endswith(".parquet")),
                  None)
@@ -1110,8 +1108,8 @@ def _parquet_scan(spark, path: str,
     if key not in meta:
         return spark.read.parquet(path)
     schema = StructType.fromJson(json.loads(meta[key]))
-    if partition is not None:
-        schema = schema.add(partition, IntegerType())
+    if parts:
+        schema = schema.add(parts[0].split("=", 1)[0], IntegerType())
     return spark.read.schema(schema).parquet(path)
 
 
@@ -2477,7 +2475,7 @@ def compact_ivfpq_index(spark, path: str) -> None:
             else int(cur_name.rsplit("-g", 1)[1])
         new_name = f"codes-g{gen + 1}"
         meta = _driver_read_parquet(f"{path}/meta")[0]  # no Spark job
-        rows = _parquet_scan(spark, cur, "_cell")
+        rows = _parquet_scan(spark, cur)
         ts = read_tombstones(spark, path)
         if ts is not None:
             rows = rows.join(
@@ -2553,7 +2551,7 @@ def append_to_ivfpq_index(emb_new: DataFrame, path: str,
         if skip_existing:
             # resolve the codes dir INSIDE the lease so the anti-join
             # and the append target the same generation
-            existing = (_parquet_scan(spark, _codes_dir(path), "_cell")
+            existing = (_parquet_scan(spark, _codes_dir(path))
                         .select(meta["id_col"]))
             codes_new = codes_new.join(existing, meta["id_col"],
                                        "left_anti")
@@ -2839,7 +2837,7 @@ def load_ivfpq_index(spark, path: str) -> dict:
         [None] * meta_row["kc"] for _ in range(meta_row["m"])]
     for r in _driver_read_parquet(f"{path}/codebooks"):
         books[r["s"]][r["cid"]] = [int(x) for x in r["cent"]]
-    codes = _parquet_scan(spark, _codes_dir(path), "_cell")
+    codes = _parquet_scan(spark, _codes_dir(path))
     ts = read_tombstones(spark, path)
     if ts is not None:
         codes = codes.join(

@@ -746,7 +746,10 @@ def nsw_candidate_pairs(emb: DataFrame, n_centroids: int | None = None,
     cosine: under ANSI mode (the session default) the kernel raises
     ValueError naming both ids (Spark reports it as a
     PythonException; the SQL expression raised DIVIDE_BY_ZERO); with
-    ANSI off it scores NULL."""
+    ANSI off it scores NULL. The kernel scores every pair it emits, so
+    even a count() of these pairs pays the scoring and raises on such a
+    pair (Spark pruned the unused expression from a count of the
+    join)."""
     return _nsw_pairs_df(emb, n_centroids, n_probe, iters, id_col,
                          vec_col, target_occupancy, quantizer, None)
 

@@ -67,9 +67,9 @@ EXTENDED = [
     "sim29_nsw_persisted_probe",    # r12: persisted-graph probe side
     "sim30_nsw_delete",             # r13: graph delete lifecycle
     "sim31_nsw_recall_eval",        # r13: high-recall point report
-    "sim32_nsw_distributed_build",  # r13: df quantizer engine, c=32
+    "sim32_nsw_distributed_build",  # r13: k-NN graph build, c=32
     "sim33_nsw_append_probe",       # r13: graph append (search+relink)
-    "sim35_int_ivf_bigc_topk",      # r13: df engine on query-side IVF
+    "sim35_int_ivf_bigc_topk",      # r13: query-side IVF at 32 cells
     "dl2_delta_table_changes",      # r13: delta CDC (file-level)
     "dp22_importance_weights",      # r13: DSIR importance weighting
 ]

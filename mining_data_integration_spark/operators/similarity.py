@@ -292,60 +292,12 @@ def ivf_topk(emb: DataFrame, queries: DataFrame, k: int = 5,
         .filter(F.col("rk") <= k)
 
 
-def int_assign_centroid(df: DataFrame, cents: list[list[int]],
-                        vec_col: str) -> DataFrame:
-    """Argmin over k INTEGER centroids by exact int64 squared L2; ties
-    break to the lowest centroid index — array_min over (d2, i)
-    structs compares lexicographically, so the tie rule is explicit
-    and engine-portable (int8 range: diffs ≤ 254, dim 64 → d2 ≤ 4.2M,
-    far inside int64). The centroid set is ONE literal column
-    (_int_cells_lit) scored by the df engine's kernel, so building
-    the expression costs a constant number of py4j round trips
-    whatever k x dim is."""
-    return df.withColumn("_cid", F.array_min(_scored_cells_df(
-        F.col(vec_col), _int_cells_lit(cents)))["i"])
-
-
-def int_ivf_centroids(emb_q: DataFrame, n_centroids: int = 4,
-                      iters: int = 2, id_col: str = "vec_id",
-                      vec_col: str = "_qv") -> list[list[int]]:
-    """Integer Lloyd's k-means over int8-quantized vectors — the
-    oracle-checkable coarse quantizer (sim11). Every step is exact:
-    seeds are the k lowest-id vectors, assignment is int64 squared L2
-    with a lowest-cid tie rule, and the update is per-dimension
-    truncating division (sum div count — `div` and DuckDB `//` both
-    truncate toward zero). A cell that loses all members keeps its
-    previous centroid. This is what ivf_centroids (sim4) cannot give:
-    float averaging is aggregation-order-dependent, so sim4's raw
-    top-k is gated through bounds verdicts while sim11 hash-checks
-    its actual hit set."""
-    seed_rows = emb_q.orderBy(id_col).limit(n_centroids) \
-        .select(id_col, vec_col).collect()
-    seed_rows.sort(key=lambda r: r[0])
-    cents = [[int(x) for x in r[1]] for r in seed_rows]
-    for _ in range(iters):
-        assigned = int_assign_centroid(emb_q, cents, vec_col).select(
-            "_cid", F.posexplode(F.col(vec_col)).alias("pos", "val"))
-        rows = (
-            assigned.groupBy("_cid", "pos")
-            .agg(F.expr("sum(val) div count(*)").alias("m"))
-            .groupBy("_cid")
-            .agg(F.array_sort(
-                F.collect_list(F.struct("pos", "m"))).alias("a"))
-            .collect()
-        )
-        for r in rows:
-            cents[r._cid] = [int(x.m) for x in r.a]
-    return cents
-
-
 def _int_ivf_pairs(emb: DataFrame, queries: DataFrame,
                    n_centroids: int = 4, n_probe: int = 2,
                    iters: int = 2,
                    id_col: str = "vec_id", vec_col: str = "embedding",
                    q_id_col: str = "q_id",
-                   q_vec_col: str = "q_emb",
-                   quantizer: str = "auto") -> DataFrame:
+                   q_vec_col: str = "q_emb") -> DataFrame:
     """Shared candidate-scoring chain of the integer-IVF family
     (int_ivf_topk / int_ivf_range_search): int8-quantize the corpus,
     integer k-means for cells, each query probes its n_probe nearest
@@ -356,54 +308,33 @@ def _int_ivf_pairs(emb: DataFrame, queries: DataFrame,
     (q_id, vec_id, cos_sim_q8) — callers rank (top-k) or filter
     (range search).
 
-    `quantizer` as the NSW build (round 13): "df" runs training,
-    assignment and query probing with the centroids as broadcast
-    DATA (int_ivf_centroids_df / _scored_cells_df — plan size O(1)
-    in the cell count, training fully distributed), bit-identical to
-    the literal engine, so the same SQL replay checks both. The cell
-    counts a 100 TB IVF wants (~sqrt n, tens of thousands) only fit
-    the df engine."""
-    engine = _resolve_nsw_quantizer(quantizer, n_centroids)
-    # materialize one scan+quantize, reused by the train iterations
-    # AND the probe data side (round-13 optimization): beyond saving
-    # passes, the barrier keeps the interpreted quantize tree out of
-    # the probe join's pushed-down key filter, where Catalyst inlines
-    # it once PER CENTROID with no common-subexpression elimination —
-    # measured ~10x per-row blowup (see _nsw_quantize_and_train)
-    from .dedup import materialize
-
-    emb_q = materialize(emb.select(
-        F.col(id_col), int8_quantize(F.col(vec_col)).alias("_qv")))
-    # training is driver-eager (k-means collects / checkpoints) —
-    # attribute it so the bench can split train from the lazy probe
-    # side (VERDICT #5)
+    Training, the corpus cells and the query probes all run on
+    _cell_kernel, the centroids a value of the kernel and never a plan
+    literal, so the plan is O(1) in the cell count: the cell counts a
+    100 TB IVF wants (~sqrt n, tens of thousands) run the same code.
+    A NULL corpus vector is dropped (it has no cell); a NULL query
+    vector, or a NULL element or another length on either side,
+    raises ValueError naming its id."""
+    emb_q = _quantized(emb, id_col, vec_col)
+    # training is driver-eager (k-means collects) — attribute it so
+    # the bench can split train from the lazy probe side (VERDICT #5)
     with spans.span("train"):
-        if engine == "df":
-            cents = int_ivf_centroids_df(emb_q, n_centroids, iters,
-                                         id_col, "_qv")
-        else:
-            cents = int_ivf_centroids(emb_q, n_centroids, iters,
-                                      id_col, "_qv")
+        cells = _train_cells(emb_q, n_centroids, iters, id_col)
+    data = _assign_cells(emb_q, cells, keep=(id_col, "_qv"),
+                         id_col=id_col)
     qs = queries.select(
         F.col(q_id_col), int8_quantize(F.col(q_vec_col)).alias("_qq"))
-    (emb_c, qs_c), cc = _attach_cells(engine, cents, emb_q, qs)
-    data = (emb_c.withColumn("_cid", F.array_min(
-                _scored_cells_df(F.col("_qv"), cc))["i"])
-            .drop("_cents"))
-    q_probed = (
-        qs_c.withColumn("_p", F.explode(F.slice(F.array_sort(
-            _scored_cells_df(F.col("_qq"), cc)), 1, n_probe)))
-        .drop("_cents")
-        .select(F.col(q_id_col), F.col("_qq"),
-                F.col("_p.i").alias("_cid"))
-    )
+    q_probed = _assign_cells(
+        qs, cells, n_probe=n_probe, keep=(q_id_col, "_qq"),
+        id_col=q_id_col, vec_col="_qq").select(
+        F.col(q_id_col), F.col("_qq"), F.explode("_probe").alias("_cell"))
     data = data.withColumn(
         "_vnorm", F.sqrt(idot(F.col("_qv"), F.col("_qv"))
                          .cast("double")))
     q_probed = q_probed.withColumn(
         "_qnorm", F.sqrt(idot(F.col("_qq"), F.col("_qq"))
                          .cast("double")))
-    return data.join(F.broadcast(q_probed), "_cid").select(
+    return data.join(F.broadcast(q_probed), "_cell").select(
         F.col(q_id_col), F.col(id_col),
         (idot(F.col("_qq"), F.col("_qv")).cast("double")
          / (F.col("_qnorm") * F.col("_vnorm"))).alias("cos_sim_q8"),
@@ -414,16 +345,14 @@ def int_ivf_topk(emb: DataFrame, queries: DataFrame, k: int = 5,
                  n_centroids: int = 4, n_probe: int = 2, iters: int = 2,
                  id_col: str = "vec_id", vec_col: str = "embedding",
                  q_id_col: str = "q_id",
-                 q_vec_col: str = "q_emb",
-                 quantizer: str = "auto") -> DataFrame:
+                 q_vec_col: str = "q_emb") -> DataFrame:
     """IVF approximate top-k with the integer coarse quantizer — the
     hash-checked sibling of ivf_topk (sim4); the scoring chain is
     _int_ivf_pairs, then a per-query rank. Same scale shape as sim4:
     cell id is the partition/prune key, probes read n_probe/k of the
     corpus."""
     pairs = _int_ivf_pairs(emb, queries, n_centroids, n_probe, iters,
-                           id_col, vec_col, q_id_col, q_vec_col,
-                           quantizer)
+                           id_col, vec_col, q_id_col, q_vec_col)
     w = Window.partitionBy(q_id_col).orderBy(
         F.desc("cos_sim_q8"), F.col(id_col))
     return (
@@ -439,8 +368,7 @@ def int_ivf_range_search(emb: DataFrame, queries: DataFrame,
                          id_col: str = "vec_id",
                          vec_col: str = "embedding",
                          q_id_col: str = "q_id",
-                         q_vec_col: str = "q_emb",
-                         quantizer: str = "auto") -> DataFrame:
+                         q_vec_col: str = "q_emb") -> DataFrame:
     """IVF RANGE search (radius/threshold search) with the integer
     coarse quantizer — the ANN operation the top-k ladder lacked:
     return EVERY probed vector with cosine >= tau, not a fixed k
@@ -457,26 +385,26 @@ def int_ivf_range_search(emb: DataFrame, queries: DataFrame,
     result before any exchange, which is what makes radius search
     the right primitive when k would be set to "huge, then trim"."""
     pairs = _int_ivf_pairs(emb, queries, n_centroids, n_probe, iters,
-                           id_col, vec_col, q_id_col, q_vec_col,
-                           quantizer)
+                           id_col, vec_col, q_id_col, q_vec_col)
     return pairs.filter(F.col("cos_sim_q8") >= F.lit(float(tau)))
 
 
 # ---------------------------------------------------------------
-# Integer centroid sets: two engines, one scoring kernel
-# (_scored_cells_df). Rule: a centroid set is ONE column, never a
-# Column per element — every F.lit/cast call is a py4j round trip,
-# and per-element arrays cost ~15k of them to plan one IVF-PQ encode
-# at 4 cells + 4x4 codewords, dim 64 (~60k at 16 cells + 4x16).
-# * literal (quantizer="literal", IVF-PQ build/append, int-PQ): the
-#   Python-side list is one constant-folded literal parsed from SQL
-#   text in one JVM call (_int_cells_lit); plan text grows with c.
-# * df (round 13, "df"/"auto"): the set stays DATA — a one-row
-#   broadcast DataFrame of the same array<struct<i,cent>>, attached
-#   by a 1-row cross-join; plan size O(1) in c, training distributed.
-# Same exact int64 arithmetic and tie rule — BIT-IDENTICAL (pinned in
-# tests TestNswGraphAnn), so the SQL oracle replay is engine-agnostic.
+# Integer centroid sets: one exact numpy kernel (_cell_kernel) run
+# through mapInArrow. Every build step that scores vectors against
+# an integer centroid set is one call of it: the Lloyd sums of the
+# coarse cells and of the PQ codebooks, the nearest cell and the
+# n_probe nearest cells of the graph build and the int-IVF family,
+# and the IVF-PQ codes. The centroids ride the kernel's closure as a
+# value, never as a plan literal, so the plan is O(1) in the cell
+# count; the int64 distances, the lowest-cid tie rule and the
+# truncating update are the SQL replay's, so the replay checks every
+# build bit for bit.
 # ---------------------------------------------------------------
+
+_BAD_VECTOR = ("vector {!r}: NULL, a NULL element or a length other "
+               "than the centroids' {}; integer cells score complete "
+               "vectors only")
 
 
 def _int_cells_sql(cents: list[list[int]]) -> str:
@@ -488,117 +416,200 @@ def _int_cells_sql(cents: list[list[int]]) -> str:
         for i, c in enumerate(cents)) + ")"
 
 
-def _int_cells_lit(cents: list[list[int]]) -> Column:
-    """A Python-side integer centroid set as ONE literal Column of
-    _cents_column's element shape, parsed JVM-side from SQL text: one
-    py4j call whatever the set's size (Catalyst folds it to a single
-    Literal)."""
-    return F.expr(_int_cells_sql(cents))
-
-
 def _int_books_lit(codebooks: list[list[list[int]]]) -> Column:
-    """All m PQ codebooks as ONE literal Column: element s + 1 is
-    codebook s in _int_cells_lit's shape."""
+    """All m PQ codebooks as ONE literal Column, parsed JVM-side from
+    SQL text in one py4j call: element s + 1 is codebook s, an
+    array<struct<i, cent>> of its codewords (int_pq_topk's LUT)."""
     return F.expr("array(" + ", ".join(
         _int_cells_sql(cb) for cb in codebooks) + ")")
 
 
-def _attach_cells(engine: str, cents, *dfs: DataFrame
-                  ) -> tuple[list[DataFrame], Column]:
-    """Make a trained centroid set scoreable from each of `dfs`:
-    (frames, centroid column) for _scored_cells_df. The df engine
-    cross-joins ONE shared broadcast _cents_column row onto every
-    frame (callers drop "_cents" after scoring); the literal engine
-    leaves the frames alone and returns _int_cells_lit."""
-    if engine == "df":
-        one = F.broadcast(_cents_column(cents))
-        return [d.crossJoin(one) for d in dfs], F.col("_cents")
-    return list(dfs), _int_cells_lit(cents)
+def _cell_kernel(cells, books, n_probe: int, sums: bool, keep,
+                 id_col: str, vec_col: str, schema):
+    """The mapInArrow function of every integer centroid-set step.
+    Each row's `vec_col` is scored against the c `cells` by exact
+    int64 squared L2, |v|^2 - 2 v.c + |c|^2 (int8-range values keep
+    it far inside int64): `_cell` is the nearest cell (argmin, so the
+    lowest cid on ties) and `_probe` the n_probe nearest (a stable
+    argsort, the same ties). With `books`, m PQ codebooks over
+    consecutive slices of `sub` elements, slice s of the residual
+    (the vector minus its cell's centroid; the vector itself when
+    `cells` is None) is coded the same way as `_c{s}`; one book and
+    no cells is the coarse cells' own training. Without `sums` the
+    kernel yields the `keep` columns and those; with `sums` it yields
+    one Lloyd step's partial sums of the partition instead: a row
+    (s, cid, n, t) per codeword that won n > 0 members, t their
+    element-wise int64 sum. `schema` is the output StructType. A NULL
+    vector, a NULL element or another length raises ValueError naming
+    the row's `id_col`. Nested, so that Spark ships it by value: a
+    Python worker need not import this package."""
+    import numpy as np
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = to_arrow_schema(schema)
+
+    C = None if cells is None else np.asarray(cells, dtype=np.int64)
+    B = [np.asarray(b, dtype=np.int64) for b in books]
+    sub = B[0].shape[1] if B else 0
+    dim = C.shape[1] if C is not None else sub * len(B)
+    bad_vector = _BAD_VECTOR
+
+    def dists(X, Y):
+        return ((X * X).sum(axis=1)[:, None] - 2 * (X @ Y.T)
+                + (Y * Y).sum(axis=1)[None, :])
+
+    def matrix(batch):
+        import pyarrow.compute as pc
+
+        col = batch.column(vec_col)
+        bad = pc.list_value_length(col).fill_null(-1).to_numpy(
+            zero_copy_only=False) != dim
+        flat = pc.list_flatten(col)
+        if flat.null_count:
+            par = pc.list_parent_indices(col).to_numpy(zero_copy_only=False)
+            bad[par[flat.is_null().to_numpy(zero_copy_only=False)]] = True
+        if bad.any():
+            vid = batch.column(id_col)[int(np.flatnonzero(bad)[0])]
+            raise ValueError(bad_vector.format(vid.as_py(), dim))
+        return flat.to_numpy(zero_copy_only=False).astype(np.int64) \
+            .reshape(len(col), dim)
+
+    def kernel(batches):
+        import pyarrow as pa
+
+        acc = {}
+        for batch in batches:
+            V = matrix(batch)
+            out, won = [], []
+            if C is not None:
+                d = dists(V, C)
+                home = d.argmin(axis=1)
+                out.append(pa.array(home.astype(np.int32)))
+                if n_probe:
+                    p = np.argsort(d, axis=1, kind="stable")[:, :n_probe]
+                    out.append(pa.ListArray.from_arrays(
+                        pa.array(np.arange(0, p.size + 1, p.shape[1],
+                                           dtype=np.int32)),
+                        pa.array(p.ravel().astype(np.int32))))
+                if B:
+                    V = V - C[home]
+            for s, b in enumerate(B):
+                X = V[:, s * sub:(s + 1) * sub]
+                code = dists(X, b).argmin(axis=1)
+                out.append(pa.array(code.astype(np.int32)))
+                won.append((s, code, X, len(b)))
+            if not sums:
+                yield pa.RecordBatch.from_arrays(
+                    [batch.column(k) for k in keep] + out, schema=schema)
+                continue
+            for s, code, X, k in won:
+                n = np.bincount(code, minlength=k)
+                t = np.zeros((k, X.shape[1]), dtype=np.int64)
+                np.add.at(t, code, X)
+                if s in acc:
+                    acc[s][0] += n
+                    acc[s][1] += t
+                else:
+                    acc[s] = [n, t]
+        if sums:
+            rows = [(s, int(cid), int(n[cid]), t[cid].tolist())
+                    for s, (n, t) in sorted(acc.items())
+                    for cid in np.flatnonzero(n)]
+            yield pa.RecordBatch.from_pylist(
+                [dict(zip(schema.names, r)) for r in rows], schema=schema)
+
+    return kernel
 
 
-def _cents_column(cents_df: DataFrame) -> DataFrame:
-    """Fold the (cid, cent) centroid table into ONE row holding the
-    whole set as a cid-sorted array<struct<i,cent>> column. The
-    single-partition aggregate is bounded by the CELL count (rows =
-    c, never the corpus), and downstream it rides a 1-row broadcast
-    cross-join — the j10/scalar-enrichment plan shape."""
-    return cents_df.agg(F.array_sort(F.collect_list(
-        F.struct(F.col("cid").cast("int").alias("i"),
-                 F.col("cent").alias("cent")))).alias("_cents"))
+def _assign_cells(df: DataFrame, cells, books=(), n_probe: int = 0,
+                  keep: tuple = (), id_col: str = "vec_id",
+                  vec_col: str = "_qv") -> DataFrame:
+    """df's `keep` columns plus the kernel's assignments: `_cell` (int,
+    nearest cell) when `cells` is given, `_probe` (array<int>, the
+    n_probe nearest cells) when n_probe > 0, and `_c0.._c{m-1}` (int,
+    the PQ codes of the residual) for the m `books`."""
+    from pyspark.sql import types as T
+
+    i32 = T.IntegerType()
+    fields = [df.schema[k] for k in keep]
+    if cells is not None:
+        fields.append(T.StructField("_cell", i32))
+        if n_probe:
+            fields.append(T.StructField("_probe", T.ArrayType(i32)))
+    fields += [T.StructField(f"_c{s}", i32) for s in range(len(books))]
+    schema = T.StructType(fields)
+    return df.mapInArrow(_cell_kernel(cells, books, n_probe, False, keep,
+                                      id_col, vec_col, schema), schema)
 
 
-def _scored_cells_df(vec: Column, cents_col: Column) -> Column:
-    """array<struct<d,i>> of exact int64 squared L2 distances from
-    `vec` to every centroid in `cents_col` (the broadcast
-    _cents_column or an _int_cells_lit literal) — the one scoring
-    kernel of both engines: F.array_min = assignment (lexicographic
-    struct min == lowest-d2 with lowest-cid ties), sorted slice = the
-    n_probe nearest cells."""
-    return F.transform(cents_col, lambda c: F.struct(
-        F.aggregate(F.zip_with(vec, c["cent"],
-                               lambda a, b: (a - b) * (a - b)),
-                    F.lit(0).cast("bigint"),
-                    lambda acc, x: acc + x).alias("d"),
-        c["i"].alias("i")))
+def _seed_rows(df: DataFrame, n: int, id_col: str,
+               vec_col: str = "_qv") -> list[list[int]]:
+    """The n lowest-id vectors of df, in id order: one bounded
+    orderBy + limit collect (the SQL replay's seeds). A seed the
+    kernel would refuse raises its ValueError here."""
+    rows = df.orderBy(id_col).limit(n).select(id_col, vec_col).collect()
+    dim = len(rows[0][1]) if rows and rows[0][1] is not None else 0
+    for vid, v in rows:
+        if v is None or len(v) != dim or any(x is None for x in v):
+            raise ValueError(_BAD_VECTOR.format(vid, dim))
+    return [[int(x) for x in v] for _, v in rows]
 
 
-def int_assign_centroid_df(df: DataFrame, cents_df: DataFrame,
-                           vec_col: str) -> DataFrame:
-    """int_assign_centroid with the centroids as broadcast DATA
-    instead of codegen literals: same exact-int argmin, same
-    lowest-cid tie rule, plan size independent of the cell count.
-    No extra shuffle — the 1-row cross-join is map-side."""
-    return (df.crossJoin(F.broadcast(_cents_column(cents_df)))
-            .withColumn("_cid", F.array_min(
-                _scored_cells_df(F.col(vec_col), F.col("_cents")))["i"])
-            .drop("_cents"))
+def _lloyd(df: DataFrame, books: list, iters: int, id_col: str,
+           cells=None, vec_col: str = "_qv") -> list:
+    """`iters` integer Lloyd steps of the m centroid sets `books`,
+    seeded as given, over consecutive slices of df's `vec_col` rows
+    (their residuals against `cells` when given): PQ codebooks, or
+    with m = 1 and no cells the coarse cells themselves. One Spark
+    job per step: the kernel's per-partition sums, reduced per
+    (s, cid) in Spark, and a collect of those m x kc rows; the update
+    is sum div count, truncating toward zero like Spark's `div` and
+    DuckDB's `//` (numpy's // floors), and a centroid that lost all
+    its members keeps its value. Every row counts, rows that share an
+    id included."""
+    from pyspark.sql import types as T
 
-
-def int_ivf_centroids_df(emb_q: DataFrame, n_centroids: int,
-                         iters: int = 2, id_col: str = "vec_id",
-                         vec_col: str = "_qv") -> DataFrame:
-    """Distributed integer Lloyd's k-means — bit-identical to
-    int_ivf_centroids (same seeds, assignment, truncating-div update,
-    empty-cell keep) but the centroids are a (cid, cent) DataFrame
-    end to end: seeds come from a bounded rank over the n_centroids
-    lowest-id vectors (the SQL replay's row_number()-1 numbering —
-    the global window's input is already LIMITed to c rows), each
-    update is one groupBy over (cid, pos), and no centroid ever
-    lands driver-side as an expression literal. localCheckpoint per
-    iteration cuts the lineage (c rows — cheap) exactly where the
-    literal path pays its per-iteration collect."""
-    seeds = emb_q.orderBy(id_col).limit(n_centroids) \
-        .select(id_col, vec_col)
-    w = Window.orderBy(id_col)  # bounded: only n_centroids rows rank
-    # lazy checkpoints (round-14): the per-iteration checkpoint still
-    # bounds the plan at O(c) rows per block, but eager=True paid one
-    # driver action PER ITERATION (seeds + each Lloyd step) before
-    # the train's consumer ran — the first real action (the cell
-    # collect / codes build / probe) now materializes the whole
-    # bounded-depth chain in ONE job. iters is 2 everywhere in the
-    # registry, so the fused plan depth stays trivially small; the
-    # emb_q side is the caller's materialized (cached) corpus either
-    # way. Bit-identical: same logical plan, later materialization.
-    cents = seeds.select(
-        (F.row_number().over(w) - 1).alias("cid"),
-        F.col(vec_col).alias("cent")).localCheckpoint(eager=False)
+    books = [[list(c) for c in b] for b in books]
+    zero = F.array_repeat(F.lit(0).cast("bigint"), len(books[0][0]))
+    schema = T.StructType([T.StructField("s", T.IntegerType()),
+                           T.StructField("cid", T.IntegerType()),
+                           T.StructField("n", T.LongType()),
+                           T.StructField("t", T.ArrayType(T.LongType()))])
     for _ in range(iters):
-        means = (
-            int_assign_centroid_df(emb_q, cents, vec_col)
-            .select("_cid",
-                    F.posexplode(F.col(vec_col)).alias("pos", "val"))
-            .groupBy("_cid", "pos")
-            .agg(F.expr("sum(val) div count(*)").alias("m"))
-            .groupBy("_cid")
-            .agg(F.array_sort(
-                F.collect_list(F.struct("pos", "m"))).alias("a"))
-            .select(F.col("_cid").alias("cid"),
-                    F.transform("a", lambda s: s["m"]).alias("new"))
-        )
-        cents = (cents.join(means, "cid", "left")
-                 .select("cid", F.coalesce("new", "cent").alias("cent"))
-                 .localCheckpoint(eager=False))
-    return cents
+        rows = (df.mapInArrow(_cell_kernel(cells, books, 0, True, (),
+                                           id_col, vec_col, schema),
+                              schema)
+                .groupBy("s", "cid")
+                .agg(F.sum("n").alias("n"), F.aggregate(
+                    F.collect_list("t"), zero,
+                    lambda a, t: F.zip_with(a, t, lambda x, y: x + y))
+                    .alias("t"))
+                .collect())
+        for r in rows:
+            books[r.s][r.cid] = [x // r.n if x >= 0 else -(-x // r.n)
+                                 for x in r.t]
+    return books
+
+
+def _train_cells(emb_q: DataFrame, c: int, iters: int,
+                 id_col: str) -> list[list[int]]:
+    """Integer Lloyd's k-means over the `_qv` vectors, the coarse
+    quantizer of the int-IVF family and the graph build (sim11):
+    seeds are the c lowest-id vectors, then `iters` _lloyd steps."""
+    return _lloyd(emb_q, [_seed_rows(emb_q, c, id_col)], iters, id_col)[0]
+
+
+def _quantized(emb: DataFrame, id_col: str, vec_col: str,
+               cache: bool = True) -> DataFrame:
+    """(id, _qv) with `_qv` the int8_quantize'd vector, NULL vectors
+    dropped (int8_quantize maps NULL to NULL), so no build trains on
+    one, assigns it a cell or indexes it. With `cache` the builds'
+    several passes (seeds, each Lloyd step, the assignment) read one
+    cached quantization, filled by the first. The cache sits below
+    the filter: it is the plan nsw_beam_search quantizes its corpus
+    with, so a search over the same corpus reads it too."""
+    q = emb.select(F.col(id_col), int8_quantize(F.col(vec_col)).alias("_qv"))
+    return (q.cache() if cache else q).filter(F.col("_qv").isNotNull())
 
 
 NSW_TARGET_OCCUPANCY = 256
@@ -619,93 +630,44 @@ def derive_nsw_centroids(n: int,
     tests/test_operators TestNswGraphAnn and
     tools/check_index_scale.py).
 
-    The cap exists because the LITERAL quantizer engine keeps
-    centroids in Python and puts all c x dim values into the plan
-    as one literal (int_assign_centroid / _int_cells_lit) — fine to a
-    few hundred cells, wrong shape beyond: the plan text and the
-    per-iteration k-means collects grow with c. (Its measured cost used
-    to be one py4j round trip per centroid element while building
-    that literal; one JVM call per set now.) Round 13 LIFTS the cap
-    with the DataFrame engine
-    (quantizer="df": int_ivf_centroids_df / int_assign_centroid_df —
-    centroids as a one-row broadcast array column, plan size O(1) in
-    c), so past cap x target_occupancy vectors (~131k at defaults)
-    the build auto-switches engines instead of letting occupancy
-    grow (quantizer="auto" in nsw_adjacency/save_nsw_index); pass
-    cap=None to get the uncapped derivation the df engine uses.
-    Documented in SCALE.md (graph-ANN section)."""
+    The cap is a ceiling for callers that want one; the builds
+    derive with cap=None. It dates from a quantizer that put all
+    c x dim centroid values into the plan as literals, which was the
+    wrong shape past a few hundred cells. _cell_kernel takes the
+    centroids as a value of the kernel, so the plan is O(1) in c and
+    occupancy stays at target at any corpus size. Documented in
+    SCALE.md (graph-ANN section)."""
     import math
 
     c = max(floor, math.ceil(n / max(1, target_occupancy)))
     return c if cap is None else min(cap, c)
 
 
-def _resolve_nsw_quantizer(quantizer: str, c: int) -> str:
-    """'auto' resolves to the DataFrame engine at EVERY cell count
-    (round-13 optimization): measured 2x end-to-end on the sf0.1
-    int-IVF path even at c=4 (train 6.4 s literal vs 2.6 s df; full
-    range search 11.3 s vs 5.6 s), taken while the literal engine
-    still built its centroid arrays one py4j round trip per element
-    (one JVM call per set now, _int_cells_lit). The df engine keeps
-    the plan O(1) in c and trains without a collect per Lloyd
-    step. The engines are bit-identical (TestNswGraphAnn pin), so
-    'auto' is an execution choice only. Explicit 'literal' remains
-    for pins and benchmarks."""
-    if quantizer == "auto":
-        return "df"
-    if quantizer not in ("literal", "df"):
-        raise ValueError(f"unknown quantizer engine {quantizer!r} "
-                         "(expected 'auto', 'literal' or 'df')")
-    return quantizer
-
-
 def _nsw_quantize_and_train(emb: DataFrame, n_centroids: int | None,
-                            n_probe: int, iters: int, id_col: str,
-                            vec_col: str, target_occupancy: int,
-                            quantizer: str = "auto"):
-    """Shared front half of the graph build: quantize, derive the
-    cell count when the caller didn't pin one (one bounded count()
-    aggregate — a second corpus pass, paid once per offline build;
-    UNCAPPED — the engine switch below is what keeps big c viable),
-    resolve the quantizer engine, train. Returns
-    (emb_q, cents, c, engine) where cents is a Python list under the
-    literal engine and a (cid, cent) DataFrame under the df engine —
-    both trainings are bit-identical (TestNswGraphAnn pin)."""
-    # materialize the quantized corpus ONCE (round-13 optimization,
-    # guide §5 caching rule): the build re-reads it 3-5x (optional
-    # count, seeds, one assignment per Lloyd iteration, then the
-    # pair scoring) — without this every pass re-scans the source
-    # and re-evaluates the quantize transform, and — the bigger
-    # cost, measured when the pairs were a join — a pushed-down key
-    # filter inlined the interpreted quantize tree once per centroid
-    # with no common-subexpression elimination (~10x per-row blowup:
-    # 0.24 s standalone vs 2.5-3 s inside the join at sf0.1). Cached
-    # int8-range values are a quarter of the fp32 source — the
-    # footprint DiskANN-style builds materialize anyway.
-    from .dedup import materialize
-
-    emb_q = materialize(emb.select(
-        F.col(id_col), int8_quantize(F.col(vec_col)).alias("_qv")))
+                            iters: int, id_col: str, vec_col: str,
+                            target_occupancy: int):
+    """Shared front half of the graph build: quantize (NULL vectors
+    dropped), derive the cell count when the caller didn't pin one
+    (one bounded count() aggregate, uncapped), train the integer
+    cells (_train_cells). Returns (emb_q, cells, c)."""
+    # cached int8-range values are a quarter of the fp32 source — the
+    # footprint DiskANN-style builds materialize anyway
+    emb_q = _quantized(emb, id_col, vec_col)
     c = n_centroids
     if c is None:
         c = derive_nsw_centroids(emb_q.count(), target_occupancy,
                                  cap=None)
-    engine = _resolve_nsw_quantizer(quantizer, c)
     with spans.span("train"):
-        if engine == "df":
-            cents = int_ivf_centroids_df(emb_q, c, iters, id_col,
-                                         "_qv")
-        else:
-            cents = int_ivf_centroids(emb_q, c, iters, id_col, "_qv")
-    return emb_q, cents, c, engine
+        cells = _train_cells(emb_q, c, iters, id_col)
+    return emb_q, cells, c
 
 
 def nsw_candidate_pairs(emb: DataFrame, n_centroids: int | None = None,
                         n_probe: int = 2, iters: int = 2,
                         id_col: str = "vec_id",
                         vec_col: str = "embedding",
-                        target_occupancy: int = NSW_TARGET_OCCUPANCY,
-                        quantizer: str = "auto") -> DataFrame:
+                        target_occupancy: int = NSW_TARGET_OCCUPANCY
+                        ) -> DataFrame:
     """Scored candidate pairs (src, dst, cos_sim_q8) of the k-NN graph
     build — every pair nsw_adjacency ranks, exposed so the scale
     harness can count the pair work directly (nsw_build_stats is the
@@ -714,8 +676,12 @@ def nsw_candidate_pairs(emb: DataFrame, n_centroids: int | None = None,
     assigned to integer-k-means cells once (the sim11 coarse
     quantizer — engine-exact, so the whole build is hash-checkable),
     and each vector pairs only with the vectors of its n_probe
-    nearest cells. The pairs are scored by ONE numpy kernel
-    (_nsw_pair_kernel) per (cell, salt) group of a
+    nearest cells. Training and both cell assignments (the home cell
+    and the n_probe nearest) run on _cell_kernel, the centroids a
+    value of the kernel, so the plan is O(1) in the cell count — the
+    100 TB build, where the derived c runs to thousands. The pairs
+    are scored by ONE numpy kernel (_nsw_pair_kernel) per (cell,
+    salt) group of a
     `groupBy(...).applyInArrow`: exact int64 dots, then the same
     double sqrt and divide as Spark's expression, so the scores are
     bit-identical to the SQL oracle's. The src side is SALTED 32 ways
@@ -730,20 +696,11 @@ def nsw_candidate_pairs(emb: DataFrame, n_centroids: int | None = None,
     ~linear in n); explicit values remain for the oracle-deterministic
     registry entries, whose SQL replay fixes the cell count.
 
-    `quantizer` picks the engine: "literal" inlines the centroid set
-    as one plan literal (fine to a few hundred cells), "df" keeps
-    them as a one-row broadcast array column (plan size O(1) in the
-    cell count — the 100 TB build, where the derived c runs to
-    thousands), "auto" resolves to "df" (_resolve_nsw_quantizer).
-    The two engines produce BIT-IDENTICAL pairs (same exact-int
-    arithmetic, same tie rules — pinned), so the oracle replay never
-    cares which ran.
-
-    A NULL id gets no pairs. A NULL quantized vector (or one with a
-    NULL element) still gets a cell — its NULL distances sort first,
-    so cell 0 — and scores NULL against every vector it meets, as the
-    SQL expression does. A pair whose vector is all zeros has no
-    cosine: under ANSI mode (the session default) the kernel raises
+    A NULL id gets no pairs, and a NULL vector is dropped before
+    training: it gets no pairs and is nobody's candidate. A vector
+    with a NULL element or another length raises ValueError naming
+    its id (the probe heads' rule). A pair whose vector is all zeros
+    has no cosine: under ANSI mode (the session default) the kernel raises
     ValueError naming both ids (Spark reports it as a
     PythonException; the SQL expression raised DIVIDE_BY_ZERO); with
     ANSI off it scores NULL. The kernel scores every pair it emits, so
@@ -751,15 +708,15 @@ def nsw_candidate_pairs(emb: DataFrame, n_centroids: int | None = None,
     pair (Spark pruned the unused expression from a count of the
     join)."""
     return _nsw_pairs_df(emb, n_centroids, n_probe, iters, id_col,
-                         vec_col, target_occupancy, quantizer, None)
+                         vec_col, target_occupancy, None)
 
 
 def nsw_adjacency(emb: DataFrame, k_nbrs: int = 6,
                   n_centroids: int | None = None, n_probe: int = 2,
                   iters: int = 2, id_col: str = "vec_id",
                   vec_col: str = "embedding",
-                  target_occupancy: int = NSW_TARGET_OCCUPANCY,
-                  quantizer: str = "auto") -> DataFrame:
+                  target_occupancy: int = NSW_TARGET_OCCUPANCY
+                  ) -> DataFrame:
     """k-NN GRAPH build for graph-based ANN (sim28) — the offline half
     of an NSW/DiskANN-style index: every vector's k_nbrs most-similar
     neighbors as an edge list (src, dst, cos_sim_q8, nrk). Candidates
@@ -775,10 +732,11 @@ def nsw_adjacency(emb: DataFrame, k_nbrs: int = 6,
     is one shuffle on (cell, salt) with fan-out bounded by cell
     occupancy x n_probe, then one shuffle for the per-src rank;
     production DiskANN builds refine exactly such a bucketed candidate
-    graph rather than exact k-NN. `quantizer` as nsw_candidate_pairs
-    (identical output from either engine)."""
+    graph rather than exact k-NN. Training and the cell assignments
+    run on _cell_kernel, and NULL or invalid vectors are handled, as
+    in nsw_candidate_pairs."""
     pairs = _nsw_pairs_df(emb, n_centroids, n_probe, iters, id_col,
-                          vec_col, target_occupancy, quantizer, k_nbrs)
+                          vec_col, target_occupancy, k_nbrs)
     w = Window.partitionBy("src").orderBy(
         F.desc("cos_sim_q8"), F.col("dst"))
     return (
@@ -795,23 +753,19 @@ O(block x cell occupancy), whatever the occupancy."""
 
 def _nsw_pairs_df(emb: DataFrame, n_centroids: int | None, n_probe: int,
                   iters: int, id_col: str, vec_col: str,
-                  target_occupancy: int, quantizer: str,
+                  target_occupancy: int,
                   k_nbrs: int | None) -> DataFrame:
     """(src, dst, cos_sim_q8) of the graph build: every candidate pair
     (k_nbrs None) or each src's top k_nbrs per (cell, salt) group."""
     from pyspark.sql import types as T
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    emb_q, cents, _c, engine = _nsw_quantize_and_train(
-        emb, n_centroids, n_probe, iters, id_col, vec_col,
-        target_occupancy, quantizer)
-    (base,), cc = _attach_cells(engine, cents, emb_q)
-    scored = _scored_cells_df(F.col("_qv"), cc)
+    emb_q, cells, _c = _nsw_quantize_and_train(
+        emb, n_centroids, iters, id_col, vec_col, target_occupancy)
     # a NULL id pairs with nothing (src != dst is NULL)
-    cells = base.filter(F.col(id_col).isNotNull()).select(
-        F.col(id_col).alias("_id"), "_qv",
-        F.array_min(scored)["i"].alias("_home"),
-        F.slice(F.array_sort(scored), 1, n_probe)["i"].alias("_probe"))
+    cells = _assign_cells(
+        emb_q.filter(F.col(id_col).isNotNull()), cells, n_probe=n_probe,
+        keep=(id_col, "_qv"), id_col=id_col).withColumnRenamed(id_col, "_id")
     # ONE explode gives every vector its roles: src in each probed cell
     # and data in its home cell. SALT the src side: _cid alone has only
     # n_centroids distinct values, so grouping by the cell alone bounds
@@ -820,7 +774,7 @@ def _nsw_pairs_df(emb: DataFrame, n_centroids: int | None, n_probe: int,
     # the src id splits every cell's src rows across the buckets; the
     # data side pays the standard |corpus| x buckets replication,
     # dwarfed by the pair fan-out it parallelizes. The cells are
-    # scored in the projection below the explode, once per vector.
+    # assigned by the kernel below the explode, once per vector.
     buckets = 32
     salt = F.pmod(F.xxhash64(F.col("_id")), F.lit(buckets))
     roles = F.concat(
@@ -831,7 +785,7 @@ def _nsw_pairs_df(emb: DataFrame, n_centroids: int | None, n_probe: int,
                                F.lit(buckets - 1).cast("long")),
                     lambda b: F.struct(
                         F.lit(False).alias("_is_src"),
-                        F.col("_home").alias("_cid"), b.alias("_salt"))))
+                        F.col("_cell").alias("_cid"), b.alias("_salt"))))
     rows = cells.select("_id", "_qv", F.explode(roles).alias("_r")) \
         .select("_r.*", "_id", "_qv")
     id_type = emb_q.schema[id_col].dataType
@@ -850,44 +804,25 @@ def _nsw_pair_kernel(k: int | None, ansi: bool, schema):
     against every data row, src == dst excluded, exactly as Spark's
     `double(idot(s, d)) / (sqrt(double(idot(s, s))) *
     sqrt(double(idot(d, d))))` — int64 dots, then IEEE double
-    conversion, sqrt, multiply and divide in that order. A pair with
-    an invalid vector (NULL, a NULL element, another length) scores
-    NULL, as Spark's zip_with/aggregate does; a zero divisor raises
-    ValueError under ANSI and scores NULL otherwise, as Spark's
-    divide. With k, each src row keeps its top k by (cos_sim_q8 desc
-    NULLS LAST, dst); without, every pair. Src rows go in blocks of
-    _NSW_BLOCK_ROWS. The functions are nested so that Spark ships
-    them by value: a Python worker need not import this package."""
+    conversion, sqrt, multiply and divide in that order. Every vector
+    here passed _cell_kernel's check (non-NULL elements, the
+    centroids' length). A zero divisor raises ValueError under ANSI
+    and scores NULL otherwise, as Spark's divide. With k, each src
+    row keeps its top k by (cos_sim_q8 desc NULLS LAST, dst);
+    without, every pair. Src rows go in blocks of _NSW_BLOCK_ROWS.
+    The functions are nested so that Spark ships them by value: a
+    Python worker need not import this package."""
     block = _NSW_BLOCK_ROWS
-
-    def int_rows(col) -> dict:
-        # {length: (row indices, int64 matrix)} over the valid rows
-        import numpy as np
-        import pyarrow.compute as pc
-
-        arr = col.combine_chunks()
-        lens = pc.list_value_length(arr).fill_null(0).to_numpy(
-            zero_copy_only=False).astype(np.int64)
-        flat = pc.list_flatten(arr)
-        valid = arr.is_valid().to_numpy(zero_copy_only=False).copy()
-        if flat.null_count:
-            par = pc.list_parent_indices(arr).to_numpy(zero_copy_only=False)
-            valid[par[flat.is_null().to_numpy(zero_copy_only=False)]] = \
-                False
-        vals = flat.fill_null(0).to_numpy(zero_copy_only=False) \
-            .astype(np.int64)
-        starts = np.zeros(len(arr), dtype=np.int64)
-        np.cumsum(lens[:-1], out=starts[1:])
-        mats = {}
-        for n in np.unique(lens[valid]).tolist():
-            rows = np.flatnonzero(valid & (lens == n))
-            mats[n] = (rows, vals[starts[rows, None] + np.arange(n)])
-        return mats
 
     def kernel(table):
         import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
+
+        def matrix(t):
+            col = t.column("_qv").combine_chunks()
+            return pc.list_flatten(col).to_numpy(zero_copy_only=False) \
+                .astype(np.int64).reshape(len(col), -1)
 
         is_src = table.column("_is_src")
         src = table.filter(is_src)
@@ -901,39 +836,26 @@ def _nsw_pair_kernel(k: int | None, ansi: bool, schema):
         d_ids = data.column("_id").combine_chunks()
         s_idn = s_ids.to_numpy(zero_copy_only=False)
         d_idn = d_ids.to_numpy(zero_copy_only=False)
-        s_mats = int_rows(src.column("_qv"))
-        d_mats = int_rows(data.column("_qv"))
-        d_norms = {n: np.sqrt((dm * dm).sum(axis=1).astype(np.float64))
-                   for n, (_, dm) in d_mats.items()}
+        sv, dv = matrix(src), matrix(data)
+        s_norms = np.sqrt((sv * sv).sum(axis=1).astype(np.float64))
+        d_norms = np.sqrt((dv * dv).sum(axis=1).astype(np.float64))
         out_s, out_d, out_c = [], [], []
         for lo in range(0, src.num_rows, block):
             hi = min(lo + block, src.num_rows)
+            dots = (sv[lo:hi] @ dv.T).astype(np.float64)
+            den = s_norms[lo:hi, None] * d_norms[None, :]
+            same = s_idn[lo:hi][:, None] == d_idn[None, :]
+            zero = (den == 0) & ~same
+            if ansi and zero.any():
+                i, j = (int(x[0]) for x in np.nonzero(zero))
+                raise ValueError(
+                    "nsw graph build: zero-norm vector in the scored "
+                    f"pair src={s_idn[lo + i]!r}, dst={d_idn[j]!r}; "
+                    "cosine is undefined (the int8 vector is all zeros)")
             # rank key: -score in [-1, 1] (a cosine), 2 = NULL (ranks
             # last), 3 = no pair (src == dst)
-            key = np.full((hi - lo, data.num_rows), 2.0)
-            for n, (rows, sm) in s_mats.items():
-                sel = (rows >= lo) & (rows < hi)
-                if n not in d_mats or not sel.any():
-                    continue
-                rows, sm = rows[sel], sm[sel]
-                cols, dm = d_mats[n]
-                dots = (sm @ dm.T).astype(np.float64)
-                den = (np.sqrt((sm * sm).sum(axis=1).astype(np.float64))
-                       [:, None] * d_norms[n][None, :])
-                zero = den == 0
-                if zero.any():
-                    zero &= s_idn[rows][:, None] != d_idn[cols][None, :]
-                    if ansi and zero.any():
-                        i, j = (int(x[0]) for x in np.nonzero(zero))
-                        raise ValueError(
-                            "nsw graph build: zero-norm vector in the "
-                            f"scored pair src={s_idn[rows[i]]!r}, "
-                            f"dst={d_idn[cols[j]]!r}; cosine is "
-                            "undefined (the int8 vector is all zeros)")
-                    den = np.where(zero, 1.0, den)
-                key[np.ix_(rows - lo, cols)] = np.where(
-                    zero, 2.0, -(dots / den))
-            key[s_idn[lo:hi][:, None] == d_idn[None, :]] = 3.0
+            key = np.where(zero, 2.0, -(dots / np.where(zero, 1.0, den)))
+            key[same] = 3.0
             if k is None:
                 r, c = np.nonzero(key < 3.0)
             else:
@@ -957,39 +879,31 @@ def _nsw_pair_kernel(k: int | None, ansi: bool, schema):
 def nsw_build_stats(emb: DataFrame, n_centroids: int | None = None,
                     n_probe: int = 2, iters: int = 2,
                     id_col: str = "vec_id", vec_col: str = "embedding",
-                    target_occupancy: int = NSW_TARGET_OCCUPANCY,
-                    quantizer: str = "auto") -> dict:
+                    target_occupancy: int = NSW_TARGET_OCCUPANCY) -> dict:
     """ANALYTIC cost model of the graph build, computed WITHOUT
     scoring the pairs: candidate pairs = sum over cells of
     (probe assignments into the cell) x (cell occupancy), minus the
-    self-pairs (a vector probing its own cell meets itself once).
-    All collects are O(n_centroids) rows. This is the pre-flight
+    self-pairs (a vector probing its own cell meets itself once —
+    its nearest cell is the first of its n_probe). Training and the
+    cell assignments run on _cell_kernel, and after training ONE
+    aggregate collects O(n_centroids) rows. This is the pre-flight
     "how big is this build" answer an operator wants before spending
     cluster hours, and the instrument the linearity pin uses
     (equality with nsw_candidate_pairs' count() is itself pinned at
     small n in tests)."""
-    emb_q, cents, c, engine = _nsw_quantize_and_train(
-        emb, n_centroids, n_probe, iters, id_col, vec_col,
-        target_occupancy, quantizer)
-    (base,), cc = _attach_cells(engine, cents, emb_q)
-    scored = _scored_cells_df(F.col("_qv"), cc)
-    data = base.withColumn("_cid", F.array_min(scored)["i"])
-    probed = data.withColumn(
-        "_pid", F.explode(F.slice(F.array_sort(scored), 1,
-                                  n_probe)["i"])).drop("_cents")
-    data = data.drop("_cents")
-    occ = {r["_cid"]: r["n"] for r in
-           data.groupBy("_cid").agg(F.count("*").alias("n")).collect()}
-    probes_per_cell = {r["_pid"]: r["n"] for r in
-                       probed.groupBy("_pid")
-                       .agg(F.count("*").alias("n")).collect()}
-    self_hits = probed.filter(F.col("_pid") == F.col("_cid")).count()
-    pair_count = sum(n_p * occ.get(cid, 0)
-                     for cid, n_p in probes_per_cell.items()) - self_hits
-    n = sum(occ.values())
+    emb_q, cells, c = _nsw_quantize_and_train(
+        emb, n_centroids, iters, id_col, vec_col, target_occupancy)
+    rows = (_assign_cells(emb_q, cells, n_probe=n_probe, id_col=id_col)
+            .select(F.posexplode("_probe").alias("pos", "cid"))
+            .groupBy("cid")
+            .agg(F.count("*").alias("probes"),
+                 F.count(F.when(F.col("pos") == 0, 1)).alias("occ"))
+            .collect())
+    n = sum(r["occ"] for r in rows)
+    pair_count = sum(r["probes"] * r["occ"] for r in rows) - n
     return {"n": n, "n_centroids": c, "n_probe": n_probe,
             "pair_count": int(pair_count),
-            "max_occupancy": max(occ.values(), default=0),
+            "max_occupancy": max((r["occ"] for r in rows), default=0),
             "mean_pairs_per_vector": pair_count / n if n else 0.0}
 
 
@@ -1001,8 +915,7 @@ def save_nsw_index(emb: DataFrame, path: str, k_nbrs: int = 6,
                    n_centroids: int | None = None, n_probe: int = 2,
                    iters: int = 2, id_col: str = "vec_id",
                    vec_col: str = "embedding",
-                   target_occupancy: int = NSW_TARGET_OCCUPANCY,
-                   quantizer: str = "auto") -> None:
+                   target_occupancy: int = NSW_TARGET_OCCUPANCY) -> None:
     """Persist the k-NN graph ONCE (build once / probe many — the
     sim19 lifecycle move applied to the graph-ANN family): the
     nsw_adjacency edge list lands as parquet under `path`
@@ -1011,7 +924,9 @@ def save_nsw_index(emb: DataFrame, path: str, k_nbrs: int = 6,
     half-built graph; racing builders are harmless because the build
     is fully deterministic). No-op if `path` is complete.
 
-    Build cost: the pairs are scored by nsw_adjacency's numpy kernel,
+    Build cost: training and the cell assignments run on
+    _cell_kernel (one Spark job per Lloyd step after one bounded seed
+    collect), and the pairs are scored by nsw_adjacency's numpy kernel,
     one call per (cell, salt) group — the src side salted 32 ways
     from its id and the cell's data side replicated per salt, so a
     group holds about 1/32 of a cell's src rows against the whole
@@ -1035,17 +950,12 @@ def save_nsw_index(emb: DataFrame, path: str, k_nbrs: int = 6,
     if os.path.exists(os.path.join(path, "meta")):
         return
     if n_centroids is None:
-        # uncapped derivation — the auto engine switch (not a cap on
-        # the cell count) is what bounds the literal-plan risk, so
-        # occupancy stays at target at ANY corpus size
+        # uncapped derivation: the kernel's plan is O(1) in the cell
+        # count, so occupancy stays at target at ANY corpus size
         n_centroids = derive_nsw_centroids(emb.count(),
                                            target_occupancy, cap=None)
-    # quantizer is an EXECUTION choice, not a semantic parameter: the
-    # engines are bit-identical, so it is deliberately NOT part of the
-    # meta/fingerprint — an artifact built by either engine is THE
-    # graph for these (k_nbrs, n_centroids, n_probe, iters)
     adj = nsw_adjacency(emb, k_nbrs, n_centroids, n_probe, iters,
-                        id_col, vec_col, quantizer=quantizer)
+                        id_col, vec_col)
     tmp = f"{path.rstrip('/')}.build-{uuid.uuid4().hex[:12]}"
     adj.write.mode("overwrite").parquet(f"{tmp}/adj")
     _driver_write_parquet(
@@ -2289,30 +2199,28 @@ def int_pq_topk(emb: DataFrame, queries: DataFrame, k: int = 5,
     """Integer product quantization with ADC — the hash-checked
     sibling of pq_topk (sim9), built the way sim11 fixed sim4: the
     per-subspace codebooks come from integer Lloyd's k-means
-    (int_ivf_centroids on the sliced sub-vectors: exact int64 L2,
+    (int_pq_codebooks on the sliced sub-vectors: exact int64 L2,
     lowest-id seeds/ties, truncating-div updates), codes are exact-int
-    argmins, and the ADC score is a pure INTEGER dot — each query
-    precomputes dot(query_sub, codeword) per subspace (the lookup
+    argmins (_cell_kernel), and the ADC score is a pure INTEGER dot —
+    each query precomputes dot(query_sub, codeword) per subspace (the lookup
     table), and a candidate's score is the sum of m table lookups by
     its stored codes. No float exists anywhere in the operator, so
     the whole approximate index is value-hash checkable.
 
-    Scale shape: codebook training runs on m small sliced columns
-    (k x m x iters bounded driver rows, the sim11 pattern); encoding
-    is map-side codegen; queries broadcast; the scan reads m one-byte
+    Scale shape: codebook training collects m x kc bounded rows per
+    Lloyd step (the sim11 pattern); encoding is one map-side kernel
+    pass; queries broadcast; the scan reads m one-byte
     codes per vector instead of the full vector — the 16x memory cut
     that is PQ's reason to exist."""
-    from .dedup import materialize
-
     sub = dim // m
-    emb_q = materialize(emb.select(
-        F.col(id_col), int8_quantize(F.col(vec_col)).alias("_qv")))
+    emb_q = _quantized(emb, id_col, vec_col)
     codebooks = int_pq_codebooks(emb_q, m, sub, kc, iters,
                                  id_col, "_qv")
-    data = _assign_codes(emb_q, codebooks, sub, "_qv")
+    data = _assign_cells(emb_q, None, codebooks, keep=(id_col,),
+                         id_col=id_col)
     qs = queries.select(
         F.col(q_id_col), int8_quantize(F.col(q_vec_col)).alias("_qq"))
-    pairs = data.drop("_qv").crossJoin(F.broadcast(qs))
+    pairs = data.crossJoin(F.broadcast(qs))
     # LUT lookup: select the coded codeword FIRST, then one integer
     # dot — the element the all-codewords dot array would hold at
     # that code (the _ivfpq_probe ADC shape)
@@ -2343,60 +2251,32 @@ def _ivfpq_train(emb: DataFrame, n_cells: int, m: int, kc: int,
     """Training half of IVF-PQ, shared verbatim by the inline query
     (int_ivfpq_topk, sim17) and the persisted lifecycle
     (save_ivfpq_index, sim19) so build-then-probe is bit-identical to
-    train-and-probe-inline: int8 quantization, integer Lloyd's coarse
-    cells, cell residuals q - centroid[cell], per-subspace residual
-    codebooks, exact-int code assignment. Returns (codes frame with
-    id/_cell/_c0.._c{m-1}, cells, codebooks); the list artifacts are
-    k-bounded driver rows (the sim11/sim16 collect pattern)."""
-    from .dedup import materialize
+    train-and-probe-inline: int8 quantization (a NULL vector is
+    dropped: it gets no code row), integer Lloyd's coarse cells, then
+    per-subspace integer Lloyd's codebooks of the cell residuals
+    q - centroid[cell], then the codes. One bounded
+    orderBy(id).limit(max(n_cells, kc)) collect gives every seed: the
+    n_cells lowest-id vectors seed the cells, and the residuals of the
+    kc lowest-id ones against the trained cells (computed here, by the
+    kernel's exact rule) seed the codebooks. Each Lloyd step is one
+    Spark job of _cell_kernel sums, the PQ steps taking every
+    residual in the same kernel pass that assigns its cell. Returns
+    (the lazy codes frame id/_cell/_c0.._c{m-1}, assigned by the
+    kernel in the consumer's job, cells, codebooks); the list
+    artifacts are k-bounded driver rows."""
+    import numpy as np
 
     sub = dim // m
-    emb_q = materialize(emb.select(
-        F.col(id_col), int8_quantize(F.col(vec_col)).alias("_qv")))
-    # df-engine trainer (round-13 optimization): bit-identical to
-    # int_ivf_centroids (TestNswGraphAnn pin) but the per-iteration
-    # plan is O(1) in the cell count — measured 2.1 s -> 1.5 s at
-    # c=4 and 10.3 s -> 1.5 s at c=32 on the sf0.1 corpus. The cells
-    # artifact stays a bounded driver-side list (n_cells rows), the
-    # same collect the literal trainer did internally.
-    cells_rows = sorted(
-        int_ivf_centroids_df(emb_q, n_cells, iters, id_col,
-                             "_qv").collect(),
-        key=lambda r: r["cid"])
-    cells = [[int(x) for x in r["cent"]] for r in cells_rows]
-    data = materialize(_cell_residuals(emb_q, cells))
-    codebooks = int_pq_codebooks(data, m, sub, kc, iters,
-                                 id_col, "_res")
-    data = _assign_codes(data, codebooks, sub)
-    return data.drop("_qv", "_res"), cells, codebooks
-
-
-def _cell_residuals(emb_q: DataFrame, cells: list[list[int]]
-                    ) -> DataFrame:
-    """Coarse step of IVF-PQ encoding (shared by training and the
-    day-2 append path): `_cell` = nearest cell of `_qv` (exact int64
-    L2, lowest-cell ties) and `_res` = `_qv` minus that centroid, both
-    read off ONE literal of the cell set."""
-    cl = _int_cells_lit(cells)
-    return (emb_q.withColumn("_cell", F.array_min(
-                _scored_cells_df(F.col("_qv"), cl))["i"])
-            .withColumn("_res", F.zip_with(
-                F.col("_qv"), F.element_at(cl, F.col("_cell") + 1)["cent"],
-                lambda a, b: a - b)))
-
-
-def _assign_codes(data: DataFrame, codebooks: list[list[list[int]]],
-                  sub: int, vec_col: str = "_res") -> DataFrame:
-    """Exact-int PQ code assignment per subspace (shared by training,
-    the day-2 append path and int_pq_topk): `_c{s}` = argmin codeword
-    by int64 L2 on slice s of `vec_col`, all m codebooks read off ONE
-    literal (_int_books_lit)."""
-    books = _int_books_lit(codebooks)
-    return data.withColumns({
-        f"_c{s}": F.array_min(_scored_cells_df(
-            F.slice(vec_col, s * sub + 1, sub),
-            F.element_at(books, s + 1)))["i"]
-        for s in range(len(codebooks))})
+    emb_q = _quantized(emb, id_col, vec_col)
+    seeds = _seed_rows(emb_q, max(n_cells, kc), id_col)
+    cells = _lloyd(emb_q, [seeds[:n_cells]], iters, id_col)[0]
+    c, v = np.asarray(cells), np.asarray(seeds[:kc])
+    res = v - c[((v[:, None, :] - c[None]) ** 2).sum(axis=2).argmin(axis=1)]
+    books = _lloyd(emb_q, [[r[s * sub:(s + 1) * sub] for r in res.tolist()]
+                           for s in range(m)], iters, id_col, cells)
+    codes = _assign_cells(emb_q, cells, books, keep=(id_col,),
+                          id_col=id_col)
+    return codes, cells, books
 
 
 def _ivfpq_encode(emb: DataFrame, cells: list[list[int]],
@@ -2405,13 +2285,11 @@ def _ivfpq_encode(emb: DataFrame, cells: list[list[int]],
     """Encode vectors against EXISTING cells/codebooks — the no-
     retraining half of _ivfpq_train, used when appending to a
     persisted index (FAISS add() semantics: the quantizers are
-    frozen artifacts; new vectors only get assigned). Plan
-    construction costs a constant number of py4j round trips in
-    n_cells and kc (pinned in tests)."""
-    emb_q = emb.select(
-        F.col(id_col), int8_quantize(F.col(vec_col)).alias("_qv"))
-    data = _assign_codes(_cell_residuals(emb_q, cells), codebooks, sub)
-    return data.drop("_qv", "_res")
+    frozen artifacts; new vectors only get assigned): one _cell_kernel
+    pass, a NULL vector dropped. Plan construction costs a constant
+    number of py4j round trips in n_cells and kc (pinned in tests)."""
+    return _assign_cells(_quantized(emb, id_col, vec_col, cache=False),
+                         cells, codebooks, keep=(id_col,), id_col=id_col)
 
 
 def _codes_dir(path: str) -> str:
@@ -2586,11 +2464,11 @@ def _ivfpq_probe(codes: DataFrame, cells: list[list[int]],
     broadcasting them runs no Spark job.
 
     Round-13 optimization: the cells and codebooks ride ONE-ROW
-    broadcast DataFrames (the df quantizer-engine shape) instead of
-    arrays built one F.lit per element — O(n_cells x dim + m x kc x
-    sub) py4j round trips of plan construction per build, which the
-    streaming probe (st12/st14) paid PER MICRO-BATCH (the build and
-    append paths now use one literal per set, _int_cells_lit).
+    broadcast DataFrames instead of arrays built one F.lit per
+    element — O(n_cells x dim + m x kc x sub) py4j round trips of
+    plan construction per build, which the streaming probe
+    (st12/st14) paid PER MICRO-BATCH (the build and append paths
+    pass them to _cell_kernel as a value).
     Arithmetic is unchanged and exact: the cell ranking sorts the
     same struct(d, i, qc) triples, and the ADC term selects the coded
     codeword FIRST and takes one integer dot with it — the same
@@ -3007,61 +2885,14 @@ def ivfpq_refine_topk(index: dict, emb: DataFrame, queries: DataFrame,
 def int_pq_codebooks(data: DataFrame, m: int, sub: int, kc: int = 4,
                      iters: int = 2, id_col: str = "vec_id",
                      vec_col: str = "_res") -> list[list[list[int]]]:
-    """Train ALL m per-subspace integer codebooks in one pass per
-    Lloyd iteration — bit-identical to m separate int_ivf_centroids
-    runs (same lowest-id seeds, same exact-int L2 argmin with
-    lowest-cid ties, same truncating-div update, same keep-on-empty
-    rule) but 1 job per phase instead of m: sub-vectors explode to
-    (vec, s) rows once, centroids live in a small joined table (m*kc
-    rows) instead of m*kc inline literal expressions, and the
-    per-(s,cid,pos) means collect m*kc*sub bounded rows. This is what
-    keeps IVF-PQ training latency flat as m grows."""
-    spark = data.sparkSession
-    slices = F.array(*[
-        F.struct(F.lit(s).alias("s"),
-                 F.slice(F.col(vec_col), s * sub + 1, sub).alias("sv"))
-        for s in range(m)])
-    sliced = (data.select(F.col(id_col), F.explode(slices).alias("_x"))
-              .select(F.col(id_col), F.col("_x.s").alias("s"),
-                      F.col("_x.sv").alias("sv"))
-              .localCheckpoint(eager=False))
-
-    sw = Window.partitionBy("s").orderBy(id_col)
-    seed_rows = (sliced.withColumn("_rn", F.row_number().over(sw))
-                 .filter(F.col("_rn") <= kc)
-                 .select("s", (F.col("_rn") - 1).alias("cid"), "sv")
-                 .collect())
-    books: list[list[list[int]]] = [[None] * kc for _ in range(m)]
-    for r in seed_rows:
-        books[r.s][r.cid] = [int(x) for x in r.sv]
-
-    def cent_df(bks):
-        rows = [(s, j, bks[s][j]) for s in range(m) for j in range(kc)]
-        return F.broadcast(spark.createDataFrame(
-            rows, "s int, cid int, cent array<bigint>"))
-
-    d2 = F.aggregate(
-        F.zip_with(F.col("sv"), F.col("cent"),
-                   lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("bigint"), lambda acc, x: acc + x)
-    aw = Window.partitionBy(id_col, "s").orderBy("_d2", "cid")
-    for _ in range(iters):
-        assigned = (
-            sliced.join(cent_df(books), "s")
-            .withColumn("_d2", d2)
-            .withColumn("_rn", F.row_number().over(aw))
-            .filter(F.col("_rn") == 1)
-        )
-        rows = (
-            assigned.select("s", "cid",
-                            F.posexplode("sv").alias("pos", "val"))
-            .groupBy("s", "cid", "pos")
-            .agg(F.expr("sum(val) div count(*)").alias("mval"))
-            .collect()
-        )
-        upd: dict[tuple[int, int], dict[int, int]] = {}
-        for r in rows:
-            upd.setdefault((r.s, r.cid), {})[r.pos] = int(r.mval)
-        for (s, cid), means in upd.items():
-            books[s][cid] = [means[p] for p in sorted(means)]
-    return books
+    """Train ALL m per-subspace integer codebooks of `vec_col` (sliced
+    into m runs of `sub` elements) together — bit-identical to m
+    separate coarse trainings on the slices (_train_cells: the kc
+    lowest-id vectors seed every subspace, exact-int L2 argmin with
+    lowest-cid ties, truncating-div update, keep-on-empty) but one
+    Spark job per Lloyd step for all m (_lloyd). Every row counts,
+    rows that share an id included."""
+    seeds = _seed_rows(data, kc, id_col, vec_col)
+    return _lloyd(data, [[v[s * sub:(s + 1) * sub] for v in seeds]
+                         for s in range(m)], iters, id_col,
+                  vec_col=vec_col)

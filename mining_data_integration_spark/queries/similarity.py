@@ -772,26 +772,24 @@ ORACLES["sim29_nsw_persisted_probe"] = _nsw_sql()
 
 def sim32_nsw_distributed_build(spark: SparkSession,
                                 sf_dir: str) -> DataFrame:
-    """Graph-ANN beam search over a k-NN graph built with the
-    DISTRIBUTED quantizer engine (round 13 — the cap-lift that closes
-    VERDICT r12's one 100 TB caveat for good): quantizer="df" keeps
-    the k-means centroids as a one-row broadcast array column
-    (operators/similarity.int_ivf_centroids_df /
-    int_assign_centroid_df) instead of O(c x dim) codegen literals,
-    so the PLAN size is O(1) in the cell count and
-    derive_nsw_centroids' occupancy rule can run uncapped — cell
-    counts in the thousands, the 100 TB build shape. This entry pins
-    the engine at n_centroids=32 (8x sim28's cell count; at the
-    sf0.01 corpus that is ~60-vector occupancy): the adjacency the
-    df engine produces is BIT-IDENTICAL to the literal engine's
-    (same exact-int arithmetic, same lowest-cid/lowest-id tie rules —
-    unit-pinned in TestNswGraphAnn), so the DuckDB oracle is the
-    standard engine-agnostic replay (_nsw_sql at k_cent=32) and the
-    top-5 is fully hash-checked. Beyond the engine, everything is
-    sim28: salted cell join, per-src rank, deterministic BSP beam."""
+    """Graph-ANN beam search over a k-NN graph built at a LARGE cell
+    count (round 13 — the cap-lift that closes VERDICT r12's one
+    100 TB caveat for good): the k-means training and the cell
+    assignments run on _cell_kernel with the centroids a value of the
+    kernel, never O(c x dim) plan literals, so the PLAN size is O(1)
+    in the cell count and derive_nsw_centroids' occupancy rule can
+    run uncapped — cell counts in the thousands, the 100 TB build
+    shape. This entry pins n_centroids=32 (8x sim28's cell count; at
+    the sf0.01 corpus that is ~60-vector occupancy): the kernel's
+    arithmetic and tie rules are exact (lowest-cid/lowest-id ties,
+    truncating updates — unit-pinned against the Spark-expression
+    reference in TestQuantizerKernel), so the DuckDB oracle is the
+    standard replay (_nsw_sql at k_cent=32) and the top-5 is fully
+    hash-checked. Beyond the cell count, everything is sim28:
+    cell-bounded pairs, per-src rank, deterministic BSP beam."""
     emb = spread(t(spark, sf_dir, "embeddings"), "vec_id")
     adj = S.nsw_adjacency(emb, k_nbrs=6, n_centroids=32, n_probe=2,
-                          iters=2, quantizer="df")
+                          iters=2)
     return S.nsw_beam_search(
         adj, emb, _queries_df(spark, sf_dir), k=5, beam=4, rounds=3,
         n_entries=2,
@@ -1089,20 +1087,19 @@ ORACLES["sim34_nsw_sequential_append"] = _nsw_append_sql(
 
 def sim35_int_ivf_bigc_topk(spark: SparkSession,
                             sf_dir: str) -> DataFrame:
-    """sim11's integer-IVF top-5 at a LARGE cell count on the
-    DISTRIBUTED quantizer engine (round 13 — the sim32 cap-lift
-    applied to the query-side IVF family): n_centroids=32 with
-    quantizer='df' trains, assigns and probes with the centroid set
-    as a one-row broadcast array column (int_ivf_centroids_df /
-    _scored_cells_df), so the plan carries ZERO centroid literals and
-    the same code runs at the tens-of-thousands of cells a 100 TB
-    IVF wants (~sqrt n). Engines are bit-identical (TestNswGraphAnn
-    pin), so the oracle is the standard engine-agnostic replay at
-    k_cent=32 — the hit set is fully hash-checked like sim11's."""
+    """sim11's integer-IVF top-5 at a LARGE cell count (round 13 —
+    the sim32 cap-lift applied to the query-side IVF family):
+    n_centroids=32 trains, assigns and probes on _cell_kernel with
+    the centroid set a value of the kernel, so the plan carries ZERO
+    centroid literals and the same code runs at the tens-of-thousands
+    of cells a 100 TB IVF wants (~sqrt n). The kernel is exact
+    (TestQuantizerKernel pins it against the Spark-expression
+    reference), so the oracle is the standard replay at k_cent=32 —
+    the hit set is fully hash-checked like sim11's."""
     emb = spread(t(spark, sf_dir, "embeddings"), "vec_id")
     return S.int_ivf_topk(emb, _queries_df(spark, sf_dir), k=5,
-                          n_centroids=32, n_probe=2, iters=2,
-                          quantizer="df").orderBy("q_id", "rk")
+                          n_centroids=32, n_probe=2,
+                          iters=2).orderBy("q_id", "rk")
 
 
 QUERIES["sim35_int_ivf_bigc_topk"] = sim35_int_ivf_bigc_topk

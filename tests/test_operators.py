@@ -1683,9 +1683,9 @@ class TestIvfpqPersistedLifecycle:
         def boom(*a, **k):
             raise AssertionError("training ran on the probe path")
 
-        monkeypatch.setattr(S, "_ivfpq_train", boom)
-        monkeypatch.setattr(S, "int_ivf_centroids", boom)
-        monkeypatch.setattr(S, "int_pq_codebooks", boom)
+        for name in ("_ivfpq_train", "_seed_rows", "_lloyd",
+                     "int_pq_codebooks"):
+            monkeypatch.setattr(S, name, boom)
         q = emb.filter("vec_id < 2").select(
             emb.vec_id.alias("q_id"), emb.embedding.alias("q_emb"))
         idx = S.load_ivfpq_index(spark, path)
@@ -1886,9 +1886,9 @@ class TestIvfpqPersistedLifecycle:
         def boom(*a, **k):
             raise AssertionError("training ran during append")
 
-        monkeypatch.setattr(S, "_ivfpq_train", boom)
-        monkeypatch.setattr(S, "int_ivf_centroids", boom)
-        monkeypatch.setattr(S, "int_pq_codebooks", boom)
+        for name in ("_ivfpq_train", "_seed_rows", "_lloyd",
+                     "int_pq_codebooks"):
+            monkeypatch.setattr(S, name, boom)
         S.append_to_ivfpq_index(delta, path)
 
         idx = S.load_ivfpq_index(spark, path)
@@ -1966,9 +1966,9 @@ class TestIvfpqPersistedLifecycle:
         def boom(*a, **k):
             raise AssertionError("training ran on the refine path")
 
-        monkeypatch.setattr(S, "_ivfpq_train", boom)
-        monkeypatch.setattr(S, "int_ivf_centroids", boom)
-        monkeypatch.setattr(S, "int_pq_codebooks", boom)
+        for name in ("_ivfpq_train", "_seed_rows", "_lloyd",
+                     "int_pq_codebooks"):
+            monkeypatch.setattr(S, name, boom)
         q = emb.filter("vec_id < 2").select(
             emb.vec_id.alias("q_id"), emb.embedding.alias("q_emb"))
         idx = S.load_ivfpq_index(spark, path)
@@ -2816,14 +2816,11 @@ class TestNswGraphAnn:
         """The dd5/dd7 discipline applied to the graph build: the
         candidate pairs must be formed inside a cell, never by a
         cartesian — pinned on the physical plan. The pairs are scored
-        by the Arrow kernel grouped by (cell id, salt). The df
-        quantizer engine ('auto''s round-13 resolution at every cell
-        count) attaches its centroid set as a 1-row
-        IdentityBroadcastMode cross — those BNLJ nodes are O(1)-row
-        scalar attaches, not candidate joins, so the pin asserts the
-        SHAPE: no cartesian, the kernel grouped by the cell id and
-        the salt, and every BNLJ a Cross build (the 1-row attach),
-        never an inner pair join."""
+        by the Arrow kernel grouped by (cell id, salt), and the cells
+        come from _cell_kernel (a map stage, no join), so the pin
+        asserts the SHAPE: no cartesian, the kernel grouped by the
+        cell id and the salt, and no BNLJ but a Cross build (an O(1)-
+        row attach), never an inner pair join."""
         import re
 
         emb = self._emb(spark)
@@ -2941,14 +2938,14 @@ class TestNswGraphAnn:
         assert stats["n"] == emb.count()
 
     def test_build_stats_engine_parity(self, spark):
-        """nsw_build_stats scores cells through the shared kernel for
-        both quantizer engines, so the cost model cannot depend on
-        which engine ran."""
+        """The kernel-trained cost model counts exactly the pairs of
+        the Spark-expression reference engine (ref_nsw_candidate_pairs:
+        the literal trainer and scoring the build used before
+        _cell_kernel)."""
         emb = self._emb(spark)
-        stats = {e: S.nsw_build_stats(emb, n_centroids=4, n_probe=2,
-                                      iters=2, quantizer=e)
-                 for e in ("literal", "df")}
-        assert stats["literal"] == stats["df"]
+        stats = S.nsw_build_stats(emb, n_centroids=8, n_probe=2, iters=2)
+        assert stats["pair_count"] == ref_nsw_candidate_pairs(
+            emb, n_centroids=8, n_probe=2, iters=2).count()
 
     def _lattice_emb(self, spark, n, dim=16):
         """Deterministic synthetic corpus sized to order — vec_id
@@ -3137,102 +3134,123 @@ class TestNswGraphAnn:
         assert all(sorted(v) == list(range(1, len(v) + 1))
                    and len(v) <= 6 for v in per.values())
 
-    def test_df_quantizer_engine_is_bit_identical(self, spark):
-        """Round-13 cap-lift: the DataFrame quantizer engine
-        (int_ivf_centroids_df / int_assign_centroid_df — centroids as
-        a one-row broadcast array column) must produce the SAME
-        training AND the same adjacency as the codegen-literal
-        engine. This equality is what makes the SQL oracle replay
-        engine-agnostic (sim32) and what lets quantizer='auto' switch
-        engines without a semantic change."""
-        emb = self._emb(spark)
-        emb_q = emb.select(
-            "vec_id", S.int8_quantize(F.col("embedding")).alias("_qv"))
-        for c in (4, 8):
-            lit = S.int_ivf_centroids(emb_q, c, 2, "vec_id", "_qv")
-            dfc = {r.cid: [int(x) for x in r.cent] for r in
-                   S.int_ivf_centroids_df(emb_q, c, 2, "vec_id",
-                                          "_qv").collect()}
-            assert [dfc[i] for i in range(c)] == lit
-        a_lit = sorted(tuple(r) for r in S.nsw_adjacency(
-            emb, k_nbrs=6, n_centroids=8, quantizer="literal")
-            .collect())
-        a_df = sorted(tuple(r) for r in S.nsw_adjacency(
-            emb, k_nbrs=6, n_centroids=8, quantizer="df").collect())
-        assert a_lit == a_df
-        # and the query-side IVF family (sim35 rides this)
-        q = self._q(emb)
-        t_lit = sorted(tuple(r) for r in S.int_ivf_topk(
-            emb, q, k=5, n_centroids=8, quantizer="literal").collect())
-        t_df = sorted(tuple(r) for r in S.int_ivf_topk(
-            emb, q, k=5, n_centroids=8, quantizer="df").collect())
-        assert t_lit == t_df
-
     def test_df_engine_plan_size_independent_of_cell_count(self, spark):
-        """THE point of the df engine: the literal plan embeds
-        O(c x dim) expression nodes (the reason NSW_MAX_CENTROIDS
-        exists), so it GROWS with the cell count; the df plan must
-        not — its centroids travel as broadcast data, never as plan.
-        Pinned on the optimized-plan string length at 4 vs 64 cells
-        (a small deterministic lattice corpus keeps the four builds
-        cheap)."""
+        """The build's plan must not grow with the cell count: the
+        centroids reach _cell_kernel as a value, never as plan
+        literals (the O(c x dim) literal plan is why NSW_MAX_CENTROIDS
+        once existed). Pinned on the optimized-plan string length at
+        4 vs 64 cells (a small deterministic lattice corpus keeps the
+        two builds cheap)."""
         emb = self._lattice_emb(spark, 800)
 
-        def plan_len(c, engine):
-            pairs = S.nsw_candidate_pairs(emb, n_centroids=c,
-                                          quantizer=engine)
+        def plan_len(c):
+            pairs = S.nsw_candidate_pairs(emb, n_centroids=c)
             return len(pairs._jdf.queryExecution()
                        .optimizedPlan().toString())
 
-        assert plan_len(64, "df") < plan_len(4, "df") * 1.5
-        # the contrast that justifies the auto resolution: the
-        # literal plan at 64 cells dwarfs its 4-cell self. (The
-        # round-13 materialization barrier caches the quantized
-        # corpus, so the repeated quantize subtrees no longer inflate
-        # the ratio — what remains growing is the c x dim centroid
-        # literals themselves, measured ~3.1x at 64 vs 4 cells.)
-        assert plan_len(64, "literal") > plan_len(4, "literal") * 2
+        assert plan_len(64) < plan_len(4) * 1.5
 
-    def test_auto_engine_switch_and_uncapped_derivation(self):
-        """'auto' resolves to the df engine at EVERY cell count
-        (round-13 optimization: literal-plan Janino compilation costs
-        seconds per stage even at c=4 — the engines are bit-identical
-        so this is an execution choice only); cap=None removes the
-        ceiling from the occupancy rule (what
+    def test_uncapped_cell_derivation(self):
+        """cap=None removes the ceiling from the occupancy rule (what
         save_nsw_index(n_centroids=None) uses, so occupancy holds at
-        target at ANY corpus size)."""
-        import pytest as _pytest
-
-        assert S._resolve_nsw_quantizer("auto", 4) == "df"
-        assert S._resolve_nsw_quantizer(
-            "auto", S.NSW_MAX_CENTROIDS) == "df"
-        assert S._resolve_nsw_quantizer(
-            "auto", S.NSW_MAX_CENTROIDS + 1) == "df"
-        assert S._resolve_nsw_quantizer("literal", 4) == "literal"
-        assert S._resolve_nsw_quantizer("df", 4) == "df"
-        with _pytest.raises(ValueError, match="quantizer"):
-            S._resolve_nsw_quantizer("bogus", 4)
+        target at ANY corpus size); the default keeps the cap."""
         n = 1 << 20
         assert S.derive_nsw_centroids(n, 256) == S.NSW_MAX_CENTROIDS
         assert S.derive_nsw_centroids(n, 256, cap=None) == n // 256
 
 
+def ref_cells_lit(cents):
+    """An integer centroid set as one literal array<struct<i, cent>>."""
+    return F.expr(S._int_cells_sql(cents))
+
+
+def ref_scored_cells(vec, cents_col):
+    """array<struct<d, i>> of the exact int64 squared L2 from `vec` to
+    every centroid of `cents_col`, by Spark's zip_with/aggregate
+    lambdas: array_min is the nearest cell (lowest i on ties), a
+    sorted slice the n_probe nearest. The cell scoring of the builds
+    before _cell_kernel."""
+    return F.transform(cents_col, lambda c: F.struct(
+        F.aggregate(F.zip_with(vec, c["cent"],
+                               lambda a, b: (a - b) * (a - b)),
+                    F.lit(0).cast("bigint"),
+                    lambda acc, x: acc + x).alias("d"),
+        c["i"].alias("i")))
+
+
+def ref_quantized(emb, id_col="vec_id", vec_col="embedding"):
+    return emb.filter(F.col(vec_col).isNotNull()).select(
+        F.col(id_col), S.int8_quantize(F.col(vec_col)).alias("_qv"))
+
+
+def ref_int_ivf_centroids(emb_q, c, iters, id_col="vec_id",
+                          vec_col="_qv"):
+    """The integer Lloyd's k-means the builds ran before _cell_kernel
+    (the literal engine): the c lowest-id seeds, assignment by
+    ref_scored_cells, a per-(cell, position) `sum div count` update,
+    a cell without members keeping its centroid."""
+    cents = [[int(x) for x in r[1]] for r in emb_q.orderBy(id_col)
+             .limit(c).select(id_col, vec_col).collect()]
+    for _ in range(iters):
+        rows = (emb_q.select(
+                    F.array_min(ref_scored_cells(
+                        F.col(vec_col), ref_cells_lit(cents)))["i"]
+                    .alias("_cid"),
+                    F.posexplode(F.col(vec_col)).alias("pos", "val"))
+                .groupBy("_cid", "pos")
+                .agg(F.expr("sum(val) div count(*)").alias("m"))
+                .groupBy("_cid")
+                .agg(F.array_sort(F.collect_list(F.struct("pos", "m")))
+                     .alias("a"))
+                .collect())
+        for r in rows:
+            cents[r._cid] = [int(x.m) for x in r.a]
+    return cents
+
+
+def ref_ivfpq_train(emb, n_cells, m, kc, iters, dim):
+    """IVF-PQ training as the Spark-expression builds did it: reference
+    coarse cells, `_res` = the vector minus its cell's centroid, each
+    subspace's codebook trained by ref_int_ivf_centroids on its slice
+    of `_res` (every row counts), codes by ref_scored_cells. Returns
+    (codes rows sorted, cells, codebooks)."""
+    sub = dim // m
+    emb_q = ref_quantized(emb).cache()
+    cells = ref_int_ivf_centroids(emb_q, n_cells, iters)
+    lit = ref_cells_lit(cells)
+    data = (emb_q.withColumn("_cell", F.array_min(
+                ref_scored_cells(F.col("_qv"), lit))["i"])
+            .withColumn("_res", F.zip_with(
+                F.col("_qv"), F.element_at(lit, F.col("_cell") + 1)["cent"],
+                lambda a, b: a - b))
+            .cache())
+    books = [ref_int_ivf_centroids(
+        data.select("vec_id", F.slice("_res", s * sub + 1, sub)
+                    .alias("_sv")), kc, iters, vec_col="_sv")
+        for s in range(m)]
+    codes = data.select("vec_id", "_cell", *[
+        F.array_min(ref_scored_cells(F.slice("_res", s * sub + 1, sub),
+                                     ref_cells_lit(books[s])))["i"]
+        .alias(f"_c{s}") for s in range(m)])
+    return sorted(map(tuple, codes.collect())), cells, books
+
+
 def ref_nsw_candidate_pairs(emb, n_centroids=None, n_probe=2, iters=2,
-                            id_col="vec_id", vec_col="embedding",
-                            quantizer="auto"):
-    """The graph build's pair scoring before the numpy kernel: a
-    32-way salted equi-join on the cell id, scored by Spark's idot
-    lambdas. The reference the kernel must equal row for row."""
+                            id_col="vec_id", vec_col="embedding"):
+    """The graph build's pair generation and scoring before the numpy
+    kernels: the reference trainer and cell scoring, then a 32-way
+    salted equi-join on the cell id scored by Spark's idot lambdas.
+    The reference the kernels must equal row for row."""
     from mining_data_integration_spark.operators.skew import salted_join
 
-    emb_q, cents, _c, engine = S._nsw_quantize_and_train(
-        emb, n_centroids, n_probe, iters, id_col, vec_col,
-        S.NSW_TARGET_OCCUPANCY, quantizer)
-    (base,), cc = S._attach_cells(engine, cents, emb_q)
-    scored = S._scored_cells_df(F.col("_qv"), cc)
-    data = (base.withColumn("_cid", F.array_min(scored)["i"])
-            .drop("_cents"))
-    src = (base.withColumn(
+    emb_q = ref_quantized(emb, id_col, vec_col).cache()
+    if n_centroids is None:
+        n_centroids = S.derive_nsw_centroids(emb_q.count(), cap=None)
+    cc = ref_cells_lit(ref_int_ivf_centroids(emb_q, n_centroids, iters,
+                                             id_col))
+    scored = ref_scored_cells(F.col("_qv"), cc)
+    data = emb_q.withColumn("_cid", F.array_min(scored)["i"])
+    src = (emb_q.withColumn(
         "_p", F.explode(F.slice(F.array_sort(scored), 1, n_probe)))
         .select(F.col(id_col).alias("_src"), F.col("_qv").alias("_sv"),
                 F.col("_p.i").alias("_cid")))
@@ -3289,11 +3307,10 @@ class TestNswPairKernel:
         assert adj == want
         return pairs, adj
 
-    @pytest.mark.parametrize("n_probe,quantizer", [
-        (1, "df"), (2, "df"), (1, "literal"), (2, "literal")])
-    def test_equals_reference(self, spark, n_probe, quantizer):
+    @pytest.mark.parametrize("n_probe", [1, 2])
+    def test_equals_reference(self, spark, n_probe):
         self._same(self._emb(spark), n_centroids=4, n_probe=n_probe,
-                   iters=1, quantizer=quantizer)
+                   iters=1)
 
     def test_k_nbrs_above_the_cell_size(self, spark):
         pairs, adj = self._same(self._emb(spark), k_nbrs=240,
@@ -3361,17 +3378,144 @@ class TestNswPairKernel:
         # a NULL score ranks after every scored neighbor
         assert all(r[3] == n_edges[r[0]] for r in nulls if r[0] != 7)
 
-    def test_null_vector_edges_score_null(self, spark):
-        """A NULL vector quantizes to NULL; the cell scoring still puts
-        it in cell 0 (its NULL distances sort first), so it pairs
-        inside that cell with every score NULL, as in the reference."""
+    def test_null_vector_gets_no_edges(self, spark):
+        """A NULL vector is dropped before training and cell
+        assignment: it has no out-edges and is nobody's neighbor (it
+        used to take cell 0 and NULL-scored edges), as in the
+        reference."""
         rows = [(i, [float((i * 3 + j) % 7) - 3.0 for j in range(8)])
                 for i in range(30)]
         rows[9] = (9, None)
         _, adj = self._same(vec_df(spark, rows), k_nbrs=40,
                             n_centroids=2, iters=1)
-        assert all(r[2] is None for r in adj if 9 in r[:2])
-        assert all(r[2] is not None for r in adj if 9 not in r[:2])
+        assert not [r for r in adj if 9 in r[:2]]
+        assert {r[0] for r in adj} == set(range(30)) - {9}
+        assert all(r[2] is not None for r in adj)
+
+
+def qv_df(spark, rows):
+    """(vec_id, _qv) rows, already integer: the kernel's own input."""
+    return spark.createDataFrame(rows, "vec_id long, _qv array<bigint>")
+
+
+class TestQuantizerKernel:
+    """_cell_kernel trains and encodes the integer quantizers exactly
+    as the Spark-expression reference did (ref_int_ivf_centroids,
+    ref_ivfpq_train): the same cells, codebooks and codes, the same
+    tie and truncation rules."""
+
+    def _emb(self, spark, n=80, dim=16):
+        return vec_df(spark, [
+            (i, [float((i * (j + 3) * 7 + j * j) % 23 - 11)
+                 for j in range(dim)]) for i in range(n)])
+
+    def _same_ivfpq(self, emb, n_cells, m, kc, iters, dim):
+        codes, cells, books = S._ivfpq_train(
+            emb, n_cells, m, kc, iters, dim, "vec_id", "embedding")
+        want = ref_ivfpq_train(emb, n_cells, m, kc, iters, dim)
+        assert (sorted(map(tuple, codes.collect())), cells, books) == want
+        return want
+
+    @pytest.mark.parametrize("n_cells,m,kc,iters", [
+        (4, 4, 4, 1), (4, 2, 4, 2), (8, 4, 8, 2)])
+    def test_ivfpq_equals_reference(self, spark, n_cells, m, kc, iters):
+        self._same_ivfpq(self._emb(spark), n_cells, m, kc, iters, 16)
+
+    def test_ivfpq_equals_reference_at_dim_64(self, spark):
+        emb = TestNswPairKernel()._emb(spark)
+        self._same_ivfpq(emb, 16, 8, 16, 2, 64)
+
+    @pytest.mark.parametrize("n_probe", [1, 2])
+    def test_cells_and_probes_equal_reference(self, spark, n_probe):
+        emb_q = ref_quantized(self._emb(spark)).cache()
+        cells = S._train_cells(emb_q, 6, 2, "vec_id")
+        assert cells == ref_int_ivf_centroids(emb_q, 6, 2)
+        got = S._assign_cells(emb_q, cells, n_probe=n_probe,
+                              keep=("vec_id",)).collect()
+        scored = ref_scored_cells(F.col("_qv"), ref_cells_lit(cells))
+        want = emb_q.select(
+            "vec_id", F.array_min(scored)["i"].alias("_cell"),
+            F.slice(F.array_sort(scored), 1, n_probe)["i"]
+            .alias("_probe")).collect()
+        assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+
+    def test_negative_sums_truncate_toward_zero(self, spark):
+        # cell 1 takes [-10, -10], [-1, 0] and [0, -1]: sum -11 over 3
+        # is -3 truncated (numpy's // would floor it to -4)
+        df = qv_df(spark, [(0, [10, 10]), (1, [-10, -10]), (2, [-1, 0]),
+                           (3, [0, -1])])
+        seeds = [[10, 10], [-10, -10]]
+        got = S._lloyd(df, [seeds], 1, "vec_id")[0]
+        assert got == [[10, 10], [-3, -3]]
+        assert got == ref_int_ivf_centroids(df, 2, 1)
+
+    def test_emptied_cell_keeps_its_centroid(self, spark):
+        # seeds 0 and 1 are equal, so cell 1 loses every tie to cell 0
+        # and keeps its seed
+        rows = [(0, [4, 4]), (1, [4, 4]), (2, [-6, 2])] + [
+            (i, [i % 5 - 2, 3 - i % 4]) for i in range(3, 20)]
+        df = qv_df(spark, rows)
+        got = S._train_cells(df, 3, 2, "vec_id")
+        assert got[1] == [4, 4]
+        assert got == ref_int_ivf_centroids(df, 3, 2)
+
+    def test_equal_distances_break_to_the_lowest_cid(self, spark):
+        cells = [[2, 0], [0, 2], [-2, 0]]
+        df = qv_df(spark, [(0, [0, 0]), (1, [1, 1]), (2, [-1, 1])])
+        got = {r.vec_id: (r._cell, r._probe) for r in S._assign_cells(
+            df, cells, n_probe=3, keep=("vec_id",)).collect()}
+        assert got == {0: (0, [0, 1, 2]), 1: (0, [0, 1, 2]),
+                       2: (1, [1, 2, 0])}
+
+    def test_duplicate_vectors_and_ids_all_count(self, spark):
+        rows = [(i, [float((i * (j + 2) * 5) % 13 - 6) for j in range(8)])
+                for i in range(24)]
+        rows += [(100 + i, v) for i, v in rows[:6]]       # equal vectors
+        rows += [(7, [float(j % 3) for j in range(8)])]   # a shared id
+        self._same_ivfpq(vec_df(spark, rows), 4, 2, 4, 2, 8)
+        # rows sharing an id count once each: subspace s of id 5 holds
+        # 8 and 12, so codeword 1 is (10 + 8 + 12) div 3 = 10 (the
+        # trainer that kept one row per (id, s) gave 9 or 11)
+        df = spark.createDataFrame(
+            [(0, [0, 0]), (1, [10, 10]), (5, [8, 12]), (5, [12, 8])],
+            "vec_id long, _res array<bigint>")
+        assert S.int_pq_codebooks(df, 2, 1, kc=2, iters=1) == \
+            [[[0], [10]], [[0], [10]]]
+
+    def test_shuffle_width_seven(self, spark):
+        emb = self._emb(spark)
+        want = ref_ivfpq_train(emb, 4, 4, 4, 2, 16)
+        old = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", "7")
+        try:
+            codes, cells, books = S._ivfpq_train(
+                emb.repartition(7), 4, 4, 4, 2, 16, "vec_id", "embedding")
+            got = (sorted(map(tuple, codes.collect())), cells, books)
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", old)
+        assert got == want
+
+    def test_null_vector_gets_no_code_row(self, spark):
+        rows = [(i, [float((i * 5 + j) % 9 - 4) for j in range(8)])
+                for i in range(30)]
+        rows[0] = (0, None)      # would have been the first seed
+        rows[11] = (11, None)
+        emb = vec_df(spark, rows)
+        want = self._same_ivfpq(emb, 4, 2, 2, 1, 8)
+        assert {r[0] for r in want[0]} == set(range(1, 30)) - {11}
+
+    @pytest.mark.parametrize("vid,vec", [
+        (13, [1.0, None] + [2.0] * 6), (14, [1.0] * 7),
+        (0, [None] + [2.0] * 7)])       # a seed: refused on the driver
+    def test_null_element_or_ragged_vector_raises(self, spark, vid, vec):
+        rows = [(i, [float((i * 5 + j) % 9 - 4) for j in range(8)])
+                for i in range(30)]
+        rows[vid] = (vid, vec)
+        with pytest.raises(Exception, match=rf"vector {vid}: NULL, a NULL "
+                           r"element or a length other than the "
+                           r"centroids' 8"):
+            S._ivfpq_train(vec_df(spark, rows), 4, 2, 2, 1, 8, "vec_id",
+                           "embedding")[0].collect()
 
 
 def executed_plan(df) -> str:

@@ -198,7 +198,7 @@ def nsw_side(spark) -> None:
     was its measured symptom). Pair counts come from the analytic
     model (nsw_build_stats); the model itself is pinned against the
     real join's cardinality at the small size."""
-    tocc = 640   # keeps the derived count under the literal-plan cap
+    tocc = 640   # ~470 derived cells on the 300,000-vector corpus
     stats, walls = {}, {}
     for tag, n in (("small", SMALL_N), ("large", LARGE_N)):
         t0 = time.perf_counter()

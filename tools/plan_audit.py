@@ -66,45 +66,30 @@ ALLOWED: dict[str, dict[str, str]] = {
                                   "range joins against the O(buckets) "
                                   "sketch / value-histogram tables",
         "sim10_centroid_classify": "n_labels-row centroid table broadcast",
-        "sim35_int_ivf_bigc_topk": "1-row broadcast of the folded "
-                                   "centroid-set column (the df "
-                                   "quantizer engine: centroids as "
-                                   "data, zero plan literals) + 3-row "
-                                   "query-vector broadcast",
-        # round-13 optimization: quantizer='auto' now resolves to the
-        # df engine at EVERY cell count (literal plans cost seconds of
-        # codegen per stage), so the whole int-IVF / IVF-PQ family
-        # carries sim35's 1-row folded-centroid broadcast; the IVF-PQ
-        # probe additionally rides a 1-row codebook-set broadcast
-        # (ADC codewords as data, zero plan literals). All build
-        # sides are single-row by construction.
-        "sim11_int_ivf_topk": "1-row folded centroid-set broadcast "
-                              "(df quantizer engine) + 3-row "
-                              "query-vector broadcast",
-        "sim27_int_range_search": "1-row folded centroid-set "
-                                  "broadcast (df quantizer engine) + "
-                                  "3-row query-vector broadcast",
+        # the IVF-PQ probe ranks cells and scores ADC codewords off
+        # 1-row broadcast frames of the cell and codebook sets (data,
+        # zero plan literals); both build sides are single-row by
+        # construction
         "sim17_int_ivfpq_topk": "1-row centroid-set + 1-row "
-                                "codebook-set broadcasts (df-engine "
-                                "ADC probe) + 3-row query broadcast",
+                                "codebook-set broadcasts (ADC probe) "
+                                "+ 3-row query broadcast",
         "sim19_ivfpq_persisted_topk": "1-row centroid-set + 1-row "
                                       "codebook-set broadcasts "
-                                      "(df-engine ADC probe)",
+                                      "(ADC probe)",
         "sim20_ivfpq_append_probe": "1-row centroid-set + 1-row "
                                     "codebook-set broadcasts "
-                                    "(df-engine ADC probe)",
+                                    "(ADC probe)",
         "sim22_ivfpq_refined_topk": "1-row centroid-set + 1-row "
                                     "codebook-set broadcasts "
-                                    "(df-engine ADC probe)",
+                                    "(ADC probe)",
         "sim23_ivfpq_filtered_topk": "1-row centroid-set + 1-row "
                                      "codebook-set broadcasts "
-                                     "(df-engine ADC probe)",
+                                     "(ADC probe)",
         "sim25_ivfpq_rebalanced_probe": "1-row centroid-set + 1-row "
                                         "codebook-set broadcasts "
-                                        "(df-engine ADC probe)",
+                                        "(ADC probe)",
         "sim26_ivfpq_delete": "1-row centroid-set + 1-row "
-                              "codebook-set broadcasts (df-engine "
-                              "ADC probe)",
+                              "codebook-set broadcasts (ADC probe)",
         "dp9_source_mix": "1-row corpus token total broadcast",
         "a21_hll_distinct": "1-row register fold x 1-row exact-distinct "
                             "audit column",
@@ -135,6 +120,23 @@ ALLOWED: dict[str, dict[str, str]] = {
                                 "final projection (O-R3 placement)",
         "j9_chain_walk": "c32 address codec on the final result rows",
         "mm1_feature_extract": "binary decode IS the operator",
+    },
+    "MapInArrow": {
+        # _cell_kernel: the integer quantizers' exact numpy kernel
+        # (nearest cell, n_probe nearest cells, PQ codes) is the
+        # operator's cell assignment itself; a map stage, one Arrow
+        # batch stream per partition, no shuffle of its own
+        "sim11_int_ivf_topk": "integer cells of the corpus and the "
+                              "queries' n_probe cells (_cell_kernel)",
+        "sim16_int_pq_topk": "integer PQ codes of the corpus "
+                             "(_cell_kernel)",
+        "sim17_int_ivfpq_topk": "IVF-PQ cell + residual codes of the "
+                                "corpus (_cell_kernel)",
+        "sim27_int_range_search": "integer cells of the corpus and the "
+                                  "queries' n_probe cells (_cell_kernel)",
+        "sim35_int_ivf_bigc_topk": "integer cells (32) of the corpus and "
+                                   "the queries' n_probe cells "
+                                   "(_cell_kernel)",
     },
     "MapInPandas": {
         "mm1_feature_extract": "binary decode IS the operator",
@@ -181,20 +183,6 @@ ALLOWED: dict[str, dict[str, str]] = {
         "sim31_nsw_recall_eval": "1-row recall_milli total aggregate "
                                  "(broadcast back over O(queries) "
                                  "rows — the sim9 verdict pattern)",
-        "sim35_int_ivf_bigc_topk": "the centroid-set fold "
-                                   "(_cents_column): rows reaching "
-                                   "the single partition are the "
-                                   "CELL count (32 here), never the "
-                                   "corpus",
-        # df-engine default (round-13): the int-IVF family shares
-        # sim35's bounded centroid-set fold
-        "sim11_int_ivf_topk": "the centroid-set fold (_cents_column): "
-                              "rows reaching the single partition are "
-                              "the CELL count (4), never the corpus",
-        "sim27_int_range_search": "the centroid-set fold "
-                                  "(_cents_column): rows reaching the "
-                                  "single partition are the CELL "
-                                  "count (4), never the corpus",
         "dl1_delta_time_travel": "four 1-row per-version global "
                                  "aggregates unioned into the 4-row "
                                  "time-travel report",

@@ -8,20 +8,32 @@ tip to the genesis sentinel (rpc.js:277-309, SURVEY J9). Both are the
 same problem: *the set of ancestors of one tip in a parent-pointer
 forest*.
 
-Spark-first formulation — pointer-doubling reachability:
+The refresh walks (`snapshots_walk`, `stacks_walk`) do what the
+reference does: a plain walk over rows already in memory. Each takes
+ONE bounded Arrow collect of (id, parent, height) — at most
+`incremental.WALK_COLLECT_CAP` rows, a chain of a few years of blocks
+— picks the tip from it, resolves every parent pointer to a row index
+once (`pyarrow.compute.index_in`) and follows the integer indexes on
+the driver (`walk_rows`). What goes back to Spark is only the set of
+NON-members, a local relation that left-anti-joins the rows, so the
+frame sent back is O(forks), not O(chain). A walk is a Spark job or
+two of fixed cost instead of the dozen a distributed walk launches.
 
-    S_0 = {tip};  J_0 = edges (node -> parent)
-    S_{k+1} = S_k  ∪  (S_k ⋈ J_k)          # add ancestors 2^k..2^{k+1}-1 away
-    J_{k+1} = J_k ⋈ J_k                     # node -> its 2^{k+1}-ancestor
+Above the cap the distributed engines take over (noted as
+`walk_collect_cap` in the run record):
 
-After k rounds S holds every ancestor within 2^k hops, so a chain of
-length n needs ⌈log2 n⌉ joins — ~23 shuffles for an 8M-block chain,
-versus n sequential joins for the naive loop. J stays at ≤1 row/node
-(each node has one 2^k-ancestor), so the join inputs never grow beyond
-the edge table itself; S grows to exactly the chain (n rows). Each
-round is checkpointed via localCheckpoint to cut the exponentially
-deepening lineage (the classic iterative-algorithm OOM on a real
-cluster).
+* `chain_members_segmented` — height-bucketed list ranking, O(1)
+  shuffles plus a driver stitch over the bucket summaries;
+* `chain_members` — pointer-doubling reachability, the fully general
+  definition every other engine is pinned against:
+
+      S_0 = {tip};  J_0 = edges (node -> parent)
+      S_{k+1} = S_k  ∪  (S_k ⋈ J_k)       # ancestors 2^k..2^{k+1}-1 away
+      J_{k+1} = J_k ⋈ J_k                  # node -> its 2^{k+1}-ancestor
+
+  ⌈log2 n⌉ join rounds for a chain of length n, each checkpointed to
+  cut the deepening lineage;
+* `chain_members_rcte` — the `WITH RECURSIVE` SQL twin.
 
 Genesis/no-parent is the ZERO64 sentinel (rpc.js:94, 282, 510): edges
 to the sentinel are dropped, which terminates every walk.
@@ -29,6 +41,11 @@ to the sentinel are dropped, which terminates every walk.
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -177,7 +194,11 @@ def chain_members_segmented(edges: DataFrame, tip_id: str,
         edges.select(
             F.col(id_col), F.col(parent_col),
             F.col(height_col).alias("_h"),
-            (F.col(height_col) / bucket_span).cast("long").alias("_bucket"),
+            # a NULL height goes to a bucket below every other one: a
+            # chain that passes through it ends the stitch there, and
+            # the membership probe below hands it to pointer doubling
+            F.coalesce((F.col(height_col) / bucket_span).cast("long"),
+                       F.lit(-1)).alias("_bucket"),
         )
         .filter(F.col(id_col) != ZERO64)
     )
@@ -210,19 +231,25 @@ def chain_members_segmented(edges: DataFrame, tip_id: str,
     # driver stitch over K bucket summaries (not n rows): inside one
     # bucket, follow continuation links (entry -> owner entry at pos)
     # until an exit hash, collecting (entry, min_pos) segments
-    chosen: list[tuple[int, str, int]] = []
+    chosen: dict[tuple[int, str], int] = {}   # (bucket, entry) -> min pos
     expected = tip_id
     for b in sorted({b for b, _ in info}, reverse=True):
         if (b, expected) not in info:
             continue
         entry, pos = expected, 0
-        while True:
+        while pos < chosen.get((b, entry), pos + 1):
+            chosen[(b, entry)] = pos
             exit_hash, cont_entry, cont_pos = info[(b, entry)]
-            chosen.append((b, entry, pos))
             if cont_entry is None:
                 expected = exit_hash
                 break
             entry, pos = cont_entry, cont_pos
+        else:
+            # the parent pointers closed a cycle inside this bucket (a
+            # continuation came back to an entry at no lower position):
+            # every member is chosen and the walk has no exit
+            expected = ZERO64
+            break
 
     # safety net: the entry-candidate rule assumes height-contiguous
     # chains (entries sit at a bucket's top populated height or have no
@@ -248,7 +275,8 @@ def chain_members_segmented(edges: DataFrame, tip_id: str,
             [(tip_id,)], f"{id_col} string")
 
     chosen_df = edges.sparkSession.createDataFrame(
-        chosen, "_bucket long, entry string, min_pos long")
+        [(b, e, p) for (b, e), p in chosen.items()],
+        "_bucket long, entry string, min_pos long")
     return (
         pairs.join(F.broadcast(chosen_df), ["_bucket", "entry"])
         .filter(F.col("pos") >= F.col("min_pos"))
@@ -392,18 +420,170 @@ def deepest_tip(headers: DataFrame, id_col: str = "block_hash",
     )
 
 
-def canonical_snapshots(snapshots: DataFrame) -> DataFrame:
+class Walk(NamedTuple):
+    """A canonical walk's rows, and the max of one height column over
+    them (`top`; None when the walk ran distributed and did not hold
+    its rows)."""
+    rows: DataFrame
+    top: int | None
+
+
+def collect_bounded(df: DataFrame, cap: int) -> pa.Table | None:
+    """`df` as one Arrow table from one Spark job, or None when it has
+    more than `cap` rows (at most cap + 1 rows are read)."""
+    t = df.limit(cap + 1).toArrow()
+    return t if t.num_rows <= cap else None
+
+
+def walk_rows(ids: pa.Array, parents: pa.Array,
+              tip: int | None) -> list[int]:
+    """Row indexes on the parent-pointer path from row `tip`, tip first.
+
+    One hash of `ids` resolves every parent to a row index (the first
+    row carrying its id), then the walk follows integers. The path ends
+    at a ZERO64, NULL or absent parent, or at a row it already holds
+    (a cycle). A NULL-id tip has no path. Raises ValueError naming an
+    id that appears with two different parents: the walk would have to
+    pick one."""
+    if tip is None or not ids[tip].is_valid:
+        return []
+    n = len(ids)
+    at = pc.fill_null(pc.index_in(pa.concat_arrays([ids, parents]),
+                                  value_set=ids, skip_nulls=True), -1)
+    first = at.slice(0, n).to_numpy()
+    if np.any((first >= 0) & (first != np.arange(n))):
+        per_id = pa.table({"i": ids, "p": parents}).group_by("i").aggregate(
+            [("p", "count_distinct", pc.CountOptions(mode="all"))])
+        bad = per_id.filter(pc.and_(pc.is_valid(per_id["i"]),
+                                    pc.greater(per_id["p_count_distinct"], 1)))
+        if bad.num_rows:
+            raise ValueError(f"chain walk: id {bad['i'][0].as_py()!r} "
+                             "appears with different parents")
+    stop = pc.fill_null(pc.equal(parents, ZERO64), True)
+    nxt = pc.if_else(stop, -1, at.slice(n)).to_numpy().tolist()
+    path, seen, cur = [], bytearray(n), tip
+    while cur >= 0 and not seen[cur]:
+        seen[cur] = 1
+        path.append(cur)
+        cur = nxt[cur]
+    return path
+
+
+def keep_members(rows: DataFrame, ids: pa.Array, path: list[int],
+                 id_col: str) -> DataFrame:
+    """The rows of `rows` whose id is on `path`, given that `ids` holds
+    every id of `rows`: a left-anti join against the NON-members, an
+    Arrow-backed local relation (broadcasting it runs no Spark job)
+    of O(forks) rows. Columns come key first, as an inner join of the
+    member ids would give them."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    on = np.zeros(len(ids), bool)
+    on[path] = True
+    non = ids.filter(pa.array(~on))
+    # a member id that also sits on a row off the path (a duplicate)
+    # is still a member
+    path_ids = ids.take(pa.array(path, pa.int64()))
+    dup = path_ids.filter(pc.is_in(path_ids, value_set=non))
+    if len(dup):
+        non = non.filter(pc.invert(pc.is_in(non, value_set=dup)))
+    non = pc.unique(non).drop_null()
+    kept = rows.filter(F.col(id_col).isNotNull())
+    if len(non):
+        schema = StructType([rows.schema[id_col]])
+        non_df = rows.sparkSession.createDataFrame(
+            pa.table({id_col: non}, schema=to_arrow_schema(schema)),
+            schema=schema)
+        kept = kept.join(F.broadcast(non_df), id_col, "left_anti")
+    return kept.select(id_col, *[c for c in rows.columns if c != id_col])
+
+
+def _first_row(ids: pa.Array, heights: pa.Array,
+               mask: pa.Array | None = None) -> int | None:
+    """Index of the first (masked) row under ORDER BY height DESC, id
+    ASC with Spark's NULL placement (heights last, ids first): the tip
+    order of the distributed walks. None when no row qualifies."""
+    idx = pa.array(np.arange(len(ids)))
+    if mask is not None:
+        idx = idx.filter(mask)
+    if not len(idx):
+        return None
+    h = heights.take(idx)
+    top = pc.max(h).as_py()
+    idx = idx.filter(pc.is_null(h) if top is None else pc.equal(h, top))
+    cand = ids.take(idx)
+    first = pc.is_null(cand) if cand.null_count else \
+        pc.equal(cand, pc.min(cand))
+    return idx[pc.index(first, True).as_py()].as_py()
+
+
+def _collected_walk(rows: DataFrame, cols: list[str], top_col: str,
+                    leaf_tip: bool, segmented) -> Walk:
+    """The shared body of the two canonical walks. `cols` is (id,
+    parent, height[, more]); the tip is the first row in tip order,
+    among the rows that are nobody's parent when `leaf_tip`. Above the
+    collect cap `segmented()` gives the rows, with a run-record note."""
+    from .incremental import WALK_COLLECT_CAP
+
+    t = collect_bounded(rows.select(*cols), WALK_COLLECT_CAP)
+    if t is None:
+        spans.note("walk_collect_cap", f"more than {WALK_COLLECT_CAP} "
+                   "rows; distributed segmented walk")
+        return Walk(segmented(), None)
+    ids, parents, heights = (t[c].combine_chunks() for c in cols[:3])
+    leaf = pc.invert(pc.is_in(ids, value_set=parents, skip_nulls=True)) \
+        if leaf_tip else None
+    tip = _first_row(ids, heights, leaf)
+    if tip is None:
+        # no tip (an empty table, or only cycles): the rows as they are
+        return Walk(rows, pc.max(t[top_col]).as_py())
+    path = walk_rows(ids, parents, tip)
+    top = pc.max(t[top_col].combine_chunks().take(path)).as_py() \
+        if path else None
+    return Walk(keep_members(rows, ids, path, cols[0]), top)
+
+
+def snapshots_walk(snapshots: DataFrame) -> Walk:
     """SURVEY F1+F2: pox-valid snapshots on the canonical burnchain
-    fork, anchored at the max-height pox-valid snapshot and walked via
-    (burn_header_hash <- parent_burn_header_hash).
+    fork, anchored at the max-height pox-valid snapshot (ties: lowest
+    hash) and walked via (burn_header_hash <- parent_burn_header_hash).
+    `top` is the max stacks_block_height on the chain.
 
     Matches the reference's sequential keep-if-parent-of-previous filter
     (rpc.js:156-175) including its quirks: pox-invalid rows never enter
     the chain (F1 first), duplicate heights collapse to the row the
     hash chain actually links through, and the walk stops if the chain
-    breaks (missing or pox-invalid parent).
-    """
+    breaks (missing or pox-invalid parent)."""
     valid = snapshots.filter(F.col("pox_valid") != 0)
+    return _collected_walk(
+        valid, ["burn_header_hash", "parent_burn_header_hash",
+                "block_height", "stacks_block_height"],
+        "stacks_block_height", leaf_tip=False,
+        segmented=lambda: _snapshots_segmented(valid))
+
+
+def stacks_walk(headers: DataFrame) -> Walk:
+    """SURVEY J9/O-R2: block_headers rows on the canonical Stacks fork,
+    the ancestors of the deepest tip (rpc.js:277-309; the tip as in
+    `deepest_tip`). `top` is the max block_height on the chain."""
+    return _collected_walk(
+        headers, ["block_hash", "parent_block", "block_height"],
+        "block_height", leaf_tip=True,
+        segmented=lambda: _stacks_segmented(headers))
+
+
+def canonical_snapshots(snapshots: DataFrame) -> DataFrame:
+    """The canonical burnchain rows (see `snapshots_walk`)."""
+    return snapshots_walk(snapshots).rows
+
+
+def canonical_stacks_chain(headers: DataFrame) -> DataFrame:
+    """The canonical Stacks fork's headers (see `stacks_walk`)."""
+    return stacks_walk(headers).rows
+
+
+def _snapshots_segmented(valid: DataFrame) -> DataFrame:
     tip = (
         valid.orderBy(F.desc("block_height"), F.col("burn_header_hash"))
         .limit(1)
@@ -421,9 +601,7 @@ def canonical_snapshots(snapshots: DataFrame) -> DataFrame:
     return valid.join(members, "burn_header_hash")
 
 
-def canonical_stacks_chain(headers: DataFrame) -> DataFrame:
-    """SURVEY J9/O-R2: block_headers rows on the canonical Stacks fork
-    (ancestors of the deepest tip, rpc.js:277-309)."""
+def _stacks_segmented(headers: DataFrame) -> DataFrame:
     tip = deepest_tip(headers).collect()
     if not tip:
         return headers

@@ -23,16 +23,16 @@ burn_blocks_with_feeds' docstring; the staging feed additionally powers
 the ST6 sync gate (serving.py).
 
 Every join is an equi-join Catalyst can pick a strategy for: leader_keys
-and the chain-membership sets are broadcast (small dims), the
-commits⋈snapshots join shuffles on burn_header_hash (uniform — hashes).
-The only sequential piece, fork selection, lives in chain.py as a
-pointer-doubling walk.
+and the fork sets are broadcast (small dims), the commits⋈snapshots
+join shuffles on burn_header_hash (uniform — hashes). The only
+sequential piece, fork selection, lives in chain.py: a driver walk over
+one bounded Arrow collect of each chain's parent pointers, handing
+back the non-canonical ids for a broadcast anti-join.
 
 Scale notes (100 TB): the A2 lag-delta runs over the *canonical chain*,
-which is one row per burn block — even a decade of Bitcoin blocks is
-<1M rows, so the single-partition window is bounded by chain physics,
-not data scale. Commits/payments/headers (the big tables) never pass
-through an unpartitioned window.
+one row per burn block, as a left equi-join onto each row's parent row
+(with_actual_burn) — no window at all. Commits/payments/headers (the
+big tables) never pass through an unpartitioned window.
 """
 
 from __future__ import annotations
@@ -40,8 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from . import spans
-from .chain import canonical_snapshots, canonical_stacks_chain
+from . import chain, spans
 
 # reference constants: bonus era ends at stacks height 8387
 # (rpc.js:303-304); STX block rewards 2466 (bonus) / 1000 (normal) and
@@ -73,40 +72,26 @@ def with_actual_burn(canon: DataFrame,
     """A2 lag-delta over a canonical-chain frame: `total_burn` in the
     source is a *cumulative* counter (rpc.js:250-252); per-block burn
     is the difference from the previous canonical block
-    (`first_default` seeds the first row — 0 from genesis).
+    (`first_default` seeds a row whose parent is not in `canon` — 0
+    from genesis).
 
-    Scale shape (round-9 VERDICT #1): the lag runs through
-    operators/scalable.global_lag — shard-local window + an O(shards)
-    boundary patch — not a single-partition Window.orderBy over full
-    history, which was the one per-executor serialization point left
-    in the flagship E1 DAG. block_height is unique on a canonical
-    chain (duplicate heights collapse in the F2 walk), so it is a
-    total order. Callers pass a MATERIALIZED canon (checkpointed /
-    cached): global_lag samples range boundaries at plan-build time,
-    so an un-materialized walk upstream would re-execute per sampling
-    job."""
-    from .operators.scalable import global_lag
-
-    lagged = global_lag(canon, [F.col("block_height")],
-                        F.col("total_burn"), out_col="_prev_burn")
+    Precondition: `canon` is ONE parent-pointer chain — each
+    burn_header_hash once, heights strictly decreasing along
+    parent_burn_header_hash — as the canonical walk leaves it. On such
+    a chain the height-ordered predecessor of a row IS its parent row,
+    so the lag is a left equi-join onto the parent (partitioned, no
+    window, no sampling job). Off-chain input (a forest, a duplicated
+    id) gets a different answer from an ordered lag. The subtraction
+    stays a Spark expression so `actual_burn` keeps its decimal type."""
+    prev = canon.select(F.col("burn_header_hash").alias("_parent"),
+                        F.col("total_burn").alias("_prev_burn"))
+    lagged = canon.join(
+        prev, F.col("parent_burn_header_hash") == F.col("_parent"), "left")
     return lagged.withColumn(
         "actual_burn",
         F.col("total_burn")
         - F.coalesce(F.col("_prev_burn"), F.lit(first_default)),
-    ).drop("_prev_burn")
-
-
-def snapshots_with_actual_burn(snapshots: DataFrame) -> DataFrame:
-    """Canonical snapshots + A2 lag-delta (see with_actual_burn). The
-    walk output is checkpointed here (one row per burn block) so the
-    lag's boundary sampling reads materialized blocks instead of
-    re-running the walk. Lazy (round-14): the sampling's FIRST job
-    (the approx-distinct probe) materializes the checkpoint as a side
-    effect — the eager form paid a dedicated materialization job for
-    the same single pass; the second sampling job and every later
-    consumer read the populated blocks either way."""
-    canon = _ckpt(canonical_snapshots(snapshots), eager=False)
-    return with_actual_burn(canon)
+    ).drop("_parent", "_prev_burn")
 
 
 def burn_blocks_with_feeds(snapshots_canon: DataFrame,
@@ -206,13 +191,13 @@ def canonical_winners(headers: DataFrame, snapshots_canon: DataFrame,
     `chain_full` (round-13): a caller that already holds the full
     canonical stacks chain (prepare() materializes it once for the
     whole refresh) passes it here so the walk is not re-run."""
-    chain = (chain_full if chain_full is not None
-             else canonical_stacks_chain(headers)).select(
+    stacks = (chain_full if chain_full is not None
+              else chain.canonical_stacks_chain(headers)).select(
         "burn_header_hash",
         F.col("block_height").alias("stacks_height"),
     )
     winners = enriched.filter(F.col("is_winner"))
-    return winners.join(F.broadcast(chain), "burn_header_hash")
+    return winners.join(F.broadcast(stacks), "burn_header_hash")
 
 
 def actual_wins(canon_winners: DataFrame,
@@ -232,46 +217,45 @@ def prepare(tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
 
     The reference builds its hash indexes once per update() call
     (rpc.js:77-90) and every output reads them; the Spark analog
-    materializes the canonical chain (small: one row per burn block —
-    localCheckpoint also truncates the walk's iterative lineage) and
+    materializes the canonical chains (small: one row per block) and
     caches the enriched commits that all three gold tables consume.
 
-    Round-13: the burnchain walk (snapshots) and the Stacks-chain walk
-    (headers) are INDEPENDENT, so they run concurrently from a
-    two-thread pool (guide §2.6 — each walk has serial driver phases,
-    tip pick / bucket stitch, during which the other walk's jobs fill
-    the idle executors). The materialized stacks chain is returned
-    under "stacks_chain" so refresh callers reuse it for the history
-    gold write instead of re-running the walk (it used to be walked
-    TWICE per cold refresh: once inside canonical_winners, once for
-    wstacks)."""
+    The burnchain walk (snapshots) and the Stacks-chain walk (headers)
+    are independent, so they run concurrently from a two-thread pool:
+    each is a bounded collect, a driver walk and a checkpoint, and the
+    other walk's jobs fill the cores while one walks on the driver.
+    The materialized stacks chain is returned under "stacks_chain" so
+    refresh callers reuse it for the history gold write, and each
+    walk's tip height rides along ("tip_stacks": the max
+    stacks_block_height on the burn chain, "tip_headers": the max
+    block_height on the Stacks chain; None when a walk ran
+    distributed) so the refresh needs no aggregate job for them. The
+    snap checkpoint is LAZY: the winners build below is the refresh's
+    first action over snap and materializes it inside a job it runs
+    anyway."""
     from concurrent.futures import ThreadPoolExecutor
 
-    # round-14 (VERDICT #5): the snap critical path used to pay TWO
-    # eager materializations — walk+ckpt inside
-    # snapshots_with_actual_burn, then a second full pass here to
-    # checkpoint the lag output. The second checkpoint is now LAZY:
-    # the winners build below is the refresh's first action over snap
-    # and materializes the lag blocks as a side effect of a job it
-    # runs anyway (the lag's boundary sampling still reads the walk's
-    # own materialized checkpoint, so no sampling job re-runs the
-    # walk). Later consumers (chain-state writes, partials, prune)
-    # read the populated blocks.
+    def walk_snap():
+        walk = chain.snapshots_walk(tables["snapshots"])
+        return _ckpt(with_actual_burn(walk.rows), eager=False), walk.top
+
+    def walk_stacks():
+        walk = chain.stacks_walk(tables["block_headers"])
+        return _ckpt(walk.rows), walk.top
+
     with ThreadPoolExecutor(max_workers=2) as pool:
-        f_snap = pool.submit(spans.inherit(
-            lambda: _ckpt(snapshots_with_actual_burn(tables["snapshots"]),
-                          eager=False)))
-        f_stacks = pool.submit(spans.inherit(
-            lambda: _ckpt(canonical_stacks_chain(tables["block_headers"]))))
-        snap = f_snap.result()
-        stacks_chain = f_stacks.result()
+        f_snap = pool.submit(spans.inherit(walk_snap))
+        f_stacks = pool.submit(spans.inherit(walk_stacks))
+        snap, tip_stacks = f_snap.result()
+        stacks_chain, tip_headers = f_stacks.result()
     enriched = commits_enriched(
         snap, tables["block_commits"], tables["leader_keys"]).cache()
     winners = _ckpt(
         canonical_winners(tables["block_headers"], snap, enriched,
                           chain_full=stacks_chain))
     return {"snap": snap, "enriched": enriched, "winners": winners,
-            "stacks_chain": stacks_chain}
+            "stacks_chain": stacks_chain, "tip_stacks": tip_stacks,
+            "tip_headers": tip_headers}
 
 
 def miner_info(tables: dict[str, DataFrame],

@@ -48,8 +48,10 @@ HEIGHTS_PER_BUCKET = 1000
 # members union (round-10 ADVICE).
 STATE_LAYOUT_VERSION = 2
 
-# hard ceiling on the driver-side window-walk collect regardless of
-# reorg_depth: above this the tick uses the distributed segmented walk
+# hard ceiling on every driver-side walk collect: the tick's window
+# (regardless of reorg_depth) and each full-history canonical walk
+# (chain.snapshots_walk / stacks_walk); above it they use the
+# distributed segmented walk
 WALK_COLLECT_CAP = 1_000_000
 
 
@@ -184,8 +186,15 @@ def _window_chain_state(spark: SparkSession, tables: dict[str, DataFrame],
 
     Returns {'wchain', 'wstacks' (window rows joined to their walk
     membership, lazily checkpointed), 'floors', 'prev_total',
-    'aligned_floor', 'tip_stacks', 'stored_chain', 'stored_stacks'}."""
-    from .chain import chain_members_segmented
+    'aligned_floor', 'tip_stacks', 'tip_headers' (the max block_height
+    of wstacks; None after a distributed walk), 'stored_chain',
+    'stored_stacks'}."""
+    from types import SimpleNamespace
+
+    import pyarrow.compute as pc
+
+    from .chain import (chain_members_segmented, collect_bounded,
+                        keep_members, walk_rows)
     from .schemas import ZERO64
 
     # layout gate FIRST: state written on a different bucket axis must
@@ -243,7 +252,7 @@ def _window_chain_state(spark: SparkSession, tables: dict[str, DataFrame],
     # bound; a window above it (misconfigured reorg_depth) falls back
     # to the distributed engine, result-identical.
     cap = min(4 * reorg_depth + 20_000, WALK_COLLECT_CAP)
-    edge_rows = (
+    edges = collect_bounded(
         window.select(F.lit("burn").alias("side"),
                       F.col("burn_header_hash").alias("id"),
                       F.col("parent_burn_header_hash").alias("parent"),
@@ -252,33 +261,29 @@ def _window_chain_state(spark: SparkSession, tables: dict[str, DataFrame],
             wheaders.select(F.lit("stacks").alias("side"),
                             F.col("block_hash").alias("id"),
                             F.col("parent_block").alias("parent"),
-                            F.col("block_height").alias("h")))
-        .limit(cap + 1)
-    ).collect()
+                            F.col("block_height").alias("h"))), cap)
 
-    floors = {}
-    if len(edge_rows) <= cap:
-        from types import SimpleNamespace
-
-        # driver walk: follow parent pointers from each tip; the walk
-        # leaves the window exactly where the parent id is absent
-        member_dfs = {}
-        id_field = {"burn": "burn_header_hash", "stacks": "block_hash"}
-        for side in ("burn", "stacks"):
-            by_id = {r.id: r for r in edge_rows if r.side == side}
-            mem, cur, seen = [], tips[side].id, set()
-            while cur in by_id and cur not in seen:
-                seen.add(cur)
-                mem.append(by_id[cur])
-                cur = by_id[cur].parent
-            if not mem:
+    floors, tip_headers = {}, None
+    if edges is not None:
+        # driver walk from each tip (chain.walk_rows); the walk leaves
+        # the window exactly where the parent id is absent
+        kept = {}
+        for side, rows, id_col in (("burn", window, "burn_header_hash"),
+                                   ("stacks", wheaders, "block_hash")):
+            t = edges.filter(pc.equal(edges["side"], side))
+            ids, parents, h = (t[c].combine_chunks()
+                               for c in ("id", "parent", "h"))
+            at = pc.index(ids, tips[side].id).as_py()
+            path = walk_rows(ids, parents, at if at >= 0 else None)
+            if not path:
                 return None
-            floor_row = mem[-1]           # deepest = lowest height
-            floors[side] = SimpleNamespace(
-                parent=floor_row.parent, block_height=floor_row.h)
-            member_dfs[side] = F.broadcast(spark.createDataFrame(
-                [(r.id,) for r in mem], f"{id_field[side]} string"))
-        members, smembers = member_dfs["burn"], member_dfs["stacks"]
+            floors[side] = SimpleNamespace(         # deepest = lowest
+                parent=parents[path[-1]].as_py(),
+                block_height=h[path[-1]].as_py())
+            kept[side] = keep_members(rows, ids, path, id_col)
+            if side == "stacks":
+                tip_headers = pc.max(h.take(path)).as_py()
+        wchain, wstacks = kept["burn"], kept["stacks"]
     else:
         spans.note("window_walk_cap", f"more than {cap} window rows; "
                    "distributed segmented walk")
@@ -291,15 +296,15 @@ def _window_chain_state(spark: SparkSession, tables: dict[str, DataFrame],
             wheaders, tips["stacks"].id,
             id_col="block_hash", parent_col="parent_block",
             height_col="block_height")
+        wchain = window.join(members, "burn_header_hash")
+        wstacks = wheaders.join(smembers, "block_hash")
 
     # checkpoint the (small) windowed chains: lag-delta, enrichment
     # and the state write all consume them — without this the walk
     # join re-executes once per downstream action. LAZY: the first
     # consumer materializes it inside its own job (no extra barrier).
-    wchain = window.join(members, "burn_header_hash") \
-        .localCheckpoint(eager=False)
-    wstacks = wheaders.join(smembers, "block_hash") \
-        .localCheckpoint(eager=False)
+    wchain = wchain.localCheckpoint(eager=False)
+    wstacks = wstacks.localCheckpoint(eager=False)
 
     if not floors:
         # distributed-walk fallback: probe both window floors, one job
@@ -345,8 +350,8 @@ def _window_chain_state(spark: SparkSession, tables: dict[str, DataFrame],
             return None
     return {"wchain": wchain, "wstacks": wstacks, "floors": floors,
             "prev_total": prev_total, "aligned_floor": aligned_floor,
-            "tip_stacks": tip_stacks, "stored_chain": stored_chain,
-            "stored_stacks": stored_stacks}
+            "tip_stacks": tip_stacks, "tip_headers": tip_headers,
+            "stored_chain": stored_chain, "stored_stacks": stored_stacks}
 
 
 def _windowed_prepare(spark: SparkSession, tables: dict[str, DataFrame],
@@ -397,7 +402,8 @@ def _windowed_prepare(spark: SparkSession, tables: dict[str, DataFrame],
     )
     return {"snap": snap, "enriched": enriched, "winners": winners,
             "wchain": wchain, "wstacks": wstacks,
-            "aligned_floor": aligned_floor, "tip_stacks": tip_stacks}
+            "aligned_floor": aligned_floor, "tip_stacks": tip_stacks,
+            "tip_headers": st["tip_headers"]}
 
 
 def prepare_full_with_gold(spark: SparkSession,
@@ -446,19 +452,18 @@ def _materialize_history(tables: dict[str, DataFrame], st: dict) -> dict:
         .unionByName(st["wchain"].select("burn_header_hash"))
     )
     valid = tables["snapshots"].filter(F.col("pox_valid") != 0)
-    # the A2 lag-delta over FULL history rides the sharded global_lag
-    # (core.with_actual_burn) — the warm path must not reintroduce the
-    # single-partition window the cold path removed (round-9 VERDICT
-    # #1). Lazy-checkpoint the membership join first: the lag's
-    # boundary sampling is the first consumer and materializes it once.
+    # the A2 lag-delta over FULL history is the cold path's parent-row
+    # join (core.with_actual_burn): stored history plus the verified
+    # window is one parent-pointer chain. Both sides of that join read
+    # the membership join, so it is lazily checkpointed: the first job
+    # over it (the lag's build side) materializes it once.
     joined = core._ckpt(
         valid.join(members, "burn_header_hash"), eager=False)
     # lazy (round-14, VERDICT #9): the winners build below is the
     # warm refresh's first action over snap and materializes the lag
     # blocks inside a job it runs anyway — the eager form paid one
     # extra full pass (history_materialize carried a dedicated
-    # lag+checkpoint job). The lag's boundary sampling reads `joined`,
-    # whose own lazy checkpoint the first sampling job populates.
+    # lag+checkpoint job).
     snap = core._ckpt(core.with_actual_burn(joined), eager=False)
     commits = tables["block_commits"]
     if "hbucket" in commits.columns:
@@ -481,7 +486,22 @@ def _materialize_history(tables: dict[str, DataFrame], st: dict) -> dict:
     )
     return {"snap": snap, "enriched": enriched, "winners": winners,
             "wchain": st["wchain"], "wstacks": st["wstacks"],
-            "aligned_floor": floor, "tip_stacks": st["tip_stacks"]}
+            "aligned_floor": floor, "tip_stacks": st["tip_stacks"],
+            "tip_headers": st["tip_headers"]}
+
+
+def chain_tips(prepared: dict) -> tuple[int | None, int | None]:
+    """(max stacks_block_height of the burn chain, max block_height of
+    the Stacks chain) of a prepared dict: the tips its walks already
+    know, or one 1-row aggregate job each after a distributed walk."""
+    tip = prepared.get("tip_stacks")
+    if tip is None:
+        tip = prepared["snap"].agg(
+            F.max("stacks_block_height")).collect()[0][0]
+    stip = prepared.get("tip_headers")
+    if stip is None:
+        stip = prepared["wstacks"].agg(F.max("block_height")).collect()[0][0]
+    return tip, stip
 
 
 def chain_state_frames(prepared: dict) -> tuple[DataFrame, DataFrame]:
@@ -543,12 +563,9 @@ def incremental_refresh(spark: SparkSession, tables: dict[str, DataFrame],
     spans.mode(mode)
 
     try:
-        # the windowed tick already knows its tip from the probe batch;
-        # only the full path pays the extra 1-row aggregate job
-        tip = prepared.get("tip_stacks")
-        if tip is None:
-            tip = prepared["snap"].agg(
-                F.max("stacks_block_height").alias("t")).collect()[0].t
+        # the walks already know both tips (aggregate jobs only after
+        # a distributed walk)
+        tip, stip = chain_tips(prepared)
         lo = prepared.get("aligned_floor", 0) if mode == "windowed" else 0
         lo_bucket = lo // HEIGHTS_PER_BUCKET
         affected = F.col("hbucket") >= lo_bucket
@@ -599,8 +616,6 @@ def incremental_refresh(spark: SparkSession, tables: dict[str, DataFrame],
             # height; tables keyed by the STACKS HEADER chain
             # (mining_info winners, canonical_stacks) prune above the
             # header tip, which can sit below the snapshot-side height.
-            stip = prepared["wstacks"].agg(
-                F.max("block_height")).collect()[0][0]
             tip_bucket = (tip or 0) // HEIGHTS_PER_BUCKET
             stip_bucket = (stip or 0) // HEIGHTS_PER_BUCKET
             for p, b in (("mining_info", stip_bucket),

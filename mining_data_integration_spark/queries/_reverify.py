@@ -62,6 +62,7 @@ _REVERIFY_FIRST = (
     "st14_stream_ann_delete",
     "st16_stream_graph_delete",
     "st15_stream_ann_append",
+    "w6_lag_delta",
     "w16_funnel",
     "w26_linear_interpolation",
     "st9_stream_ingest_dedup",
@@ -75,5 +76,4 @@ _REVERIFY_FIRST = (
     "dp5_sequence_pack",
     "dp8_global_shuffle",
     "dp14_length_buckets",
-    "dp13_token_budget_mix",
 )

@@ -125,9 +125,10 @@ def w6_lag_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cumulative series first (as the source data does), then delta.
 
     Round 10: both global-order windows ride the sharded two-phase
-    engines (operators/scalable.global_cumsum / global_lag) — the same
-    machinery core.with_actual_burn uses for the E1 A2 path — so the
+    engines (operators/scalable.global_cumsum / global_lag), so the
     only single-partition work left is the O(shards) boundary tables.
+    (The E1 A2 path needs no ordered lag: on one parent-pointer chain
+    the predecessor is the parent row, see core.with_actual_burn.)
     The day grain bounds this fixture anyway; the point is that the
     registered query demonstrates the scale-safe shape."""
     from ..operators.scalable import global_cumsum, global_lag

@@ -286,16 +286,11 @@ def _write_gold_with_state(tables: dict[str, DataFrame], gold_dir: str,
     # output rewrite needs no pruning). Two bounds, two axes: the
     # snapshot-side tip bounds block_info/canonical_chain; the stacks
     # HEADER tip (which can sit below it) bounds mining_info/
-    # canonical_stacks. Bounded 1-row aggs.
-    from .incremental import _prune_buckets_above
+    # canonical_stacks. The walks already know both tips.
+    from .incremental import _prune_buckets_above, chain_tips
 
     with spans.span("gw_prune"):
-        tip = prepared.get("tip_stacks")
-        if tip is None:
-            tip = prepared["snap"].agg(
-                F.max("stacks_block_height")).collect()[0][0]
-        stip = prepared["wstacks"].agg(
-            F.max("block_height")).collect()[0][0]
+        tip, stip = chain_tips(prepared)
         tip_bucket = (tip or 0) // HEIGHTS_PER_BUCKET
         stip_bucket = (stip or 0) // HEIGHTS_PER_BUCKET
         targets = [("canonical_chain", tip_bucket),

@@ -7,6 +7,7 @@ J9 fork walk, A3 actual wins, A6 block rollup, F12 mining_info."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from mining_data_integration_spark import core, fixtures
 from mining_data_integration_spark.chain import (
@@ -285,6 +286,167 @@ class TestChainWalk:
         assert got == {f"n{i:04d}" for i in range(n)}
 
 
+Z = "0" * 64
+
+
+def _chain(n, lo=0, prefix="n"):
+    """(id, parent, height, pox_valid) rows of a chain prefix{lo}..{n-1},
+    each the parent of the next; the first row's parent is ZERO64."""
+    return [(f"{prefix}{h:03d}", f"{prefix}{h - 1:03d}" if h > lo else Z,
+             h, 1) for h in range(lo, n)]
+
+
+def _with(rows, **changed):
+    """`rows` with the parent of the named ids replaced."""
+    return [(i, changed.get(i, p), h, v) for i, p, h, v in rows]
+
+
+# every input the collected walk must agree with pointer doubling and
+# the distributed (segmented) walk on: (id, parent, height, pox_valid)
+WALK_CASES = {
+    "pox_invalid_and_dead_fork_twins": _chain(30) + [
+        ("x010", "n009", 10, 0),          # pox-invalid twin ...
+        ("x011", "x010", 11, 1),          # ... with a valid child
+        ("d015", "n014", 15, 1),          # dead fork twin
+        ("d016", "d015", 16, 1),
+        ("x030", "n029", 30, 0)],         # pox-invalid row above the tip
+    "tie_at_tip_height": _chain(30) + [("a029", "n028", 29, 1)],
+    "missing_parent": _with(_chain(30), n012="gone"),
+    # heights 0..10 and 200..210 with n010 hidden behind an in-bucket
+    # fork child and a bucket-top decoy: the segmented walk's fallback
+    "height_gap": _chain(11) + _chain(211, lo=200, prefix="m")[1:] + [
+        ("m200", "n010", 200, 1), ("fork_g", "n010", 11, 1),
+        ("fork_f", "nowhere", 15, 1)],
+    "zero64_genesis": _chain(20) + [(Z, None, -1, 1)],
+    "cycle": _with(_chain(20), n003="n007") + [
+        ("c001", "c002", 5, 1), ("c002", "c001", 6, 1)],
+    "null_parent_or_height": _with(_chain(20), n005=None) + [
+        ("f007", "n006", None, 1)],
+    "null_height_on_chain": [(i, p, None if i == "n018" else h, v)
+                             for i, p, h, v in _chain(20)],
+    "exact_duplicate_id": _chain(20) + [("n004", "n003", 4, 1)],
+    "empty": [],
+}
+
+
+class TestCollectedWalk:
+    """The collected walk (one bounded Arrow collect, a driver walk and
+    a broadcast anti-join of the non-members) against the general
+    definition (pointer doubling from the same tip) and against the
+    distributed walk that runs above the collect cap."""
+
+    SNAP = ("burn_header_hash string, parent_burn_header_hash string, "
+            "block_height long, pox_valid int, stacks_block_height long")
+    HEAD = "block_hash string, parent_block string, block_height long"
+
+    @staticmethod
+    def _rows(df):
+        from collections import Counter
+        return df.columns, Counter(tuple(r) for r in df.collect())
+
+    def _sides(self, spark, rows):
+        snaps = spark.createDataFrame(
+            [(i, p, h, v, h) for i, p, h, v in rows], self.SNAP)
+        heads = spark.createDataFrame(
+            [(i, p, h) for i, p, h, _ in rows], self.HEAD)
+        valid = snaps.filter("pox_valid != 0")
+        burn_tip = valid.orderBy(F.desc("block_height"),
+                                 "burn_header_hash").limit(1).collect()
+        return (
+            (canonical_snapshots, snaps, valid, burn_tip,
+             "burn_header_hash", "parent_burn_header_hash"),
+            (canonical_stacks_chain, heads, heads,
+             deepest_tip(heads).collect(), "block_hash", "parent_block"))
+
+    @pytest.mark.parametrize("case", sorted(WALK_CASES))
+    def test_equals_doubling_and_distributed(self, spark, monkeypatch,
+                                             case):
+        from mining_data_integration_spark import incremental
+
+        for walk, table, rows, tip, id_col, parent_col in self._sides(
+                spark, WALK_CASES[case]):
+            got = self._rows(walk(table))
+            want = rows
+            if tip:
+                tips = spark.createDataFrame([(tip[0][0],)],
+                                             f"{id_col} string")
+                want = rows.join(chain_members(rows, tips, id_col,
+                                               parent_col), id_col)
+            assert got == self._rows(want), (case, id_col)
+            with monkeypatch.context() as m:
+                m.setattr(incremental, "WALK_COLLECT_CAP", 0)
+                assert self._rows(walk(table)) == got, (case, id_col)
+
+    def test_expected_members(self, spark):
+        """Spot checks of the definition on the cases above."""
+        def ids(case, side=0):
+            walk, table = self._sides(spark, WALK_CASES[case])[side][:2]
+            return sorted(r[0] for r in walk(table).collect())
+
+        assert ids("tie_at_tip_height")[:2] == ["a029", "n000"]
+        assert ids("missing_parent") == [f"n{h:03d}" for h in range(12, 30)]
+        assert ids("cycle") == [f"n{h:03d}" for h in range(3, 20)]
+        assert ids("cycle", side=1) == [f"n{h:03d}" for h in range(3, 20)]
+        assert ids("null_parent_or_height") == \
+            [f"n{h:03d}" for h in range(5, 20)]
+        assert Z not in ids("zero64_genesis", side=1)
+        assert ids("exact_duplicate_id").count("n004") == 2
+
+    def test_conflicting_duplicate_id_names_it(self, spark):
+        rows = _chain(20) + [("n006", "other", 6, 1)]
+        for walk, table, *_ in self._sides(spark, rows):
+            with pytest.raises(ValueError, match="n006"):
+                walk(table)
+
+    def test_walk_tips_are_the_max_definitions(self, spark):
+        """`top` of each walk is max(stacks_block_height) on the burn
+        chain and max(block_height) on the Stacks chain — the values
+        the refresh's prune step used to aggregate."""
+        from mining_data_integration_spark.chain import (snapshots_walk,
+                                                         stacks_walk)
+
+        tables = fixtures.mining_tables(spark)
+        for walk, src, col in (
+                (snapshots_walk, tables["snapshots"], "stacks_block_height"),
+                (stacks_walk, tables["block_headers"], "block_height")):
+            w = walk(src)
+            assert w.top == w.rows.agg(F.max(col)).collect()[0][0]
+
+
+class TestActualBurnLag:
+    """with_actual_burn's parent-row join equals the ordered-lag
+    formulation (operators/scalable.global_lag over block_height) on a
+    canonical chain, values and types."""
+
+    @staticmethod
+    def _by_lag(canon):
+        from mining_data_integration_spark.operators.scalable import (
+            global_lag,
+        )
+        lagged = global_lag(canon, [F.col("block_height")],
+                            F.col("total_burn"), out_col="_prev_burn")
+        return lagged.withColumn(
+            "actual_burn", F.col("total_burn")
+            - F.coalesce(F.col("_prev_burn"), F.lit(0))).drop("_prev_burn")
+
+    def _check(self, canon):
+        got, want = core.with_actual_burn(canon), self._by_lag(canon)
+        assert got.dtypes == want.dtypes
+        assert sorted(got.collect()) == sorted(want.collect())
+
+    def test_golden_fixture(self, tables):
+        self._check(canonical_snapshots(tables["snapshots"]))
+
+    def test_synth_world(self, spark):
+        from mining_data_integration_spark.synthworld import (
+            synth_mining_world,
+        )
+        world = synth_mining_world(spark, 3000, 2)
+        canon = canonical_snapshots(world["snapshots"])
+        assert canon.count() == 3000
+        self._check(canon)
+
+
 class TestMinerInfo:
     def test_golden(self, tables):
         got = rows_by(core.miner_info(tables, bonus_height=3), "stx_address")
@@ -310,7 +472,8 @@ class TestMinerInfo:
         assert int(got[None]["total_win"]) == 0
 
     def test_actual_burn_lag_delta(self, tables):
-        snap = core.snapshots_with_actual_burn(tables["snapshots"])
+        snap = core.with_actual_burn(
+            canonical_snapshots(tables["snapshots"]))
         got = {r.block_height: int(r.actual_burn) for r in snap.collect()}
         assert got == {100: 1000, 101: 2000, 102: 3000, 103: 4000,
                        104: 5000, 105: 0, 106: 6000}
@@ -318,7 +481,8 @@ class TestMinerInfo:
     def test_total_burn_attribution(self, tables):
         # A1's total_burn = sum of the commit's block's actual_burn
         # (rpc.js:266) — computed in stats, excluded from F11 projection
-        snap = core.snapshots_with_actual_burn(tables["snapshots"])
+        snap = core.with_actual_burn(
+            canonical_snapshots(tables["snapshots"]))
         enriched = core.commits_enriched(
             snap, tables["block_commits"], tables["leader_keys"])
         got = rows_by(core.miner_stats(enriched), "leader_key_address")
@@ -346,6 +510,15 @@ class TestMiningAndBlockInfo:
         assert [r.stx_address for r in rows] == [A, B, C, B, A, A]
         assert [int(r.burn_fee) for r in rows] == [
             3300, 2600, 2100, 1700, 1100, 600]
+
+    def test_canonical_winners_walks_without_a_chain(self, tables):
+        """Without `chain_full`, canonical_winners walks the headers
+        itself and gets prepare()'s winners."""
+        p = core.prepare(tables)
+        got = core.canonical_winners(tables["block_headers"], p["snap"],
+                                     p["enriched"])
+        assert sorted(got.collect()) == sorted(p["winners"].collect())
+        p["enriched"].unpersist()
 
     def test_block_info_rollup(self, tables):
         got = rows_by(core.block_info(tables), "stacks_block_height")

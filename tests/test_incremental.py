@@ -410,6 +410,46 @@ class TestIncremental:
             want = canon_rows(builder(ext))
             assert got == want, f"{name} diverged on fallback walk"
 
+    def test_walk_collect_cap_gives_the_collected_frames(
+            self, spark, tables, tmp_path, monkeypatch):
+        """Above WALK_COLLECT_CAP (patched to 0) both canonical walks
+        run distributed: core.prepare's frames equal the collected
+        walks' (types included), the tips are left to the aggregate
+        jobs, and the refresh's run record names the fall-back."""
+        from mining_data_integration_spark.streaming import refresh_once
+
+        def frames(p):
+            return {k: (p[k].dtypes, canon_rows(p[k], drop=()))
+                    for k in ("snap", "stacks_chain", "enriched",
+                              "winners")}
+
+        collected = core.prepare(tables)
+        want = frames(collected)
+        collected["enriched"].unpersist()
+        assert (collected["tip_stacks"], collected["tip_headers"]) == (6, 5)
+
+        monkeypatch.setattr(incremental, "WALK_COLLECT_CAP", 0)
+        with spans.span("caller") as rec:
+            distributed = core.prepare(tables)
+        assert frames(distributed) == want
+        distributed["enriched"].unpersist()
+        assert distributed["tip_stacks"] is distributed["tip_headers"] \
+            is None
+        distributed["wstacks"] = distributed["stacks_chain"]  # as callers do
+        assert incremental.chain_tips(distributed) == (6, 5)
+        assert [f["kind"] for f in rec.record["fallbacks"]] == \
+            ["walk_collect_cap"] * 2
+
+        gold = str(tmp_path / "gold_cap")
+        with spans.span("caller") as rec:
+            assert refresh_once(tables, gold, reuse_gold=True) == "cold"
+        assert sorted(f["kind"] for f in rec.record["fallbacks"]) == \
+            ["cold_refresh", "walk_collect_cap", "walk_collect_cap"]
+        for name, builder in (("mining_info", core.mining_info),
+                              ("miner_info", core.miner_info)):
+            got = canon_rows(spark.read.parquet(f"{gold}/{name}"))
+            assert got == canon_rows(builder(tables)), name
+
     def test_stream_refresh_incremental_mode(self, spark, tables,
                                              tmp_path):
         """The streaming trigger in incremental mode bootstraps on the

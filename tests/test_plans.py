@@ -21,8 +21,9 @@ class TestCheckpointBlindSpot:
     """Round-9 VERDICT #2: core.prepare's eager localCheckpoint
     truncated lineage, so the plan audit could not see the A2
     single-partition window upstream of it. The fix is two-sided:
-    the E1 lag now rides the sharded global_lag, AND the audit builds
-    the DAG with SPARK_GRAFT_NO_CHECKPOINT=1 so nothing hides."""
+    the E1 lag has no global window (now a parent-row join), AND the
+    audit builds the DAG with SPARK_GRAFT_NO_CHECKPOINT=1 so nothing
+    hides."""
 
     def test_detector_blind_behind_checkpoint_sighted_with_flag(
             self, spark, monkeypatch):
@@ -50,32 +51,30 @@ class TestCheckpointBlindSpot:
     def test_e1_lag_is_sharded_in_the_pre_checkpoint_dag(
             self, spark, monkeypatch):
         """The A2 lag-delta in BOTH full-history preps must show no
-        data-sized global window in the un-truncated DAG: every
-        unpartitioned window may order only by the sharded engines'
-        _sc_pid (the O(shards) boundary table)."""
+        unpartitioned window in the un-truncated DAG: it is a join
+        onto each row's parent row."""
         from mining_data_integration_spark import core, fixtures
+        from mining_data_integration_spark.chain import canonical_snapshots
 
         monkeypatch.setenv("SPARK_GRAFT_NO_CHECKPOINT", "1")
         tables = fixtures.mining_tables(spark)
-        snap = core.snapshots_with_actual_burn(tables["snapshots"])
-        for o in plans.unpartitioned_window_orders(snap):
-            assert "_sc_pid" in o and "block_height" not in o, o
+        snap = core.with_actual_burn(
+            canonical_snapshots(tables["snapshots"]))
+        assert plans.unpartitioned_window_orders(snap) == []
         # with_actual_burn directly (the prepare_full_with_gold shape)
         direct = core.with_actual_burn(
             tables["snapshots"].filter("pox_valid != 0"))
-        for o in plans.unpartitioned_window_orders(direct):
-            assert "_sc_pid" in o and "block_height" not in o, o
+        assert plans.unpartitioned_window_orders(direct) == []
 
     def test_e1_registered_queries_have_only_shard_windows(
             self, spark, monkeypatch, queries):
         """The registered flagship queries, built exactly as the plan
-        audit builds them (pre-checkpoint DAG): every unpartitioned
-        window is the sharded engines' O(shards) boundary table."""
+        audit builds them (pre-checkpoint DAG): no unpartitioned
+        window at all."""
         monkeypatch.setenv("SPARK_GRAFT_NO_CHECKPOINT", "1")
         for name in ("e1_miner_info", "e1_mining_info"):
             df = queries[name](spark, SF)
-            for o in plans.unpartitioned_window_orders(df):
-                assert "_sc_pid" in o, (name, o)
+            assert plans.unpartitioned_window_orders(df) == [], name
 
 
 class TestPlanProperties:

@@ -15,11 +15,13 @@ forest whose canonical membership is a WHERE clause —
                   non-unique across the forest (the segmented engine's
                   stress case) while still monotone along every path
 
-so ancestors-of-tip == exactly the rows WHERE id LIKE 'b%'. All three
-walk engines (segmented, WITH RECURSIVE, pointer doubling) plus the
-auto front door run against the parquet table, and each result is
-compared row-for-row (sorted-hash) against DuckDB evaluating the
-closed-form predicate on the SAME file.
+so ancestors-of-tip == exactly the rows WHERE id LIKE 'b%'. Every
+walk engine — the collected driver walk of the canonical refresh
+walks (one bounded Arrow collect, `walk_rows`, `keep_members`),
+segmented, WITH RECURSIVE and pointer doubling — plus the auto front
+door runs against the parquet table, and each result is compared
+row-for-row (sorted-hash) against DuckDB evaluating the closed-form
+predicate on the SAME file.
 
 Usage: python tools/check_walk_scale.py [n_total_rows]  (default 150000)
 """
@@ -62,6 +64,7 @@ def synth_rows(n_total: int) -> tuple[list[tuple[str, str, int]], int]:
 
 def main() -> int:
     import duckdb
+    import pyarrow.compute as pc
 
     from mining_data_integration_spark import chain as C
     from mining_data_integration_spark.session import get_spark
@@ -89,7 +92,15 @@ def main() -> int:
           f"(expect {main_len}), hash {want_hash[:16]}")
     assert len(want_ids) == main_len
 
+    def collected():
+        t = C.collect_bounded(edges.select("id", "parent"), len(rows))
+        ids = t["id"].combine_chunks()
+        tip_at = pc.index(ids, tip).as_py()
+        path = C.walk_rows(ids, t["parent"].combine_chunks(), tip_at)
+        return C.keep_members(edges, ids, path, "id")
+
     engines = {
+        "collected": collected,
         "segmented": lambda: C.chain_members_segmented(
             edges, tip, "id", "parent", "h"),
         "doubling": lambda: C.chain_members(

@@ -230,19 +230,10 @@ ALLOWED: dict[str, dict[str, str]] = {
                       "global_rank in round 4)",
         "w15_range_frame": "single-key demo series (bounded fixture); "
                            "partitioned variant is w2/w16",
-        "e1_miner_info": "O(shards) boundary table of the sharded A2 "
-                         "global_lag — visible only now that the audit "
-                         "builds the pre-checkpoint DAG (round-10 fix); "
-                         "the data-sized global window it replaced is "
-                         "gone (window orders pinned in "
-                         "tests/test_plans.py)",
-        "e1_mining_info": "O(shards) boundary table of the sharded A2 "
-                          "global_lag (same as e1_miner_info)",
         "w6_lag_delta": "per-shard boundary tables (O(shards) rows) of "
-                        "the sharded global_cumsum/global_lag engines — "
-                        "the same machinery core.with_actual_burn runs "
-                        "for the E1 A2 delta (narrowed in round 10: the "
-                        "data-sized global window is gone)",
+                        "the sharded global_cumsum/global_lag engines "
+                        "(narrowed in round 10: the data-sized global "
+                        "window is gone)",
         "e2_burn_fee_area": "trailing-1000 slice upstream bounds rows",
         "w1_trailing_mean": "trailing-20 slice",
         "w3_keep_last": "trailing slice upstream",

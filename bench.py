@@ -86,8 +86,8 @@ def e1_refresh_bench(spark, n_blocks: int, cpb: int = 10) -> dict:
     INCLUDING writes, so the three numbers compare like-for-like.
     Each timed call runs inside a root span, and its stage breakdown
     is spans.stages() of the run record the refresh itself produces
-    (cold: walk/gold_writes and the gw_* writers; warm adds
-    window_walk/history_materialize; tick: walk/gold_writes/merge).
+    (cold: walk/gold_writes and the gw_* writers; warm and tick:
+    walk/gold_writes/merge, the same windowed path).
     tools/bench_e1.py is the standalone/larger-scale variant."""
     import shutil
 
@@ -155,10 +155,9 @@ def e1_refresh_bench(spark, n_blocks: int, cpb: int = 10) -> dict:
     tick, tick_stages, r = tick_runs[1]
     assert r["mode"] == "windowed", r  # the tick must not silently go full
 
-    # round-9: WARM full refresh — the full-history outputs, but the
-    # walk reuses the persisted canonical chain (walk = O(reorg
-    # window) instead of from-genesis). Cold bootstrap, then
-    # median-of-3 warm runs with stage breakdowns.
+    # WARM full refresh: the windowed tick over the state the cold
+    # bootstrap maintained (O(reorg window), not from-genesis). Cold
+    # bootstrap, then median-of-3 warm runs with stage breakdowns.
     gold_w = "/tmp/bench_e1_gold_warm"
     shutil.rmtree(gold_w, ignore_errors=True)
     refresh_once(tables, gold_w, reuse_gold=True)

@@ -23,6 +23,12 @@ dynamic partition overwrite:
 
 Every write stays atomic per partition; a crash mid-refresh leaves
 whole old partitions, never torn rows.
+
+The warm full refresh (`streaming.refresh_once(reuse_gold=True)` over
+a gold dir with boundary-verified chain state) is this same windowed
+tick: `_windowed_prepare` followed by `write_window`. Its cost is
+O(reorg window), not O(history); only its cold fallback re-derives
+history.
 """
 
 from __future__ import annotations
@@ -34,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import core, spans
+from .io import parquet_scan
 
 HEIGHTS_PER_BUCKET = 1000
 
@@ -44,8 +51,8 @@ HEIGHTS_PER_BUCKET = 1000
 # marker — fails the check and forces a COLD rebuild that deletes and
 # rewrites the state. Without the gate, dynamic partition overwrite
 # would rewrite only new-axis buckets and leave stale old-axis rows in
-# place, silently duplicating join keys in prepare_full_with_gold's
-# members union (round-10 ADVICE).
+# place, and a later window's boundary probe could anchor on a row of
+# the wrong axis (round-10 ADVICE).
 STATE_LAYOUT_VERSION = 2
 
 # hard ceiling on every driver-side walk collect: the tick's window
@@ -119,7 +126,8 @@ def miner_partials(prepared: dict[str, DataFrame],
 
 
 def merge_miner_partials(partials: DataFrame) -> DataFrame:
-    """Final per-miner merge -> the exact miner_info projection."""
+    """Final per-miner merge -> the exact miner_info projection, in no
+    particular order (the writer sorts its one partition)."""
     return (
         partials.groupBy("leader_key_address")
         .agg(F.sum("actual_win").alias("actual_win"),
@@ -132,8 +140,20 @@ def merge_miner_partials(partials: DataFrame) -> DataFrame:
             "actual_win", "actual_win_bonus",
             "total_win", "total_mined", "miner_burned",
         )
-        .orderBy("stx_address")
     )
+
+
+def write_merged_miner_info(spark: SparkSession, gold_dir: str) -> None:
+    """Fold every bucket's miner_partials into gold miner_info, sorted
+    by stx_address. O(miners) rows: one output file, not one per
+    shuffle task (the gold is re-read whole every serving call), and
+    the single partition sorts in place, so no range-sampling job.
+    The partials scan takes its schema from a footer (no inference
+    job)."""
+    merged = merge_miner_partials(
+        parquet_scan(spark, f"{gold_dir}/miner_partials"))
+    merged.coalesce(1).sortWithinPartitions("stx_address") \
+        .write.mode("overwrite").parquet(f"{gold_dir}/miner_info")
 
 
 def _state_layout_ok(gold_dir: str) -> bool:
@@ -175,20 +195,20 @@ def mark_state_layout(gold_dir: str) -> None:
 
 def _window_chain_state(spark: SparkSession, tables: dict[str, DataFrame],
                         gold_dir: str, reorg_depth: int) -> dict | None:
-    """Boundary-verified window chain state — the shared walk half of
-    both incremental ticks (_windowed_prepare) and warm full
-    refreshes (prepare_full_with_gold): probe the tips, walk ONLY the
-    last `reorg_depth` blocks of both chains, and verify each window
-    floor's parent against the persisted canonical state one height
-    below. Returns None when the anchor fails (no state yet, empty
-    window, or a reorg deeper than the window) — callers fall back
-    to the from-scratch walk.
+    """Boundary-verified window chain state, the walk half of
+    _windowed_prepare (incremental ticks and warm full refreshes):
+    probe the tips, walk ONLY the last `reorg_depth` blocks of both
+    chains, and verify each window floor's parent against the
+    persisted canonical state one height below. Returns None when the
+    anchor fails (no state yet, empty window, or a reorg deeper than
+    the window): callers fall back to the from-scratch walk. The
+    stored state is read only at floor - 1, with footer schemas
+    (io.parquet_scan), so it costs the boundary probe's one job.
 
     Returns {'wchain', 'wstacks' (window rows joined to their walk
     membership, lazily checkpointed), 'floors', 'prev_total',
     'aligned_floor', 'tip_stacks', 'tip_headers' (the max block_height
-    of wstacks; None after a distributed walk), 'stored_chain',
-    'stored_stacks'}."""
+    of wstacks; None after a distributed walk)}."""
     from types import SimpleNamespace
 
     import pyarrow.compute as pc
@@ -203,8 +223,8 @@ def _window_chain_state(spark: SparkSession, tables: dict[str, DataFrame],
     if not _state_layout_ok(gold_dir):
         return None
     try:
-        stored_chain = spark.read.parquet(f"{gold_dir}/canonical_chain")
-        stored_stacks = spark.read.parquet(f"{gold_dir}/canonical_stacks")
+        stored_chain = parquet_scan(spark, f"{gold_dir}/canonical_chain")
+        stored_stacks = parquet_scan(spark, f"{gold_dir}/canonical_stacks")
     except Exception:
         return None
 
@@ -350,8 +370,7 @@ def _window_chain_state(spark: SparkSession, tables: dict[str, DataFrame],
             return None
     return {"wchain": wchain, "wstacks": wstacks, "floors": floors,
             "prev_total": prev_total, "aligned_floor": aligned_floor,
-            "tip_stacks": tip_stacks, "tip_headers": tip_headers,
-            "stored_chain": stored_chain, "stored_stacks": stored_stacks}
+            "tip_stacks": tip_stacks, "tip_headers": tip_headers}
 
 
 def _windowed_prepare(spark: SparkSession, tables: dict[str, DataFrame],
@@ -406,90 +425,6 @@ def _windowed_prepare(spark: SparkSession, tables: dict[str, DataFrame],
             "tip_headers": st["tip_headers"]}
 
 
-def prepare_full_with_gold(spark: SparkSession,
-                           tables: dict[str, DataFrame],
-                           gold_dir: str,
-                           reorg_depth: int = 100) -> dict | None:
-    """WARM full-refresh prepare (round-9 VERDICT #7): core.prepare's
-    exact output contract, but the canonical-chain membership is
-    persisted state below the window floor UNION a freshly walked
-    reorg window — so the walk stage costs O(reorg_depth) instead of
-    re-walking from genesis, while the E1 join DAG still covers full
-    history and the outputs stay byte-identical to core.prepare
-    (golden equivalence in tests/test_incremental.py).
-
-    Soundness is the same boundary argument as the windowed tick: the
-    window floor's parent is verified against the stored canonical
-    row one height below (_window_chain_state), and rows below the
-    floor are immutable under the bounded-reorg assumption; state
-    buckets align with the window floor's axis, so windowed overwrite
-    can never leave holes in the stored history this reads. Returns
-    None when the anchor fails (no state yet, or a deeper reorg) —
-    callers fall back to the from-scratch core.prepare.
-
-    Stages: `window_walk` is the part the warm path actually shrinks,
-    O(reorg_depth) probes + walks, comparable to the tick's walk
-    stage; `history_materialize` (full snap join + lag + eager
-    checkpoint) is O(history) and identical in the cold path."""
-    if not _state_layout_ok(gold_dir):
-        return None         # no state to anchor: no window walk to time
-    with spans.span("window_walk"):
-        st = _window_chain_state(spark, tables, gold_dir, reorg_depth)
-    if st is None:
-        return None
-    return _materialize_history(tables, st)
-
-
-@spans.span("history_materialize")
-def _materialize_history(tables: dict[str, DataFrame], st: dict) -> dict:
-    floor = st["aligned_floor"]
-    # full canonical membership: stored history strictly below the
-    # floor (disjoint from the window by construction) + window walk
-    members = (
-        st["stored_chain"]
-        .filter(F.col("stacks_block_height") < floor)
-        .select("burn_header_hash")
-        .unionByName(st["wchain"].select("burn_header_hash"))
-    )
-    valid = tables["snapshots"].filter(F.col("pox_valid") != 0)
-    # the A2 lag-delta over FULL history is the cold path's parent-row
-    # join (core.with_actual_burn): stored history plus the verified
-    # window is one parent-pointer chain. Both sides of that join read
-    # the membership join, so it is lazily checkpointed: the first job
-    # over it (the lag's build side) materializes it once.
-    joined = core._ckpt(
-        valid.join(members, "burn_header_hash"), eager=False)
-    # lazy (round-14, VERDICT #9): the winners build below is the
-    # warm refresh's first action over snap and materializes the lag
-    # blocks inside a job it runs anyway — the eager form paid one
-    # extra full pass (history_materialize carried a dedicated
-    # lag+checkpoint job).
-    snap = core._ckpt(core.with_actual_burn(joined), eager=False)
-    commits = tables["block_commits"]
-    if "hbucket" in commits.columns:
-        commits = commits.drop("hbucket")  # full history — no pruning
-    enriched = core.commits_enriched(
-        snap, commits, tables["leader_keys"]).cache()
-    chain_cols = (
-        st["stored_stacks"]
-        .filter(F.col("block_height") < floor)
-        .select("burn_header_hash",
-                F.col("block_height").alias("stacks_height"))
-        .unionByName(st["wstacks"].select(
-            "burn_header_hash",
-            F.col("block_height").alias("stacks_height")))
-    )
-    winners = (
-        enriched.filter(F.col("is_winner"))
-        .join(F.broadcast(chain_cols), "burn_header_hash")
-        .localCheckpoint(eager=True)
-    )
-    return {"snap": snap, "enriched": enriched, "winners": winners,
-            "wchain": st["wchain"], "wstacks": st["wstacks"],
-            "aligned_floor": floor, "tip_stacks": st["tip_stacks"],
-            "tip_headers": st["tip_headers"]}
-
-
 def chain_tips(prepared: dict) -> tuple[int | None, int | None]:
     """(max stacks_block_height of the burn chain, max block_height of
     the Stacks chain) of a prepared dict: the tips its walks already
@@ -506,16 +441,14 @@ def chain_tips(prepared: dict) -> tuple[int | None, int | None]:
 
 def chain_state_frames(prepared: dict) -> tuple[DataFrame, DataFrame]:
     """The two canonical-chain state frames (burn chain, stacks
-    chain) from a prepared dict carrying wchain/wstacks — shared by
-    the incremental tick and refresh_once's state maintenance.
+    chain) from a prepared dict carrying wchain/wstacks, shared by
+    write_window and refresh_once's cold state rewrite.
 
-    canonical_chain state buckets on the STACKS height axis — the
-    SAME axis the window floor aligns on. Bucketing on burn height
-    would let a window overwrite straddle a bucket whose low side
-    holds sub-floor rows, silently dropping them from state; the
-    boundary probe only reads floor-1 so windowed ticks never
-    noticed, but prepare_full_with_gold reads the WHOLE stored
-    history and needs it hole-free."""
+    canonical_chain state buckets on the STACKS height axis, the SAME
+    axis the window floor aligns on. Bucketing on burn height would
+    let a window overwrite straddle a bucket whose low side holds
+    sub-floor rows, silently dropping them from state, and a later
+    floor - 1 boundary probe could then miss its anchor row."""
     chain_df = prepared["wchain"].select(
         "burn_header_hash", "parent_burn_header_hash",
         "block_height", "stacks_block_height", "total_burn") \
@@ -539,10 +472,8 @@ def incremental_refresh(spark: SparkSession, tables: dict[str, DataFrame],
     The run record (spans.py) carries the mode and the tick's stages:
     'walk' (window prepare — the reorg-depth chain walks and anchor
     probes — or the full-recompute fallback's core.prepare, whose
-    eager localCheckpoints run the walks), 'gold_writes' (the five
-    concurrent gold writes, which also execute the join DAG — Spark
-    is lazy, so join and write cost are one phase here), 'merge'
-    (partials fold + miner_info rewrite)."""
+    eager localCheckpoints run the walks), then write_window's
+    'gold_writes' and 'merge'."""
     with spans.span("walk"):
         prepared = _windowed_prepare(spark, tables, gold_dir, reorg_depth)
         mode = "windowed"
@@ -561,12 +492,29 @@ def incremental_refresh(spark: SparkSession, tables: dict[str, DataFrame],
             prepared["wchain"] = prepared["snap"]
             prepared["wstacks"] = prepared["stacks_chain"]
     spans.mode(mode)
+    out = write_window(spark, tables, gold_dir, prepared,
+                       full=mode == "full")
+    return {**out, "mode": mode}
 
+
+def write_window(spark: SparkSession, tables: dict[str, DataFrame],
+                 gold_dir: str, prepared: dict,
+                 full: bool = False) -> dict:
+    """Write, prune and merge one tick's gold from a prepared dict:
+    the body the windowed tick and the warm full refresh share. A
+    windowed prepared dict (_windowed_prepare) rewrites only the
+    hbucket partitions from its aligned floor up; `full=True` (a
+    core.prepare dict) rewrites every bucket and resets / marks the
+    state layout around the writes. Stages 'gold_writes' (the five
+    concurrent gold writes, which also execute the join DAG — Spark
+    is lazy, so join and write cost are one phase here) and 'merge'
+    (partials fold + miner_info rewrite). Releases the prepared
+    enriched cache. Returns {'tip', 'lo_height', 'buckets_from'}."""
     try:
         # the walks already know both tips (aggregate jobs only after
         # a distributed walk)
         tip, stip = chain_tips(prepared)
-        lo = prepared.get("aligned_floor", 0) if mode == "windowed" else 0
+        lo = 0 if full else prepared["aligned_floor"]
         lo_bucket = lo // HEIGHTS_PER_BUCKET
         affected = F.col("hbucket") >= lo_bucket
 
@@ -592,7 +540,7 @@ def incremental_refresh(spark: SparkSession, tables: dict[str, DataFrame],
             (stacks_df, f"{gold_dir}/canonical_stacks"),
         ]
         with spans.span("gold_writes"):
-            if mode == "full":
+            if full:
                 # a full rewrite covers every bucket of the CURRENT
                 # axis; stale buckets from a different layout must be
                 # deleted first, and the marker written only after the
@@ -603,19 +551,19 @@ def incremental_refresh(spark: SparkSession, tables: dict[str, DataFrame],
                                        df, path) for df, path in writes]
                 for f in futures:
                     f.result()   # surface the first failure
-            if mode == "full":
+            if full:
                 mark_state_layout(gold_dir)
             # reorg-shrink guard: a tip LOWER than the previous
             # refresh's leaves its old high buckets unrewritten by
             # dynamic overwrite — drop every bucket above the new tip,
-            # in the outputs AND the chain state (a stale state bucket
-            # would re-enter the members union once a later floor
-            # passes it). Two bounds, two axes: tables keyed by
-            # SNAPSHOT stacks height (block_info, partials' stats
-            # side, canonical_chain) prune above the burn tip's stacks
-            # height; tables keyed by the STACKS HEADER chain
-            # (mining_info winners, canonical_stacks) prune above the
-            # header tip, which can sit below the snapshot-side height.
+            # in the outputs AND the chain state (the abandoned
+            # fork's rows are no longer canonical). Two bounds, two
+            # axes: tables keyed by SNAPSHOT stacks height
+            # (block_info, partials' stats side, canonical_chain)
+            # prune above the burn tip's stacks height; tables keyed
+            # by the STACKS HEADER chain (mining_info winners,
+            # canonical_stacks) prune above the header tip, which can
+            # sit below the snapshot-side height.
             tip_bucket = (tip or 0) // HEIGHTS_PER_BUCKET
             stip_bucket = (stip or 0) // HEIGHTS_PER_BUCKET
             for p, b in (("mining_info", stip_bucket),
@@ -626,13 +574,7 @@ def incremental_refresh(spark: SparkSession, tables: dict[str, DataFrame],
                 _prune_buckets_above(f"{gold_dir}/{p}", b)
 
         with spans.span("merge"):
-            merged = merge_miner_partials(
-                spark.read.parquet(f"{gold_dir}/miner_partials"))
-            # O(miners) rows: one output file, not one per shuffle
-            # task — the gold is re-read whole every serving call
-            merged.coalesce(1).write.mode("overwrite") \
-                .parquet(f"{gold_dir}/miner_info")
-        return {"tip": tip, "lo_height": lo, "buckets_from": lo_bucket,
-                "mode": mode}
+            write_merged_miner_info(spark, gold_dir)
+        return {"tip": tip, "lo_height": lo, "buckets_from": lo_bucket}
     finally:
         prepared["enriched"].unpersist()

@@ -55,6 +55,38 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+def parquet_scan(spark: SparkSession, path: str) -> DataFrame:
+    """spark.read.parquet(path) with the schema taken from one file's
+    footer on the driver: Spark's own inference runs a Spark job per
+    read. A `<name>=<int>/` directory layout (the gold and chain-state
+    `hbucket`, the IVF-PQ codes' `_cell`, the MinHash buckets' `band`)
+    gets its partition column from the directory names, appended as
+    int, the type Spark infers for it. Spark writes its schema into
+    every footer; without one (or without files) Spark infers as
+    usual. A missing `path` raises OSError."""
+    import json
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import IntegerType, StructType
+
+    parts = sorted(n for n in os.listdir(path) if "=" in n
+                   and os.path.isdir(os.path.join(path, n)))
+    dirs = [os.path.join(path, n) for n in parts] or [path]
+    first = next((os.path.join(d, n) for d in dirs
+                  for n in sorted(os.listdir(d)) if n.endswith(".parquet")),
+                 None)
+    meta = {}
+    if first is not None:
+        meta = pq.read_schema(first).metadata or {}
+    key = b"org.apache.spark.sql.parquet.row.metadata"
+    if key not in meta:
+        return spark.read.parquet(path)
+    schema = StructType.fromJson(json.loads(meta[key]))
+    if parts:
+        schema = schema.add(parts[0].split("=", 1)[0], IntegerType())
+    return spark.read.schema(schema).parquet(path)
+
+
 def register_views(spark: SparkSession, sf_dir: str,
                    tables: tuple[str, ...] = DRIVER_TABLES) -> None:
     """Register each driver table as a temp view (for spark.sql queries)."""

@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import spans
+from ..io import parquet_scan
 from ..sources.kv import read_tombstones
 
 
@@ -994,38 +995,6 @@ def _nsw_base_gen(path: str) -> tuple[str, int]:
     return d, (1 if name == "adj" else int(name.rsplit("-g", 1)[1]))
 
 
-def _parquet_scan(spark, path: str) -> DataFrame:
-    """spark.read.parquet(path) with the schema taken from one file's
-    footer on the driver: Spark's own inference runs a Spark job per
-    read. A `<name>=<int>/` directory layout (the IVF-PQ codes'
-    `_cell`, the MinHash buckets' `band`) gets its partition column
-    from the directory names, appended as int, the type Spark infers
-    for it. Spark writes its schema into every footer; without one
-    (or without files) Spark infers as usual."""
-    import json
-    import os
-
-    import pyarrow.parquet as pq
-    from pyspark.sql.types import IntegerType, StructType
-
-    parts = sorted(n for n in os.listdir(path) if "=" in n
-                   and os.path.isdir(os.path.join(path, n)))
-    dirs = [os.path.join(path, n) for n in parts] or [path]
-    first = next((os.path.join(d, n) for d in dirs
-                  for n in sorted(os.listdir(d)) if n.endswith(".parquet")),
-                 None)
-    meta = {}
-    if first is not None:
-        meta = pq.read_schema(first).metadata or {}
-    key = b"org.apache.spark.sql.parquet.row.metadata"
-    if key not in meta:
-        return spark.read.parquet(path)
-    schema = StructType.fromJson(json.loads(meta[key]))
-    if parts:
-        schema = schema.add(parts[0].split("=", 1)[0], IntegerType())
-    return spark.read.schema(schema).parquet(path)
-
-
 def _nsw_fragments(path: str, gen: int) -> list[str]:
     """Append-override fragments that apply to base generation `gen`,
     in append order. Fragments are GENERATION-TAGGED
@@ -1054,12 +1023,12 @@ def _merged_nsw_adj(spark, path: str) -> DataFrame:
     import functools
 
     base_dir, gen = _nsw_base_gen(path)
-    adj = _parquet_scan(spark, base_dir) \
+    adj = parquet_scan(spark, base_dir) \
         .select("src", "dst", "cos_sim_q8", "nrk")
     frags = _nsw_fragments(path, gen)
     if not frags:
         return adj
-    parts = [_parquet_scan(spark, p).withColumn("_g", F.lit(i))
+    parts = [parquet_scan(spark, p).withColumn("_g", F.lit(i))
              for i, p in enumerate(frags)]
     fall = functools.reduce(lambda a, b: a.unionByName(b), parts)
     wg = Window.partitionBy("src")
@@ -2356,7 +2325,7 @@ def compact_ivfpq_index(spark, path: str) -> None:
             else int(cur_name.rsplit("-g", 1)[1])
         new_name = f"codes-g{gen + 1}"
         meta = _driver_read_parquet(f"{path}/meta")[0]  # no Spark job
-        rows = _parquet_scan(spark, cur)
+        rows = parquet_scan(spark, cur)
         ts = read_tombstones(spark, path)
         if ts is not None:
             rows = rows.join(
@@ -2432,7 +2401,7 @@ def append_to_ivfpq_index(emb_new: DataFrame, path: str,
         if skip_existing:
             # resolve the codes dir INSIDE the lease so the anti-join
             # and the append target the same generation
-            existing = (_parquet_scan(spark, _codes_dir(path))
+            existing = (parquet_scan(spark, _codes_dir(path))
                         .select(meta["id_col"]))
             codes_new = codes_new.join(existing, meta["id_col"],
                                        "left_anti")
@@ -2705,7 +2674,7 @@ def load_ivfpq_index(spark, path: str) -> dict:
     same read-your-load semantics the generation pointer gives)."""
     # bounded sides read driver-side, no Spark jobs (round-14 — see
     # _driver_read_parquet); the codes scan stays a lazy parquet scan,
-    # its schema from one file's footer (_parquet_scan: no inference job)
+    # its schema from one file's footer (io.parquet_scan: no inference job)
     meta_row = _driver_read_parquet(f"{path}/meta")[0]
     if meta_row["version"] != IVFPQ_INDEX_VERSION:
         raise ValueError(
@@ -2718,7 +2687,7 @@ def load_ivfpq_index(spark, path: str) -> dict:
         [None] * meta_row["kc"] for _ in range(meta_row["m"])]
     for r in _driver_read_parquet(f"{path}/codebooks"):
         books[r["s"]][r["cid"]] = [int(x) for x in r["cent"]]
-    codes = _parquet_scan(spark, _codes_dir(path))
+    codes = parquet_scan(spark, _codes_dir(path))
     ts = read_tombstones(spark, path)
     if ts is not None:
         codes = codes.join(

@@ -12,7 +12,13 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+def default_cpus() -> str:
+    """SPARK_GRAFT_CPUS, else the cores this process may run on: a
+    local[N] session runs N task threads, and more than the cores
+    only oversubscribes them."""
+    return os.environ.get("SPARK_GRAFT_CPUS") \
+        or str(len(os.sched_getaffinity(0)))
 
 
 def _default_driver_memory() -> str:
@@ -32,8 +38,8 @@ def get_spark(app_name: str = "mining-data-integration-spark",
     default, and the broadcast threshold keeps dimension tables
     (region/nation/supplier/leader_keys/prices) out of shuffles.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    sp = str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS)
+    cpus = default_cpus()
+    sp = str(shuffle_partitions or cpus)
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

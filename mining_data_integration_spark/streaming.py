@@ -53,32 +53,38 @@ def refresh_once(tables: dict[str, DataFrame], gold_dir: str,
     are released after the writes — without the unpersist, a
     long-running trigger would accumulate one cached commits table
     per tick. Returns the mode used ('cold' or 'warm'); the run record
-    (spans.py) carries it with the `walk`, `gold_writes` and per-table
-    `gw_*` stages.
+    (spans.py) carries it with the `walk` and `gold_writes` stages.
 
-    reuse_gold=True turns on the round-9 walk-constant fix: when the
-    persisted canonical-chain state exists and boundary-verifies
-    (incremental.prepare_full_with_gold), the full refresh walks ONLY
-    the reorg window and takes history membership from state — walk
-    cost O(reorg_depth) instead of O(history), outputs byte-identical
-    (golden equivalence test). The from-scratch walk remains the
-    cold-start path (first run, or a reorg deeper than the window),
-    and each refresh maintains the state so the NEXT one is warm:
-    warm ticks overwrite only the window's state buckets, cold ticks
-    rewrite the full state."""
+    reuse_gold=True maintains the hbucket gold layout and the
+    canonical-chain state, so the NEXT refresh can be warm. A warm
+    refresh is the incremental tick's windowed path (the reference's
+    600 s trailing-window cadence, server.js:280-331): when the persisted
+    state boundary-verifies and mining_info / block_info /
+    miner_partials are hbucket-partitioned, it walks only the reorg
+    window (incremental._windowed_prepare), rewrites only the
+    window's partitions and folds miner_info from the per-bucket
+    partials (incremental.write_window; stages `walk`, `gold_writes`,
+    `merge`). Its cost is O(reorg_depth), not O(history), and its gold
+    equals a cold refresh's (golden equivalence tests). Otherwise
+    (first run, a reorg deeper than the window, a flat layout) it
+    runs cold and notes `cold_refresh`: the from-scratch walk, a
+    static rewrite of the partitioned outputs and a full state
+    rewrite, with per-table `gw_*` stages."""
+    spark = tables["snapshots"].sparkSession
     prepared = None
     mode = "cold"
     with spans.span("walk"):
         if reuse_gold:
-            from .incremental import prepare_full_with_gold
-            prepared = prepare_full_with_gold(
-                tables["snapshots"].sparkSession, tables, gold_dir,
-                reorg_depth=reorg_depth)
+            from .incremental import _windowed_prepare
+            if all(_is_bucket_partitioned(f"{gold_dir}/{n}") for n in
+                   ("mining_info", "block_info", "miner_partials")):
+                prepared = _windowed_prepare(spark, tables, gold_dir,
+                                             reorg_depth)
             if prepared is not None:
                 mode = "warm"
             else:
-                spans.note("cold_refresh",
-                           "no boundary-verified chain state; full walk")
+                spans.note("cold_refresh", "no boundary-verified chain "
+                           "state on an hbucket gold layout; full walk")
         if prepared is None:
             tables = dict(tables)
             if "hbucket" in tables["block_commits"].columns:
@@ -92,10 +98,14 @@ def refresh_once(tables: dict[str, DataFrame], gold_dir: str,
                 prepared["wchain"] = prepared["snap"]
                 prepared["wstacks"] = prepared["stacks_chain"]
     spans.mode(mode)
+    if mode == "warm":
+        from .incremental import write_window
+        write_window(spark, tables, gold_dir, prepared)
+        return mode
     try:
         with spans.span("gold_writes"):
             if reuse_gold:
-                _write_gold_with_state(tables, gold_dir, prepared, mode)
+                _write_gold_with_state(tables, gold_dir, prepared)
             else:
                 # the three gold outputs are independent projections of
                 # the ALREADY-MATERIALIZED prepared intermediates (snap/
@@ -173,133 +183,81 @@ def _is_bucket_partitioned(path: str) -> bool:
 
 
 def _write_gold_with_state(tables: dict[str, DataFrame], gold_dir: str,
-                           prepared: dict, mode: str) -> None:
-    """Gold + chain-state writes for the reuse_gold refresh family.
+                           prepared: dict) -> None:
+    """Gold + chain-state writes of a COLD reuse_gold refresh.
 
-    mining_info / block_info are per-height outputs partitioned by
-    hbucket; below the aligned floor those partitions are byte-stable
-    between refreshes (the tick's bounded-reorg argument), so a WARM
-    refresh overwrites only the window's partitions (round-9 VERDICT
-    #4 — previously the warm path rewrote full history every refresh,
-    an O(history) write cost that never stopped growing). A COLD
-    refresh statically overwrites the whole partitioned layout (which
-    also clears any flat layout a reuse_gold=False run left behind).
-    miner_info is a whole-history aggregate of O(miners) rows — always
-    written whole. Chain state follows the same warm/cold split, with
-    the round-10 layout-marker guard on the cold rewrite."""
-    from .incremental import (HEIGHTS_PER_BUCKET, _hb, _write_dynamic,
-                              chain_state_frames, mark_state_layout,
-                              miner_partials, reset_state_for_layout)
+    mining_info / block_info / miner_partials are written partitioned
+    by hbucket, a static overwrite of the whole layout (which also
+    clears any flat layout a reuse_gold=False run left behind), so the
+    next refresh can take the windowed path. miner_info is a
+    whole-history aggregate of O(miners) rows, written whole. The
+    chain state is rewritten in full, with the round-10 layout-marker
+    guard."""
+    from .incremental import (HEIGHTS_PER_BUCKET, _hb, _prune_buckets_above,
+                              _write_dynamic, chain_state_frames, chain_tips,
+                              mark_state_layout, miner_partials,
+                              reset_state_for_layout)
 
     mi = core.mining_info(tables, prepared=prepared) \
         .withColumn("hbucket", _hb())
     bi = core.block_info(tables, prepared=prepared) \
         .withColumn("hbucket", _hb())
-    # miner_partials too: the TICK's merge assumes every sub-floor
+    # miner_partials too: the windowed merge assumes every sub-floor
     # bucket holds correct partials, so a refresh that advances the
     # chain without maintaining them would make blocks it passed over
-    # vanish from every later tick's miner_info (the mixed
+    # vanish from every later windowed miner_info (the mixed
     # tick/refresh maintenance hole) — the reuse_gold family keeps ALL
     # the state a tick reads
     pt = miner_partials(prepared)
-    # a warm write can only be partition-scoped onto an hbucket layout:
-    # a dir last written flat (reuse_gold=False) gets a full rewrite
-    warm_scoped = mode == "warm" and all(
-        _is_bucket_partitioned(f"{gold_dir}/{n}")
-        for n in ("mining_info", "block_info", "miner_partials"))
-    # the five write groups below land in DISJOINT directories and
-    # read only the ALREADY-MATERIALIZED prepared frames (the walk's
-    # eager checkpoints), so they are independent jobs — overlap them
-    # from a small thread pool (guide §2.6) instead of paying five
-    # sequential job tails; measured cold gold_writes 6.7 s -> ~3 s
-    # at 50k blocks. prune stays AFTER the pool (it deletes buckets
-    # the writes may have just produced).
-    # LONGEST-FIRST ordering (round-13 continuation, guide §2.6): the
-    # pool schedules FIFO, and the chain-state group is consistently
-    # the longest cold writer (2.4-3.1 s measured at 50k blocks) — as
-    # the 5th entry of a 3-worker pool it started only after the first
-    # writer finished, putting its whole wall on the stage's tail
-    # (measured cold gold_writes 4.6-5.9 s with ~2.3 s of that the
-    # late chain-state start). Scheduling it first packs the pool:
-    # the three partitioned outputs + miner_info fill the remaining
-    # two slots. Writer ORDER is schedule-only — the groups stay
-    # disjoint-directory independent jobs.
+    # the write groups below land in DISJOINT directories and read
+    # only the ALREADY-MATERIALIZED prepared frames (the walk's eager
+    # checkpoints), so they are independent jobs — overlap them from a
+    # small thread pool (guide §2.6) instead of paying sequential job
+    # tails. prune stays AFTER the pool (it deletes buckets the writes
+    # may have just produced).
     writers: list[tuple[str, object]] = []
-    if warm_scoped:
-        lo_bucket = prepared["aligned_floor"] // HEIGHTS_PER_BUCKET
-        affected = F.col("hbucket") >= lo_bucket
-        writers += [
-            ("miner_partials", lambda: _write_dynamic(
-                pt.filter(affected), f"{gold_dir}/miner_partials")),
-            ("mining_info", lambda: _write_dynamic(
-                mi.filter(affected), f"{gold_dir}/mining_info")),
-            ("block_info", lambda: _write_dynamic(
-                bi.filter(affected), f"{gold_dir}/block_info")),
-        ]
-    else:
-        for df, name in ((pt, "miner_partials"), (mi, "mining_info"),
-                         (bi, "block_info")):
-            writers.append((name, lambda df=df, name=name: (
-                df.repartition("hbucket").write.mode("overwrite")
-                .partitionBy("hbucket").parquet(f"{gold_dir}/{name}"))))
+    for df, name in ((pt, "miner_partials"), (mi, "mining_info"),
+                     (bi, "block_info")):
+        writers.append((name, lambda df=df, name=name: (
+            df.repartition("hbucket").write.mode("overwrite")
+            .partitionBy("hbucket").parquet(f"{gold_dir}/{name}"))))
     writers.append(("miner_info", lambda: write_gold(
         core.miner_info(tables, prepared=prepared),
         f"{gold_dir}/miner_info")))
 
-    # maintain the chain state so the next refresh is warm: warm mode
-    # touches only the window's buckets, cold mode (wchain = full
-    # canonical) rewrites everything — deleting any state written on an
-    # older layout axis first, then marking the layout (the round-10
-    # ADVICE axis-mix guard). reset/mark stay INSIDE this group so
-    # their ordering relative to the state writes is preserved; the
-    # group only touches canonical_* dirs, disjoint from the others.
+    # the chain state (wchain = full canonical) is rewritten whole so
+    # the next refresh is warm: any state written on an older layout
+    # axis is deleted first (a driver-side rmtree guarded by the
+    # marker check, synchronous so it precedes both state writes), and
+    # the marker commits only once every writer succeeded (round-14
+    # ADVICE: a marker committed while gold writers still ran left a
+    # crash window that later warm refreshes would skip for good).
+    # The two state writes are independent dynamic writes to disjoint
+    # dirs, split into two writers so they overlap; scheduled FIRST
+    # because they are the longest cold writers and the pool runs
+    # FIFO (guide §2.6).
     chain_df, stacks_df = chain_state_frames(prepared)
-
-    # Round-14: the two state writes are INDEPENDENT dynamic writes to
-    # disjoint dirs — they used to run sequentially inside one pool
-    # slot, making "chain_state" the longest cold writer (2.8-3.5 s)
-    # and the pool's makespan. Split into two writers so they overlap;
-    # the cold-mode layout reset (a driver-side rmtree guarded by the
-    # marker check) runs synchronously BEFORE the pool so it still
-    # precedes both. mark_state_layout moved AFTER the pool (round-14
-    # ADVICE): committing the marker while gold writers were still
-    # running left a crash window where the marker existed with gold
-    # outputs incomplete, and once the chain advanced past the crashed
-    # run's window floor the unwritten buckets were permanently
-    # skipped by later warm refreshes — the marker now commits only
-    # once every writer succeeded.
-    if mode == "cold":
-        reset_state_for_layout(gold_dir)
+    reset_state_for_layout(gold_dir)
     writers.insert(0, ("stacks_state", lambda: _write_dynamic(
         stacks_df, f"{gold_dir}/canonical_stacks")))
     writers.insert(0, ("chain_state", lambda: _write_dynamic(
         chain_df, f"{gold_dir}/canonical_chain")))
 
     _run_gold_writers(writers)
-    if mode == "cold":
-        # all writers succeeded — safe to declare the layout complete
-        mark_state_layout(gold_dir)
+    mark_state_layout(gold_dir)
 
-    # reorg-shrink guard (see incremental._prune_buckets_above): drop
-    # buckets above the new tip that dynamic overwrite left behind —
-    # in the warm-scoped outputs and in the chain state (cold's static
-    # output rewrite needs no pruning). Two bounds, two axes: the
-    # snapshot-side tip bounds block_info/canonical_chain; the stacks
-    # HEADER tip (which can sit below it) bounds mining_info/
-    # canonical_stacks. The walks already know both tips.
-    from .incremental import _prune_buckets_above, chain_tips
-
+    # reorg-shrink guard (see incremental._prune_buckets_above): the
+    # dynamic state writes leave buckets above the new tip behind; the
+    # static output rewrites need no pruning. Two bounds, two axes:
+    # the snapshot-side tip bounds canonical_chain; the stacks HEADER
+    # tip (which can sit below it) bounds canonical_stacks. The walks
+    # already know both tips.
     with spans.span("gw_prune"):
         tip, stip = chain_tips(prepared)
         tip_bucket = (tip or 0) // HEIGHTS_PER_BUCKET
         stip_bucket = (stip or 0) // HEIGHTS_PER_BUCKET
-        targets = [("canonical_chain", tip_bucket),
-                   ("canonical_stacks", stip_bucket),
-                   ("miner_partials", tip_bucket)]
-        if warm_scoped:
-            targets += [("mining_info", stip_bucket),
-                        ("block_info", tip_bucket)]
-        for p, b in targets:
+        for p, b in (("canonical_chain", tip_bucket),
+                     ("canonical_stacks", stip_bucket)):
             _prune_buckets_above(f"{gold_dir}/{p}", b)
 
 

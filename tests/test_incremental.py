@@ -98,10 +98,9 @@ class TestIncremental:
     @pytest.mark.slow
     def test_refresh_once_warm_equals_cold(self, spark, tables,
                                            tmp_path):
-        """Round-9 VERDICT #7: a warm full refresh (walk = persisted
-        state below the floor + reorg-window walk) must produce gold
-        byte-identical to the from-scratch compute, across a chain
-        extension."""
+        """A warm full refresh (the windowed tick over the state a cold
+        refresh maintained) must produce gold byte-identical to the
+        from-scratch compute, across a chain extension."""
         from mining_data_integration_spark.streaming import refresh_once
 
         gold = str(tmp_path / "goldw")
@@ -111,23 +110,10 @@ class TestIncremental:
             mode = refresh_once(ext, gold, reuse_gold=True,
                                 reorg_depth=3)
         assert mode == "warm" == rec.record["mode"]
-        st = spans.stages(rec.record)
-        # core stages plus the round-13 per-table gold-write splits
-        # (gw_*, VERDICT #6) — the writes now OVERLAP from a thread
-        # pool (round-13 optimization, guide §2.6), so each split is
-        # a concurrent wall time: every split fits inside the
-        # gold_writes aggregate, but their SUM may exceed it
-        assert set(st) >= {"walk", "gold_writes", "window_walk",
-                           "history_materialize"}
-        gw = {k: v for k, v in st.items() if k.startswith("gw_")}
-        # round-14: the two chain-state writes split into independent
-        # pool writers (gw_chain_state + gw_stacks_state) so they
-        # overlap instead of running sequentially in one slot
-        assert set(gw) == {"gw_mining_info", "gw_block_info",
-                           "gw_miner_partials", "gw_miner_info",
-                           "gw_chain_state", "gw_stacks_state",
-                           "gw_prune"}
-        assert all(v <= st["gold_writes"] + 0.05 for v in gw.values())
+        # the tick's stages: no O(history) materialize, no per-table
+        # cold writers
+        assert set(spans.stages(rec.record)) == {
+            "walk", "gold_writes", "merge"}
         for name, builder in (("mining_info", core.mining_info),
                               ("block_info", core.block_info),
                               ("miner_info", core.miner_info)):
@@ -167,28 +153,27 @@ class TestIncremental:
             ["cold_refresh"]
         assert recs[1]["fallbacks"] == recs[2]["fallbacks"] == []
         assert set(spans.stages(recs[1])) == {
-            "walk", "window_walk", "history_materialize", "gold_writes",
-            "gw_chain_state", "gw_stacks_state", "gw_miner_partials",
-            "gw_mining_info", "gw_block_info", "gw_miner_info",
-            "gw_prune"}
+            "walk", "gold_writes", "merge"}
         assert recs[1]["spans"]["jobs"]
         for name in ("mining_info", "block_info", "miner_info"):
             got = canon_rows(spark.read.parquet(f"{warm}/{name}"))
             want = canon_rows(spark.read.parquet(f"{cold}/{name}"))
             assert got == want, f"{name} diverged on warm refresh"
 
-    def test_warm_prepare_outlives_chain_state_dirs(self, spark, tables,
-                                                    tmp_path, monkeypatch):
-        """Checkpoint-before-overwrite: the warm prepare's lazy snap
-        checkpoint is only safe because the eager winners checkpoint
-        materializes it (and the enriched cache) before any gold or
-        state write. Once prepare_full_with_gold returns, the state
-        dirs it read can go without changing snap, winners or
-        enriched. The floor sits at stacks height 6 (two-height
-        buckets, reorg_depth=1), so the prepare reads sub-floor rows
-        from both state dirs."""
+    def test_warm_prepare_outlives_chain_state_dirs(
+            self, spark, tables, tmp_path, monkeypatch):
+        """Checkpoint-before-overwrite: write_window rewrites the
+        chain-state dirs while the gold frames it writes are still
+        lazy over the prepared dict, so nothing _windowed_prepare
+        returns may read those dirs after it returns. Once it returns,
+        the state dirs can go without changing snap, winners or
+        enriched: each equals core.prepare's rows for the window. The
+        floor sits at stacks height 6 (two-height buckets,
+        reorg_depth=1), so the boundary probe reads both state dirs."""
         import os
         import shutil
+
+        from pyspark.sql import functions as F
 
         from mining_data_integration_spark.streaming import refresh_once
 
@@ -196,20 +181,55 @@ class TestIncremental:
         gold = str(tmp_path / "gold")
         assert refresh_once(tables, gold, reuse_gold=True) == "cold"
         ext = extended_tables(spark, tables)
-        got = incremental.prepare_full_with_gold(spark, ext, gold,
-                                                 reorg_depth=1)
+        got = incremental._windowed_prepare(spark, ext, gold, reorg_depth=1)
         assert got is not None and got["aligned_floor"] == 6
         for d in ("canonical_chain", "canonical_stacks"):
             shutil.rmtree(os.path.join(gold, d))
         want = core.prepare(ext)
+        window = got["snap"].select("burn_header_hash")
+        in_window = {
+            "snap": want["snap"].join(window, "burn_header_hash", "semi"),
+            "enriched": want["enriched"].join(window, "burn_header_hash",
+                                              "semi"),
+            "winners": want["winners"].filter(F.col("stacks_height") >= 6)}
         try:
-            for key in ("snap", "winners", "enriched"):
-                cols = sorted(want[key].columns)
-                assert canon_rows(got[key].select(cols)) == \
-                    canon_rows(want[key].select(cols)), key
+            for key, w in in_window.items():
+                cols = sorted(w.columns)
+                rows = canon_rows(w.select(cols))
+                assert rows, key
+                assert canon_rows(got[key].select(cols)) == rows, key
         finally:
             got["enriched"].unpersist()
             want["enriched"].unpersist()
+
+    def test_warm_refresh_runs_the_tick(self, spark, tables, tmp_path,
+                                        monkeypatch):
+        """A warm refresh is the windowed tick: over the same world and
+        window its run record has the tick's stages, and it runs no
+        more Spark jobs than the tick."""
+        from mining_data_integration_spark.streaming import refresh_once
+
+        monkeypatch.setattr(incremental, "HEIGHTS_PER_BUCKET", 2)
+        warm, tick = str(tmp_path / "warm"), str(tmp_path / "tick")
+        assert refresh_once(tables, warm, reuse_gold=True) == "cold"
+        incremental.incremental_refresh(spark, tables, tick,
+                                        reorg_depth=10**9)
+        ext = extended_tables(spark, tables)
+        with spans.span("caller") as w:
+            assert refresh_once(ext, warm, reuse_gold=True,
+                                reorg_depth=1) == "warm"
+        with spans.span("caller") as t:
+            info = incremental.incremental_refresh(spark, ext, tick,
+                                                   reorg_depth=1)
+        assert info["mode"] == "windowed"
+        assert w.record["fallbacks"] == t.record["fallbacks"] == []
+        assert set(spans.stages(w.record)) == \
+            set(spans.stages(t.record)) == {"walk", "gold_writes", "merge"}
+        assert 0 < len(w.record["spans"]["jobs"]) \
+            <= len(t.record["spans"]["jobs"])
+        for name in ("mining_info", "block_info", "miner_info"):
+            assert canon_rows(spark.read.parquet(f"{warm}/{name}")) == \
+                canon_rows(spark.read.parquet(f"{tick}/{name}")), name
 
     @pytest.mark.slow
     def test_warm_refresh_skips_subfloor_gold_partitions(
@@ -248,8 +268,9 @@ class TestIncremental:
             self, spark, tables, tmp_path):
         """A gold dir whose outputs were last written FLAT (a
         reuse_gold=False refresh on the same dir) cannot take a
-        partition-scoped warm write — the guard rewrites it whole
-        instead of mixing layouts."""
+        partition-scoped warm write: the refresh runs cold, says so in
+        its run record, and rewrites the layout whole instead of
+        mixing layouts."""
         from mining_data_integration_spark.streaming import refresh_once
 
         gold = str(tmp_path / "goldmix")
@@ -257,8 +278,11 @@ class TestIncremental:
         # clobber the partitioned outputs with a flat write
         refresh_once(tables, gold)
         ext = extended_tables(spark, tables)
-        assert refresh_once(ext, gold, reuse_gold=True,
-                            reorg_depth=3) == "warm"
+        with spans.span("caller") as rec:
+            assert refresh_once(ext, gold, reuse_gold=True,
+                                reorg_depth=3) == "cold"
+        assert [f["kind"] for f in rec.record["fallbacks"]] == \
+            ["cold_refresh"]
         got = canon_rows(
             spark.read.parquet(f"{gold}/mining_info"))
         assert got == canon_rows(core.mining_info(ext))
@@ -375,6 +399,57 @@ class TestIncremental:
         assert got == canon_rows(core.miner_info(ext3)), \
             "a block advanced past by the warm refresh vanished " \
             "from the tick's partials merge"
+
+    def test_state_and_partials_scans_take_footer_schemas(
+            self, spark, tables, tmp_path, monkeypatch, jobs_of):
+        """The tick re-reads its chain state and miner_partials every
+        run: io.parquet_scan over their hbucket= layouts gives what
+        spark.read.parquet gives (schema with the int partition
+        column, and rows) without Spark's schema-inference job."""
+        from mining_data_integration_spark.io import parquet_scan
+
+        monkeypatch.setattr(incremental, "HEIGHTS_PER_BUCKET", 2)
+        gold = str(tmp_path / "gold")
+        incremental.incremental_refresh(spark, tables, gold,
+                                        reorg_depth=10**9)
+        for name in ("canonical_chain", "canonical_stacks",
+                     "miner_partials"):
+            path = f"{gold}/{name}"
+            df, n = jobs_of(lambda: parquet_scan(spark, path))
+            assert n == 0, name
+            want = spark.read.parquet(path)
+            assert df.schema == want.schema, name
+            assert "hbucket" in df.columns, name
+            assert canon_rows(df, drop=()) == canon_rows(want, drop=()), \
+                name
+
+    def test_merged_miner_info_is_sorted_without_range_sampling(
+            self, spark, tables, tmp_path, monkeypatch, jobs_of):
+        """The partials merge writes ONE file in stx_address order, the
+        rows of core.miner_info, in two Spark jobs: the partials scan
+        with the aggregate's map side, then the single sorted
+        partition's write. A global orderBy would add a range-sampling
+        job."""
+        import glob
+
+        import pyarrow.parquet as pq
+
+        monkeypatch.setattr(incremental, "HEIGHTS_PER_BUCKET", 1)
+        gold = str(tmp_path / "gold")
+        incremental.incremental_refresh(spark, tables, gold,
+                                        reorg_depth=10**9)
+        _, n = jobs_of(
+            lambda: incremental.write_merged_miner_info(spark, gold))
+        assert n == 2
+        files = glob.glob(f"{gold}/miner_info/*.parquet")
+        assert len(files) == 1
+        got = pq.read_table(files[0]).to_pylist()
+        # stx_address is the group key, so Spark's ascending order
+        # (NULL first) fixes one row order
+        want = core.miner_info(tables).orderBy("stx_address").collect()
+        assert len(got) == len(want) > 1
+        assert [tuple(str(v) for v in r.values()) for r in got] == \
+            [tuple(str(v) for v in r) for r in want]
 
     def test_refresh_once_default_stays_reference_faithful(
             self, spark, tables, tmp_path):

@@ -88,6 +88,7 @@ class TestIvf:
 from pyspark.sql import functions as F
 
 from mining_data_integration_spark import spans
+from mining_data_integration_spark.io import parquet_scan
 from mining_data_integration_spark.operators import dedup as D
 from mining_data_integration_spark.operators import similarity as S
 from mining_data_integration_spark.operators import text as TX
@@ -1631,7 +1632,7 @@ class TestDriverWrittenIndexSides:
         mh = str(tmp_path / "mh")
         D.save_minhash_index(docs_df(spark, [(i, f"doc {i} words {i % 3}")
                                              for i in range(6)]), mh)
-        assert S._parquet_scan(spark, D._buckets_dir(mh)).schema \
+        assert parquet_scan(spark, D._buckets_dir(mh)).schema \
             == spark.read.parquet(D._buckets_dir(mh)).schema
 
 

@@ -50,9 +50,10 @@ class TestCheckpointBlindSpot:
 
     def test_e1_lag_is_sharded_in_the_pre_checkpoint_dag(
             self, spark, monkeypatch):
-        """The A2 lag-delta in BOTH full-history preps must show no
-        unpartitioned window in the un-truncated DAG: it is a join
-        onto each row's parent row."""
+        """The A2 lag-delta of the full-history prep, and of
+        with_actual_burn over any row set, must show no unpartitioned
+        window in the un-truncated DAG: it is a join onto each row's
+        parent row."""
         from mining_data_integration_spark import core, fixtures
         from mining_data_integration_spark.chain import canonical_snapshots
 
@@ -61,7 +62,7 @@ class TestCheckpointBlindSpot:
         snap = core.with_actual_burn(
             canonical_snapshots(tables["snapshots"]))
         assert plans.unpartitioned_window_orders(snap) == []
-        # with_actual_burn directly (the prepare_full_with_gold shape)
+        # with_actual_burn directly, over rows no walk has filtered
         direct = core.with_actual_burn(
             tables["snapshots"].filter("pox_valid != 0"))
         assert plans.unpartitioned_window_orders(direct) == []

@@ -8,14 +8,18 @@ on a real chain of O(100k) burn blocks; this script shows the Spark DAG
 holds that budget with headroom at the same and larger scales.
 
 Usage: python tools/bench_e1.py [n_blocks] [commits_per_block]
-Prints one JSON line {"metric": "e1_refresh_wall", ...}.
+Prints one JSON line {"metric": "e1_refresh_wall", ...}. Bronze and
+gold live in a private temporary directory (under $TMPDIR), removed at
+exit, so concurrent runs of two checkouts share no state.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -31,12 +35,20 @@ from mining_data_integration_spark.synthworld import (
 
 
 def main() -> None:
+    work = tempfile.mkdtemp(prefix="bench_e1_")
+    try:
+        run(work)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
+def run(work: str) -> None:
     n_blocks = int(sys.argv[1]) if len(sys.argv) > 1 else 100_000
     cpb = int(sys.argv[2]) if len(sys.argv) > 2 else 10
     spark = get_spark("bench-e1")
 
     tables = synth_mining_world(spark, n_blocks, cpb, n_miners=200)
-    tables = land_as_parquet(tables, "/tmp/bench_e1_bronze", spark)
+    tables = land_as_parquet(tables, f"{work}/bronze", spark)
 
     # median-of-3 (round-8 discipline, matching bench.py): single-run
     # values on this box swing +-40% and masquerade as regressions
@@ -68,9 +80,7 @@ def main() -> None:
     # COLD full refresh including all gold + state writes (round-10
     # symmetry fix: cold and warm measure the SAME work — previously
     # cold only counted the outputs while warm included writes)
-    import shutil
-
-    gold_c = "/tmp/bench_e1_gold_cold"
+    gold_c = f"{work}/gold_cold"
     cold_st: dict = {}
 
     def cold_pre() -> None:
@@ -92,11 +102,10 @@ def main() -> None:
         name: spark.read.parquet(f"{gold_c}/{name}").count()
         for name in ("miner_info", "mining_info", "block_info")}
 
-    # WARM full refresh (round-9: reuse the persisted canonical chain,
-    # walk only the reorg window — walk stage should track the tick
-    # walk, not the from-scratch walk). Cold bootstrap first.
-    gold_w = "/tmp/bench_e1_gold_warm"
-    shutil.rmtree(gold_w, ignore_errors=True)
+    # WARM full refresh: the windowed tick over the cold-maintained
+    # state and hbucket layout (walk, gold_writes and merge stages, as
+    # the tick's). Cold bootstrap first.
+    gold_w = f"{work}/gold_warm"
     streaming.refresh_once(tables, gold_w, reuse_gold=True)
     warm_st: dict = {}
 
@@ -109,18 +118,18 @@ def main() -> None:
 
     # steady-state incremental tick: bootstrap the partitioned gold,
     # then time bounded-reorg refreshes (the production cadence)
-    gold_dir = "/tmp/bench_e1_gold"
+    gold_dir = f"{work}/gold"
     incremental_refresh(spark, tables, gold_dir, reorg_depth=10 ** 12)
     inc_wall = med3(lambda: incremental_refresh(
         spark, tables, gold_dir, reorg_depth=1000), tag="tick")
 
     # same tick against height-bucketed bronze commits: the commits
     # scan partition-prunes to the reorg window
-    bronze = "/tmp/bench_e1_bronze_commits"
+    bronze = f"{work}/bronze_commits"
     write_bronze_commits(tables["block_commits"], tables["snapshots"], bronze)
     t2 = dict(tables)
     t2["block_commits"] = spark.read.parquet(bronze)
-    gold2 = "/tmp/bench_e1_gold_bb"
+    gold2 = f"{work}/gold_bb"
     incremental_refresh(spark, t2, gold2, reorg_depth=10 ** 12)
     tick_st: dict = {}
     inc_bb_wall = med3(lambda: incremental_refresh(
